@@ -50,6 +50,11 @@ Endpoints:
   instead — the same divergence the oracle-green ``class_properties``
   corpus entry documents.
 
+Everything the server derives from the data — the SPARQL dataset, the
+compiled-plan LRU and the SQL temp views — is built once per
+``(table snapshot version, graph epoch)`` and replaced whole when either
+changes (see ``_SnapshotState``); ``GET /stats`` reports the hit counts.
+
 Temp views are session-global: run ONE QueryServer per SparkSession (or
 distinct ``register_views`` prefixes) — a second server's views would
 shadow the first's.
@@ -61,13 +66,20 @@ import json
 import os
 import re
 import threading
+from collections import OrderedDict
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 from urllib.parse import parse_qs, urlsplit
 
 from pyspark.sql import SparkSession
 
-from .serving import register_views, to_ask_json, to_construct_json, to_sparql_json
+from .serving import (
+    register_views,
+    to_ask_json,
+    to_construct_json,
+    to_sparql_json,
+    view_names,
+)
 from .streaming.cdc import CdcEngine
 
 
@@ -96,6 +108,22 @@ _RDF_EXTS = {
 }
 
 
+class _SnapshotState:
+    """What the server derives from one ``(table version, graph epoch)``
+    key: the SPARQL dataset (built on first use), the compiled-plan LRU
+    keyed on query text, and whether the SQL temp views have been
+    registered. A new key replaces the whole state, so no plan, dataset
+    or view of an older snapshot outlives it."""
+
+    PLAN_CACHE_SIZE = 128
+
+    def __init__(self, key: tuple[int | None, int]):
+        self.key = key
+        self.dataset = None
+        self.plans: OrderedDict = OrderedDict()
+        self.views_registered = False
+
+
 class QueryServer:
     """Bounded-result HTTP facade over a registered engine."""
 
@@ -120,12 +148,6 @@ class QueryServer:
         self.input_dir = input_dir
         self.graph_store = graph_store
         self._graph_lock = threading.Lock()
-        # serving plan cache (see _compiled): bounded LRU of compiled
-        # SPARQL plans keyed on (text, table version, graph epoch)
-        from collections import OrderedDict
-
-        self._plan_cache: OrderedDict = OrderedDict()
-        self._plan_cache_size = 128
         # the store is MVCC-versioned (see _append_graph_store): resume
         # from the latest v* directory when handed a pre-existing store;
         # a store written by the old in-place layout (graph=... dirs at
@@ -142,19 +164,25 @@ class QueryServer:
             ]
             if vers:
                 self._graph_epoch = max(vers)
-        self.views: list[str] = []
-        # Serializes view (re)registration WITH plan analysis: temp views
-        # are re-registered one-by-one per request, so without the lock a
-        # concurrent request on ThreadingHTTPServer could analyze a query
-        # against a MIXED view set — some views from snapshot v, some
-        # from v+1 (review finding). Analysis is eager in spark.sql(), so
-        # once the DataFrame exists the views may change freely; only
-        # refresh+analyze sits in the critical section. Residual: two
-        # views built microseconds apart can still pin different
+        # the per-snapshot serving state (see _state) and its lifetime
+        # counters, reported by /stats
+        self._snap_state: _SnapshotState | None = None
+        self._cache_stats = dict.fromkeys(
+            ("plan_hits", "plan_misses", "dataset_builds", "view_registrations"),
+            0,
+        )
+        # Guards the serving state: the key check and state swap, the
+        # plan LRU, the dataset build, and SQL view registration WITH
+        # analysis. Views are registered one by one when a /query first
+        # sees a new key; without the lock a concurrent /query could
+        # analyze against a MIXED view set — some views from snapshot
+        # v, some from v+1 (review finding). Analysis is eager in
+        # spark.sql(), so once the DataFrame exists the views may change
+        # freely; execution and rendering run outside the lock. Residual:
+        # two views built microseconds apart can still pin different
         # snapshots if an ingest commit lands between them — per-view
         # snapshot pinning is the engine's isolation granularity.
         self._view_lock = threading.Lock()
-        self._refresh()
         outer = self
 
         class _Handler(BaseHTTPRequestHandler):
@@ -336,16 +364,20 @@ class QueryServer:
 
     # -- handlers (also callable directly, no HTTP needed) -----------------
 
-    def _refresh(self) -> None:
-        """(Re)register the serving views against the CURRENT snapshot.
-        Temp views pin the file list of the snapshot they were built from,
-        so a long-lived server must refresh per request or it serves the
-        construction-time state forever and breaks after retention expires
-        those files (review finding). Registration is driver-side metadata
-        (~ms) — no data is read. A pre-ingest engine registers nothing;
-        queries then 400 cleanly until data exists."""
-        if self.engine.table.exists():
-            self.views = register_views(self.spark, self.engine)
+    def _state(self) -> _SnapshotState:
+        """The serving state for the CURRENT ``(table version, graph
+        epoch)``; a new key replaces the previous state whole. Every
+        cached DataFrame pins the file list of the snapshot it was built
+        from, so keying on the version is what keeps a long-lived server
+        fresh — any ingest commit or HTTP graph load starts a new state —
+        and drops the old snapshot's plans, whose files retention may
+        expire (review finding). Resolving the key is one log-directory
+        listing. Call under _view_lock."""
+        versions = self.engine.table.versions()
+        key = (versions[-1] if versions else None, self._graph_epoch)
+        if self._snap_state is None or self._snap_state.key != key:
+            self._snap_state = _SnapshotState(key)
+        return self._snap_state
 
     # query-form guard: a serving endpoint evaluates QUERIES; Spark's
     # sql() eagerly EXECUTES commands (DROP VIEW, INSERT OVERWRITE ...).
@@ -399,7 +431,13 @@ class QueryServer:
         self._reject_non_query(sql)
         lim = self._clamp_limit(limit)
         with self._view_lock:
-            self._refresh()
+            st = self._state()
+            # a pre-ingest engine registers nothing; queries then 400
+            # cleanly until data exists
+            if not st.views_registered and st.key[0] is not None:
+                register_views(self.spark, self.engine)
+                st.views_registered = True
+                self._cache_stats["view_registrations"] += 1
             df = self.spark.sql(sql)  # analysis is eager: views resolve here
         if form == "ask":
             return to_ask_json(df)
@@ -417,39 +455,47 @@ class QueryServer:
 
         lim = self._clamp_limit(limit)
         with self._view_lock:
-            self._refresh()
-            form, df = self._compiled(text)
+            form, df = self._compiled(self._state(), text)
         return render_sparql_result(form, df, limit=lim)
 
-    def _compiled(self, text: str):
-        """(form, DataFrame) for a SPARQL text — LRU-cached on (query
-        text, table version, loaded-graph epoch), so a serving endpoint
-        replaying the same query skips parse+compile (~0.1–0.2 s of
-        driver-side work per request at this corpus size). The cached
-        DataFrame pins the snapshot it was built from; any ingest commit
-        changes the version component and any HTTP graph load bumps the
-        epoch, so a stale plan can never serve a newer table. Call under
+    def _compiled(self, st: _SnapshotState, text: str):
+        """(form, DataFrame) for a SPARQL text — LRU-cached per query
+        text in the snapshot state, so a serving endpoint replaying the
+        same query skips parse+compile (~0.1–0.2 s of driver-side work
+        per request at this corpus size), and a miss compiles against
+        the state's dataset instead of rebuilding it. The cached
+        DataFrame pins the snapshot it was built from; it dies with its
+        state, so a stale plan can never serve a newer table. Call under
         _view_lock."""
-        version = (
-            self.engine.table.snapshot().version
-            if self.engine.table.exists()
-            else None
-        )
-        key = (text, version, self._graph_epoch)
-        hit = self._plan_cache.get(key)
+        hit = st.plans.get(text)
         if hit is not None:
-            self._plan_cache.move_to_end(key)  # LRU recency
+            st.plans.move_to_end(text)  # LRU recency
+            self._cache_stats["plan_hits"] += 1
             return hit
         from .queries.sparql import parse_sparql, sparql_df
 
         q = parse_sparql(text)
-        df = sparql_df(self._dataset(), q)
-        self._plan_cache[key] = (q.form, df)
-        while len(self._plan_cache) > self._plan_cache_size:
-            self._plan_cache.popitem(last=False)
-        return self._plan_cache[key]
+        plan = st.plans[text] = (q.form, sparql_df(self._state_dataset(st), q))
+        self._cache_stats["plan_misses"] += 1
+        while len(st.plans) > st.PLAN_CACHE_SIZE:
+            st.plans.popitem(last=False)
+        return plan
+
+    def _state_dataset(self, st: _SnapshotState):
+        """The state's SPARQL dataset, built on first use. It is built
+        after the key was read, so it is never older than its key. Call
+        under _view_lock."""
+        if st.dataset is None:
+            st.dataset = self._build_dataset()
+            self._cache_stats["dataset_builds"] += 1
+        return st.dataset
 
     def _dataset(self):
+        """The SPARQL dataset of the current snapshot state."""
+        with self._view_lock:
+            return self._state_dataset(self._state())
+
+    def _build_dataset(self):
         """The SPARQL dataset this server answers over: the engine's
         lake-backed triples/annotations unioned with any HTTP-loaded
         named graphs (both relations carry the same lexical + metadata
@@ -516,21 +562,32 @@ class QueryServer:
         }
 
     def stats(self) -> dict[str, Any]:
+        """Table summary plus the serving cache, read without building
+        anything. ``views`` names the SQL views /query serves;
+        ``serving_cache.key`` is the ``[table version, graph epoch]`` of
+        the state last served (null before the first request)."""
+        with self._view_lock:
+            st = self._snap_state
+            cache = {
+                "key": list(st.key) if st is not None else None,
+                "views_registered": st is not None and st.views_registered,
+                **self._cache_stats,
+            }
         if not self.engine.table.exists():
             return {
                 "table_version": None,
                 "data_files": 0,
                 "committed_batches": 0,
-                "views": self.views,
+                "views": [],
+                "serving_cache": cache,
             }
-        with self._view_lock:  # never swap views under a locked query
-            self._refresh()
         snap = self.engine.table.snapshot()
         return {
             "table_version": snap.version,
             "data_files": len(snap.files),
             "committed_batches": len(snap.committed_batches),
-            "views": self.views,
+            "views": view_names(),
+            "serving_cache": cache,
         }
 
     # -- workbench explorer endpoints --------------------------------------
@@ -539,14 +596,12 @@ class QueryServer:
     # (rdf-workbench.py) from the engine's lake-backed operators
     # (operators/graph.py — the corpus proves them against DuckDB
     # oracles). Results are bounded by max_limit like every other
-    # endpoint; a fresh snapshot-pinned triples frame is built per call.
+    # endpoint and read the current snapshot state's dataset.
 
     def _triples(self):
-        # explorer frames read the engine's snapshot-pinned triples view
-        # (plus any HTTP-loaded graphs) directly — they never touch the
-        # SQL temp views, so no register_views refresh (and no
-        # _view_lock contention with running /query requests) is needed
-        # here (review finding)
+        # explorer frames read the state's snapshot-pinned triples
+        # (plus any HTTP-loaded graphs) — the SPARQL dataset, never the
+        # SQL temp views, so they register no views (review finding)
         return self._dataset().triples
 
     def _rows(self, df, order_cols: list[str]) -> list[dict]:
@@ -884,8 +939,8 @@ class QueryServer:
             finally:
                 if pinned is not None:
                     pinned.unpersist()
-            # publish only after the write landed; also invalidates
-            # cached plans (see _compiled)
+            # publish only after the write landed; the new epoch also
+            # starts a new serving state (see _state)
             self._graph_epoch = nxt
 
     def _graph_version_path(self) -> str:

@@ -28,23 +28,35 @@ _BNODE_RE = re.compile(r"^b[0-9a-f]{64}$")
 _IRI_RE = re.compile(r"^(https?|urn|file|ftp):")
 
 
+# view name -> the engine relation it serves
+_VIEWS = {
+    "repo_files": lambda e: e.current_state(),
+    "rdf_files_wide": lambda e: e.live_rows(),
+    "rdf_triples": lambda e: e.triples_view(),
+    "rdf_annotations": lambda e: e.annotations_view(),
+    "batches": lambda e: e.ledger_view(),
+    "batch_status_log": lambda e: e.batches.read(),
+    "batch_metrics": lambda e: e.metrics.read(),
+}
+
+
+def view_names(prefix: str = "") -> list[str]:
+    """The sorted names ``register_views`` creates, without building them."""
+    return sorted(prefix + n for n in _VIEWS)
+
+
 def register_views(
     spark: SparkSession, engine: CdcEngine, prefix: str = ""
 ) -> list[str]:
-    """Create temp views over the live engine state. Views are lazy —
-    each query re-reads the current snapshot (no staleness)."""
-    views = {
-        f"{prefix}repo_files": engine.current_state(),
-        f"{prefix}rdf_files_wide": engine.live_rows(),
-        f"{prefix}rdf_triples": engine.triples_view(),
-        f"{prefix}rdf_annotations": engine.annotations_view(),
-        f"{prefix}batches": engine.ledger_view(),
-        f"{prefix}batch_status_log": engine.batches.read(),
-        f"{prefix}batch_metrics": engine.metrics.read(),
-    }
-    for name, df in views.items():
-        df.createOrReplaceTempView(name)
-    return sorted(views)
+    """Create temp views over the engine state as of NOW. Each view pins
+    the file list of the snapshot it was built from: a later commit is
+    invisible to it until the views are registered again. Building them
+    is driver-side plan construction (file listing, schema, the
+    triples/annotations projections) — no data is read, but it is not
+    free: about 0.5 s per call for a 4k-row table on a 4-core host."""
+    for name, build in _VIEWS.items():
+        build(engine).createOrReplaceTempView(prefix + name)
+    return view_names(prefix)
 
 
 def _term(

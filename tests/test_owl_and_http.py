@@ -639,9 +639,33 @@ def test_graphs_load_guards(gm_server):
     assert code == 400 and "file" in doc["detail"]
 
 
+def _commit(srv, seq: int, path: str, batch_id: str) -> None:
+    """Ingest one new file through the server's engine (a new snapshot)."""
+    ev = srv.spark.createDataFrame(
+        [(seq, "I", "r1", path, "c9", "en", f"print({seq})", None)],
+        "seq long, op string, repo string, path string, commit string,"
+        " lang string, content string, event_ts timestamp",
+    )
+    srv.engine.apply_batch(ev, batch_id)
+
+
+def _count_calls(monkeypatch, module, name: str) -> dict:
+    """Patch module.name with a call-counting wrapper; {"n": calls}."""
+    seen = {"n": 0}
+    real = getattr(module, name)
+
+    def counting(*args, **kwargs):
+        seen["n"] += 1
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(module, name, counting)
+    return seen
+
+
 def test_sparql_plan_cache_skips_parse_on_repeat(server, monkeypatch):
     # round-5 verdict ask #3: a repeated identical query must not
     # re-parse/re-compile; a new table version must invalidate the plan
+    import etl_pipeline_rdf_star_spark.http_serving as hs
     import etl_pipeline_rdf_star_spark.queries.sparql as sq
 
     calls = {"n": 0}
@@ -652,6 +676,10 @@ def test_sparql_plan_cache_skips_parse_on_repeat(server, monkeypatch):
         return real(text)
 
     monkeypatch.setattr(sq, "parse_sparql", counting)
+    views = _count_calls(monkeypatch, hs, "register_views")
+    datasets = _count_calls(monkeypatch, sq, "dataset_from_engine")
+    # start on a snapshot no earlier test in this module has served
+    _commit(server, 100, "plancache.py", "http-plancache")
     q = "SELECT (COUNT(*) AS ?n) WHERE { ?s ?p ?o }"
     d1 = server.sparql(q)
     assert calls["n"] == 1
@@ -659,19 +687,137 @@ def test_sparql_plan_cache_skips_parse_on_repeat(server, monkeypatch):
     assert calls["n"] == 1  # cache hit: zero parser invocations
     assert d1 == d2
 
+    # distinct texts on the same snapshot compile against ONE dataset and
+    # never touch the SQL temp views
+    server.sparql("SELECT ?s WHERE { ?s <http://example.org/lang> ?l }")
+    server.sparql("ASK { ?s <http://example.org/commit> ?c }")
+    assert calls["n"] == 3
+    assert views["n"] == 0
+    assert datasets["n"] == 1
+
     # an ingest commit bumps the table version → the plan recompiles and
     # the result reflects the new snapshot
-    ev = server.spark.createDataFrame(
-        [(99, "I", "r1", "cachebust.py", "c9", "en", "print(99)", None)],
-        "seq long, op string, repo string, path string, commit string,"
-        " lang string, content string, event_ts timestamp",
-    )
-    server.engine.apply_batch(ev, "http-cachebust")
+    _commit(server, 99, "cachebust.py", "http-cachebust")
     d3 = server.sparql(q)
-    assert calls["n"] == 2
+    assert calls["n"] == 4
     assert int(d3["results"]["bindings"][0]["n"]["value"]) > int(
         d1["results"]["bindings"][0]["n"]["value"]
     )
+    assert views["n"] == 0
+    assert datasets["n"] == 2  # one dataset per snapshot
+
+
+def test_graph_load_rebuilds_dataset(server, tmp_path, monkeypatch):
+    # an HTTP graph load bumps the graph epoch: the next request must
+    # build a new dataset and see the loaded graph
+    import etl_pipeline_rdf_star_spark.queries.sparql as sq
+    from etl_pipeline_rdf_star_spark.http_serving import QueryServer
+
+    inp = tmp_path / "input"
+    inp.mkdir()
+    (inp / "extra.ttl").write_text(
+        "<http://epoch.example/s> <http://epoch.example/p> "
+        "<http://epoch.example/o> .\n"
+    )
+    srv = QueryServer(
+        server.spark,
+        server.engine,
+        input_dir=str(inp),
+        graph_store=str(tmp_path / "graphs"),
+    ).start()
+    datasets = _count_calls(monkeypatch, sq, "dataset_from_engine")
+    q = "SELECT ?o WHERE { <http://epoch.example/s> <http://epoch.example/p> ?o }"
+    try:
+        assert srv.sparql(q)["results"]["bindings"] == []
+        assert datasets["n"] == 1
+        code, doc = _post_empty(srv, "/api/graphs/load?file=extra.ttl")
+        assert code == 200 and doc["tripleCount"] == 1
+        code, doc = _post(srv, {"sparql": q})
+        assert code == 200
+        assert [b["o"]["value"] for b in doc["results"]["bindings"]] == [
+            "http://epoch.example/o"
+        ]
+        assert datasets["n"] == 2
+        assert srv.stats()["serving_cache"]["key"][1] == 1
+    finally:
+        srv.stop()
+
+
+def test_sql_views_registered_once_per_snapshot(server, monkeypatch):
+    import etl_pipeline_rdf_star_spark.http_serving as hs
+
+    views = _count_calls(monkeypatch, hs, "register_views")
+    _commit(server, 300, "views1.py", "http-views-1")
+    body = {"sql": "SELECT count(*) AS n FROM repo_files"}
+    code1, d1 = _post(server, body)
+    code2, d2 = _post(server, body)
+    assert code1 == code2 == 200 and d1 == d2
+    assert views["n"] == 1
+    code, stats = _get(server, "/stats")
+    assert code == 200
+    cache = stats["serving_cache"]
+    assert cache["key"] == [stats["table_version"], 0]
+    assert cache["views_registered"] is True
+    assert "rdf_triples" in stats["views"]
+    assert views["n"] == 1  # /stats builds nothing
+
+    # a commit makes the next /query register the views again and see it
+    _commit(server, 301, "views2.py", "http-views-2")
+    code, doc = _post(
+        server,
+        {"sql": "SELECT 1 FROM repo_files WHERE path = 'views2.py'", "form": "ask"},
+    )
+    assert (code, doc) == (200, {"boolean": True})
+    assert views["n"] == 2
+
+
+def test_concurrent_sparql_readers_see_whole_snapshots(server):
+    # readers on ThreadingHTTPServer while ingest commits land: every
+    # reply is a 200 whose count is that of SOME committed snapshot
+    import threading
+    import urllib.parse
+
+    q = "SELECT (COUNT(*) AS ?n) WHERE { ?s ?p ?o }"
+    path = "/sparql?query=" + urllib.parse.quote(q)
+
+    def count(doc: dict) -> int:
+        return int(doc["results"]["bindings"][0]["n"]["value"])
+
+    committed = [count(server.sparql(q))]
+    stop = threading.Event()
+    seen: list[int] = []
+    errors: list = []
+
+    def reader() -> None:
+        sent = 0
+        while not stop.is_set() or sent < 2:
+            try:
+                code, doc = _get(server, path)
+            except Exception as e:  # a torn socket is a failure too
+                errors.append(repr(e))
+                return
+            sent += 1
+            if code == 200:
+                seen.append(count(doc))
+            else:
+                errors.append((code, doc))
+
+    threads = [threading.Thread(target=reader) for _ in range(3)]
+    for t in threads:
+        t.start()
+    try:
+        for i in range(2):
+            _commit(server, 400 + i, f"concurrent{i}.py", f"http-conc-{i}")
+            committed.append(count(server.sparql(q)))
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert committed == sorted(set(committed))  # each commit adds triples
+    assert len(seen) >= 6
+    assert set(seen) <= set(committed), (seen, committed)
 
 
 # -- round-5 review findings --------------------------------------------------

@@ -24,7 +24,9 @@ REF_MAPPINGS = sorted(glob.glob("/root/reference/mappings/*.yaml"))
 
 
 @pytest.mark.skipif(not REF_MAPPINGS, reason="reference tree not present")
-@pytest.mark.parametrize("path", REF_MAPPINGS, ids=os.path.basename)
+@pytest.mark.parametrize(
+    "path", REF_MAPPINGS, ids=[os.path.basename(p) for p in REF_MAPPINGS]
+)
 def test_reference_mapping_parses(path):
     ir = parse_file(path)
     assert ir.triples_maps, f"{path}: no triples maps parsed"
