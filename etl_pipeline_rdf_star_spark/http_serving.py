@@ -50,14 +50,17 @@ Endpoints:
   instead — the same divergence the oracle-green ``class_properties``
   corpus entry documents.
 
-Everything the server derives from the data — the SPARQL dataset, the
-compiled-plan LRU and the SQL temp views — is built once per
+The SPARQL dataset and the compiled-plan LRU are built once per
 ``(table snapshot version, graph epoch)`` and replaced whole when either
-changes (see ``_SnapshotState``); ``GET /stats`` reports the hit counts.
+changes (see ``_SnapshotState``). The SQL temp views are registered by
+``/query`` only, once per (table, batch ledger, metrics) version — the
+``batches`` views move with the ledger, not the table. ``GET /stats``
+reports both keys and the hit counts.
 
 Temp views are session-global: run ONE QueryServer per SparkSession (or
-distinct ``register_views`` prefixes) — a second server's views would
-shadow the first's.
+distinct ``register_views`` prefixes). A server re-registers its views
+on its next ``/query`` after any other ``register_views`` call in the
+same session, so another caller's views never outlive one request.
 """
 
 from __future__ import annotations
@@ -75,6 +78,7 @@ from pyspark.sql import SparkSession
 
 from .serving import (
     register_views,
+    registration_tag,
     to_ask_json,
     to_construct_json,
     to_sparql_json,
@@ -110,18 +114,17 @@ _RDF_EXTS = {
 
 class _SnapshotState:
     """What the server derives from one ``(table version, graph epoch)``
-    key: the SPARQL dataset (built on first use), the compiled-plan LRU
-    keyed on query text, and whether the SQL temp views have been
-    registered. A new key replaces the whole state, so no plan, dataset
-    or view of an older snapshot outlives it."""
+    key: the SPARQL dataset (built once, on first use) and the
+    compiled-plan LRU keyed on query text. A new key replaces the whole
+    state, so no plan or dataset of an older snapshot outlives it."""
 
     PLAN_CACHE_SIZE = 128
 
     def __init__(self, key: tuple[int | None, int]):
         self.key = key
         self.dataset = None
+        self.build_lock = threading.Lock()  # one dataset build per key
         self.plans: OrderedDict = OrderedDict()
-        self.views_registered = False
 
 
 class QueryServer:
@@ -164,24 +167,30 @@ class QueryServer:
             ]
             if vers:
                 self._graph_epoch = max(vers)
-        # the per-snapshot serving state (see _state) and its lifetime
-        # counters, reported by /stats
+        # the per-snapshot serving state (see _state), the versions the
+        # SQL views were last registered for (see _register_views) and
+        # the lifetime counters, all reported by /stats
         self._snap_state: _SnapshotState | None = None
+        self._views_key: tuple | None = None
         self._cache_stats = dict.fromkeys(
             ("plan_hits", "plan_misses", "dataset_builds", "view_registrations"),
             0,
         )
-        # Guards the serving state: the key check and state swap, the
-        # plan LRU, the dataset build, and SQL view registration WITH
-        # analysis. Views are registered one by one when a /query first
-        # sees a new key; without the lock a concurrent /query could
-        # analyze against a MIXED view set — some views from snapshot
-        # v, some from v+1 (review finding). Analysis is eager in
-        # spark.sql(), so once the DataFrame exists the views may change
-        # freely; execution and rendering run outside the lock. Residual:
-        # two views built microseconds apart can still pin different
-        # snapshots if an ingest commit lands between them — per-view
-        # snapshot pinning is the engine's isolation granularity.
+        # Guards the state swap, the plan LRU and the counters; held for
+        # a directory listing or a dict operation, never for a compile
+        # or a dataset build, so explorer panels only ever wait on the
+        # build of the dataset they need (see _state_dataset).
+        self._state_lock = threading.Lock()
+        # Serializes SQL view registration WITH analysis. Views are
+        # registered one by one; without the lock a concurrent /query
+        # could analyze against a MIXED view set — some views from
+        # snapshot v, some from v+1. Analysis is eager
+        # in spark.sql(), so once the DataFrame exists the views may
+        # change freely; execution and rendering run outside the lock.
+        # Residual: two views built microseconds apart can still pin
+        # different snapshots if an ingest commit lands between them —
+        # per-view snapshot pinning is the engine's isolation
+        # granularity.
         self._view_lock = threading.Lock()
         outer = self
 
@@ -372,12 +381,42 @@ class QueryServer:
         fresh — any ingest commit or HTTP graph load starts a new state —
         and drops the old snapshot's plans, whose files retention may
         expire (review finding). Resolving the key is one log-directory
-        listing. Call under _view_lock."""
-        versions = self.engine.table.versions()
-        key = (versions[-1] if versions else None, self._graph_epoch)
-        if self._snap_state is None or self._snap_state.key != key:
-            self._snap_state = _SnapshotState(key)
-        return self._snap_state
+        listing, done under the lock so the key never moves backwards."""
+        with self._state_lock:
+            versions = self.engine.table.versions()
+            key = (versions[-1] if versions else None, self._graph_epoch)
+            if self._snap_state is None or self._snap_state.key != key:
+                self._snap_state = _SnapshotState(key)
+            return self._snap_state
+
+    def _register_views(self) -> None:
+        """Register the SQL temp views unless this server's registration
+        for the current (table, batch ledger, metrics) versions is still
+        in place. The ledger versions are part of the key because the
+        ``batches``/``batch_status_log``/``batch_metrics`` views read
+        those tables, which move without the data table: archive_batch,
+        retention and status transitions write only the ledger, and
+        apply_batch commits the data before the ledger.
+        Resolving the key is three log-directory listings. A pre-ingest
+        engine registers nothing; queries then 400 cleanly until data
+        exists. Call under _view_lock."""
+        e = self.engine
+        key = tuple(
+            vs[-1] if vs else None
+            for vs in (t.versions() for t in (e.table, e.batches, e.metrics))
+        )
+        if key[0] is None:
+            return
+        # another register_views call in this session replaced our views
+        # if the last recorded tag is not ours
+        if key != self._views_key or registration_tag(self.spark) != id(self):
+            register_views(self.spark, e, tag=id(self))
+            self._views_key = key
+            self._count("view_registrations")
+
+    def _count(self, name: str) -> None:
+        with self._state_lock:
+            self._cache_stats[name] += 1
 
     # query-form guard: a serving endpoint evaluates QUERIES; Spark's
     # sql() eagerly EXECUTES commands (DROP VIEW, INSERT OVERWRITE ...).
@@ -431,13 +470,7 @@ class QueryServer:
         self._reject_non_query(sql)
         lim = self._clamp_limit(limit)
         with self._view_lock:
-            st = self._state()
-            # a pre-ingest engine registers nothing; queries then 400
-            # cleanly until data exists
-            if not st.views_registered and st.key[0] is not None:
-                register_views(self.spark, self.engine)
-                st.views_registered = True
-                self._cache_stats["view_registrations"] += 1
+            self._register_views()
             df = self.spark.sql(sql)  # analysis is eager: views resolve here
         if form == "ask":
             return to_ask_json(df)
@@ -454,8 +487,7 @@ class QueryServer:
         from .queries.sparql import render_sparql_result
 
         lim = self._clamp_limit(limit)
-        with self._view_lock:
-            form, df = self._compiled(self._state(), text)
+        form, df = self._compiled(self._state(), text)
         return render_sparql_result(form, df, limit=lim)
 
     def _compiled(self, st: _SnapshotState, text: str):
@@ -465,35 +497,41 @@ class QueryServer:
         per request at this corpus size), and a miss compiles against
         the state's dataset instead of rebuilding it. The cached
         DataFrame pins the snapshot it was built from; it dies with its
-        state, so a stale plan can never serve a newer table. Call under
-        _view_lock."""
-        hit = st.plans.get(text)
-        if hit is not None:
-            st.plans.move_to_end(text)  # LRU recency
-            self._cache_stats["plan_hits"] += 1
-            return hit
+        state, so a stale plan can never serve a newer table. The compile
+        holds no lock: two concurrent misses on one text both compile,
+        and the later plan wins the slot."""
+        with self._state_lock:
+            hit = st.plans.get(text)
+            if hit is not None:
+                st.plans.move_to_end(text)  # LRU recency
+                self._cache_stats["plan_hits"] += 1
+                return hit
         from .queries.sparql import parse_sparql, sparql_df
 
         q = parse_sparql(text)
-        plan = st.plans[text] = (q.form, sparql_df(self._state_dataset(st), q))
-        self._cache_stats["plan_misses"] += 1
-        while len(st.plans) > st.PLAN_CACHE_SIZE:
-            st.plans.popitem(last=False)
+        plan = (q.form, sparql_df(self._state_dataset(st), q))
+        with self._state_lock:
+            st.plans[text] = plan
+            self._cache_stats["plan_misses"] += 1
+            while len(st.plans) > st.PLAN_CACHE_SIZE:
+                st.plans.popitem(last=False)
         return plan
 
     def _state_dataset(self, st: _SnapshotState):
-        """The state's SPARQL dataset, built on first use. It is built
-        after the key was read, so it is never older than its key. Call
-        under _view_lock."""
-        if st.dataset is None:
-            st.dataset = self._build_dataset()
-            self._cache_stats["dataset_builds"] += 1
+        """The state's SPARQL dataset, built on first use. Concurrent
+        first users wait on the state's own build lock — for the one
+        build they all need — never on a compile or a SQL analysis. It
+        is built after the key was read, so it is never older than its
+        key."""
+        with st.build_lock:
+            if st.dataset is None:
+                st.dataset = self._build_dataset()
+                self._count("dataset_builds")
         return st.dataset
 
     def _dataset(self):
         """The SPARQL dataset of the current snapshot state."""
-        with self._view_lock:
-            return self._state_dataset(self._state())
+        return self._state_dataset(self._state())
 
     def _build_dataset(self):
         """The SPARQL dataset this server answers over: the engine's
@@ -565,12 +603,15 @@ class QueryServer:
         """Table summary plus the serving cache, read without building
         anything. ``views`` names the SQL views /query serves;
         ``serving_cache.key`` is the ``[table version, graph epoch]`` of
-        the state last served (null before the first request)."""
-        with self._view_lock:
+        the SPARQL state last served and ``views_key`` the ``[table,
+        batch ledger, metrics]`` versions the SQL views were last
+        registered for (each null until first used)."""
+        with self._state_lock:
             st = self._snap_state
+            vk = self._views_key
             cache = {
                 "key": list(st.key) if st is not None else None,
-                "views_registered": st is not None and st.views_registered,
+                "views_key": list(vk) if vk is not None else None,
                 **self._cache_stats,
             }
         if not self.engine.table.exists():
@@ -601,7 +642,8 @@ class QueryServer:
     def _triples(self):
         # explorer frames read the state's snapshot-pinned triples
         # (plus any HTTP-loaded graphs) — the SPARQL dataset, never the
-        # SQL temp views, so they register no views (review finding)
+        # SQL temp views, so they register no views and never wait on
+        # _view_lock behind a running /query
         return self._dataset().triples
 
     def _rows(self, df, order_cols: list[str]) -> list[dict]:

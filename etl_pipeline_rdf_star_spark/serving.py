@@ -45,18 +45,33 @@ def view_names(prefix: str = "") -> list[str]:
     return sorted(prefix + n for n in _VIEWS)
 
 
+# (id(session), prefix) -> the ``tag`` of the last register_views call.
+# Temp views are session-global, so a caller that skips re-registering
+# while its data is unchanged checks this to notice that another call
+# has replaced its views.
+_registered_by: dict[tuple[int, str], Any] = {}
+
+
 def register_views(
-    spark: SparkSession, engine: CdcEngine, prefix: str = ""
+    spark: SparkSession, engine: CdcEngine, prefix: str = "", tag: Any = None
 ) -> list[str]:
     """Create temp views over the engine state as of NOW. Each view pins
     the file list of the snapshot it was built from: a later commit is
     invisible to it until the views are registered again. Building them
     is driver-side plan construction (file listing, schema, the
     triples/annotations projections) — no data is read, but it is not
-    free: about 0.5 s per call for a 4k-row table on a 4-core host."""
+    free: about 0.5 s per call for a 4k-row table on a 4-core host.
+    ``tag`` is recorded for ``registration_tag``."""
     for name, build in _VIEWS.items():
         build(engine).createOrReplaceTempView(prefix + name)
+    _registered_by[(id(spark), prefix)] = tag
     return view_names(prefix)
+
+
+def registration_tag(spark: SparkSession, prefix: str = "") -> Any:
+    """The ``tag`` of the last ``register_views`` call on this session and
+    prefix (None if it passed none or there was no call)."""
+    return _registered_by.get((id(spark), prefix))
 
 
 def _term(

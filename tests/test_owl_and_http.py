@@ -705,6 +705,8 @@ def test_sparql_plan_cache_skips_parse_on_repeat(server, monkeypatch):
     )
     assert views["n"] == 0
     assert datasets["n"] == 2  # one dataset per snapshot
+    cache = server.stats()["serving_cache"]
+    assert cache["key"] == [server.engine.table.snapshot().version, 0]
 
 
 def test_graph_load_rebuilds_dataset(server, tmp_path, monkeypatch):
@@ -756,8 +758,9 @@ def test_sql_views_registered_once_per_snapshot(server, monkeypatch):
     code, stats = _get(server, "/stats")
     assert code == 200
     cache = stats["serving_cache"]
-    assert cache["key"] == [stats["table_version"], 0]
-    assert cache["views_registered"] is True
+    # views follow (table, ledger, metrics) versions; SQL never builds
+    # the SPARQL state
+    assert cache["views_key"][0] == stats["table_version"]
     assert "rdf_triples" in stats["views"]
     assert views["n"] == 1  # /stats builds nothing
 
@@ -769,6 +772,59 @@ def test_sql_views_registered_once_per_snapshot(server, monkeypatch):
     )
     assert (code, doc) == (200, {"boolean": True})
     assert views["n"] == 2
+
+
+def test_sql_batch_views_follow_ledger_only_writes(server):
+    # archive_batch writes only the batch ledger, not the data table: the
+    # batches view must still show the new status on the next /query
+    _commit(server, 310, "ledger.py", "http-ledger")
+    body = {"sql": "SELECT status FROM batches WHERE batch_id = 'http-ledger'"}
+
+    def status() -> list:
+        code, doc = _post(server, body)
+        assert code == 200, doc
+        return [b["status"]["value"] for b in doc["results"]["bindings"]]
+
+    assert status() == ["ACTIVE"]
+    version = server.engine.table.snapshot().version
+    server.engine.archive_batch("http-ledger")
+    assert server.engine.table.snapshot().version == version
+    assert status() == ["ARCHIVED"]
+
+
+def test_sql_views_reregistered_after_foreign_registration(server, tmp_path):
+    # temp views are session-global: another engine's register_views in
+    # the same session must not shadow this server's views past one call
+    from etl_pipeline_rdf_star_spark.serving import register_views
+    from etl_pipeline_rdf_star_spark.streaming.cdc import CdcEngine
+
+    body = {"sql": "SELECT 1 FROM repo_files WHERE path = 'foreign.py'", "form": "ask"}
+    _commit(server, 320, "foreign.py", "http-foreign")
+    assert _post(server, body) == (200, {"boolean": True})
+    other = CdcEngine(server.spark, str(tmp_path / "other"))
+    ev = server.spark.createDataFrame(
+        [(1, "I", "r9", "other.py", "c1", "en", "print(1)", None)],
+        "seq long, op string, repo string, path string, commit string,"
+        " lang string, content string, event_ts timestamp",
+    )
+    other.apply_batch(ev, "other-1")
+    register_views(server.spark, other)
+    assert _post(server, body) == (200, {"boolean": True})
+
+
+def test_explorer_dataset_does_not_wait_on_sql_analysis(server):
+    # explorer panels read the SPARQL dataset: a /query holding the view
+    # lock (registration + analysis) must not block them
+    import threading
+
+    server._dataset()  # build outside the timed section
+    got: list = []
+    with server._view_lock:
+        t = threading.Thread(target=lambda: got.append(server._dataset()))
+        t.start()
+        t.join(timeout=60)
+        assert not t.is_alive()
+    assert got and got[0].triples is not None
 
 
 def test_concurrent_sparql_readers_see_whole_snapshots(server):
