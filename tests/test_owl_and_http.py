@@ -991,147 +991,3 @@ def test_empty_first_load_does_not_wedge_store(gm_server, tmp_path_factory):
         assert srv._loaded_quads().count() == 279
     finally:
         os.unlink(p)
-
-
-def test_old_layout_graph_store_migrates(gm_server, tmp_path_factory):
-    # second-pass review finding: a pre-MVCC store (graph=... partition
-    # dirs at the root) handed to a new server silently served nothing;
-    # it must migrate into v000001 one-time
-    from etl_pipeline_rdf_star_spark.http_serving import QueryServer
-
-    root = str(tmp_path_factory.mktemp("old_layout"))
-    spark = gm_server.spark
-    spark.createDataFrame(
-        [("http://o/s", "http://o/p", "http://o/o", "http://o/g")],
-        "subject string, predicate string, object string, graph string",
-    ).write.mode("overwrite").partitionBy("graph").parquet(root)
-    srv = QueryServer(
-        spark,
-        gm_server.engine,
-        input_dir=gm_server.input_dir,
-        graph_store=root,
-    )
-    assert srv._graph_epoch == 1
-    assert srv._loaded_quads().count() == 1
-    assert os.path.isdir(os.path.join(root, "v000001"))
-
-
-def test_partial_old_layout_migration_resumes(gm_server, tmp_path_factory):
-    # third-pass review finding: a crash mid-migration left stray
-    # graph= dirs at the root forever (the existing v000001 suppressed
-    # the migration branch) — stray old-layout entries must keep
-    # migrating into v000001
-    from etl_pipeline_rdf_star_spark.http_serving import QueryServer
-
-    root = str(tmp_path_factory.mktemp("partial_mig"))
-    spark = gm_server.spark
-    spark.createDataFrame(
-        [
-            ("http://o/s1", "http://o/p", "http://o/o", "http://o/gA"),
-            ("http://o/s2", "http://o/p", "http://o/o", "http://o/gB"),
-        ],
-        "subject string, predicate string, object string, graph string",
-    ).write.mode("overwrite").partitionBy("graph").parquet(root)
-    # simulate the crash: one partition already moved into v000001
-    v1 = os.path.join(root, "v000001")
-    os.makedirs(v1)
-    os.rename(
-        os.path.join(root, "graph=http%3A%2F%2Fo%2FgA"),
-        os.path.join(v1, "graph=http%3A%2F%2Fo%2FgA"),
-    )
-    srv = QueryServer(
-        spark,
-        gm_server.engine,
-        input_dir=gm_server.input_dir,
-        graph_store=root,
-    )
-    # the resumed migration publishes a NEW version carrying v000001
-    # forward — mutating the published v000001 in place would change
-    # what a concurrently running server's cached plans read
-    assert srv._graph_epoch == 2
-    assert srv._loaded_quads().count() == 2  # BOTH graphs serve
-    assert not any(
-        n.startswith("graph=") for n in os.listdir(root)
-    )
-
-
-def test_superseded_stray_not_merged(gm_server, tmp_path_factory):
-    # a stray old-layout graph that ALSO exists in the current version
-    # was replaced by a later load — the stray must be preserved out of
-    # the data path, never merged back (it would duplicate/revive stale
-    # rows)
-    from etl_pipeline_rdf_star_spark.http_serving import QueryServer
-
-    root = str(tmp_path_factory.mktemp("superseded"))
-    spark = gm_server.spark
-    # current version: graph G with ONE (new) row
-    spark.createDataFrame(
-        [("http://n/s", "http://n/p", "http://n/o", "http://o/G")],
-        "subject string, predicate string, object string, graph string",
-    ).write.mode("overwrite").partitionBy("graph").parquet(
-        os.path.join(root, "v000001")
-    )
-    # stray old-layout remnant of the SAME graph with stale rows
-    spark.createDataFrame(
-        [
-            ("http://old/s1", "http://old/p", "http://old/o", "http://o/G"),
-            ("http://old/s2", "http://old/p", "http://old/o", "http://o/G"),
-        ],
-        "subject string, predicate string, object string, graph string",
-    ).write.mode("overwrite").partitionBy("graph").parquet(root + "_tmp")
-    os.rename(
-        os.path.join(root + "_tmp", "graph=http%3A%2F%2Fo%2FG"),
-        os.path.join(root, "graph=http%3A%2F%2Fo%2FG"),
-    )
-    srv = QueryServer(
-        spark,
-        gm_server.engine,
-        input_dir=gm_server.input_dir,
-        graph_store=root,
-    )
-    assert srv._graph_epoch == 2
-    rows = srv._loaded_quads().collect()
-    assert [r["subject"] for r in rows] == ["http://n/s"]  # new row only
-    assert any(n.startswith("_superseded_") for n in os.listdir(root))
-
-
-def test_migration_crash_between_publish_and_cleanup(
-    gm_server, tmp_path_factory
-):
-    # fifth-pass review finding: the migration must be build-then-
-    # publish (atomic rename), so the only other crash window is
-    # between publication and stray cleanup — a restart must then file
-    # the already-published strays as superseded, losing nothing and
-    # duplicating nothing
-    from etl_pipeline_rdf_star_spark.http_serving import QueryServer
-
-    root = str(tmp_path_factory.mktemp("crash_mig"))
-    spark = gm_server.spark
-    spark.createDataFrame(
-        [("http://a/s", "http://a/p", "http://a/o", "http://o/gA")],
-        "subject string, predicate string, object string, graph string",
-    ).write.partitionBy("graph").parquet(os.path.join(root, "v000001"))
-    spark.createDataFrame(
-        [
-            ("http://a/s", "http://a/p", "http://a/o", "http://o/gA"),
-            ("http://b/s", "http://b/p", "http://b/o", "http://o/gB"),
-        ],
-        "subject string, predicate string, object string, graph string",
-    ).write.partitionBy("graph").parquet(os.path.join(root, "v000002"))
-    # the crash left gB's original still at the root
-    spark.createDataFrame(
-        [("http://b/s", "http://b/p", "http://b/o", "http://o/gB")],
-        "subject string, predicate string, object string, graph string",
-    ).write.partitionBy("graph").parquet(root + "_t")
-    g = [n for n in os.listdir(root + "_t") if n.startswith("graph=")][0]
-    os.rename(os.path.join(root + "_t", g), os.path.join(root, g))
-    srv = QueryServer(
-        spark,
-        gm_server.engine,
-        input_dir=gm_server.input_dir,
-        graph_store=root,
-    )
-    rows = {r["subject"] for r in srv._loaded_quads().collect()}
-    assert rows == {"http://a/s", "http://b/s"}  # nothing lost
-    assert srv._loaded_quads().count() == 2  # nothing duplicated
-    assert not any(n.startswith("graph=") for n in os.listdir(root))
