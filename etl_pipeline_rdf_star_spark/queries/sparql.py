@@ -55,7 +55,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -94,16 +94,26 @@ _ABS_IRI_RE = r'^[A-Za-z][A-Za-z0-9+.\-]*:[^\s<>"{}|\\^`]*$'
 def _serialize_quoted(t) -> str:
     """Render a parsed GROUND quoted-triple Term in the engine's
     serialized form (same spacing as dataset_from_quads / the TRIPLE()
-    builtin). A variable inside an expression-position quoted term has
-    no constant rendering — silently serializing its NAME would make
-    every comparison false (review finding) — so it rejects loudly;
-    use TRIPLE(?s, p, o) for per-row construction."""
+    builtin). The form keeps lexical forms only, so whatever it would
+    lose is rejected loudly: a variable inside (serializing its NAME
+    would make every comparison false; use TRIPLE(?s, p, o) for per-row
+    construction) and a literal with a datatype, a
+    language tag, whitespace or '<<'/'>>'."""
     parts = []
     for c in t.value:
         if c.kind == "var":
             raise SparqlUnsupported(
                 "variable inside a quoted-triple expression term — "
                 "use TRIPLE() to build a per-row triple term"
+            )
+        if c.kind == "num" or (
+            c.kind == "literal"
+            and (c.datatype or c.lang or re.search(r"\s|<<|>>", c.value))
+        ):
+            raise SparqlUnsupported(
+                f"literal {c.value!r} inside a quoted-triple term has a "
+                "datatype, language tag, whitespace or '<<'/'>>' that the "
+                "serialized '<< s p o >>' form cannot keep"
             )
         parts.append(
             _serialize_quoted(c) if c.kind == "quoted" else str(c.value)
@@ -1232,33 +1242,47 @@ def _fresh(prefix: str) -> str:
     return f"_{prefix}#{_COUNTER[0]}"
 
 
-# matches every _fresh-generated marker; the single definition keeps the
-# SELECT * and DESCRIBE * filters from drifting (review finding)
-_MARKER_RE = re.compile(r"^_\w+#\d+$")
+# matches every internal column (_fresh markers and the _meta#<var> term
+# metadata columns); the single definition keeps the SELECT * and
+# DESCRIBE * filters from drifting
+_MARKER_RE = re.compile(r"^_\w+#\w+$")
 
-# metadata marker columns (_bind attaches them; DATATYPE()/LANG() read
-# them): one naming scheme, one regex builder — three call sites once
-# drifted apart hand-building slightly different patterns (review
-# finding)
-_META_TAGS = ("dt", "lang", "kind")
+# Term metadata. Each variable whose metadata the query inspects
+# (_meta_vars_of) carries ONE column, _meta#<var>, a struct of what its
+# binding sites know: ``kind`` (iri/blank/literal/triple), ``dt`` (the
+# datatype) and ``lang`` (the language tag); a field is null when
+# unknown. Values stay lexical strings, so the metadata column is never
+# a join key: _join merges it field by field, UNION
+# null-fills it, and _term_meta is the one place that reads it.
+_META_PREFIX = "_meta#"
+_META_FIELDS = ("kind", "dt", "lang")
+_META_TYPE = "struct<kind:string,dt:string,lang:string>"
 
 
-def _meta_marker_re(var: str | None = None, tag: str | None = None):
-    t = tag if tag is not None else "(?:" + "|".join(_META_TAGS) + ")"
-    v = re.escape(var) if var is not None else r"\w+"
-    return re.compile(rf"^_{t}_{v}#\d+$")
+def _meta_name(var: str) -> str:
+    return _META_PREFIX + var
 
 
-def _meta_col(df, var: str | None, tag: str):
-    """Coalesce of a var's ``tag`` metadata marker columns in ``df``
-    (null Column when the var is unknown or carries no markers)."""
-    if var is None or df is None:
-        return F.lit(None).cast("string")
-    pat = _meta_marker_re(var=var, tag=tag)
-    cs = [c for c in df.columns if pat.match(c)]
-    if not cs:
-        return F.lit(None).cast("string")
-    return F.coalesce(*(F.col(c) for c in cs))
+def _meta_struct(
+    kind: Column, dt: Column | None = None, lang: Column | None = None
+) -> Column:
+    return F.struct(
+        *[
+            (F.lit(None) if c is None else c).cast("string").alias(name)
+            for c, name in zip((kind, dt, lang), _META_FIELDS)
+        ]
+    )
+
+
+def _shared_vars(left: DataFrame, right: DataFrame) -> list[str]:
+    """Join keys of two solution frames: their common columns except the
+    metadata ones (joining on those would require datatype equality where
+    the engine's lexical join semantics don't)."""
+    return sorted(
+        c
+        for c in set(left.columns) & set(right.columns)
+        if not c.startswith(_META_PREFIX)
+    )
 
 
 def _expr_var_name(e: "Expr") -> str | None:
@@ -1270,31 +1294,6 @@ def _expr_var_name(e: "Expr") -> str | None:
     ):
         return e.args[0].value
     return None
-
-
-def _term_kind_col(df, var: str | None, s: Column) -> Column:
-    """Term-kind classification shared by DATATYPE()/LANG() and the
-    is* builtins (one precedence, one implementation — review finding:
-    two encodings drifted): stored object_kind marker > stored
-    datatype/lang markers (⇒ literal) > serialized-triple-term shape >
-    bnode shape > IRI shape > literal. Null input stays null."""
-    from ..serving import _IRI_RE
-
-    kindv = _meta_col(df, var, "kind")
-    has_lit_meta = (
-        _meta_col(df, var, "dt").isNotNull()
-        | _meta_col(df, var, "lang").isNotNull()
-    )
-    return F.when(s.isNull(), F.lit(None).cast("string")).otherwise(
-        F.coalesce(
-            kindv,
-            F.when(has_lit_meta, F.lit("literal")),
-            F.when(s.rlike(_TRIPLE_TERM_RE), F.lit("triple")),
-            F.when(s.startswith("_:"), F.lit("blank")),
-            F.when(s.rlike(_IRI_RE.pattern), F.lit("iri")),
-            F.lit("literal"),
-        )
-    )
 
 
 def _expr_const_term(e: "Expr") -> "Term | None":
@@ -1316,24 +1315,6 @@ _CALL_RESULT_KIND = {
 }
 
 
-def _expr_kind_col(df, e: "Expr", c: Column) -> Column:
-    """Term-kind of a compiled expression column. A CONSTANT term knows
-    its kind from the parse (an IRI stays 'iri' even when its scheme is
-    outside the sniff set, e.g. mailto:); a kind-minting builtin knows
-    its result kind; a bare var consults stored metadata via
-    _term_kind_col; any other computed expression falls back to the
-    same classifier's shape sniff. Callers null-gate the VALUE — an
-    unbound operand never reaches a kind comparison."""
-    t = _expr_const_term(e)
-    if t is not None:
-        return F.lit(_const_term_meta(t)[0])
-    if isinstance(e, Expr) and e.op == "call":
-        k = _CALL_RESULT_KIND.get(e.args[0])
-        if k is not None:
-            return F.when(c.isNotNull(), F.lit(k))
-    return _term_kind_col(df, _expr_var_name(e), c)
-
-
 def _num_dt(lex: str) -> str:
     """The XSD datatype a bare numeric literal denotes (SPARQL 19.2 /
     Turtle shorthand — same rule as the Turtle reader's)."""
@@ -1344,26 +1325,9 @@ def _num_dt(lex: str) -> str:
     return "http://www.w3.org/2001/XMLSchema#integer"
 
 
-def _const_term_meta(t) -> tuple[str, str | None, str | None]:
-    """(kind, effective datatype, effective lang) of a CONSTANT term —
-    THE one encoding of parse-time term metadata (review finding: the
-    expression helpers and the BIND marker attachment each re-derived
-    it and could drift). kind is the classifier vocabulary (literal/
-    iri/triple); dt is null only for non-literals; lang is '' for
-    untagged literals, null for non-literals."""
-    if t.kind == "num":
-        return "literal", _num_dt(str(t.value)), ""
-    if t.kind == "literal":
-        dt = t.datatype or (_RDF_LANGSTRING if t.lang else _XSD_STRING)
-        return "literal", dt, t.lang or ""
-    if t.kind == "quoted":
-        return "triple", None, None
-    return "iri", None, None
-
-
 def _strdt_call(e: "Expr") -> "tuple[str, Term] | None":
-    """(fn, constant second arg) when e is STRDT/STRLANG with the
-    metadata-valid constant shape _bind_constructed_meta attaches for."""
+    """(fn, constant second arg) when e is STRDT/STRLANG with a
+    metadata-valid constant datatype/tag."""
     if isinstance(e, Expr) and e.op == "call":
         fn, args = e.args
         if (
@@ -1376,67 +1340,87 @@ def _strdt_call(e: "Expr") -> "tuple[str, Term] | None":
     return None
 
 
-def _expr_dt_col(df, e: "Expr", c: Column) -> Column:
-    """EFFECTIVE datatype of an expression for term-identity comparison
-    (sameTerm / RDF 1.1: every literal has a datatype — plain ⇒
-    xsd:string, tagged ⇒ rdf:langString). Null for non-literals — the
-    kind leg distinguishes those. Normalizing through the effective
-    datatype keeps the three literal encodings consistent: stored
-    dt/lang markers, STRDT/STRLANG-constructed markers, and parse-time
-    constants (review finding: constant operands contributed null
-    metadata, so "chat" and "chat"@en compared sameTerm-true)."""
+class _TermMeta(NamedTuple):
+    kind: Column  # iri | blank | literal | triple; null for a null value
+    dt: Column  # effective datatype; null for non-literals
+    lang: Column  # effective language tag ("" untagged); null for non-literals
+    declared: Column  # the datatype known before the xsd:string default
+
+
+def _term_meta(df: DataFrame | None, e: "Expr", c: Column | None) -> _TermMeta:
+    """THE effective term metadata of expression ``e``, compiled to the
+    string column ``c`` over ``df`` — what DATATYPE, LANG, the is*
+    tests, isNUMERIC, sameTerm, TRIPLE and the DISTINCT key all read.
+
+    Precedence: a constant knows its metadata from the parse; a
+    STRDT/STRLANG call constructs it; a bare variable reads its
+    _meta#<var> column and a kind-minting builtin fixes its result kind;
+    the rest is a shape sniff (serialized triple term > bnode > IRI of a
+    known scheme > literal). RDF 1.1 effective metadata: every literal
+    has a datatype — plain ⇒ xsd:string, tagged ⇒ rdf:langString — and
+    an untagged literal's tag is "". ``declared`` is the datatype known
+    before that default, which isNUMERIC consults before the lexical
+    sniff."""
+    from ..serving import _IRI_RE
+
     t = _expr_const_term(e)
     if t is not None:
-        dt = _const_term_meta(t)[1]
-        return F.lit(dt) if dt else F.lit(None).cast("string")
+        if t.kind == "num":
+            meta = ("literal", _num_dt(str(t.value)), "")
+        elif t.kind == "literal":
+            dt = t.datatype or (_RDF_LANGSTRING if t.lang else _XSD_STRING)
+            meta = ("literal", dt, t.lang or "")
+        else:
+            meta = ("triple" if t.kind == "quoted" else "iri", None, None)
+        kind, dt, lang = (F.lit(x).cast("string") for x in meta)
+        return _TermMeta(kind, dt, lang, dt)
+    nn = c.isNotNull()
     sc = _strdt_call(e)
     if sc is not None:
         fn, arg = sc
-        dt = str(arg.value) if fn == "strdt" else _RDF_LANGSTRING
-        return F.when(c.isNotNull(), F.lit(dt))
+        tag = str(arg.value)
+        dt = F.when(nn, F.lit(tag if fn == "strdt" else _RDF_LANGSTRING))
+        lang = F.when(nn, F.lit(tag if fn == "strlang" else ""))
+        return _TermMeta(F.when(nn, F.lit("literal")), dt, lang, dt)
     var = _expr_var_name(e)
-    return F.when(
-        _expr_kind_col(df, e, c) == "literal",
-        F.coalesce(
-            _meta_col(df, var, "dt"),
-            F.when(
-                _meta_col(df, var, "lang").isNotNull(),
-                F.lit(_RDF_LANGSTRING),
+    if var is not None and df is not None and _meta_name(var) in df.columns:
+        m = F.col(_meta_name(var))
+        skind, sdt, slang = (m[f] for f in _META_FIELDS)
+    else:
+        skind = sdt = slang = F.lit(None).cast("string")
+    minted = _CALL_RESULT_KIND.get(e.args[0]) if e.op == "call" else None
+    if minted is not None:
+        kind = F.when(nn, F.lit(minted))
+    else:
+        kind = F.when(
+            nn,
+            F.coalesce(
+                skind,
+                F.when(sdt.isNotNull() | slang.isNotNull(), F.lit("literal")),
+                F.when(c.rlike(_TRIPLE_TERM_RE), F.lit("triple")),
+                F.when(c.startswith("_:"), F.lit("blank")),
+                F.when(c.rlike(_IRI_RE.pattern), F.lit("iri")),
+                F.lit("literal"),
             ),
+        )
+    is_lit = kind == "literal"
+    dt = F.when(
+        is_lit,
+        F.coalesce(
+            sdt,
+            F.when(slang.isNotNull(), F.lit(_RDF_LANGSTRING)),
             F.lit(_XSD_STRING),
         ),
     )
-
-
-def _expr_lang_col(df, e: "Expr", c: Column) -> Column:
-    """EFFECTIVE language tag for term-identity comparison: "" for
-    untagged literals (17.4.2.5), the tag for tagged ones, null for
-    non-literals."""
-    t = _expr_const_term(e)
-    if t is not None:
-        lang = _const_term_meta(t)[2]
-        return (
-            F.lit(lang)
-            if lang is not None
-            else F.lit(None).cast("string")
-        )
-    sc = _strdt_call(e)
-    if sc is not None:
-        fn, arg = sc
-        tag = str(arg.value) if fn == "strlang" else ""
-        return F.when(c.isNotNull(), F.lit(tag))
-    var = _expr_var_name(e)
-    return F.when(
-        _expr_kind_col(df, e, c) == "literal",
-        F.coalesce(_meta_col(df, var, "lang"), F.lit("")),
-    )
+    lang = F.when(is_lit, F.coalesce(slang, F.lit("")))
+    return _TermMeta(kind, dt, lang, sdt)
 
 
 def _strdt_meta_ok(fn: str, t: Term) -> bool:
     """Is this CONSTANT term a valid datatype/tag for STRDT/STRLANG?
-    (One predicate for the value-compile and metadata-attach sites —
-    review finding: two copies could disagree, unbinding the value
-    while still attaching metadata.)"""
+    (One predicate for the value compile and _term_meta: two copies
+    could disagree, unbinding the value while still attaching
+    metadata.)"""
     kind = t.kind
     if fn == "strdt":
         return kind == "iri"
@@ -1667,10 +1651,8 @@ class _Planner:
         meta_vars: set[str] | None = None,
     ):
         self.ds = ds
-        # vars whose term metadata (datatype / language tag) the query
-        # inspects via DATATYPE()/LANG(): pattern matching carries the
-        # relation's stored object_datatype/object_lang columns along
-        # for them (as join-neutral marker columns)
+        # vars whose term metadata the query inspects (_meta_vars_of):
+        # only they carry a _meta#<var> column
         self.meta_vars = meta_vars or set()
         self.from_graphs = from_graphs or []
         self.from_named = from_named or []
@@ -1695,89 +1677,25 @@ class _Planner:
             return df.where(F.lit(False))  # dataset has no named graphs
         return df.where(F.col("graph").isin(scope))
 
-    def _bind_constructed_meta(
-        self, df: DataFrame, var: str, expr: Expr
-    ) -> DataFrame:
-        """STRDT/STRLANG construct a TYPED/TAGGED literal: the value
-        column stays the lexical form (the engine's value model), and
-        the declared datatype / language tag rides along as a metadata
-        marker so DATATYPE()/LANG() on the BIND var round-trip."""
-        nn = F.col(var).isNotNull()
-        if expr.op == "term" and expr.args[0].kind != "var":
-            # BIND of a CONSTANT: the parse-time term metadata must ride
-            # along, or sameTerm/DATATYPE on the BIND var disagree with
-            # the same constant used inline (review finding:
-            # BIND("chat"@en AS ?x) FILTER(sameTerm(?x, "chat"@en))
-            # compared FALSE — the var leg normalized to plain
-            # xsd:string). The kind marker also stops the shape sniff
-            # from misfiling an IRI-shaped literal constant.
-            t = expr.args[0]
-            kind, dt, lang = _const_term_meta(t)
-            df = df.withColumn(
-                _fresh(f"kind_{var}"), F.when(nn, F.lit(kind))
-            )
-            # the full effective datatype attaches (xsd:string for
-            # plain, rdf:langString for tagged): isNUMERIC consults the
-            # marker by var name and must see a definitive non-numeric
-            # datatype for typed-string constants; the DISTINCT dedup
-            # key canonicalizes through the EFFECTIVE datatype, so the
-            # explicit marker still unifies with the stored dt-null
-            # convention (sixth-pass review finding resolved the two
-            # consumers' conflict this way)
-            if dt:
-                df = df.withColumn(
-                    _fresh(f"dt_{var}"), F.when(nn, F.lit(dt))
-                )
-            if lang:
-                df = df.withColumn(
-                    _fresh(f"lang_{var}"), F.when(nn, F.lit(lang))
-                )
+    def _bind_meta(self, df: DataFrame, var: str, expr: Expr) -> DataFrame:
+        """The metadata a BIND's expression fixes, so sameTerm/DATATYPE/
+        isNUMERIC on the BIND var agree with the expression used inline:
+        all of it for a constant or a STRDT/STRLANG literal, only the
+        result kind for a kind-minting builtin (isNUMERIC(?v) after
+        BIND(STR(?n) AS ?v) still sniffs the lexical). The value column
+        stays the lexical form."""
+        if var not in self.meta_vars:
             return df
-        if expr.op != "call":
+        if _expr_const_term(expr) is not None or _strdt_call(expr) is not None:
+            m = _term_meta(df, expr, F.col(var))
+            meta = _meta_struct(m.kind, m.dt, m.lang)
+        elif expr.op == "call" and expr.args[0] in _CALL_RESULT_KIND:
+            meta = _meta_struct(F.lit(_CALL_RESULT_KIND[expr.args[0]]))
+        else:
             return df
-        fn, args = expr.args
-        k = _CALL_RESULT_KIND.get(fn)
-        if k is not None:
-            # every kind-minting builtin rides its result kind along, so
-            # is*/sameTerm classify a BIND var like the direct nesting
-            # (review finding: only IRI/TRIPLE were pinned — isLITERAL(
-            # STR(?h)) and isLITERAL(?s) after BIND(STR(?h) AS ?s)
-            # disagreed when ?h was IRI-shaped)
-            df = df.withColumn(
-                _fresh(f"kind_{var}"), F.when(nn, F.lit(k))
-            )
-        if fn not in ("strdt", "strlang") or len(args) != 2:
-            return df
-        t = args[1]
-        # kind/arity violations already resolved at value-compile time
-        # (loud for non-constants, unbound for wrong kinds) — attach
-        # metadata only for the valid shapes (same predicate as the
-        # value compile, so the two sites cannot disagree)
-        if t.op != "term" or not _strdt_meta_ok(fn, t.args[0]):
-            return df
-        tag = "dt" if fn == "strdt" else "lang"
-        # the declared datatype attaches even when it is xsd:string:
-        # isNUMERIC consults the marker by var name, and a missing
-        # marker would send "42"^^xsd:string to the lexical sniff →
-        # true (sixth-pass review finding; term-identity unification
-        # happens in the EFFECTIVE-datatype DISTINCT key instead)
-        # null value → no term constructed → metadata must stay unbound
-        meta_col = F.when(
-            F.col(var).isNotNull(), F.lit(str(t.args[0].value))
+        return df.withColumn(
+            _meta_name(var), F.when(F.col(var).isNotNull(), meta)
         )
-        df = df.withColumn(_fresh(f"{tag}_{var}"), meta_col)
-        if fn == "strlang":
-            # a language-tagged literal's datatype is rdf:langString —
-            # attached explicitly so isNUMERIC's marker lookup sees a
-            # definitive non-numeric datatype (sixth-pass review
-            # finding: dropping it sent the lexical to the sniff); the
-            # effective-datatype DISTINCT key unifies it with the
-            # stored dt-null + lang convention
-            df = df.withColumn(
-                _fresh(f"dt_{var}"),
-                F.when(F.col(var).isNotNull(), F.lit(_RDF_LANGSTRING)),
-            )
-        return df
 
     # one triple pattern → DF with one column per variable
     def _pattern_df(self, tp: TriplePattern) -> DataFrame:
@@ -2024,25 +1942,38 @@ class _Planner:
 
     def _values_df(self, iv: InlineData) -> tuple[DataFrame, set[str]]:
         """VALUES inline data → a tiny literal relation (terms rendered
-        to the same lexical strings patterns match on). Catalyst
+        to the same lexical strings patterns match on, plus each
+        constant's _term_meta for the vars the query inspects). Catalyst
         broadcasts it into the enclosing join; UNDEF cells are nulls and
         mark their variable maybe-unbound so the compatible-mapping join
         path engages."""
-        from pyspark.sql import types as T
 
-        spark = self.ds.triples.sparkSession
-        rows = [
-            tuple(None if t is None else str(t.value) for t in row)
-            for row in iv.rows
-        ]
-        schema = T.StructType(
-            [T.StructField(v, T.StringType(), True) for v in iv.vars]
+        def row(terms: list) -> Column:
+            cells = []
+            for v, t in zip(iv.vars, terms):
+                value = None if t is None else str(t.value)
+                cells.append(F.lit(value).cast("string").alias(v))
+                if v in self.meta_vars:
+                    if t is None:
+                        meta = F.lit(None).cast(_META_TYPE)
+                    else:
+                        m = _term_meta(None, Expr("term", [t]), None)
+                        meta = _meta_struct(m.kind, m.dt, m.lang)
+                    cells.append(meta.alias(_meta_name(v)))
+            return F.struct(*cells)
+
+        # an empty block still needs the row type: one all-UNDEF template
+        # row over a zero-row range
+        rows = [row(r) for r in iv.rows] or [row([None] * len(iv.vars))]
+        vdf = (
+            self.ds.triples.sparkSession.range(
+                1 if iv.rows else 0, numPartitions=1
+            ).select(F.inline(F.array(*rows)))
         )
-        vdf = spark.createDataFrame(rows, schema)
         maybe = {
             v
             for i, v in enumerate(iv.vars)
-            if any(row[i] is None for row in rows)
+            if any(r[i] is None for r in iv.rows)
         }
         return vdf, maybe
 
@@ -2072,31 +2003,13 @@ class _Planner:
         if not select:  # pure existence pattern: ONE solution if any match
             return df.limit(1).select(F.lit(1).alias(_fresh("one")))
         proj = [c.alias(v) for v, c in select.items()]
-        # carry stored term metadata for vars the query inspects with
-        # DATATYPE()/LANG(); fresh '#'-marked names are never join keys
-        # (joining on them would wrongly require datatype equality where
-        # the engine's lexical join semantics don't) and projection
-        # strips them like any internal marker
-        ometa = cols.get("object")
-        if (
-            ometa is not None
-            and ometa.kind == "var"
-            and ometa.value in self.meta_vars
-        ):
-            for src, tag in (
-                ("object_datatype", "dt"),
-                ("object_lang", "lang"),
-                ("object_kind", "kind"),
-            ):
-                if src in df.columns:
-                    proj.append(
-                        F.col(src).alias(_fresh(f"{tag}_{ometa.value}"))
-                    )
-        # positional kind markers: the RDF model fixes what a non-object
-        # position can hold, so kind classification needs no lexical
-        # sniff there (review finding: a bare stored bnode label
-        # 'genid1' or a mailto: IRI in subject position sniffed
-        # 'literal', breaking isBLANK/TRIPLE/sameTerm on subject vars).
+        # term metadata of the vars the query inspects, one struct per
+        # var (merged when a var fills several positions). The object
+        # position carries the relation's stored fields. The RDF model
+        # fixes what the other positions can hold, so their kind needs
+        # no lexical sniff (a bare stored bnode label 'genid1' or a
+        # mailto: IRI in subject position would sniff 'literal',
+        # breaking isBLANK/TRIPLE/sameTerm on subject vars).
         # Subjects are IRIs or bnodes (quoted subjects live in the
         # annotations relation): stored subject_kind wins when the
         # frame carries it; otherwise anything that isn't an absolute
@@ -2105,6 +2018,15 @@ class _Planner:
         # use the same iri-or-bnode inference as subjects — the N-Quads
         # reader accepts '_:g' graph labels and stores them bare, so
         # pinning 'iri' would misclassify them (review finding).
+        known: dict[str, list[tuple]] = {}
+        o = cols.get("object")
+        if o is not None and o.kind == "var" and o.value in self.meta_vars:
+            stored = tuple(
+                F.col(c) if c in df.columns else None
+                for c in ("object_kind", "object_datatype", "object_lang")
+            )
+            if any(x is not None for x in stored):
+                known.setdefault(o.value, []).append(stored)
         for pos, always_iri in (
             ("subject", False), ("q_s", False), ("graph", False),
             ("predicate", True), ("q_p", True),
@@ -2124,7 +2046,13 @@ class _Planner:
                 if pos == "subject" and "subject_kind" in df.columns:
                     inferred = F.coalesce(F.col("subject_kind"), inferred)
                 kind = F.when(c.isNotNull(), inferred)
-            proj.append(kind.alias(_fresh(f"kind_{t.value}")))
+            known.setdefault(t.value, []).append((kind, None, None))
+        for v, sites in known.items():
+            fields = (
+                [x for x in field if x is not None] for field in zip(*sites)
+            )
+            merged = (F.coalesce(*xs) if xs else None for xs in fields)
+            proj.append(_meta_struct(*merged).alias(_meta_name(v)))
         return df.select(*proj)
 
     def _join(
@@ -2143,10 +2071,19 @@ class _Planner:
         common BGP case keeps its shuffle-friendly plan); shared
         maybe-unbound vars use the SPARQL compatibility condition
         (unbound matches anything) with COALESCE on output — an inner
-        equi join would silently drop those solutions on null keys."""
+        equi join would silently drop those solutions on null keys.
+        A metadata column both sides carry is no key: the right copy
+        joins under a temporary name and merges into the left's."""
         if left is None:
             return right, set(rmaybe)
-        shared = sorted(set(left.columns) & set(right.columns))
+        shared = _shared_vars(left, right)
+        both_meta = {
+            c: c + "#r"
+            for c in right.columns
+            if c.startswith(_META_PREFIX) and c in left.columns
+        }
+        if both_meta:
+            right = right.withColumnsRenamed(both_meta)
         if not shared:
             if how == "left":
                 # OPTIONAL sharing no vars: left join on TRUE — outer
@@ -2155,36 +2092,44 @@ class _Planner:
                 out = left.join(right, F.lit(True), "left")
             else:
                 out = left.crossJoin(right)
-            return out, set(lmaybe) | set(rmaybe)
-        fuzzy = [c for c in shared if c in lmaybe or c in rmaybe]
-        if not fuzzy:
-            out = left.join(right, on=shared, how=how)
+            maybe = set(lmaybe) | set(rmaybe)
         else:
-            la, ra = left.alias("_l"), right.alias("_r")
-            j = la.join(ra, _compat_cond(shared, fuzzy), how)
-            cols = [
-                (
-                    F.coalesce(F.col(f"_l.{c}"), F.col(f"_r.{c}")).alias(c)
-                    if c in shared
-                    else F.col(f"_l.{c}").alias(c)
-                )
-                for c in left.columns
-            ] + [
-                F.col(f"_r.{c}").alias(c)
-                for c in right.columns
-                if c not in shared
+            fuzzy = [c for c in shared if c in lmaybe or c in rmaybe]
+            if not fuzzy:
+                out = left.join(right, on=shared, how=how)
+            else:
+                la, ra = left.alias("_l"), right.alias("_r")
+                j = la.join(ra, _compat_cond(shared, fuzzy), how)
+                cols = [
+                    (
+                        F.coalesce(F.col(f"_l.{c}"), F.col(f"_r.{c}")).alias(c)
+                        if c in shared
+                        else F.col(f"_l.{c}").alias(c)
+                    )
+                    for c in left.columns
+                ] + [
+                    F.col(f"_r.{c}").alias(c)
+                    for c in right.columns
+                    if c not in shared
+                ]
+                out = j.select(*cols)
+            if how == "left":
+                # left-side values pass through; right-only vars are
+                # unbound on non-matching rows
+                maybe = set(lmaybe) | (set(right.columns) - set(left.columns))
+            else:
+                maybe = {
+                    c
+                    for c in set(lmaybe) | set(rmaybe)
+                    if (c not in shared) or (c in lmaybe and c in rmaybe)
+                }
+        for c, rc in both_meta.items():
+            # field by field; the left side's known fields win
+            merged = [
+                F.coalesce(F.col(c)[f], F.col(rc)[f]).alias(f)
+                for f in _META_FIELDS
             ]
-            out = j.select(*cols)
-        if how == "left":
-            # left-side values pass through; right-only vars are unbound
-            # on non-matching rows
-            maybe = set(lmaybe) | (set(right.columns) - set(left.columns))
-        else:
-            maybe = {
-                c
-                for c in set(lmaybe) | set(rmaybe)
-                if (c not in shared) or (c in lmaybe and c in rmaybe)
-            }
+            out = out.withColumn(c, F.struct(*merged)).drop(rc)
         return out, maybe
 
     def _group(self, g: Group) -> tuple[DataFrame, set[str]]:
@@ -2213,20 +2158,20 @@ class _Planner:
                     df = self.ds.triples.sparkSession.range(1).select(
                         self._bind_col(p.expr, None).cast("string").alias(p.var)
                     )
-                    df = self._bind_constructed_meta(df, p.var, p.expr)
+                    df = self._bind_meta(df, p.var, p.expr)
                 else:
                     expr, df, marks = self._lower_exists(p.expr, df, maybe)
                     df = df.withColumn(p.var, self._bind_col(expr, df))
                     if marks:
                         df = df.drop(*marks)
-                    df = self._bind_constructed_meta(df, p.var, expr)
+                    df = self._bind_meta(df, p.var, expr)
                 if not certain:  # a computed expression may evaluate null
                     maybe.add(p.var)
             elif isinstance(p, MinusOp):
                 if df is None:
                     raise SparqlUnsupported("MINUS as the first pattern")
                 sub, smaybe = self._group(p.group)
-                shared = sorted(set(df.columns) & set(sub.columns))
+                shared = _shared_vars(df, sub)
                 if shared:
                     fuzzy = [c for c in shared if c in maybe or c in smaybe]
                     if not fuzzy:
@@ -2273,9 +2218,12 @@ class _Planner:
                 df, maybe = self._join(df, maybe, sdf, smaybe, "inner")
             elif isinstance(p, UnionOp):
                 parts = [self._group(sub) for sub in p.groups]
-                allcols = sorted(
-                    {c for part, _ in parts for c in part.columns}
-                )
+                types = {
+                    f.name: f.dataType
+                    for part, _ in parts
+                    for f in part.schema
+                }
+                allcols = sorted(types)
                 u = None
                 umaybe: set[str] = set()
                 for part, pm in parts:
@@ -2285,7 +2233,7 @@ class _Planner:
                     aligned = part.select(
                         *[
                             (F.col(c) if c in part.columns
-                             else F.lit(None).cast("string")).alias(c)
+                             else F.lit(None).cast(types[c])).alias(c)
                             for c in allcols
                         ]
                     )
@@ -2298,7 +2246,7 @@ class _Planner:
         for f in g.filters:
             if isinstance(f, ExistsFilter):
                 sub, smaybe = self._group(f.group)
-                shared = sorted(set(df.columns) & set(sub.columns))
+                shared = _shared_vars(df, sub)
                 if not shared:
                     raise SparqlUnsupported(
                         "EXISTS group shares no variables with the outer "
@@ -2339,7 +2287,7 @@ class _Planner:
             if node.op == "exists":
                 grp, negated = node.args
                 sub, smaybe = self._group(grp)
-                shared = sorted(set(df.columns) & set(sub.columns))
+                shared = _shared_vars(df, sub)
                 if not shared:
                     raise SparqlUnsupported(
                         "EXISTS group shares no variables with the outer "
@@ -2531,31 +2479,24 @@ class _Planner:
                 }[fn]
                 return getter(ts)
             if fn in ("isiri", "isuri", "isliteral", "isblank"):
-                # shared _expr_kind_col precedence (review findings: a
-                # pure shape sniff disagreed with DATATYPE on
-                # STRDT-constructed literals, the literal fallback
-                # called a serialized triple term a literal — a triple
-                # term is none of iri/literal/blank — and a CONSTANT or
-                # kind-minting-call operand knows its kind without any
-                # sniff, so isIRI(IRI(...)) agrees with the mint)
+                # the _term_meta kind: a pure shape sniff would disagree
+                # with DATATYPE on STRDT-constructed literals, and a
+                # serialized triple term is none of iri/literal/blank
                 s = cols[0].cast("string")
-                kind = _expr_kind_col(df, args[0], s)
                 want = {
                     "isblank": "blank",
                     "isiri": "iri",
                     "isuri": "iri",
                 }.get(fn, "literal")
                 return F.when(
-                    s.isNull(), F.lit(None).cast("boolean")
-                ).otherwise(kind == want)
+                    s.isNotNull(), _term_meta(df, args[0], s).kind == want
+                )
             if fn == "isnumeric":
-                # 17.4.2.4: "has a NUMERIC DATATYPE" — a typed literal
-                # consults its stored datatype (review finding:
-                # "42"^^xsd:string sniffed as numeric); untyped values
-                # keep the lexical sniff
-                var = _expr_var_name(args[0]) if args else None
+                # 17.4.2.4: "has a NUMERIC DATATYPE" — a declared datatype
+                # decides ("42"^^xsd:string is not numeric); without one
+                # the lexical sniff applies
                 s = cols[0].cast("string")
-                dtv = _meta_col(df, var, "dt")
+                dtv = _term_meta(df, args[0], s).declared
                 return F.when(
                     dtv.isNotNull(), dtv.isin(*_XSD_NUMERIC_TYPES)
                 ).otherwise(s.rlike(_NUM_RE.pattern))
@@ -2579,17 +2520,12 @@ class _Planner:
                 return F.ceil(cols[0].try_cast("double"))
             if fn == "sameterm":
                 # exact TERM equality: lexical string equality AND
-                # null-safe equality of the EFFECTIVE datatype/lang
-                # (_expr_dt_col/_expr_lang_col: constants contribute
-                # their parse-time metadata, vars their stored markers,
-                # plain literals normalize to xsd:string — review
-                # finding: the raw-marker comparison made a typed
-                # CONSTANT operand contribute null metadata) plus the
-                # shared kind classification — STRDT("a", xsd:token)
-                # and plain "a" are different terms, as the DISTINCT
-                # machinery already treats them. Deliberately no numeric
-                # value-dispatch ("1" and "01" are different terms even
-                # though = would compare them equal).
+                # null-safe equality of the _term_meta kind and EFFECTIVE
+                # datatype/lang, constants included — STRDT("a", xsd:token)
+                # and plain "a" are different terms, as the DISTINCT key
+                # treats them. Deliberately no numeric value-dispatch
+                # ("1" and "01" are different terms even though = would
+                # compare them equal).
                 sa, sb = cols[0].cast("string"), cols[1].cast("string")
                 # a numeric CONSTANT compares by its ORIGINAL lexical
                 # form, not the compiled value literal — F.lit(int("01"))
@@ -2602,17 +2538,13 @@ class _Planner:
                     sa = F.lit(str(ta.value))
                 if tb is not None and tb.kind == "num":
                     sb = F.lit(str(tb.value))
+                ma = _term_meta(df, args[0], sa)
+                mb = _term_meta(df, args[1], sb)
                 same = (
                     (sa == sb)
-                    & _expr_dt_col(df, args[0], sa).eqNullSafe(
-                        _expr_dt_col(df, args[1], sb)
-                    )
-                    & _expr_lang_col(df, args[0], sa).eqNullSafe(
-                        _expr_lang_col(df, args[1], sb)
-                    )
-                    & _expr_kind_col(df, args[0], sa).eqNullSafe(
-                        _expr_kind_col(df, args[1], sb)
-                    )
+                    & ma.dt.eqNullSafe(mb.dt)
+                    & ma.lang.eqNullSafe(mb.lang)
+                    & ma.kind.eqNullSafe(mb.kind)
                 )
                 # an unbound operand is a type error → unbound, not
                 # false (the eqNullSafe legs would otherwise force a
@@ -2680,17 +2612,15 @@ class _Planner:
                 # F.concat propagates an unbound arg to unbound (SPARQL
                 # error semantics). SPARQL 1.2 §17.4.2.12 requires an
                 # IRI/bnode subject and an IRI predicate — enforced via
-                # the shared _term_kind_col classification (stored kind
-                # marker > metadata > shape sniff), so a whitespace-free
-                # literal subject like "42" is error→unbound too
-                # (advisor finding: the old guard only rejected
-                # whitespace). The kind check subsumes the whitespace
-                # guard: IRIs/bnodes never carry whitespace, so minted
-                # terms stay tokenizable by the accessors.
+                # the _term_meta kind, so a whitespace-free literal
+                # subject like "42" is error→unbound too. The kind check
+                # subsumes a whitespace guard: IRIs/bnodes never carry
+                # whitespace, so minted terms stay tokenizable by the
+                # accessors.
                 s, p, o = (c.cast("string") for c in cols)
-                valid_sp = _expr_kind_col(df, args[0], s).isin(
+                valid_sp = _term_meta(df, args[0], s).kind.isin(
                     "iri", "blank"
-                ) & (_expr_kind_col(df, args[1], p) == "iri")
+                ) & (_term_meta(df, args[1], p).kind == "iri")
                 minted = F.concat(
                     F.lit("<< "), s, F.lit(" "), p, F.lit(" "), o,
                     F.lit(" >>"),
@@ -2716,35 +2646,16 @@ class _Planner:
                 # relations carry plain lexical values: str() is identity
                 return cols[0].cast("string")
             if fn in ("lang", "datatype"):
-                # 17.4.2.3/.7 over the engine's value model: when the
-                # operand is a var bound in object position of a pattern
-                # over a metadata-carrying relation (the lake engine's
-                # triples_view stores object_datatype/object_lang),
-                # _bind attached marker columns — coalesce them. Without
-                # metadata the value-shape fallback applies: IRIs/bnodes
-                # error→unbound, tagged literals rdf:langString, all
-                # other literals xsd:string / "".
-                # ONE notion of effective term metadata across the
-                # engine: the same _expr_dt_col/_expr_lang_col sameTerm
-                # and DISTINCT identity use (review finding:
-                # DATATYPE("chat"@en) answered xsd:string while
-                # sameTerm knew it was rdf:langString). The helpers
-                # already encode the precedence (constant parse-time
-                # metadata > STRDT/STRLANG construction > stored
-                # markers > xsd:string) and answer null — error →
-                # unbound — for non-literals and null inputs.
+                # 17.4.2.3/.7: the _term_meta effective datatype/tag —
+                # null (error → unbound) for non-literals and unbound
+                # operands
                 s = cols[0].cast("string")
-                unbound = F.lit(None).cast("string")
-                helper = _expr_lang_col if fn == "lang" else _expr_dt_col
-                return F.when(s.isNull(), unbound).otherwise(
-                    helper(df, args[0], s)
-                )
+                m = _term_meta(df, args[0], s)
+                return F.when(s.isNotNull(), m.lang if fn == "lang" else m.dt)
             if fn in ("strdt", "strlang"):
                 # the constructed literal's VALUE is its lexical form;
-                # the declared datatype/tag becomes a metadata marker at
-                # the BIND site (_bind_constructed_meta) — in any other
-                # expression position only the lexical participates
-                # (consistent with the engine's lexical value model).
+                # _term_meta reads the declared datatype/tag off the call
+                # (and _bind_meta stores it for a BIND var).
                 # The datatype/tag must be a CONSTANT of the right kind:
                 # a var/computed arg would silently drop the metadata
                 # (review finding → loud), and 17.4.2.8/.9 make a
@@ -3194,96 +3105,51 @@ def _select_frame(
         # VALUES variable the SELECT clause doesn't name
         vdf, vmaybe = planner._values_df(q.values)
         df, maybe = planner._join(df, maybe, vdf, vmaybe, "inner")
-    kept_meta = False
     if project_cols is not None:
-        extra: list[str] = []
-        if keep_meta and planner.meta_vars:
-            # subquery projection: keep the metadata markers of projected
-            # vars so an OUTER DATATYPE()/LANG() still sees the stored
-            # metadata (review finding: the projection silently dropped
-            # them and the outer call fell back to the value-shape
-            # heuristic); the enclosing query's own final projection
-            # strips markers as usual
-            pats = [
-                _meta_marker_re(var=v)
-                for v in planner.meta_vars
-                if v in project_cols
-            ]
-            extra = [
-                c for c in df.columns if any(p.match(c) for p in pats)
-            ]
-        kept_meta = bool(extra)
+        # a subquery keeps the metadata of its projected vars for the
+        # outer query's DATATYPE()/LANG()/... (without it the outer
+        # call falls back to the value-shape sniff); the enclosing
+        # query's own final projection strips it as usual
+        extra = [
+            _meta_name(v)
+            for v in project_cols
+            if keep_meta and _meta_name(v) in df.columns
+        ]
         df = df.select(*project_cols, *extra)
     else:
-        # SELECT *: internal existence-marker columns from variable-free
-        # patterns are not query variables (review finding); a subquery
-        # keeps metadata markers for the outer DATATYPE()/LANG()
-        keep = _meta_marker_re() if keep_meta else None
-        drop = [
-            c
-            for c in df.columns
-            if _MARKER_RE.match(c) and not (keep and keep.match(c))
-        ]
-        kept_meta = keep is not None and any(
-            keep.match(c) for c in df.columns
+        # SELECT *: internal columns are not query variables; a
+        # subquery keeps the metadata ones
+        df = df.drop(
+            *[
+                c
+                for c in df.columns
+                if _MARKER_RE.match(c)
+                and not (keep_meta and c.startswith(_META_PREFIX))
+            ]
         )
-        df = df.drop(*drop)
-    if kept_meta:
-        # consolidate each var's per-pattern markers into ONE column per
-        # tag (coalesce): two UNION branches binding the same TERM then
-        # produce identical rows, so DISTINCT dedupes them — while two
-        # terms sharing a lexical but differing in stored datatype stay
-        # distinct rows (third review pass: lexical-only dropDuplicates
-        # merged distinct terms nondeterministically; the pass before
-        # that, plain distinct() kept null-padded duplicate rows)
-        for v in sorted(planner.meta_vars):
-            for tag in _META_TAGS:
-                pat = _meta_marker_re(var=v, tag=tag)
-                cs = [c for c in df.columns if pat.match(c)]
-                if len(cs) > 1 or (cs and q.distinct):
-                    col = F.coalesce(*(F.col(c) for c in cs))
-                    if tag == "dt" and q.distinct and v in df.columns:
-                        # term-identity canonicalization IN THE KEY via
-                        # the EFFECTIVE datatype (RDF 1.1: plain ≡
-                        # xsd:string, tagged ≡ rdf:langString): an
-                        # explicitly stored xsd:string (what a
-                        # mapping's `datatype: xsd:string` writes
-                        # verbatim) must not DISTINCT-split from the
-                        # null-marker spelling of the same term (review
-                        # finding). Canonicalizing to the NON-NULL form
-                        # (not to null) keeps the surviving marker
-                        # definitive for an outer isNUMERIC and for
-                        # has_lit_meta kind classification (sixth-pass
-                        # finding: nulling it sent '42'^^xsd:string to
-                        # the lexical sniff after a DISTINCT subquery).
-                        lang_m = _meta_col(df, v, "lang")
-                        col = F.when(
-                            _term_kind_col(df, v, F.col(v).cast("string"))
-                            == "literal",
-                            F.coalesce(
-                                col,
-                                F.when(
-                                    lang_m.isNotNull(),
-                                    F.lit(_RDF_LANGSTRING),
-                                ),
-                                F.lit(_XSD_STRING),
-                            ),
-                        )
-                    df = df.withColumn(
-                        _fresh(f"{tag}_{v}"), col
-                    ).drop(*cs)
-    if q.distinct:
-        if kept_meta:
-            # kind markers are NOT part of term identity (kind is
-            # derivable from the term itself), and a branch over a
-            # kind-less relation null-pads them — deduping over them
-            # kept duplicate solutions (review finding). Datatype/lang
-            # markers DO distinguish terms and stay in the key.
-            kind_re = _meta_marker_re(tag="kind")
-            key = [c for c in df.columns if not kind_re.match(c)]
-            df = df.dropDuplicates(key) if key else df.distinct()
-        else:
-            df = df.distinct()
+    metas = [c for c in df.columns if c.startswith(_META_PREFIX)]
+    if q.distinct and metas:
+        # term identity is the value plus its EFFECTIVE (dt, lang):
+        # plain ≡ xsd:string, so a stored explicit xsd:string and a
+        # plain literal dedupe, while two terms sharing a lexical but
+        # differing in datatype stay distinct rows. The kept struct is
+        # rewritten to the effective fields, so whichever duplicate
+        # survives reads the same and an outer isNUMERIC sees a
+        # definitive datatype. kind stays out of the key: it is
+        # derivable from the term, and a kind-less branch leaves it null.
+        ids = {}
+        for c in metas:
+            v = c[len(_META_PREFIX):]
+            var = Expr("term", [Term("var", v)])
+            m = _term_meta(df, var, F.col(v).cast("string"))
+            df = df.withColumn(c, _meta_struct(F.col(c)["kind"], m.dt, m.lang))
+            ids[f"_id#{v}"] = F.struct(F.col(c)["dt"], F.col(c)["lang"])
+        df = df.withColumns(ids)
+        df = df.dropDuplicates(
+            [c for c in df.columns if not c.startswith(_META_PREFIX)]
+        ).drop(*ids)
+    elif q.distinct:
+        df = df.distinct()
     if q.order_by:
         keys = []
         for item, desc in q.order_by:

@@ -50,6 +50,9 @@ RDF_REST = RDF_NS + "rest"
 RDF_NIL = RDF_NS + "nil"
 XSD = "http://www.w3.org/2001/XMLSchema#"
 
+# what the serialized "<< s p o >>" form of a nested quoted triple cannot
+# carry inside a literal's lexical form
+_UNSERIALIZABLE_RE = re.compile(r"\s|<<|>>")
 _NUM_RE = re.compile(r"^[+-]?(\d+\.\d*([eE][+-]?\d+)?|\.?\d+([eE][+-]?\d+)?)$")
 # chars that terminate a bareword token (pname / keyword / number)
 _BARE_END = set(" \t\r\n;,.()[]{}<>\"'#^")
@@ -353,6 +356,7 @@ class _Parser:
             # (the reference's store) serializes for rdf:reifies objects —
             # lexes as '<<' '(' ... ')' '>>'; the paren pair is optional
             self._qdepth += 1
+            nested = self._qdepth == 2
             if self._qdepth > 2:
                 # deeper nesting would require serializing a serialized
                 # form — ambiguous to re-parse; keep the loud guard
@@ -364,9 +368,9 @@ class _Parser:
                 paren = self.lx.peek() == ("(", None)
                 if paren:
                     self.lx.next()
-                qs, qsk, _, _ = self._term(graph)
+                qs, qsk, qsdt, qslang = self._term(graph)
                 qp = self._predicate()
-                qo, qok, _, _ = self._term(graph)
+                qo, qok, qodt, qolang = self._term(graph)
                 if paren and self.lx.next() != (")", None):
                     raise TurtleParseError("expected ')' in '<<( ... )>>'")
                 if self.lx.next() != (">>", None):
@@ -377,9 +381,19 @@ class _Parser:
             # serialized term form "<< s p o >>" (the same string
             # dataset_from_quads renders and the SPARQL-star accessors
             # destructure), so q_s/q_p/q_o stay scalar string columns.
-            # The inner terms keep their lexical forms; an inner typed
-            # literal's datatype/lang is not carried (the serialized form
-            # is lexical, like every quoted-position value in the model).
+            # That form keeps only lexical forms, so an inner literal it
+            # would change (a datatype or tag dropped, or a lexical the
+            # accessors would split or misread) is refused, not stored.
+            inner = ((qs, qsk, qsdt, qslang), (qo, qok, qodt, qolang))
+            for v, k, dt, lang in inner if nested else ():
+                if k == "literal" and (
+                    dt or lang or _UNSERIALIZABLE_RE.search(v)
+                ):
+                    raise TurtleParseError(
+                        f"literal {v!r} inside a nested quoted triple has a "
+                        "datatype, language tag, whitespace or '<<'/'>>' "
+                        "that the serialized '<< s p o >>' form cannot keep"
+                    )
             if qsk == "quoted":
                 qs = f"<< {qs[0]} {qs[1]} {qs[2]} >>"
             if qok == "quoted":

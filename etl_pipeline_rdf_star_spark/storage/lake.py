@@ -607,15 +607,13 @@ class LakeTable:
         self,
         src: DataFrame,
         batch_id: str,
-        order_col: str = "seq",
-        deleted_col: str = "_deleted",
         pre_bucketed: bool = False,
     ) -> MergeStats:
         """Merge-on-read MERGE: the Iceberg-MoR / Hudi-MOR strategy for
         sustained CDC ingest. The batch is APPENDED as bucket-tagged delta
         files — no read of existing data, strictly O(batch) work per
         commit — and :meth:`read_resolved` resolves latest-version-per-key
-        (by ``order_col``) at query time, filtering tombstones.
+        (by ``seq``) at query time, filtering tombstones.
 
         Why it matters at 10^10 events: copy-on-write rewrites every
         affected bucket per micro-batch (read+join+write amplification),
@@ -626,7 +624,7 @@ class LakeTable:
         delta-file count crosses a threshold).
 
         Late/duplicate delivery needs no tombstone special-casing here:
-        every version is present, so the max-``order_col`` row wins
+        every version is present, so the max-``seq`` row wins
         regardless of arrival order, and re-delivered batch_ids are
         skipped wholesale."""
         if batch_id in self.committed_batches():
@@ -1195,79 +1193,30 @@ class LakeTable:
         batch_id: str | None = None,
         order_col: str = "seq",
         deleted_col: str = "_deleted",
-        drop_tombstones: bool = False,
     ) -> MergeStats:
         """Fold MoR deltas: rewrite the table as one resolved version per
-        key (optionally dropping tombstones once the watermark allows).
-        Equivalent to Iceberg's rewrite_data_files maintenance action."""
+        key, tombstones included (``CdcEngine.purge_tombstones`` drops
+        them once the watermark allows). Equivalent to Iceberg's
+        rewrite_data_files maintenance action."""
         self._check_layout()
         snap = self.snapshot()
-        drop_stats: dict[str, Any] = {}
-        persisted = None
         bid = batch_id or f"compact-{snap.version}"
         version = snap.version + 1
-        try:
-            if drop_tombstones:
-                # persist: the stats agg and the rewrite below would
-                # otherwise each re-run the full base+delta resolution
-                # window (review finding: purging compactions paid the
-                # table scan twice). Inside the try so the cache is
-                # released even when the FIRST job over it raises
-                # (review finding: the leak guard missed the stats agg).
-                all_rows = persisted = self.read_resolved(
-                    order_col=order_col, deleted_col=deleted_col,
-                    keep_deleted=True,
-                ).persist()
-                if deleted_col in all_rows.columns:
-                    tombs = all_rows.where(
-                        F.coalesce(F.col(deleted_col), F.lit(False))
-                    )
-                    agg = [F.count(F.lit(1)).alias("n")]
-                    if order_col == "seq" and "seq" in all_rows.columns:
-                        agg.append(F.max("seq").alias("m"))
-                    r = tombs.agg(*agg).first()
-                    if int(r["n"]):
-                        drop_stats = {
-                            "drops_rows": True,
-                            "drops_rows_below": (
-                                int(r["m"])
-                                if "m" in r.asDict() and r["m"] is not None
-                                else None
-                            ),
-                        }
-                resolved = all_rows.where(
-                    ~F.coalesce(F.col(deleted_col), F.lit(False))
-                ) if deleted_col in all_rows.columns else all_rows
-            else:
-                resolved = self.read_resolved(
-                    order_col=order_col, deleted_col=deleted_col,
-                    keep_deleted=True,
-                )
-            files = self._write_data(self._with_bucket(resolved), version)
-            out_snap = Snapshot(
+        resolved = self.read_resolved(
+            order_col=order_col, deleted_col=deleted_col, keep_deleted=True
+        )
+        files = self._write_data(self._with_bucket(resolved), version)
+        self._commit(
+            Snapshot(
                 version=version,
                 operation="compact",
                 files=files,  # replaces ALL files
                 schema_json=snap.schema_json,
                 committed_batches=snap.committed_batches + [bid],
-                summary={
-                    "batch_id": bid,
-                    "mode": "compact",
-                    **drop_stats,
-                },
+                summary={"batch_id": bid, "mode": "compact"},
                 timestamp=time.time(),
             )
-            if drop_stats:  # before the commit — see merge() for why
-                self._bump_purge_watermark(
-                    drop_stats["drops_rows_below"], bid
-                )
-            self._commit(out_snap)
-        finally:
-            # unpersist even when the write/commit raises (review
-            # finding: a leaked full-table cache per failed maintenance
-            # run pins executor memory for the driver's lifetime)
-            if persisted is not None:
-                persisted.unpersist()
+        )
         return MergeStats(batch_id=bid, skipped=False, version=version)
 
     def expire_snapshots(self, keep_last: int = 2) -> dict[str, int]:

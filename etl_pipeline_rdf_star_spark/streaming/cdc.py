@@ -236,24 +236,10 @@ class CdcEngine:
         annotation_tm: str | None = "provenance",
         mode: str = "cow",
         auto_compact_deltas: int | None = None,
-        dedup_in_batch: bool | None = None,
     ):
         if mode not in {"cow", "mor"}:
             raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
         self.mode = mode
-        # Intra-batch latest-per-key dedup: COW needs it (MERGE expects ≤1
-        # row per key). MoR does NOT — every version is appended and
-        # read-time resolution picks max(seq) — so the default there skips
-        # the window. Since r4 the MoR batch runs as ONE shuffle either way
-        # (the keyed repartition that feeds the write layout also satisfies
-        # the window's distribution), so enabling dedup_in_batch on MoR now
-        # costs only a partition-local sort and shrinks delta files; the
-        # default stays off because ledger counts (events per batch) are
-        # defined over the raw appended rows and the oracle corpus pins
-        # that semantic.
-        self.dedup_in_batch = (mode == "cow") if dedup_in_batch is None else bool(
-            dedup_in_batch
-        )
         # MoR maintenance cadence: compact when the snapshot accumulates
         # more than this many data files per bucket on average (read
         # amplification bound). None = manual compact() only.
@@ -489,10 +475,9 @@ class CdcEngine:
             raise ValueError(f"event batch missing columns: {missing}")
         if self.mode == "mor":
             # SINGLE-SHUFFLE fast path. The explicit repartition hashes the
-            # full key over k·n_buckets partitions; the dedup window's
-            # ClusteredDistribution(repo, path) is satisfied by it (no second
-            # exchange), and because the bucket formula IS Spark's partition
-            # id formula (lake._bucket_col) and (h mod kB) mod B == h mod B,
+            # full key over k·n_buckets partitions, and because the bucket
+            # formula IS Spark's partition id formula (lake._bucket_col) and
+            # (h mod kB) mod B == h mod B,
             # every task still holds exactly ONE bucket (k tasks per bucket)
             # — so the write skips its layout shuffle (pre_bucketed). One
             # shuffle of the batch per commit, total; the two-shuffle shape
@@ -506,8 +491,11 @@ class CdcEngine:
             nb = self.table.n_buckets
             par = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
             k = max(1, math.ceil(par / nb))
-            events = events.repartition(k * nb, *KEY)
-            latest = self.dedup_latest(events) if self.dedup_in_batch else events
+            # no intra-batch dedup: every version is appended and read-time
+            # resolution picks max(seq); ledger counts (events per batch)
+            # are defined over the raw appended rows, which the oracle
+            # corpus pins
+            latest = events.repartition(k * nb, *KEY)
             # SINGLE-JOB: no persist, no stats job — ledger counts ride the
             # write action via Observation, per-bucket lineage comes from
             # parquet footers the write produced
@@ -563,8 +551,9 @@ class CdcEngine:
                 self.table.compact()
             return result
 
-        # extra source cols pass through the dedup untouched
-        latest = self.dedup_latest(events) if self.dedup_in_batch else events
+        # COW's MERGE expects at most one row per key; extra source cols
+        # pass through the dedup untouched
+        latest = self.dedup_latest(events)
         # cache the materialized batch: it feeds the count, the MERGE (bucket
         # discovery + survivors + write) and the metrics rollup — without the
         # cache each of those jobs re-scans + re-windows the source events
