@@ -92,10 +92,7 @@ def cmd_diff(args) -> None:
     eng = CdcEngine(spark, args.warehouse)
 
     def live(v):
-        df = eng.table.read(version=v)
-        if "_deleted" in df.columns:
-            df = df.where(~F.coalesce(F.col("_deleted"), F.lit(False)))
-        return df.select("repo", "path", "commit")
+        return eng.table.read_resolved(version=v).select("repo", "path", "commit")
 
     old, new = live(args.from_version), live(args.to_version)
     added = new.join(old, ["repo", "path"], "left_anti").count()
@@ -157,12 +154,9 @@ def cmd_export(args) -> None:
         version = int(row["table_version"])
 
     def state_at():
-        if version is None:
-            return eng.current_state()
-        df = eng.table.read_resolved(version=version)
-        if "_deleted" in df.columns:
-            df = df.where(~_F.coalesce(_F.col("_deleted"), _F.lit(False)))
-        return df.select("repo", "path", "commit", "lang", "content")
+        return eng.table.read_resolved(version=version).select(
+            "repo", "path", "commit", "lang", "content"
+        )
 
     if args.fmt == "parquet":
         df = (
@@ -268,16 +262,18 @@ def cmd_load(args) -> None:
             # export shards plain statements and `<< ... >>` annotation
             # statements into different part files, and only the latter
             # carry a turtle-only marker. Sample with a STRIDE across the
-            # whole sorted listing (always including the last file)
-            # rather than names[:64] — annotation shards sort AFTER the
+            # whole sorted listing plus the last 8 files rather than
+            # names[:64] — annotation shards sort AFTER the
             # plain-statement shards, so a >=64-shard export's markers
             # were never probed and the dir was misclassified as N-Quads
-            # (review finding). Misclassification stays loud (the strict
-            # N-Quads reader raises on the first `<<` line), but the
-            # documented export→load round-trip must not need --fmt.
+            # (review finding); a stride of 1 still stops at file 63, and
+            # the last file alone may be an empty shard. Misclassification
+            # stays loud (the strict N-Quads reader raises on the first
+            # `<<` line), but the documented export→load round-trip must
+            # not need --fmt.
             if len(names) > 64:
                 step = max(1, len(names) // 63)
-                picked = names[::step][:63] + [names[-1]]
+                picked = names[::step][:63] + names[-8:]
                 names = list(dict.fromkeys(picked))
             probes = [_os.path.join(probe, n) for n in names]
             probe = probes[0] if probes else probe

@@ -40,7 +40,8 @@ SEP = "\x1f"  # chr(31) — unit separator used in reifier fingerprints
 
 # Bump when ingest/materialization logic changes: invalidates cached
 # serving warehouses built by older code.
-_WH_TAG = "r4b"  # r4b: murmur bucket formula + layout sidecar (_layout.json)
+# r7: manifests mark delta files, and read_resolved windows only over them
+_WH_TAG = "r7"
 
 
 def serving_warehouse(spark: SparkSession, sf_dir: str) -> str:

@@ -37,6 +37,10 @@ Scale design (the part that must survive 100 TB / 10^10 events):
   table data) and falls back to shuffle join for table-sized replay batches.
 * **No driver materialization** beyond the distinct bucket ids (≤ n_buckets
   integers) and file metadata.
+* **The table says how it reads.** A file that may hold several versions
+  of a key (a merge-on-read delta) is marked ``"delta"`` in the manifest;
+  :meth:`LakeTable.read_resolved` pays the latest-per-key window only for
+  a snapshot that lists one, so readers need not know how it was written.
 * **Exactly-once.** Every commit records its ``batch_id``; re-merging an
   already-committed batch is a metadata-only no-op. Combined with Structured
   Streaming's checkpointed batch ids this gives end-to-end exactly-once.
@@ -59,14 +63,18 @@ import os
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
+# the CDC order column (manifest stats and version resolution key on it)
+# and the tombstone flag
+_ORDER = "seq"
+_DELETED = "_deleted"
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -85,8 +93,6 @@ def _snap_max(s: "Snapshot") -> int | None:
 def _merge_schemas(base: StructType, incoming: StructType) -> StructType:
     """Iceberg-style additive evolution: incoming fields not in base are
     appended (nullable); existing fields keep base types."""
-    from pyspark.sql.types import StructField
-
     names = {f.name for f in base.fields}
     extra = [
         StructField(f.name, f.dataType, True)
@@ -94,6 +100,23 @@ def _merge_schemas(base: StructType, incoming: StructType) -> StructType:
         if f.name not in names
     ]
     return StructType(list(base.fields) + extra)
+
+
+def latest_per_key(df: DataFrame, key_cols: list[str]) -> DataFrame:
+    """The newest row (max ``seq``) per key: MoR read resolution, as-of and
+    changefeed assembly, and the COW writer's in-batch dedup."""
+    w = Window.partitionBy(*key_cols).orderBy(F.col(_ORDER).desc())
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
+def _drop_tombstones(df: DataFrame) -> DataFrame:
+    if _DELETED not in df.columns:
+        return df
+    return df.where(~F.coalesce(F.col(_DELETED), F.lit(False)))
 
 
 @dataclass
@@ -105,6 +128,14 @@ class Snapshot:
     committed_batches: list[str]
     summary: dict[str, Any] = field(default_factory=dict)
     timestamp: float = 0.0
+
+    @property
+    def has_deltas(self) -> bool:
+        """True when a listed file may hold several versions of a key — a
+        ``"delta"`` file (merge_mor's appends, and rewrites that carried
+        one forward), the role of Hudi log files or Iceberg delete files.
+        Only such a snapshot needs resolution at read time."""
+        return any(f.get("delta") for f in self.files)
 
     def to_json(self) -> str:
         return json.dumps(self.__dict__, sort_keys=True)
@@ -165,11 +196,11 @@ class LakeTable:
         when reader and writer agree on the hash; r4 changed it from
         xxhash64 to murmur3, so a guard — not silence — is the contract.
 
-        ``overwrite``: used by create() — before v0 commits the table holds
-        no data, so a sidecar left behind by a CRASHED earlier create (with
-        a possibly different bucket count) must not outlive it; the current
-        creating writer is authoritative. Single-writer contract as per the
-        class docstring."""
+        ``overwrite``: used by a table's first commit — before v0 the table
+        holds no data, so a sidecar left behind by a CRASHED earlier create
+        (with a possibly different bucket count) must not outlive it; the
+        current creating writer is authoritative. Single-writer contract as
+        per the class docstring."""
         if not self.key_cols:
             return
         if not overwrite and os.path.exists(self._layout_path()):
@@ -187,7 +218,7 @@ class LakeTable:
         otherwise bucket-pruned MERGE would miss keys' old rows and leave
         duplicate live rows (silent corruption). Raising forces an explicit
         rebuild/compact-rewrite instead."""
-        if not self.key_cols or not self.exists():
+        if not self.key_cols:
             return
         try:
             with open(self._layout_path()) as f:
@@ -299,20 +330,33 @@ class LakeTable:
         null-filled by reading with the canonical snapshot schema — this is
         how in-place ADD COLUMN works without rewriting history."""
         snap = self.snapshot(version)
-        schema = self._schema(snap)
-        files = [self._abs(f["path"]) for f in snap.files]
-        if not files:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*files)
+        return self._read_file_metas(snap.files, self._schema(snap))
 
     def read_buckets(self, buckets: list[int], snap: Snapshot) -> DataFrame:
-        schema = self._schema(snap)
-        files = [
-            self._abs(f["path"]) for f in snap.files if f["bucket"] in set(buckets)
-        ]
-        if not files:
+        files = [f for f in snap.files if f["bucket"] in set(buckets)]
+        return self._read_file_metas(files, self._schema(snap))
+
+    def read_resolved(
+        self, version: int | None = None, keep_deleted: bool = False
+    ) -> DataFrame:
+        """Live rows: the newest version per key, tombstones dropped unless
+        ``keep_deleted``. The snapshot decides how, never the caller: one
+        that lists a delta file pays a key-window shuffle (the MoR read
+        amplification between compactions); any other (COW commits,
+        compaction) is a pure bucketed scan + tombstone filter."""
+        snap = self.snapshot(version)
+        df = self._read_file_metas(snap.files, self._schema(snap))
+        if snap.has_deltas and _ORDER in df.columns:
+            df = latest_per_key(df, self.key_cols)
+        return df if keep_deleted else _drop_tombstones(df)
+
+    def _read_file_metas(
+        self, metas: list[dict[str, Any]], schema: StructType
+    ) -> DataFrame:
+        paths = [self._abs(f["path"]) for f in metas]
+        if not paths:
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*files)
+        return self.spark.read.schema(schema).parquet(*paths)
 
     # -- write -------------------------------------------------------------
 
@@ -353,10 +397,10 @@ class LakeTable:
             # per-file min/max of `seq`, read from the same footer. These
             # drive as-of file pruning (read_asof) with zero Spark jobs.
             idx = {n: i for i, n in enumerate(md.schema.names)}
-            if "seq" in idx and md.num_rows:
+            if _ORDER in idx and md.num_rows:
                 lo = hi = None
                 for g in range(md.num_row_groups):
-                    st = md.row_group(g).column(idx["seq"]).statistics
+                    st = md.row_group(g).column(idx[_ORDER]).statistics
                     if st is None or not st.has_min_max:
                         lo = hi = None
                         break
@@ -382,23 +426,62 @@ class LakeTable:
             return df.withColumn("_bucket", F.lit(0))
         return df.withColumn("_bucket", self._bucket_col())
 
-    def create(
-        self, df: DataFrame, batch_id: str = "genesis", pre_bucketed: bool = False
+    def _publish(
+        self,
+        batch_id: str,
+        operation: str,
+        stage: Callable[[Snapshot | None, int], tuple[list, StructType, dict]],
     ) -> MergeStats:
-        df = self._with_bucket(df)
-        self._write_layout(overwrite=True)
-        files = self._write_data(df, 0, pre_bucketed=pre_bucketed)
-        snap = Snapshot(
-            version=0,
-            operation="create",
-            files=files,
-            schema_json=json.dumps(df.schema.jsonValue()),
-            committed_batches=[batch_id],
-            summary={"batch_id": batch_id},
-            timestamp=time.time(),
+        """The one commit path every write takes: layout guard, batch-id
+        idempotence (a re-delivered batch is a metadata-only no-op), next
+        version, snapshot build and the CAS publish of :meth:`_commit`.
+        ``stage(head, version)`` — ``head`` the latest snapshot, None for a
+        new table — writes the commit's data files and returns the new
+        snapshot's full file list, its schema and extra summary keys."""
+        head = self.snapshot() if self.exists() else None
+        if head is None:
+            self._write_layout(overwrite=True)
+        else:
+            self._check_layout()
+            if batch_id in head.committed_batches:
+                return MergeStats(
+                    batch_id=batch_id, skipped=True, version=head.version
+                )
+        version = 0 if head is None else head.version + 1
+        files, schema, summary = stage(head, version)
+        self._commit(
+            Snapshot(
+                version=version,
+                operation=operation,
+                files=files,
+                schema_json=json.dumps(schema.jsonValue()),
+                committed_batches=(head.committed_batches if head else [])
+                + [batch_id],
+                summary={"batch_id": batch_id, **summary},
+                timestamp=time.time(),
+            )
         )
-        self._commit(snap)
-        return MergeStats(batch_id=batch_id, skipped=False, version=0)
+        return MergeStats(
+            batch_id=batch_id,
+            skipped=False,
+            version=version,
+            rewritten_buckets=len(summary.get("affected_buckets", ())),
+        )
+
+    def create(self, df: DataFrame, batch_id: str = "genesis") -> MergeStats:
+        """First commit of a table. If another writer created the table
+        first, raises ConcurrentCommitError (a retry of this same create is
+        a no-op)."""
+        df = self._with_bucket(df)
+
+        def stage(head: Snapshot | None, version: int):
+            if head is not None:
+                raise ConcurrentCommitError(
+                    f"lake table {self.path} already exists"
+                )
+            return self._write_data(df, version), df.schema, {}
+
+        return self._publish(batch_id, "create", stage)
 
     def merge(
         self,
@@ -425,12 +508,27 @@ class LakeTable:
             if op_col:
                 src = src.where(F.col(op_col) != "D").drop(op_col)
             return self.create(src, batch_id)
-        self._check_layout()
-        snap = self.snapshot()
-        if batch_id in snap.committed_batches:
-            return MergeStats(batch_id=batch_id, skipped=True, version=snap.version)
 
         src = self._with_bucket(src)
+        return self._publish(
+            batch_id,
+            "merge",
+            lambda head, version: self._merge_stage(
+                head, version, src, batch_id, op_col, order_col, affected_buckets
+            ),
+        )
+
+    def _merge_stage(
+        self,
+        head: Snapshot,
+        version: int,
+        src: DataFrame,
+        batch_id: str,
+        op_col: str | None,
+        order_col: str | None,
+        affected_buckets: list[int] | None,
+    ) -> tuple[list, StructType, dict]:
+        """:meth:`merge`'s data step: rewrite the affected buckets."""
         drop_stats: dict[str, Any] = {}
         if op_col:
             # stats over the D rows on the RAW batch, before the stale-key
@@ -441,11 +539,11 @@ class LakeTable:
             # the watermark, never correctness. An op_col batch with NO D
             # rows drops nothing and is not marked at all.
             dd = src.where(F.col(op_col) == "D")
-            if "seq" in src.columns:
+            if _ORDER in src.columns:
                 r = dd.agg(
                     F.count(F.lit(1)).alias("n"),
-                    F.max("seq").alias("m"),
-                    F.min("seq").alias("lo"),
+                    F.max(_ORDER).alias("m"),
+                    F.min(_ORDER).alias("lo"),
                 ).first()
                 n_d, max_d, min_d = int(r["n"]), r["m"], r["lo"]
             else:
@@ -472,7 +570,7 @@ class LakeTable:
             if affected_buckets is not None
             else [r[0] for r in src.select("_bucket").distinct().collect()]
         )
-        existing = self.read_buckets(affected, snap)
+        existing = self.read_buckets(affected, head)
         if order_col and order_col not in existing.columns:
             order_col = None
         if order_col:
@@ -507,23 +605,15 @@ class LakeTable:
         # schema evolution the other direction (src missing old cols) is
         # handled by unionByName(allowMissingColumns=True) null-filling.
 
-        version = snap.version + 1
-        files = self._write_data(merged, version)
-        keep = [f for f in snap.files if f["bucket"] not in set(affected)]
-        new_schema = merged.drop("_bp").schema
-        out_snap = Snapshot(
-            version=version,
-            operation="merge",
-            files=keep + files,
-            schema_json=json.dumps(new_schema.jsonValue()),
-            committed_batches=snap.committed_batches + [batch_id],
-            summary={
-                "batch_id": batch_id,
-                "affected_buckets": sorted(affected),
-                **drop_stats,
-            },
-            timestamp=time.time(),
-        )
+        # a rewritten bucket may hold several versions of a key only if a
+        # file it replaces did (purge_tombstones on an uncompacted MoR
+        # table carries other keys' versions forward)
+        deltas = {f["bucket"] for f in head.files if f.get("delta")}
+        files = [
+            {**f, "delta": True} if f["bucket"] in deltas else f
+            for f in self._write_data(merged, version)
+        ]
+        keep = [f for f in head.files if f["bucket"] not in set(affected)]
         # bump BEFORE the commit: a crash between commit and bump would
         # leave a drops_rows commit the sidecar never counted, silently
         # defeating expired-purge detection (review finding). The reverse
@@ -534,13 +624,8 @@ class LakeTable:
             self._bump_purge_watermark(
                 drop_stats["drops_rows_below"], batch_id
             )
-        self._commit(out_snap)
-        return MergeStats(
-            batch_id=batch_id,
-            skipped=False,
-            version=version,
-            rewritten_buckets=len(affected),
-        )
+        summary = {"affected_buckets": sorted(affected), **drop_stats}
+        return keep + files, merged.drop("_bp").schema, summary
 
     def append_rows(
         self, rows: list[dict[str, Any]], schema: StructType, batch_id: str
@@ -553,55 +638,38 @@ class LakeTable:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        if self.exists():
-            snap = self.snapshot()
-            if batch_id in snap.committed_batches:
-                return MergeStats(batch_id=batch_id, skipped=True, version=snap.version)
-            version = snap.version + 1
-            schema_json = snap.schema_json
-            prev_files, prev_batches = snap.files, snap.committed_batches
-        else:
-            version = 0
-            if "_bucket" not in [f.name for f in schema.fields]:
-                from pyspark.sql.types import IntegerType, StructField
-
-                schema = StructType(
-                    list(schema.fields) + [StructField("_bucket", IntegerType())]
-                )
-            schema_json = json.dumps(schema.jsonValue())
-            prev_files, prev_batches = [], []
-
-        _PA = {
+        to_arrow = {
             "string": pa.string(),
             "long": pa.int64(),
             "integer": pa.int32(),
             "double": pa.float64(),
             "boolean": pa.bool_(),
         }
-        fields = StructType.fromJson(json.loads(schema_json)).fields
-        arrow_schema = pa.schema(
-            [(f.name, _PA[f.dataType.typeName()]) for f in fields]
-        )
-        cols = {
-            f.name: [r.get(f.name, 0 if f.name == "_bucket" else None) for r in rows]
-            for f in fields
-        }
-        out_dir = os.path.join(self.path, _DATA_DIR, f"c{version:08d}", "_bp=0")
-        os.makedirs(out_dir, exist_ok=True)
-        fp = os.path.join(out_dir, f"part-{uuid.uuid4().hex}.parquet")
-        pq.write_table(pa.table(cols, schema=arrow_schema), fp)
-        rel = os.path.relpath(fp, self.path)
-        snap_out = Snapshot(
-            version=version,
-            operation="append",
-            files=prev_files + [{"path": rel, "bucket": 0, "rows": len(rows)}],
-            schema_json=schema_json,
-            committed_batches=prev_batches + [batch_id],
-            summary={"batch_id": batch_id},
-            timestamp=time.time(),
-        )
-        self._commit(snap_out)
-        return MergeStats(batch_id=batch_id, skipped=False, version=version)
+
+        def stage(head: Snapshot | None, version: int):
+            fields = list((self._schema(head) if head else schema).fields)
+            if "_bucket" not in [f.name for f in fields]:
+                fields.append(StructField("_bucket", IntegerType()))
+            arrow_schema = pa.schema(
+                [(f.name, to_arrow[f.dataType.typeName()]) for f in fields]
+            )
+            cols = {
+                f.name: [
+                    r.get(f.name, 0 if f.name == "_bucket" else None) for r in rows
+                ]
+                for f in fields
+            }
+            out_dir = os.path.join(
+                self.path, _DATA_DIR, f"c{version:08d}", "_bp=0"
+            )
+            os.makedirs(out_dir, exist_ok=True)
+            fp = os.path.join(out_dir, f"part-{uuid.uuid4().hex}.parquet")
+            pq.write_table(pa.table(cols, schema=arrow_schema), fp)
+            rel = os.path.relpath(fp, self.path)
+            files = [{"path": rel, "bucket": 0, "rows": len(rows)}]
+            return (head.files if head else []) + files, StructType(fields), {}
+
+        return self._publish(batch_id, "append", stage)
 
     def merge_mor(
         self,
@@ -612,8 +680,9 @@ class LakeTable:
         """Merge-on-read MERGE: the Iceberg-MoR / Hudi-MOR strategy for
         sustained CDC ingest. The batch is APPENDED as bucket-tagged delta
         files — no read of existing data, strictly O(batch) work per
-        commit — and :meth:`read_resolved` resolves latest-version-per-key
-        (by ``seq``) at query time, filtering tombstones.
+        commit — marked ``"delta"`` in the manifest, so
+        :meth:`read_resolved` resolves latest-version-per-key (by ``seq``)
+        at query time, filtering tombstones.
 
         Why it matters at 10^10 events: copy-on-write rewrites every
         affected bucket per micro-batch (read+join+write amplification),
@@ -627,62 +696,17 @@ class LakeTable:
         every version is present, so the max-``seq`` row wins
         regardless of arrival order, and re-delivered batch_ids are
         skipped wholesale."""
-        if batch_id in self.committed_batches():
-            snap = self.snapshot()
-            return MergeStats(batch_id=batch_id, skipped=True, version=snap.version)
         src = self._with_bucket(src)
-        if not self.exists():
-            return self.create(src, batch_id, pre_bucketed=pre_bucketed)
-        self._check_layout()
-        snap = self.snapshot()
-        version = snap.version + 1
-        files = self._write_data(src, version, pre_bucketed=pre_bucketed)
-        out_snap = Snapshot(
-            version=version,
-            operation="merge_mor",
-            files=snap.files + files,
-            schema_json=json.dumps(
-                _merge_schemas(self._schema(snap), src.schema).jsonValue()
-            ),
-            committed_batches=snap.committed_batches + [batch_id],
-            summary={"batch_id": batch_id, "mode": "mor"},
-            timestamp=time.time(),
-        )
-        self._commit(out_snap)
-        return MergeStats(batch_id=batch_id, skipped=False, version=version)
 
-    def read_resolved(
-        self,
-        version: int | None = None,
-        order_col: str = "seq",
-        deleted_col: str = "_deleted",
-        keep_deleted: bool = False,
-    ) -> DataFrame:
-        """MoR read path: latest version per key across base + delta files.
-        The window shuffles once on the key — at scale this is the read
-        amplification you pay between compactions."""
-        from pyspark.sql import Window
+        def stage(head: Snapshot | None, version: int):
+            files = self._write_data(src, version, pre_bucketed=pre_bucketed)
+            delta = [{**f, "delta": True} for f in files]
+            if head is None:
+                return delta, src.schema, {}
+            schema = _merge_schemas(self._schema(head), src.schema)
+            return head.files + delta, schema, {}
 
-        snap = self.snapshot(version)
-        df = self.read(version)
-        if order_col not in df.columns:
-            return df
-        if snap.summary.get("mode") == "compact":
-            # post-compaction fast path: exactly one version per key exists,
-            # so resolution needs no window — the serving plan is a pure
-            # bucketed parquet scan + tombstone filter (VERDICT r1 item 2:
-            # queries must not pay a log-replay shuffle)
-            out = df
-        else:
-            w = Window.partitionBy(*self.key_cols).orderBy(F.col(order_col).desc())
-            out = (
-                df.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        if not keep_deleted and deleted_col in out.columns:
-            out = out.where(~F.coalesce(F.col(deleted_col), F.lit(False)))
-        return out
+        return self._publish(batch_id, "merge_mor", stage)
 
     def purge_watermark(self) -> dict[str, Any] | None:
         """Durable row-drop ledger: ``{"below_seq": int|None, "counted":
@@ -732,7 +756,7 @@ class LakeTable:
             json.dump(out, f)
         os.replace(tmp, os.path.join(self.path, "_purge_watermark.json"))
 
-    def max_order(self, order_col: str = "seq") -> int | None:
+    def max_order(self) -> int | None:
         """Global max of the order column from manifest stats alone (no
         Spark job). Scans EVERY retained snapshot's manifest, not just the
         current one: a rewriting purge (purge_tombstones) physically drops
@@ -744,10 +768,6 @@ class LakeTable:
         recoverable from manifests; callers needing exactness across
         purge+expire must track the head externally (e.g. the streaming
         checkpoint does)."""
-        if order_col != "seq":  # manifest stats are recorded for `seq` only
-            raise ValueError(
-                f"manifest column stats exist only for 'seq', not {order_col!r}"
-            )
         maxes = [
             f["seq_max"]
             for v in self.versions()
@@ -756,14 +776,9 @@ class LakeTable:
         ]
         return max(maxes) if maxes else None
 
-    def read_asof(
-        self,
-        seq_cut: int,
-        order_col: str = "seq",
-        deleted_col: str = "_deleted",
-    ) -> DataFrame:
+    def read_asof(self, seq_cut: int) -> DataFrame:
         """Bounded-work point-in-time state for MoR tables: latest row per
-        key over events with ``order_col`` ≤ ``seq_cut``.
+        key over events with ``seq`` ≤ ``seq_cut``.
 
         Round-2 VERDICT "weak-for-scale": serving as-of by windowing the
         raw event log replays the whole history per call. This path instead
@@ -788,19 +803,9 @@ class LakeTable:
         as-of while their victims' original files are retained — only
         expire_snapshots makes history non-time-travelable, and that
         raises explicitly."""
-        if order_col != "seq":
-            # manifest stats (seq_min/seq_max) are recorded for `seq` only;
-            # pruning by another column's cut would silently mis-prune
-            # (review finding) — refuse instead
-            raise ValueError(
-                f"read_asof requires order_col='seq' (manifest stats are "
-                f"recorded for 'seq' only), got {order_col!r}"
-            )
         vs, snaps, base_v = self._asof_base_plan(seq_cut)
         delta_files = self._delta_file_walk(vs, snaps, base_v, hi_incl=seq_cut)
-        return self._asof_assemble(
-            vs, snaps, base_v, delta_files, seq_cut, order_col, deleted_col
-        )
+        return self._asof_assemble(vs, snaps, base_v, delta_files, seq_cut)
 
     def _asof_base_plan(
         self, seq_cut: int
@@ -890,7 +895,7 @@ class LakeTable:
         base_v = None
         for v in vs:
             s = snaps[v]
-            if s.summary.get("mode") != "compact":
+            if s.operation != "compact":
                 continue
             if base_unsound(v):
                 continue
@@ -946,11 +951,7 @@ class LakeTable:
             if not s.summary.get("drops_rows"):
                 continue
             bid = str(s.summary.get("batch_id", ""))
-            if (
-                bid.startswith("purge-")
-                or s.operation == "compact"
-                or s.summary.get("mode") == "compact"
-            ):
+            if bid.startswith("purge-") or s.operation == "compact":
                 continue
             m = s.summary.get("drops_rows_min")
             out.append((v, int(m) if m is not None else None))
@@ -974,7 +975,7 @@ class LakeTable:
             if base_v is not None and v <= base_v:
                 continue
             s = snaps[v]
-            if s.operation == "compact" or s.summary.get("mode") == "compact":
+            if s.operation == "compact":
                 continue  # rewrite of already-counted events
             if s.operation not in ("create", "merge_mor", "append", "merge"):
                 raise ValueError(
@@ -1005,24 +1006,6 @@ class LakeTable:
                 delta_files.append(f)
         return delta_files
 
-    def _read_file_metas(
-        self, metas: list[dict[str, Any]], schema: StructType
-    ) -> DataFrame:
-        paths = [self._abs(f["path"]) for f in metas]
-        if not paths:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*paths)
-
-    def _latest_per_key(self, df: DataFrame, order_col: str) -> DataFrame:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*self.key_cols).orderBy(F.col(order_col).desc())
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-
     def _asof_assemble(
         self,
         vs: list[int],
@@ -1030,8 +1013,6 @@ class LakeTable:
         base_v: int | None,
         delta_files: list[dict[str, Any]],
         seq_cut: int,
-        order_col: str,
-        deleted_col: str,
     ) -> DataFrame:
         schema = self._schema(snaps[vs[-1]])
 
@@ -1039,7 +1020,7 @@ class LakeTable:
             return self._read_file_metas(metas, schema)
 
         def resolve(df: DataFrame) -> DataFrame:
-            return self._latest_per_key(df, order_col)
+            return latest_per_key(df, self.key_cols)
 
         base = (
             read_files(snaps[base_v].files)
@@ -1049,7 +1030,7 @@ class LakeTable:
         if not delta_files:
             out = base
         else:
-            delta = read_files(delta_files).where(F.col(order_col) <= seq_cut)
+            delta = read_files(delta_files).where(F.col(_ORDER) <= seq_cut)
             if base_v is None:
                 out = resolve(delta)
             else:
@@ -1071,16 +1052,13 @@ class LakeTable:
                     ).unionByName(dl)
                 else:
                     out = resolve(base.unionByName(delta))
-        if deleted_col in out.columns:
-            out = out.where(~F.coalesce(F.col(deleted_col), F.lit(False)))
-        return out
+        return _drop_tombstones(out)
 
     def read_changes(
         self,
         lo_cut: int,
         hi_cut: int,
         order_col: str = "seq",
-        deleted_col: str = "_deleted",
     ) -> DataFrame:
         """Incremental changefeed (Iceberg incremental read / Delta CDF
         shape): the NET change per key over the half-open seq window
@@ -1127,10 +1105,10 @@ class LakeTable:
             )
         vs, snaps, base_v = self._asof_base_plan(lo_cut)
         schema = self._schema(snaps[vs[-1]])
-        if deleted_col not in [f.name for f in schema.fields]:
+        if _DELETED not in [f.name for f in schema.fields]:
             raise ValueError(
                 "read_changes requires a MoR table with tombstone rows "
-                f"({deleted_col!r} column); COW tables erase deletes "
+                f"({_DELETED!r} column); COW tables erase deletes "
                 "physically, so a changefeed over them would silently "
                 "miss them"
             )
@@ -1157,9 +1135,9 @@ class LakeTable:
             vs, snaps, base_v, hi_incl=hi_cut, lo_excl=lo_cut
         )
         win = self._read_file_metas(win_files, schema).where(
-            (F.col(order_col) > lo_cut) & (F.col(order_col) <= hi_cut)
+            (F.col(_ORDER) > lo_cut) & (F.col(_ORDER) <= hi_cut)
         )
-        latest = self._latest_per_key(win, order_col)
+        latest = latest_per_key(win, self.key_cols)
         wkeys = latest.select(*self.key_cols)
         prior_state = self._asof_assemble(
             vs,
@@ -1167,15 +1145,13 @@ class LakeTable:
             base_v,
             self._delta_file_walk(vs, snaps, base_v, hi_incl=lo_cut),
             lo_cut,
-            order_col,
-            deleted_col,
         )
         prior = (
             prior_state.join(F.broadcast(wkeys), list(self.key_cols), "left_semi")
             .select(*self.key_cols)
             .withColumn("_prior", F.lit(True))
         )
-        dele = F.coalesce(F.col(deleted_col), F.lit(False))
+        dele = F.coalesce(F.col(_DELETED), F.lit(False))
         out = latest.join(F.broadcast(prior), list(self.key_cols), "left")
         return (
             out.withColumn(
@@ -1188,36 +1164,20 @@ class LakeTable:
             .drop("_prior")
         )
 
-    def compact(
-        self,
-        batch_id: str | None = None,
-        order_col: str = "seq",
-        deleted_col: str = "_deleted",
-    ) -> MergeStats:
+    def compact(self, batch_id: str | None = None) -> MergeStats:
         """Fold MoR deltas: rewrite the table as one resolved version per
         key, tombstones included (``CdcEngine.purge_tombstones`` drops
         them once the watermark allows). Equivalent to Iceberg's
-        rewrite_data_files maintenance action."""
-        self._check_layout()
-        snap = self.snapshot()
-        bid = batch_id or f"compact-{snap.version}"
-        version = snap.version + 1
-        resolved = self.read_resolved(
-            order_col=order_col, deleted_col=deleted_col, keep_deleted=True
-        )
-        files = self._write_data(self._with_bucket(resolved), version)
-        self._commit(
-            Snapshot(
-                version=version,
-                operation="compact",
-                files=files,  # replaces ALL files
-                schema_json=snap.schema_json,
-                committed_batches=snap.committed_batches + [bid],
-                summary={"batch_id": bid, "mode": "compact"},
-                timestamp=time.time(),
-            )
-        )
-        return MergeStats(batch_id=bid, skipped=False, version=version)
+        rewrite_data_files maintenance action. The files it writes are not
+        delta files, so reads of the result need no resolution."""
+
+        def stage(head: Snapshot, version: int):
+            resolved = self.read_resolved(head.version, keep_deleted=True)
+            files = self._write_data(self._with_bucket(resolved), version)
+            return files, self._schema(head), {}  # replaces ALL files
+
+        bid = batch_id or f"compact-{self.snapshot().version}"
+        return self._publish(bid, "compact", stage)
 
     def expire_snapshots(self, keep_last: int = 2) -> dict[str, int]:
         """Retention maintenance (Iceberg expire_snapshots analogue;
@@ -1265,28 +1225,15 @@ class LakeTable:
 
     def append(self, df: DataFrame, batch_id: str) -> MergeStats:
         """Append-only commit (ledgers/metrics). Idempotent per batch_id."""
-        if not self.exists():
-            return self.create(df, batch_id)
-        self._check_layout()
-        snap = self.snapshot()
-        if batch_id in snap.committed_batches:
-            return MergeStats(batch_id=batch_id, skipped=True, version=snap.version)
-        df = self._with_bucket(df) if self.key_cols else df.withColumn(
-            "_bucket", F.lit(0)
-        )
-        version = snap.version + 1
-        files = self._write_data(df, version)
-        out_snap = Snapshot(
-            version=version,
-            operation="append",
-            files=snap.files + files,
-            schema_json=snap.schema_json,
-            committed_batches=snap.committed_batches + [batch_id],
-            summary={"batch_id": batch_id},
-            timestamp=time.time(),
-        )
-        self._commit(out_snap)
-        return MergeStats(batch_id=batch_id, skipped=False, version=version)
+        df = self._with_bucket(df)
+
+        def stage(head: Snapshot | None, version: int):
+            files = self._write_data(df, version)
+            if head is None:
+                return files, df.schema, {}
+            return head.files + files, self._schema(head), {}
+
+        return self._publish(batch_id, "append", stage)
 
 
 # -- verification helpers ----------------------------------------------------

@@ -49,7 +49,7 @@ from ..mapping.compiler import compile_asserted_patterns
 from ..mapping.flagship import flagship_ir, prepare_input
 from ..mapping.ir import MappingDocumentIR
 from ..operators.materialize import materialize_document
-from ..storage.lake import LakeTable, MergeStats, row_sha256
+from ..storage.lake import LakeTable, MergeStats, latest_per_key, row_sha256
 
 EVENT_COLS = ["seq", "op", "repo", "path", "commit", "lang", "content", "event_ts"]
 KEY = ["repo", "path"]
@@ -223,6 +223,12 @@ class BatchResult:
 class CdcEngine:
     """Compile-once CDC engine over a lake-table sink.
 
+    ``mode`` picks only how :meth:`apply_batch` writes: ``"cow"`` rewrites
+    the touched buckets, ``"mor"`` appends delta files. Reads never depend
+    on it — the table's snapshot says whether rows need resolution
+    (:meth:`LakeTable.read_resolved`), so any engine on a warehouse reads
+    the same live rows whichever mode wrote them.
+
     ``spark-submit --py-files`` entry: see ``cdc_submit.py`` at repo root.
     """
 
@@ -380,16 +386,12 @@ class CdcEngine:
         return self.live_rows().select("repo", "path", "commit", "lang", "content")
 
     def live_rows(self) -> DataFrame:
-        if self.mode == "mor":
-            return self.table.read_resolved()
-        df = self.table.read()
-        if "_deleted" in df.columns:
-            df = df.where(~F.coalesce(F.col("_deleted"), F.lit(False)))
-        return df
+        return self.table.read_resolved()
 
     def compact(self) -> None:
-        """MoR maintenance: fold deltas to one version per key."""
-        if self.mode == "mor":
+        """MoR maintenance: fold deltas to one version per key (a no-op
+        when the snapshot lists no delta file, e.g. a COW table)."""
+        if self.table.exists() and self.table.snapshot().has_deltas:
             self.table.compact()
 
     def max_seq(self) -> int | None:
@@ -434,8 +436,7 @@ class CdcEngine:
         # live row (review finding). Resolution keeps only keys whose
         # LATEST version is the tombstone; order_col="seq" additionally
         # stale-guards against any racing newer version.
-        df = self.table.read_resolved(keep_deleted=True) \
-            if self.mode == "mor" else self.table.read()
+        df = self.table.read_resolved(keep_deleted=True)
         if "_deleted" not in df.columns:
             return
         tombs = df.where(F.coalesce(F.col("_deleted"), F.lit(False))).persist()
@@ -460,12 +461,7 @@ class CdcEngine:
     # -- CDC ---------------------------------------------------------------
 
     def dedup_latest(self, events: DataFrame) -> DataFrame:
-        w = Window.partitionBy(*KEY).orderBy(F.col("seq").desc())
-        return (
-            events.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        return latest_per_key(events, KEY)
 
     def apply_batch(self, events: DataFrame, batch_id: str) -> BatchResult:
         """One micro-batch: dedup → materialize → MERGE → ledger+metrics.
@@ -921,14 +917,14 @@ class CdcEngine:
         events_dir: str,
         checkpoint_dir: str,
         max_files_per_trigger: int = 1,
-        await_termination: bool = True,
         watermark: str | None = None,
     ):
         """Structured Streaming shell: tail an events directory (parquet
         files appended in seq order — the sandbox stand-in for a binlog/WAL
         topic) → ``foreachBatch`` → :meth:`apply_batch`. The checkpoint dir
         plus idempotent MERGE batch ids give exactly-once; killing and
-        rerunning resumes from the last committed epoch."""
+        rerunning resumes from the last committed epoch. Returns once the
+        available files are drained (``availableNow``)."""
         schema = (
             "seq long, op string, repo string, path string, commit string, "
             "lang string, content string, event_ts timestamp"
@@ -955,6 +951,5 @@ class CdcEngine:
             .trigger(availableNow=True)
             .start()
         )
-        if await_termination:
-            q.awaitTermination()
+        q.awaitTermination()
         return q

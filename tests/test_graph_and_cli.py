@@ -292,3 +292,29 @@ def test_cli_load_auto_sniffs_beyond_first_64_shards(tmp_path, capsys):
     doc = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert doc["fmt"] == "turtle"
     assert doc["quads"] == 80
+
+
+def test_cli_load_auto_probes_last_shards(tmp_path, capsys):
+    """A stride of 1 (64–126 shards) sampled only shards 0–62 plus the
+    last one; a turtle(-star) marker in shard 65 with an empty last shard
+    was misread as N-Quads and the strict reader aborted. The probe also
+    reads the last 8 shards."""
+    from etl_pipeline_rdf_star_spark import cli
+
+    d = tmp_path / "ttl70"
+    d.mkdir()
+    for i in range(70):
+        text = f"<http://e/s{i}> <http://e/p> <http://e/o> .\n"
+        if i == 65:
+            text = (
+                '<< <http://e/s0> <http://e/p> <http://e/o> >> '
+                '<http://e/conf> "0.9" .\n'
+            )
+        elif i == 69:
+            text = ""
+        (d / f"part-{i:05d}").write_text(text)
+    out = str(tmp_path / "loaded70")
+    cli.main(["load", "--infile", str(d), "--out", out])
+    doc = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert doc["fmt"] == "turtle"
+    assert doc["quads"] == 69
