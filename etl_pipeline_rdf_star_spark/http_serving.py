@@ -535,31 +535,25 @@ class QueryServer:
         named graphs (both relations carry the same lexical + metadata
         column model, so unionByName with null-fill is exact)."""
         from .queries.sparql import (
-            SparqlDataset,
             dataset_from_engine,
             dataset_from_quads,
+            with_loaded,
         )
 
-        parts = []
-        if self.engine.table.exists():
-            parts.append(dataset_from_engine(self.engine))
+        lake = (
+            dataset_from_engine(self.engine)
+            if self.engine.table.exists()
+            else None
+        )
         loaded = self._loaded_quads()
-        if loaded is not None:
-            parts.append(dataset_from_quads(loaded))
-        if not parts:
+        quads = dataset_from_quads(loaded) if loaded is not None else None
+        if lake is None and quads is None:
             raise HttpError(
                 400, "no data: ingest a batch or load an RDF file first"
             )
-        if len(parts) == 1:
-            return parts[0]
-        tri = parts[0].triples
-        for p in parts[1:]:
-            tri = tri.unionByName(p.triples, allowMissingColumns=True)
-        anns = [p.annotations for p in parts if p.annotations is not None]
-        ann = anns[0] if anns else None
-        for a in anns[1:]:
-            ann = ann.unionByName(a, allowMissingColumns=True)
-        return SparqlDataset(triples=tri, annotations=ann)
+        if lake is None or quads is None:
+            return lake or quads
+        return with_loaded(lake, quads)
 
     def _loaded_quads(self):
         """The HTTP-loaded quads of the graph store's latest version, or

@@ -126,8 +126,8 @@ def _materialized(spark: SparkSession, sf_dir: str):
     `content` is never read, sha256 never recomputed; the DuckDB oracles
     recompute everything from the raw log, so CORRECTNESS proves the
     stored values)."""
-    eng = _lake_engine(spark, sf_dir)
-    return eng.triples_view(), eng.annotations_view()
+    triples, anns, _ = _lake_engine(spark, sf_dir).serving_views()
+    return triples, anns
 
 
 # SQL fragments of the flagship mapping, hand-derived (this duplication is
@@ -592,8 +592,6 @@ def q_node_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     focus = triples.agg(F.min("subject").alias("focus"))
     return node_neighbor_union(triples, anns, focus)
 
-
-_RDF_TYPE_IRI = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 _CLASS_PROPS_SQL = f"""
 WITH t AS ({_ASSERTED_SQL}),

@@ -38,8 +38,11 @@ Supported grammar (everything the reference SELECT/ASK corpus uses):
 Execution model: each triple pattern is a constant-filtered projection of
 the triples (or annotations) relation with variable columns renamed; the
 BGP is a chain of equi-joins on shared variables (Catalyst reorders /
-broadcasts); OPTIONAL is a left join; FILTER a ``where``. Every operator
-stays JVM-side.
+broadcasts); OPTIONAL is a left join; FILTER a ``where``. When the dataset
+carries the engine's stored wide rows (``SparqlDataset.wide``), a star —
+the BGP's patterns on one subject — is instead one filtered projection of
+those rows, and a UNION of stars one scan (see ``_Planner._bgp``). Every
+operator stays JVM-side.
 
 Known subset deviation: GRAPH groups and plain nested groups are
 FLATTENED into the enclosing group, so a FILTER inside them that
@@ -1115,18 +1118,103 @@ class _Parser:
 # ---------------------------------------------------------------------------
 
 
+# the object metadata columns a relation may store, in _META_FIELDS order
+_OBJECT_META_COLS = ("object_kind", "object_datatype", "object_lang")
+
+
+class WideColumn(NamedTuple):
+    """One stored column of the wide rows and the constant metadata of
+    the triples it holds: the asserted column ``name`` (or the field of
+    the ``annotation`` struct) carries ``predicate``'s objects."""
+
+    name: str
+    predicate: str
+    kind: str
+    dt: str | None
+    lang: str | None
+    graph: str | None = None
+
+
+@dataclass(frozen=True)
+class WideRelation:
+    """The stored wide rows the engine's triples and annotations are
+    exploded from: one live row per subject, one column per asserted
+    predicate and the annotation struct (``quoted`` + one field per
+    annotation predicate) on the same row. ``annotation`` is empty when
+    the annotations relation is not served from these rows."""
+
+    rows: DataFrame
+    asserted: tuple[WideColumn, ...]
+    # one row's asserted triples: the array of structs (predicate, object,
+    # object_kind, object_datatype, object_lang, ...) the triples relation
+    # explodes
+    triples: Column
+    annotation: tuple[WideColumn, ...] = ()
+
+    def column_of(self, predicate: str) -> WideColumn | None:
+        """The one default-graph column holding ``predicate``'s triples,
+        or None when there is none or more than one."""
+        hits = [c for c in self.asserted if c.predicate == predicate]
+        if len(hits) == 1 and hits[0].graph is None:
+            return hits[0]
+        return None
+
+    def field_of(self, predicate: str) -> WideColumn | None:
+        """The one annotation field holding ``predicate``, or None."""
+        hits = [c for c in self.annotation if c.predicate == predicate]
+        return hits[0] if len(hits) == 1 else None
+
+
 @dataclass
 class SparqlDataset:
     """The two relations SPARQL-star patterns match against. ``triples``
     needs (subject, predicate, object[, graph]); ``annotations`` needs
-    (q_s, q_p, q_o, predicate, object[, graph]) — quoted-subject rows."""
+    (q_s, q_p, q_o, predicate, object[, graph]) — quoted-subject rows.
+
+    ``wide``, when set, holds the stored rows ``triples`` and
+    ``annotations`` are exploded from; star patterns then read those rows
+    directly. ``quads`` is the rest of both relations — the HTTP-loaded
+    graphs, aligned to their schemas — so a star reads the wide rows
+    plus its generic form over ``quads`` only."""
 
     triples: DataFrame
     annotations: DataFrame | None = None
+    wide: WideRelation | None = None
+    quads: "SparqlDataset | None" = None
+    _subjects_unique: bool | None = field(
+        default=None, init=False, repr=False, compare=False
+    )
+
+    def subjects_unique(self) -> bool:
+        """True when no two live wide rows share a subject and no loaded
+        quad (or quoted triple) is about a wide-row subject — the
+        condition under which a multi-pattern star matches within one
+        row. ``sanitize_for_iri`` is lossy, so paths ``a/b.py`` and
+        ``a_b.py`` can mint one subject. One aggregate over the subjects,
+        stopped at the first duplicate and cached for the dataset's
+        lifetime (two concurrent first callers may both run it; they
+        store the same answer)."""
+        if self._subjects_unique is None:
+            subj = self.wide.rows.select("subject")
+            if self.quads is not None:
+                q = self.quads.triples.select("subject")
+                if self.quads.annotations is not None:
+                    q = q.union(
+                        self.quads.annotations.select(F.col("q_s").alias("subject"))
+                    )
+                subj = subj.union(q.distinct())
+            dup = (
+                subj.where(F.col("subject").isNotNull())
+                .groupBy("subject")
+                .count()
+                .where(F.col("count") > 1)
+            )
+            self._subjects_unique = dup.isEmpty()
+        return self._subjects_unique
 
 
 def dataset_from_engine(engine) -> SparqlDataset:
-    av = engine.annotations_view()
+    triples, av, wide = engine.serving_views()
     # keep stored term metadata when present: DATATYPE()/LANG() serve
     # from it (e.g. the flagship mapping's xsd:decimal confidence)
     extra = [c for c in ("object_datatype", "object_lang") if c in av.columns]
@@ -1138,7 +1226,34 @@ def dataset_from_engine(engine) -> SparqlDataset:
         "object",
         *extra,
     )
-    return SparqlDataset(triples=engine.triples_view(), annotations=anns)
+    return SparqlDataset(triples=triples, annotations=anns, wide=wide)
+
+
+def with_loaded(lake: SparqlDataset, loaded: SparqlDataset) -> SparqlDataset:
+    """``lake`` plus HTTP-loaded graphs: each relation is the union of
+    both, null-filled by name (both carry the same lexical + metadata
+    column model, so the union is exact). ``loaded`` is also kept as
+    ``quads``, in the union's schemas, so a star that reads the lake's
+    wide rows adds the loaded triples alone."""
+
+    def aligned(df: DataFrame, to: DataFrame) -> DataFrame:
+        return df.select(*[
+            (F.col(f.name) if f.name in df.columns else F.lit(None))
+            .cast(f.dataType).alias(f.name)
+            for f in to.schema
+        ])
+
+    tri = lake.triples.unionByName(loaded.triples, allowMissingColumns=True)
+    ann, q_ann = lake.annotations, loaded.annotations
+    if ann is None:
+        ann = q_ann
+    elif q_ann is None:
+        q_ann = ann.where(F.lit(False))
+    else:
+        ann = ann.unionByName(q_ann, allowMissingColumns=True)
+        q_ann = aligned(q_ann, ann)
+    quads = SparqlDataset(aligned(loaded.triples, tri), q_ann)
+    return SparqlDataset(tri, ann, wide=lake.wide, quads=quads)
 
 
 def dataset_from_quads(df: DataFrame) -> SparqlDataset:
@@ -1274,15 +1389,77 @@ def _meta_struct(
     )
 
 
-def _shared_vars(left: DataFrame, right: DataFrame) -> list[str]:
-    """Join keys of two solution frames: their common columns except the
-    metadata ones (joining on those would require datatype equality where
-    the engine's lexical join semantics don't)."""
-    return sorted(
-        c
-        for c in set(left.columns) & set(right.columns)
-        if not c.startswith(_META_PREFIX)
-    )
+
+
+def _merge_sites(sites: list[tuple]) -> Column:
+    """One ``_meta#<var>`` struct from the var's sites, field by field:
+    the first site that knows a field wins."""
+    fields = ([x for x in f if x is not None] for f in zip(*sites))
+    return _meta_struct(*(F.coalesce(*xs) if xs else None for xs in fields))
+
+
+def _bound_columns(cols: dict[str, Term], sites: list[tuple]) -> list[str]:
+    """The columns ``_Planner._bind`` returns for one pattern: its vars in
+    position order, then one metadata column per var with a site."""
+    return [
+        *dict.fromkeys(t.value for t in cols.values() if t.kind == "var"),
+        *dict.fromkeys(_meta_name(v) for v, _ in sites),
+    ]
+
+
+def _term_cond(c: Column, term: Term) -> Column:
+    """The filter a constant pattern term puts on its position's column."""
+    if term.kind == "iri":
+        return c == term.value
+    if term.kind in ("literal", "num"):
+        return c == str(term.value)
+    if term.kind == "quoted":
+        # a GROUND nested quoted term matches by its serialized string
+        # form — the representation both the Turtle reader's depth-2
+        # desugaring and dataset_from_quads' quoted-object rendering
+        # store; _serialize_quoted rejects variables inside loudly
+        # (destructuring the serialized string per-var is the storage
+        # model's documented limit)
+        return c == _serialize_quoted(term)
+    raise SparqlUnsupported(f"term {term.kind} in pattern")
+
+
+def _pattern_terms(tp: TriplePattern) -> dict[str, Term]:
+    """Relation column → pattern term: the triples relation's positions,
+    or the annotations relation's for a quoted-triple subject."""
+    if tp.s.kind == "quoted":
+        qs, qp, qo = tp.s.value
+        cols = {"q_s": qs, "q_p": qp, "q_o": qo}
+    else:
+        cols = {"subject": tp.s}
+    cols.update(predicate=tp.p, object=tp.o)
+    if tp.graph is not None:
+        cols["graph"] = tp.graph
+    return cols
+
+
+def _join_columns(
+    left: list[str], right: list[str], shared: list[str], keys_first: bool
+) -> list[str]:
+    """Output column order of ``_Planner._join``: a plain equi join puts
+    its (sorted) keys first, as Spark's USING join does; every other join
+    keeps the left columns in place. The right side adds the columns the
+    left lacks (a metadata column both carry merges into the left's)."""
+    extra = [c for c in right if c not in left]
+    if keys_first:
+        return shared + [c for c in left if c not in shared] + extra
+    return left + extra
+
+
+def _shared_vars(
+    left: DataFrame | list[str], right: DataFrame | list[str]
+) -> list[str]:
+    """Join keys of two solution frames (or column lists): their common
+    columns except the metadata ones (joining on those would require
+    datatype equality where the engine's lexical join semantics don't)."""
+    lc = left if isinstance(left, list) else left.columns
+    rc = right if isinstance(right, list) else right.columns
+    return sorted(c for c in set(lc) & set(rc) if not c.startswith(_META_PREFIX))
 
 
 def _expr_var_name(e: "Expr") -> str | None:
@@ -1642,6 +1819,41 @@ def _meta_vars_of(q: SelectQuery) -> set[str]:
     return out
 
 
+class _Member(NamedTuple):
+    idx: int  # position in the BGP: the generic plan's join order
+    tp: TriplePattern
+    col: WideColumn | None  # its stored column (None: variable predicate)
+
+
+class _Star(NamedTuple):
+    members: list  # _Member: asserted patterns on the star's subject
+    annotations: list  # _Member: quoted-triple patterns on a member's triple
+
+
+class _StarParts(NamedTuple):
+    pre: list  # Column filters on the wide row
+    t_name: str | None  # the exploded triple column, when a member needs it
+    explode: Column | None
+    post: list  # Column filters on the exploded triple
+    binds: dict  # var -> value Column
+    sites: list  # (bgp index, var, metadata fields) per site
+
+
+# star positions that read one column per row, whichever member binds them
+_ROW_POSITIONS = ("subject", "q_s", "q_p", "q_o")
+
+
+def _all(conds: list[Column]) -> Column:
+    out = conds[0]
+    for c in conds[1:]:
+        out = out & c
+    return out
+
+
+def _pattern_vars_of(tp: TriplePattern) -> set[str]:
+    return {t.value for t in _pattern_terms(tp).values() if t.kind == "var"}
+
+
 class _Planner:
     def __init__(
         self,
@@ -1703,31 +1915,17 @@ class _Planner:
             return self._quoted_pattern_df(tp)
         if tp.p.kind == "path":
             return self._path_pattern_df(tp)
-        df = self._dataset_scope(self.ds.triples, tp)
-        cols = {"subject": tp.s, "predicate": tp.p, "object": tp.o}
-        if tp.graph is not None:
-            if "graph" not in df.columns:
-                df = df.withColumn("graph", F.lit(None).cast("string"))
-            if tp.graph.kind == "var":
-                # GRAPH ?g ranges over NAMED graphs only: default-graph
-                # rows (null graph) must not bind ?g — and a null key
-                # would silently drop rows in downstream equi-joins
-                # (review finding)
-                df = df.where(F.col("graph").isNotNull())
-            cols["graph"] = tp.graph
-        return self._bind(df, cols)
+        return self._graph_bind(self._dataset_scope(self.ds.triples, tp), tp)
 
     def _quoted_pattern_df(self, tp: TriplePattern) -> DataFrame:
         if self.ds.annotations is None:
             raise SparqlUnsupported(
                 "quoted-triple pattern but dataset has no annotations relation"
             )
-        qs, qp, qo = tp.s.value
-        cols = {
-            "q_s": qs, "q_p": qp, "q_o": qo,
-            "predicate": tp.p, "object": tp.o,
-        }
-        df = self._dataset_scope(self.ds.annotations, tp)
+        return self._graph_bind(self._dataset_scope(self.ds.annotations, tp), tp)
+
+    def _graph_bind(self, df: DataFrame, tp: TriplePattern) -> DataFrame:
+        cols = _pattern_terms(tp)
         if tp.graph is not None:
             if "graph" not in df.columns:
                 df = df.withColumn("graph", F.lit(None).cast("string"))
@@ -1737,7 +1935,6 @@ class _Planner:
                 # would silently drop rows in downstream equi-joins
                 # (review finding)
                 df = df.where(F.col("graph").isNotNull())
-            cols["graph"] = tp.graph
         return self._bind(df, cols)
 
     # -- property paths ----------------------------------------------------
@@ -1985,48 +2182,56 @@ class _Planner:
                     df = df.where(F.col(col) == select[term.value])
                 else:
                     select[term.value] = F.col(col)
-            elif term.kind == "iri":
-                df = df.where(F.col(col) == term.value)
-            elif term.kind in ("literal", "num"):
-                df = df.where(F.col(col) == str(term.value))
-            elif term.kind == "quoted":
-                # a GROUND nested quoted term matches by its serialized
-                # string form — the representation both the Turtle
-                # reader's depth-2 desugaring and dataset_from_quads'
-                # quoted-object rendering store; _serialize_quoted
-                # rejects variables inside loudly (destructuring the
-                # serialized string per-var is the storage model's
-                # documented limit)
-                df = df.where(F.col(col) == _serialize_quoted(term))
             else:
-                raise SparqlUnsupported(f"term {term.kind} in pattern")
+                df = df.where(_term_cond(F.col(col), term))
         if not select:  # pure existence pattern: ONE solution if any match
             return df.limit(1).select(F.lit(1).alias(_fresh("one")))
-        proj = [c.alias(v) for v, c in select.items()]
-        # term metadata of the vars the query inspects, one struct per
-        # var (merged when a var fills several positions). The object
-        # position carries the relation's stored fields. The RDF model
-        # fixes what the other positions can hold, so their kind needs
-        # no lexical sniff (a bare stored bnode label 'genid1' or a
-        # mailto: IRI in subject position would sniff 'literal',
-        # breaking isBLANK/TRIPLE/sameTerm on subject vars).
-        # Subjects are IRIs or bnodes (quoted subjects live in the
-        # annotations relation): stored subject_kind wins when the
-        # frame carries it; otherwise anything that isn't an absolute
-        # IRI (or a serialized triple term, for q_o-sourced joins) must
-        # be a bnode label. Predicates are always IRIs; graph labels
-        # use the same iri-or-bnode inference as subjects — the N-Quads
-        # reader accepts '_:g' graph labels and stores them bare, so
-        # pinning 'iri' would misclassify them (review finding).
-        known: dict[str, list[tuple]] = {}
+        stored = tuple(
+            F.col(c) if c in df.columns else None for c in _OBJECT_META_COLS
+        )
+        skind = F.col("subject_kind") if "subject_kind" in df.columns else None
+        sites = self._meta_sites(cols, F.col, stored, skind)
+        out = {v: c.alias(v) for v, c in select.items()}
+        for v in dict.fromkeys(v for v, _ in sites):
+            merged = _merge_sites([site for u, site in sites if u == v])
+            out[_meta_name(v)] = merged.alias(_meta_name(v))
+        return df.select(*[out[c] for c in _bound_columns(cols, sites)])
+
+    def _meta_sites(
+        self,
+        cols: dict[str, Term],
+        col_of,
+        stored: tuple,
+        subject_kind: Column | None,
+    ) -> list[tuple[str, tuple]]:
+        """``(var, (kind, dt, lang))`` per term-metadata site of one
+        pattern, for the vars the query inspects, in merge order (the
+        first known field wins). ``col_of(position)`` is the position's
+        value column; ``stored`` the relation's object metadata columns
+        (None where it has none).
+
+        The object position carries the relation's stored fields. The
+        RDF model fixes what the other positions can hold, so their kind
+        needs no lexical sniff (a bare stored bnode label 'genid1' or a
+        mailto: IRI in subject position would sniff 'literal', breaking
+        isBLANK/TRIPLE/sameTerm on subject vars). Subjects are IRIs or
+        bnodes (quoted subjects live in the annotations relation): a
+        stored ``subject_kind`` wins when the relation carries it;
+        otherwise anything that isn't an absolute IRI (or a serialized
+        triple term, for q_o-sourced joins) must be a bnode label.
+        Predicates are always IRIs; graph labels use the same
+        iri-or-bnode inference as subjects — the N-Quads reader accepts
+        '_:g' graph labels and stores them bare, so pinning 'iri' would
+        misclassify them (review finding)."""
+        sites: list[tuple[str, tuple]] = []
         o = cols.get("object")
-        if o is not None and o.kind == "var" and o.value in self.meta_vars:
-            stored = tuple(
-                F.col(c) if c in df.columns else None
-                for c in ("object_kind", "object_datatype", "object_lang")
-            )
-            if any(x is not None for x in stored):
-                known.setdefault(o.value, []).append(stored)
+        if (
+            o is not None
+            and o.kind == "var"
+            and o.value in self.meta_vars
+            and any(x is not None for x in stored)
+        ):
+            sites.append((o.value, stored))
         for pos, always_iri in (
             ("subject", False), ("q_s", False), ("graph", False),
             ("predicate", True), ("q_p", True),
@@ -2034,7 +2239,7 @@ class _Planner:
             t = cols.get(pos)
             if t is None or t.kind != "var" or t.value not in self.meta_vars:
                 continue
-            c = F.col(pos)
+            c = col_of(pos)
             if always_iri:
                 kind = F.when(c.isNotNull(), F.lit("iri"))
             else:
@@ -2043,17 +2248,11 @@ class _Planner:
                     .when(c.rlike(_ABS_IRI_RE), F.lit("iri"))
                     .otherwise(F.lit("blank"))
                 )
-                if pos == "subject" and "subject_kind" in df.columns:
-                    inferred = F.coalesce(F.col("subject_kind"), inferred)
+                if pos == "subject" and subject_kind is not None:
+                    inferred = F.coalesce(subject_kind, inferred)
                 kind = F.when(c.isNotNull(), inferred)
-            known.setdefault(t.value, []).append((kind, None, None))
-        for v, sites in known.items():
-            fields = (
-                [x for x in field if x is not None] for field in zip(*sites)
-            )
-            merged = (F.coalesce(*xs) if xs else None for xs in fields)
-            proj.append(_meta_struct(*merged).alias(_meta_name(v)))
-        return df.select(*proj)
+            sites.append((t.value, (kind, None, None)))
+        return sites
 
     def _join(
         self,
@@ -2077,6 +2276,8 @@ class _Planner:
         if left is None:
             return right, set(rmaybe)
         shared = _shared_vars(left, right)
+        right_cols = right.columns
+        keys_first = False
         both_meta = {
             c: c + "#r"
             for c in right.columns
@@ -2097,6 +2298,7 @@ class _Planner:
             fuzzy = [c for c in shared if c in lmaybe or c in rmaybe]
             if not fuzzy:
                 out = left.join(right, on=shared, how=how)
+                keys_first = True
             else:
                 la, ra = left.alias("_l"), right.alias("_r")
                 j = la.join(ra, _compat_cond(shared, fuzzy), how)
@@ -2130,17 +2332,21 @@ class _Planner:
                 for f in _META_FIELDS
             ]
             out = out.withColumn(c, F.struct(*merged)).drop(rc)
-        return out, maybe
+        order = _join_columns(left.columns, right_cols, shared, keys_first)
+        return out.select(*order), maybe
 
     def _group(self, g: Group) -> tuple[DataFrame, set[str]]:
         df: DataFrame | None = None
         maybe: set[str] = set()
+        bgp: list[TriplePattern] = []  # the basic graph pattern being read
         for p in g.patterns:
             if isinstance(p, TriplePattern):
-                df, maybe = self._join(
-                    df, maybe, self._pattern_df(p), set(), "inner"
-                )
-            elif isinstance(p, Optional_):
+                bgp.append(p)
+                continue
+            if bgp:
+                df, maybe = self._bgp(df, maybe, bgp)
+                bgp = []
+            if isinstance(p, Optional_):
                 # pass only the vars ACTUALLY maybe-unbound in the
                 # optional side's own rows: the right side's vars become
                 # unbound on NON-matching rows, which _join's left-branch
@@ -2217,30 +2423,12 @@ class _Planner:
                 )
                 df, maybe = self._join(df, maybe, sdf, smaybe, "inner")
             elif isinstance(p, UnionOp):
-                parts = [self._group(sub) for sub in p.groups]
-                types = {
-                    f.name: f.dataType
-                    for part, _ in parts
-                    for f in part.schema
-                }
-                allcols = sorted(types)
-                u = None
-                umaybe: set[str] = set()
-                for part, pm in parts:
-                    umaybe |= pm
-                    # vars a branch doesn't bind are unbound in its rows
-                    umaybe |= set(allcols) - set(part.columns)
-                    aligned = part.select(
-                        *[
-                            (F.col(c) if c in part.columns
-                             else F.lit(None).cast(types[c])).alias(c)
-                            for c in allcols
-                        ]
-                    )
-                    u = aligned if u is None else u.unionByName(aligned)
+                u, umaybe = self._wide_union(p.groups) or self._union(p.groups)
                 df, maybe = self._join(df, maybe, u, umaybe, "inner")
             else:
                 raise SparqlUnsupported(f"pattern {type(p).__name__}")
+        if bgp:
+            df, maybe = self._bgp(df, maybe, bgp)
         if df is None:
             raise SparqlParseError("empty group pattern")
         for f in g.filters:
@@ -2266,6 +2454,281 @@ class _Planner:
                 if marks:
                     df = df.drop(*marks)
         return df, maybe
+
+    def _union(self, groups: list[Group]) -> tuple[DataFrame, set[str]]:
+        """UNION: each branch's frame, null-filled to the sorted union of
+        their columns; a var a branch doesn't bind may be unbound."""
+        parts = [self._group(sub) for sub in groups]
+        types = {f.name: f.dataType for part, _ in parts for f in part.schema}
+        allcols = sorted(types)
+        u = None
+        umaybe: set[str] = set()
+        for part, pm in parts:
+            umaybe |= pm | (set(allcols) - set(part.columns))
+            aligned = part.select(
+                *[
+                    (F.col(c) if c in part.columns
+                     else F.lit(None).cast(types[c])).alias(c)
+                    for c in allcols
+                ]
+            )
+            u = aligned if u is None else u.unionByName(aligned)
+        return u, umaybe
+
+    # -- stars over the wide rows ------------------------------------------
+    #
+    # The engine stores one row per subject with one column per predicate
+    # and the annotation struct on the same row (SparqlDataset.wide). A
+    # star — the patterns of a BGP that share a subject — then matches
+    # within one row: a filtered projection of the rows instead of one
+    # exploded triples scan per pattern and a self join. Each star keeps
+    # the generic plan's answers exactly: the same solutions, metadata
+    # columns and column order. Anything the layout cannot answer from
+    # one row takes the generic path.
+
+    def _bgp(
+        self, df: DataFrame | None, maybe: set[str], bgp: list[TriplePattern]
+    ) -> tuple[DataFrame, set[str]]:
+        """Join a basic graph pattern into ``df``: from the wide rows when
+        every pattern belongs to a wide-path star, else pattern by
+        pattern. The wide form is reordered to the columns the pattern
+        chain would produce (SELECT * shows them)."""
+        stars = self._wide_stars(bgp)
+        if stars is None:
+            for tp in bgp:
+                df, maybe = self._join(df, maybe, self._pattern_df(tp), set(), "inner")
+            return df, maybe
+        order, mb = (df.columns, set(maybe)) if df is not None else (None, set())
+        for tp in bgp:
+            right = self._pattern_columns(tp)
+            if order is None:
+                order = right
+                continue
+            shared = _shared_vars(order, right)
+            keys_first = bool(shared) and not mb & set(shared)
+            order = _join_columns(order, right, shared, keys_first)
+            mb -= set(shared)
+        df, maybe = self._join(df, maybe, self._stars_df(bgp, stars), set(), "inner")
+        return df.select(*order), maybe
+
+    def _pattern_columns(self, tp: TriplePattern) -> list[str]:
+        """The columns ``_pattern_df(tp)`` has, without building it."""
+        rel = self.ds.annotations if tp.s.kind == "quoted" else self.ds.triples
+        cols = _pattern_terms(tp)
+        stored = tuple(
+            F.lit(None) if c in rel.columns else None for c in _OBJECT_META_COLS
+        )
+        return _bound_columns(cols, self._meta_sites(cols, F.col, stored, None))
+
+    def _wide_stars(self, bgp: list[TriplePattern]) -> list[_Star] | None:
+        """The BGP's stars when the wide rows answer every pattern, else
+        None. A star qualifies when each member has a constant predicate
+        the layout stores in exactly one default-graph column, or is the
+        star's one variable-predicate member, or is a quoted-triple
+        pattern on the star's subject with a stored annotation predicate
+        (each row's quoted triple is about that row). Outside any GRAPH
+        clause and dataset clause only, and a star of two or more
+        patterns only while subjects are unique (one row per subject)."""
+        w = self.ds.wide
+        if w is None or self.has_dataset:
+            return None
+        stars: dict[Term, _Star] = {}
+        for i, tp in enumerate(bgp):
+            if tp.graph is not None or not _pattern_vars_of(tp):
+                return None
+            if tp.s.kind == "quoted":
+                # the quoted triple is about the row storing it: it joins
+                # the star on its subject (or stands alone)
+                qs = tp.s.value[0]
+                field_ = w.field_of(tp.p.value) if tp.p.kind == "iri" else None
+                if field_ is None or qs.kind not in ("var", "iri"):
+                    return None
+                star = stars.setdefault(qs, _Star([], []))
+                star.annotations.append(_Member(i, tp, field_))
+                continue
+            if tp.s.kind not in ("var", "iri"):
+                return None
+            if tp.p.kind == "iri":
+                col = w.column_of(tp.p.value)
+                if col is None:
+                    return None
+            elif tp.p.kind != "var":
+                return None
+            else:
+                col = None
+            star = stars.setdefault(tp.s, _Star([], []))
+            if col is None and any(m.col is None for m in star.members):
+                return None  # one exploded member per star
+            star.members.append(_Member(i, tp, col))
+        multi = any(len(st.members) + len(st.annotations) > 1 for st in stars.values())
+        if multi and not self.ds.subjects_unique():
+            return None
+        return list(stars.values())
+
+    def _star_parts(self, star: _Star) -> _StarParts:
+        """A star as expressions over one wide row: the row filter, the
+        optional explode of the variable-predicate member (with the
+        filters on its columns), each var's value column, and every
+        term-metadata site ``(bgp index, var, fields)``."""
+        w = self.ds.wide
+        bound: dict[str, Column] = {}
+        source: dict[str, object] = {}  # var -> the position it was bound at
+        pre: list[Column] = []
+        post: list[Column] = []
+        sites: list[tuple[int, str, tuple]] = []
+        t_name, explode = None, None
+
+        def bind(m: _Member, pos: dict[str, Column], stored: tuple, conds) -> None:
+            """Match one member's terms against its position columns. A
+            constant predicate is implied by the column and has none."""
+            cols = _pattern_terms(m.tp)
+            for p, term in cols.items():
+                c = pos.get(p)
+                if c is None:
+                    continue
+                key = p if p in _ROW_POSITIONS else (m.idx, p)
+                if term.kind != "var":
+                    conds.append(_term_cond(c, term))
+                elif term.value not in bound:
+                    bound[term.value], source[term.value] = c, key
+                elif source[term.value] == key:
+                    conds.append(c.isNotNull())  # the join drops null keys
+                else:
+                    conds.append(c == bound[term.value])
+            for v, site in self._meta_sites(cols, pos.get, stored, None):
+                sites.append((m.idx, v, site))
+
+        def stored(rel: DataFrame, values: tuple) -> tuple:
+            return tuple(
+                x if c in rel.columns else None
+                for c, x in zip(_OBJECT_META_COLS, values)
+            )
+
+        def consts(c: WideColumn) -> tuple:
+            return tuple(
+                F.lit(x) if x is not None else F.lit(None).cast("string")
+                for x in (c.kind, c.dt, c.lang)
+            )
+
+        subject = F.col("subject")
+        for m in star.members:
+            if m.col is not None:
+                obj = F.col(m.col.name)
+                pre.append(obj.isNotNull())
+                pos = {"subject": subject, "object": obj}
+                bind(m, pos, stored(self.ds.triples, consts(m.col)), pre)
+        ann = F.col("annotation")
+        for m in star.annotations:
+            obj = ann.getField(m.col.name)
+            q = ann.getField("quoted")
+            pre.append(obj.isNotNull())
+            pos = {
+                "q_s": q.getField("s"), "q_p": q.getField("p"),
+                "q_o": q.getField("o"), "object": obj,
+            }
+            bind(m, pos, stored(self.ds.annotations, consts(m.col)), pre)
+        for m in star.members:
+            if m.col is None:
+                # the member matches every triple of the row: explode the
+                # layout columns the way the triples relation does
+                t_name = _fresh("t")
+                t = F.col(t_name)
+                explode = F.explode(w.triples)
+                pos = {
+                    "subject": subject, "predicate": t.getField("predicate"),
+                    "object": t.getField("object"),
+                }
+                meta = tuple(t.getField(c) for c in _OBJECT_META_COLS)
+                bind(m, pos, stored(self.ds.triples, meta), post)
+        return _StarParts(pre, t_name, explode, post, bound, sites)
+
+    def _star_rows(self, parts: _StarParts) -> DataFrame:
+        """The wide rows a star's parts select (exploded when needed)."""
+        df = self.ds.wide.rows
+        if parts.pre:
+            df = df.where(_all(parts.pre))
+        if parts.explode is not None:
+            df = df.withColumn(parts.t_name, parts.explode)
+            if parts.post:
+                df = df.where(_all(parts.post))
+        return df
+
+    def _stars_df(self, bgp: list[TriplePattern], stars: list[_Star]) -> DataFrame:
+        """The BGP's solutions from its stars: one filtered projection of
+        the wide rows per star, joined on shared vars, with each var's
+        metadata merged across the BGP in pattern order. With loaded
+        quads, plus the BGP's generic form over the quads alone."""
+        out: DataFrame | None = None
+        sites: list[tuple[int, str, str]] = []
+        for star in stars:
+            parts = self._star_parts(star)
+            named = [(i, v, _fresh("site"), site) for i, v, site in parts.sites]
+            frame = self._star_rows(parts).select(
+                *[c.alias(v) for v, c in parts.binds.items()],
+                *[_meta_struct(*site).alias(n) for _, _, n, site in named],
+            )
+            out, _ = self._join(out, set(), frame, set(), "inner")
+            sites += [(i, v, n) for i, v, n, _ in named]
+        metas: dict[str, list[str]] = {}
+        for _, v, n in sorted(sites, key=lambda x: x[0]):
+            metas.setdefault(v, []).append(n)
+        temps = {n for _, _, n in sites}
+        out = out.select(
+            *[c for c in out.columns if c not in temps],
+            *[
+                _merge_sites(
+                    [tuple(F.col(n).getField(f) for f in _META_FIELDS) for n in ns]
+                ).alias(_meta_name(v))
+                for v, ns in metas.items()
+            ],
+        )
+        if self.ds.quads is not None:
+            q = _Planner(self.ds.quads, meta_vars=self.meta_vars)._bgp(None, set(), bgp)[0]
+            out = out.select(*q.columns).unionByName(q)
+        return out
+
+    def _wide_union(self, groups: list[Group]) -> tuple[DataFrame, set[str]] | None:
+        """A UNION whose branches are each one wide-path star (no
+        variable predicate, no FILTER) as ONE scan: every row yields the
+        array of the branch solutions it satisfies, exploded — the
+        construction the triples relation itself uses."""
+        if self.ds.quads is not None:
+            return None
+        branches = []
+        for sub in groups:
+            if sub.filters or not all(isinstance(x, TriplePattern) for x in sub.patterns):
+                return None
+            stars = self._wide_stars(sub.patterns) if sub.patterns else None
+            if stars is None or len(stars) != 1 or any(
+                m.col is None for m in stars[0].members
+            ):
+                return None
+            parts = self._star_parts(stars[0])
+            values = dict(parts.binds)
+            by_var: dict[str, list[tuple]] = {}
+            for _, v, site in sorted(parts.sites, key=lambda x: x[0]):
+                by_var.setdefault(v, []).append(site)
+            for v, vs in by_var.items():
+                values[_meta_name(v)] = _merge_sites(vs)
+            branches.append((_all(parts.pre), values))
+        types = {
+            c: (_META_TYPE if c.startswith(_META_PREFIX) else "string")
+            for _, values in branches
+            for c in values
+        }
+        allcols = sorted(types)
+        t_name = _fresh("u")
+        solutions = F.array(*[
+            F.when(cond, F.struct(*[
+                values.get(c, F.lit(None)).cast(types[c]).alias(c) for c in allcols
+            ]))
+            for cond, values in branches
+        ])
+        u = self.ds.wide.rows.select(
+            F.explode(F.array_compact(solutions)).alias(t_name)
+        ).select(*[F.col(t_name).getField(c).alias(c) for c in allcols])
+        umaybe = {c for _, values in branches for c in allcols if c not in values}
+        return u, umaybe
 
     def _lower_exists(
         self, e: Expr, df: DataFrame, maybe: set[str]

@@ -17,9 +17,13 @@ Design decisions (scale rationale):
   with one column per mapping predicate plus a nested annotation struct —
   so MERGE is a single-row-per-key upsert and **schema evolution = adding a
   column in place** (north star: "new mapping predicates add Iceberg columns
-  in-place"). The triple-grain relation the SPARQL-ish query corpus needs is
-  a *derived view* (:func:`CdcEngine.triples_view`) recompiled from the same
-  mapping — storage is written once, views are free.
+  in-place"). The triple-grain relation the SQL views and generic SPARQL
+  patterns need is a *derived view* (:func:`CdcEngine.triples_view`) over
+  the same stored rows. It is not free: every read explodes all predicate
+  columns of every live row, and a pattern then filters back down to one
+  predicate. So SPARQL star patterns read the wide rows themselves
+  (:func:`CdcEngine.serving_views` hands the compiler the rows and their
+  layout): one filtered scan per star, no explode and no self join.
 * **Mapping compiled once.** ``wide_columns()`` runs at engine construction;
   per micro-batch only DataFrame ops execute. No per-row Python anywhere
   (input_hint requirement) — every expression is Catalyst/codegen.
@@ -74,6 +78,57 @@ class WideLayout:
     annotation: list[tuple[str, str, str, str | None, str | None]]
     # True when every asserted pattern's datatype/lang folded to constants
     static: bool
+    # True when the annotation struct's ``quoted.s`` is minted by the same
+    # subject template as the row's ``subject`` (the quoted triple is about
+    # the row it is stored on)
+    quoted_on_row: bool
+    # one stored row's asserted triples / annotation rows: arrays of the
+    # structs its non-null columns (annotation fields) hold, built once
+    triples: Column
+    annotations: Column | None
+
+
+def _str(v: str | None) -> Column:
+    return F.lit(v).cast("string")
+
+
+def _triples_array(asserted: list[tuple[str, object]]) -> Column:
+    return F.array_compact(F.array(*[
+        F.when(
+            F.col(name).isNotNull(),
+            F.struct(
+                F.lit(p.tm_name).alias("tm"),
+                F.lit(p.predicate).alias("predicate"),
+                F.col(name).alias("object"),
+                _str(p.const_datatype).alias("object_datatype"),
+                _str(p.const_lang).alias("object_lang"),
+                F.lit(p.obj_kind).alias("object_kind"),
+                _str(p.const_graph).alias("graph"),
+            ),
+        )
+        for name, p in asserted
+    ]))
+
+
+def _annotations_array(tm: str, annotation: list[tuple]) -> Column:
+    a = F.col("annotation")
+    return F.array_compact(F.array(*[
+        F.when(
+            a.getField(name).isNotNull(),
+            F.struct(
+                F.lit(tm).alias("tm"),
+                a.getField("reifier").alias("reifier"),
+                a.getField("quoted").alias("quoted"),
+                F.lit(pred_iri).alias("predicate"),
+                a.getField(name).alias("object"),
+                _str(const_dt).alias("object_datatype"),
+                _str(const_lang).alias("object_lang"),
+                F.lit(kind).alias("object_kind"),
+                _str(None).alias("graph"),
+            ),
+        )
+        for name, pred_iri, kind, const_dt, const_lang in annotation
+    ]))
 
 
 def wide_columns(
@@ -87,6 +142,7 @@ def wide_columns(
     seen: set[str] = set()
     asserted_meta: list[tuple[str, object]] = []
     ann_meta: list[tuple[str, str, str, str | None, str | None]] = []
+    quoted_on_row = False
 
     # the wide row carries EVERY asserted map that shares the primary
     # map's subject (the flagship's `file` + `file_lang` both mint
@@ -190,6 +246,10 @@ def wide_columns(
                         )
                     )
         cols.append(F.struct(*ann_fields).alias("annotation"))
+        quoted_on_row = (
+            ir.triples_maps[qj.quoted_map].subject.templates
+            == primary.subject.templates
+        )
         if (
             tm.graphs
             or any(po.graphs for po in tm.predicate_objects)
@@ -202,6 +262,11 @@ def wide_columns(
         asserted=asserted_meta,
         annotation=ann_meta,
         static=covers_all and all(p.meta_static for _, p in asserted_meta),
+        quoted_on_row=quoted_on_row,
+        triples=_triples_array(asserted_meta),
+        annotations=(
+            _annotations_array(annotation_tm, ann_meta) if ann_meta else None
+        ),
     )
 
 
@@ -284,100 +349,101 @@ class CdcEngine:
         return row_sha256(out, cols=["repo", "path", "commit", "lang", "content"])
 
     def triples_view(self, state: DataFrame | None = None) -> DataFrame:
-        """Triple-grain asserted triples.
+        """Triple-grain asserted triples (see :meth:`serving_views`)."""
+        return self.serving_views(state)[0]
 
-        Default (no ``state``): derived from the STORED wide columns — a
-        projection+explode over already-materialized strings that never
-        touches the fat ``content`` column and never recomputes sha256.
-        At 100 TB this is the difference between serving from a pruned
-        column scan and re-running the mapping over the payload.
-        With an explicit ``state`` (time travel, ad-hoc frames) or a
-        dynamic-datatype mapping, falls back to recompiling."""
-        if state is None and self._layout.static and self._wide_columns_stored():
-            return self._triples_from_wide(self.live_rows())
-        state = state if state is not None else self.current_state()
-        sources = {tm.name: prepare_input(state) for tm in self.ir.triples_maps.values()}
-        triples, _ = materialize_document(sources, self.ir)
-        return triples
+    def annotations_view(self, state: DataFrame | None = None) -> DataFrame:
+        """Quoted-triple annotation rows (see :meth:`serving_views`)."""
+        return self.serving_views(state)[1]
 
-    def _wide_columns_stored(self) -> bool:
-        """Fast path requires every layout column in the STORED schema —
-        tables written by an older mapping (pre-evolution, or before a
-        column existed) must recompute until the next batch materializes
-        the new columns (review finding: unguarded select crashed)."""
-        if not self.table.exists():
-            return False
-        stored = set(self.table.read().columns)
+    def serving_views(self, state: DataFrame | None = None):
+        """``(triples, annotations, wide)`` from ONE resolved read.
+
+        Default (no ``state``): both views are derived from the STORED
+        wide columns — a projection+explode over already-materialized
+        strings that never touches the fat ``content`` column and never
+        recomputes sha256 — and ``wide`` is the
+        :class:`~..queries.sparql.WideRelation` the SPARQL compiler reads
+        star patterns from without exploding. With an explicit ``state``
+        (time travel, ad-hoc frames), a dynamic-datatype mapping, or a
+        stored schema that lacks the layout columns, a view falls back to
+        recompiling the mapping and ``wide`` is None."""
+        rows = None
+        if state is None and self._layout.static and self.table.exists():
+            rows = self.live_rows()
+        stored = set(rows.columns) if rows is not None else set()
+        triples = anns = wide = None
+        if self._wide_columns_stored(stored):
+            triples = self._triples_from_wide(rows)
+        if self._layout.annotation and "annotation" in stored:
+            anns = self._annotations_from_wide(rows)
+        if triples is not None:
+            wide = self._wide_relation(rows, anns is not None)
+        if triples is None or anns is None:
+            if state is None:
+                state = self.current_state() if rows is None else rows.select(
+                    "repo", "path", "commit", "lang", "content"
+                )
+            sources = {
+                tm.name: prepare_input(state)
+                for tm in self.ir.triples_maps.values()
+            }
+            t, a = materialize_document(sources, self.ir)
+            triples = t if triples is None else triples
+            anns = a if anns is None else anns
+        return triples, anns, wide
+
+    def _wide_columns_stored(self, stored: set[str] | None = None) -> bool:
+        """Fast path requires every layout column in the STORED schema
+        (``stored``, or the table's when omitted) — tables written by an
+        older mapping (pre-evolution, or before a column existed) must
+        recompute until the next batch materializes the new columns
+        (review finding: unguarded select crashed)."""
+        if stored is None:
+            if not self.table.exists():
+                return False
+            stored = set(self.table.read().columns)
         return {"subject", *(n for n, _ in self._layout.asserted)} <= stored
+
+    def _wide_relation(self, rows: DataFrame, with_annotations: bool):
+        """The layout handed to the SPARQL compiler: each stored column
+        with the constant metadata its triples carry (exactly what
+        :meth:`_triples_from_wide` / :meth:`_annotations_from_wide` emit).
+        The annotation fields are listed only when the annotations view
+        is served from the same rows and each quoted triple is about the
+        row that stores it."""
+        from ..queries.sparql import WideColumn, WideRelation
+
+        asserted = tuple(
+            WideColumn(
+                name, p.predicate, p.obj_kind, p.const_datatype, p.const_lang,
+                p.const_graph,
+            )
+            for name, p in self._layout.asserted
+        )
+        annotation = tuple(
+            WideColumn(name, pred_iri, kind, dt, lang)
+            for name, pred_iri, kind, dt, lang in self._layout.annotation
+        )
+        on_row = with_annotations and self._layout.quoted_on_row
+        return WideRelation(
+            rows, asserted, self._layout.triples, annotation if on_row else ()
+        )
 
     def _triples_from_wide(self, wide: DataFrame) -> DataFrame:
         from ..operators.materialize import TRIPLE_COLS
 
-        def s(v: str | None) -> Column:
-            return F.lit(v).cast("string")
-
-        structs = []
-        for name, p in self._layout.asserted:
-            structs.append(
-                F.when(
-                    F.col(name).isNotNull(),
-                    F.struct(
-                        F.lit(p.tm_name).alias("tm"),
-                        F.col("subject").alias("subject"),
-                        F.lit(p.predicate).alias("predicate"),
-                        F.col(name).alias("object"),
-                        s(p.const_datatype).alias("object_datatype"),
-                        s(p.const_lang).alias("object_lang"),
-                        F.lit(p.obj_kind).alias("object_kind"),
-                        s(p.const_graph).alias("graph"),
-                    ),
-                )
-            )
-        arr = F.array_compact(F.array(*structs))
-        return wide.select(F.explode(arr).alias("t")).select(
-            *[F.col(f"t.{c}").alias(c) for c in TRIPLE_COLS]
+        t = F.col("t")
+        return wide.select("subject", F.explode(self._layout.triples).alias("t")).select(
+            *[F.col(c) if c == "subject" else t.getField(c).alias(c) for c in TRIPLE_COLS]
         )
-
-    def annotations_view(self, state: DataFrame | None = None) -> DataFrame:
-        if (
-            state is None
-            and self._layout.static
-            and self._layout.annotation
-            and "annotation" in self.table.read().columns
-        ):
-            return self._annotations_from_wide(self.live_rows())
-        state = state if state is not None else self.current_state()
-        sources = {tm.name: prepare_input(state) for tm in self.ir.triples_maps.values()}
-        _, anns = materialize_document(sources, self.ir)
-        return anns
 
     def _annotations_from_wide(self, wide: DataFrame) -> DataFrame:
         from ..operators.materialize import ANNOTATION_COLS
 
-        def s(v: str | None) -> Column:
-            return F.lit(v).cast("string")
-
-        structs = []
-        for name, pred_iri, kind, const_dt, const_lang in self._layout.annotation:
-            structs.append(
-                F.when(
-                    F.col(f"annotation.{name}").isNotNull(),
-                    F.struct(
-                        F.lit(self.annotation_tm).alias("tm"),
-                        F.col("annotation.reifier").alias("reifier"),
-                        F.col("annotation.quoted").alias("quoted"),
-                        F.lit(pred_iri).alias("predicate"),
-                        F.col(f"annotation.{name}").alias("object"),
-                        s(const_dt).alias("object_datatype"),
-                        s(const_lang).alias("object_lang"),
-                        F.lit(kind).alias("object_kind"),
-                        s(None).alias("graph"),
-                    ),
-                )
-            )
-        arr = F.array_compact(F.array(*structs))
-        return wide.select(F.explode(arr).alias("t")).select(
-            *[F.col(f"t.{c}").alias(c) for c in ANNOTATION_COLS]
+        t = F.col("t")
+        return wide.select(F.explode(self._layout.annotations).alias("t")).select(
+            *[t.getField(c).alias(c) for c in ANNOTATION_COLS]
         )
 
     def current_state(self) -> DataFrame:
