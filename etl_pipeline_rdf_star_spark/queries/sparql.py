@@ -1398,6 +1398,15 @@ def _merge_sites(sites: list[tuple]) -> Column:
     return _meta_struct(*(F.coalesce(*xs) if xs else None for xs in fields))
 
 
+def _merged_metas(sites: list[tuple]) -> dict[str, Column]:
+    """``_meta#<var>`` → its struct, from ``(pattern index, var, fields)``
+    sites merged in pattern order (the order the join chain merges them)."""
+    by_var: dict[str, list[tuple]] = {}
+    for _, v, fields in sorted(sites, key=lambda x: x[0]):
+        by_var.setdefault(v, []).append(fields)
+    return {_meta_name(v): _merge_sites(fs) for v, fs in by_var.items()}
+
+
 def _bound_columns(cols: dict[str, Term], sites: list[tuple]) -> list[str]:
     """The columns ``_Planner._bind`` returns for one pattern: its vars in
     position order, then one metadata column per var with a site."""
@@ -2191,11 +2200,8 @@ class _Planner:
         )
         skind = F.col("subject_kind") if "subject_kind" in df.columns else None
         sites = self._meta_sites(cols, F.col, stored, skind)
-        out = {v: c.alias(v) for v, c in select.items()}
-        for v in dict.fromkeys(v for v, _ in sites):
-            merged = _merge_sites([site for u, site in sites if u == v])
-            out[_meta_name(v)] = merged.alias(_meta_name(v))
-        return df.select(*[out[c] for c in _bound_columns(cols, sites)])
+        out = {**select, **_merged_metas([(0, v, f) for v, f in sites])}
+        return df.select(*[out[c].alias(c) for c in _bound_columns(cols, sites)])
 
     def _meta_sites(
         self,
@@ -2669,18 +2675,14 @@ class _Planner:
             )
             out, _ = self._join(out, set(), frame, set(), "inner")
             sites += [(i, v, n) for i, v, n, _ in named]
-        metas: dict[str, list[str]] = {}
-        for _, v, n in sorted(sites, key=lambda x: x[0]):
-            metas.setdefault(v, []).append(n)
+        metas = _merged_metas([
+            (i, v, tuple(F.col(n).getField(f) for f in _META_FIELDS))
+            for i, v, n in sites
+        ])
         temps = {n for _, _, n in sites}
         out = out.select(
             *[c for c in out.columns if c not in temps],
-            *[
-                _merge_sites(
-                    [tuple(F.col(n).getField(f) for f in _META_FIELDS) for n in ns]
-                ).alias(_meta_name(v))
-                for v, ns in metas.items()
-            ],
+            *[m.alias(c) for c, m in metas.items()],
         )
         if self.ds.quads is not None:
             q = _Planner(self.ds.quads, meta_vars=self.meta_vars)._bgp(None, set(), bgp)[0]
@@ -2704,12 +2706,7 @@ class _Planner:
             ):
                 return None
             parts = self._star_parts(stars[0])
-            values = dict(parts.binds)
-            by_var: dict[str, list[tuple]] = {}
-            for _, v, site in sorted(parts.sites, key=lambda x: x[0]):
-                by_var.setdefault(v, []).append(site)
-            for v, vs in by_var.items():
-                values[_meta_name(v)] = _merge_sites(vs)
+            values = {**parts.binds, **_merged_metas(parts.sites)}
             branches.append((_all(parts.pre), values))
         types = {
             c: (_META_TYPE if c.startswith(_META_PREFIX) else "string")

@@ -45,6 +45,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -54,6 +55,9 @@ from ..mapping.flagship import flagship_ir, prepare_input
 from ..mapping.ir import MappingDocumentIR
 from ..operators.materialize import materialize_document
 from ..storage.lake import LakeTable, MergeStats, latest_per_key, row_sha256
+
+if TYPE_CHECKING:
+    from ..queries.sparql import WideRelation
 
 EVENT_COLS = ["seq", "op", "repo", "path", "commit", "lang", "content", "event_ts"]
 KEY = ["repo", "path"]
@@ -356,7 +360,9 @@ class CdcEngine:
         """Quoted-triple annotation rows (see :meth:`serving_views`)."""
         return self.serving_views(state)[1]
 
-    def serving_views(self, state: DataFrame | None = None):
+    def serving_views(
+        self, state: DataFrame | None = None
+    ) -> tuple[DataFrame, DataFrame, WideRelation | None]:
         """``(triples, annotations, wide)`` from ONE resolved read.
 
         Default (no ``state``): both views are derived from the STORED
