@@ -1447,17 +1447,51 @@ def _pattern_terms(tp: TriplePattern) -> dict[str, Term]:
     return cols
 
 
-def _join_columns(
-    left: list[str], right: list[str], shared: list[str], keys_first: bool
-) -> list[str]:
-    """Output column order of ``_Planner._join``: a plain equi join puts
-    its (sorted) keys first, as Spark's USING join does; every other join
-    keeps the left columns in place. The right side adds the columns the
-    left lacks (a metadata column both carry merges into the left's)."""
+class _JoinShape(NamedTuple):
+    shared: list  # the join keys
+    fuzzy: list  # the keys that may be unbound on either side
+    columns: list  # the output column order
+    maybe: set  # the output's maybe-unbound vars
+
+
+def _join_shape(
+    left: list[str], lmaybe: set[str], right: list[str], rmaybe: set[str], how: str
+) -> _JoinShape:
+    """What ``_Planner._join`` makes of two frames with these columns —
+    its one definition of keys, output order and boundness, so a plan
+    that skips building the frames (``_Planner._bgp``) agrees with it.
+    A plain equi join (no maybe-unbound key) puts its sorted keys first,
+    as Spark's USING join does; every other join keeps the left columns
+    in place. The right side adds the columns the left lacks (a metadata
+    column both carry merges into the left's)."""
+    shared = _shared_vars(left, right)
+    fuzzy = [c for c in shared if c in lmaybe or c in rmaybe]
     extra = [c for c in right if c not in left]
-    if keys_first:
-        return shared + [c for c in left if c not in shared] + extra
-    return left + extra
+    if shared and not fuzzy:
+        columns = shared + [c for c in left if c not in shared] + extra
+    else:
+        columns = left + extra
+    if not shared:
+        maybe = set(lmaybe) | set(rmaybe)
+    elif how == "left":
+        # left-side values pass through; right-only vars are unbound on
+        # non-matching rows
+        maybe = set(lmaybe) | (set(right) - set(left))
+    else:
+        maybe = {
+            c
+            for c in set(lmaybe) | set(rmaybe)
+            if (c not in shared) or (c in lmaybe and c in rmaybe)
+        }
+    return _JoinShape(shared, fuzzy, columns, maybe)
+
+
+def _stored_meta(columns: list[str], values: tuple) -> tuple:
+    """``values`` (one per ``_OBJECT_META_COLS`` entry), with None where
+    a relation of these columns stores no such metadata."""
+    return tuple(
+        x if c in columns else None for c, x in zip(_OBJECT_META_COLS, values)
+    )
 
 
 def _shared_vars(
@@ -2195,9 +2229,7 @@ class _Planner:
                 df = df.where(_term_cond(F.col(col), term))
         if not select:  # pure existence pattern: ONE solution if any match
             return df.limit(1).select(F.lit(1).alias(_fresh("one")))
-        stored = tuple(
-            F.col(c) if c in df.columns else None for c in _OBJECT_META_COLS
-        )
+        stored = _stored_meta(df.columns, tuple(map(F.col, _OBJECT_META_COLS)))
         skind = F.col("subject_kind") if "subject_kind" in df.columns else None
         sites = self._meta_sites(cols, F.col, stored, skind)
         out = {**select, **_merged_metas([(0, v, f) for v, f in sites])}
@@ -2281,9 +2313,8 @@ class _Planner:
         joins under a temporary name and merges into the left's."""
         if left is None:
             return right, set(rmaybe)
-        shared = _shared_vars(left, right)
-        right_cols = right.columns
-        keys_first = False
+        shape = _join_shape(left.columns, lmaybe, right.columns, rmaybe, how)
+        shared = shape.shared
         both_meta = {
             c: c + "#r"
             for c in right.columns
@@ -2299,38 +2330,24 @@ class _Planner:
                 out = left.join(right, F.lit(True), "left")
             else:
                 out = left.crossJoin(right)
-            maybe = set(lmaybe) | set(rmaybe)
+        elif not shape.fuzzy:
+            out = left.join(right, on=shared, how=how)
         else:
-            fuzzy = [c for c in shared if c in lmaybe or c in rmaybe]
-            if not fuzzy:
-                out = left.join(right, on=shared, how=how)
-                keys_first = True
-            else:
-                la, ra = left.alias("_l"), right.alias("_r")
-                j = la.join(ra, _compat_cond(shared, fuzzy), how)
-                cols = [
-                    (
-                        F.coalesce(F.col(f"_l.{c}"), F.col(f"_r.{c}")).alias(c)
-                        if c in shared
-                        else F.col(f"_l.{c}").alias(c)
-                    )
-                    for c in left.columns
-                ] + [
-                    F.col(f"_r.{c}").alias(c)
-                    for c in right.columns
-                    if c not in shared
-                ]
-                out = j.select(*cols)
-            if how == "left":
-                # left-side values pass through; right-only vars are
-                # unbound on non-matching rows
-                maybe = set(lmaybe) | (set(right.columns) - set(left.columns))
-            else:
-                maybe = {
-                    c
-                    for c in set(lmaybe) | set(rmaybe)
-                    if (c not in shared) or (c in lmaybe and c in rmaybe)
-                }
+            la, ra = left.alias("_l"), right.alias("_r")
+            j = la.join(ra, _compat_cond(shared, shape.fuzzy), how)
+            cols = [
+                (
+                    F.coalesce(F.col(f"_l.{c}"), F.col(f"_r.{c}")).alias(c)
+                    if c in shared
+                    else F.col(f"_l.{c}").alias(c)
+                )
+                for c in left.columns
+            ] + [
+                F.col(f"_r.{c}").alias(c)
+                for c in right.columns
+                if c not in shared
+            ]
+            out = j.select(*cols)
         for c, rc in both_meta.items():
             # field by field; the left side's known fields win
             merged = [
@@ -2338,8 +2355,7 @@ class _Planner:
                 for f in _META_FIELDS
             ]
             out = out.withColumn(c, F.struct(*merged)).drop(rc)
-        order = _join_columns(left.columns, right_cols, shared, keys_first)
-        return out.select(*order), maybe
+        return out.select(*shape.columns), shape.maybe
 
     def _group(self, g: Group) -> tuple[DataFrame, set[str]]:
         df: DataFrame | None = None
@@ -2509,21 +2525,17 @@ class _Planner:
             right = self._pattern_columns(tp)
             if order is None:
                 order = right
-                continue
-            shared = _shared_vars(order, right)
-            keys_first = bool(shared) and not mb & set(shared)
-            order = _join_columns(order, right, shared, keys_first)
-            mb -= set(shared)
-        df, maybe = self._join(df, maybe, self._stars_df(bgp, stars), set(), "inner")
+            else:
+                shape = _join_shape(order, mb, right, set(), "inner")
+                order, mb = shape.columns, shape.maybe
+        df, maybe = self._join(df, maybe, self._stars_df(stars), set(), "inner")
         return df.select(*order), maybe
 
     def _pattern_columns(self, tp: TriplePattern) -> list[str]:
         """The columns ``_pattern_df(tp)`` has, without building it."""
         rel = self.ds.annotations if tp.s.kind == "quoted" else self.ds.triples
         cols = _pattern_terms(tp)
-        stored = tuple(
-            F.lit(None) if c in rel.columns else None for c in _OBJECT_META_COLS
-        )
+        stored = _stored_meta(rel.columns, (F.lit(None),) * len(_OBJECT_META_COLS))
         return _bound_columns(cols, self._meta_sites(cols, F.col, stored, None))
 
     def _wide_stars(self, bgp: list[TriplePattern]) -> list[_Star] | None:
@@ -2604,12 +2616,6 @@ class _Planner:
             for v, site in self._meta_sites(cols, pos.get, stored, None):
                 sites.append((m.idx, v, site))
 
-        def stored(rel: DataFrame, values: tuple) -> tuple:
-            return tuple(
-                x if c in rel.columns else None
-                for c, x in zip(_OBJECT_META_COLS, values)
-            )
-
         def consts(c: WideColumn) -> tuple:
             return tuple(
                 F.lit(x) if x is not None else F.lit(None).cast("string")
@@ -2622,7 +2628,7 @@ class _Planner:
                 obj = F.col(m.col.name)
                 pre.append(obj.isNotNull())
                 pos = {"subject": subject, "object": obj}
-                bind(m, pos, stored(self.ds.triples, consts(m.col)), pre)
+                bind(m, pos, _stored_meta(self.ds.triples.columns, consts(m.col)), pre)
         ann = F.col("annotation")
         for m in star.annotations:
             obj = ann.getField(m.col.name)
@@ -2632,7 +2638,7 @@ class _Planner:
                 "q_s": q.getField("s"), "q_p": q.getField("p"),
                 "q_o": q.getField("o"), "object": obj,
             }
-            bind(m, pos, stored(self.ds.annotations, consts(m.col)), pre)
+            bind(m, pos, _stored_meta(self.ds.annotations.columns, consts(m.col)), pre)
         for m in star.members:
             if m.col is None:
                 # the member matches every triple of the row: explode the
@@ -2645,7 +2651,7 @@ class _Planner:
                     "object": t.getField("object"),
                 }
                 meta = tuple(t.getField(c) for c in _OBJECT_META_COLS)
-                bind(m, pos, stored(self.ds.triples, meta), post)
+                bind(m, pos, _stored_meta(self.ds.triples.columns, meta), post)
         return _StarParts(pre, t_name, explode, post, bound, sites)
 
     def _star_rows(self, parts: _StarParts) -> DataFrame:
@@ -2659,34 +2665,55 @@ class _Planner:
                 df = df.where(_all(parts.post))
         return df
 
-    def _stars_df(self, bgp: list[TriplePattern], stars: list[_Star]) -> DataFrame:
+    def _stars_df(self, stars: list[_Star]) -> DataFrame:
         """The BGP's solutions from its stars: one filtered projection of
         the wide rows per star, joined on shared vars, with each var's
         metadata merged across the BGP in pattern order. With loaded
-        quads, plus the BGP's generic form over the quads alone."""
+        quads, each star is its wide rows plus its generic form over the
+        quads alone, before the stars join: a solution may pair one
+        star's lake row with another star's loaded triple."""
+        quads = (
+            None if self.ds.quads is None
+            else _Planner(self.ds.quads, meta_vars=self.meta_vars)
+        )
         out: DataFrame | None = None
         sites: list[tuple[int, str, str]] = []
         for star in stars:
             parts = self._star_parts(star)
-            named = [(i, v, _fresh("site"), site) for i, v, site in parts.sites]
+            # one metadata column per (pattern, var): the pattern's sites
+            # merged, as the generic _bind merges them
+            by_site: dict[tuple[int, str], list[tuple]] = {}
+            for i, v, site in parts.sites:
+                by_site.setdefault((i, v), []).append(site)
+            names = {k: _fresh("site") for k in by_site}
             frame = self._star_rows(parts).select(
                 *[c.alias(v) for v, c in parts.binds.items()],
-                *[_meta_struct(*site).alias(n) for _, _, n, site in named],
+                *[_merge_sites(fs).alias(names[k]) for k, fs in by_site.items()],
             )
+            if quads is not None:
+                q = quads._star_generic(star, names)
+                frame = frame.unionByName(q.select(*frame.columns))
             out, _ = self._join(out, set(), frame, set(), "inner")
-            sites += [(i, v, n) for i, v, n, _ in named]
+            sites += [(i, v, n) for (i, v), n in names.items()]
         metas = _merged_metas([
             (i, v, tuple(F.col(n).getField(f) for f in _META_FIELDS))
             for i, v, n in sites
         ])
         temps = {n for _, _, n in sites}
-        out = out.select(
+        return out.select(
             *[c for c in out.columns if c not in temps],
             *[m.alias(c) for c, m in metas.items()],
         )
-        if self.ds.quads is not None:
-            q = _Planner(self.ds.quads, meta_vars=self.meta_vars)._bgp(None, set(), bgp)[0]
-            out = out.select(*q.columns).unionByName(q)
+
+    def _star_generic(self, star: _Star, names: dict) -> DataFrame:
+        """A star's patterns joined one by one over this planner's
+        relations, each pattern's ``_meta#<var>`` column renamed to
+        ``names[(pattern index, var)]``."""
+        out: DataFrame | None = None
+        for m in sorted(star.members + star.annotations, key=lambda m: m.idx):
+            renames = {_meta_name(v): n for (i, v), n in names.items() if i == m.idx}
+            pdf = self._pattern_df(m.tp).withColumnsRenamed(renames)
+            out, _ = self._join(out, set(), pdf, set(), "inner")
         return out
 
     def _wide_union(self, groups: list[Group]) -> tuple[DataFrame, set[str]] | None:

@@ -13,7 +13,9 @@ import pytest
 
 from etl_pipeline_rdf_star_spark.queries.sparql import (
     dataset_from_engine,
+    dataset_from_quads,
     sparql_df,
+    with_loaded,
 )
 from perfbench.gen import query_text
 
@@ -185,3 +187,40 @@ def test_loaded_quads_add_to_wide_stars(spark, cow, tmp_path):
         )
     finally:
         srv.stop()
+
+
+def test_loaded_quads_join_lake_stars(spark, cow):
+    """Two stars sharing a variable, over the lake plus loaded quads: a
+    solution may take one star from a lake row and the other from a
+    loaded triple, so each star unions its loaded part before the stars
+    join."""
+    from etl_pipeline_rdf_star_spark.sinks.turtle import (
+        TURTLE_SCHEMA,
+        parse_turtle_text,
+    )
+
+    ext, repo1 = f"<{EX}file/ext/x.py>", f"<{EX}repo/repo_1>"
+    text = (
+        f"{ext} <{EX}repo> {repo1} .\n"
+        f'{repo1} <{EX}name> "one" .\n'
+    )
+    loaded = spark.createDataFrame(parse_turtle_text(text), TURTLE_SCHEMA)
+    ds = with_loaded(dataset_from_engine(cow), dataset_from_quads(loaded))
+    assert ds.subjects_unique()
+    generic = dataclasses.replace(ds, wide=None, quads=None)
+
+    def rows(d, q):
+        return sorted(tuple(r) for r in sparql_df(d, f"PREFIX ex: <{EX}> {q}").collect())
+
+    # ten lake files per repo; the loaded file joins repo_1's ten
+    pairs = "SELECT ?a ?b ?r WHERE { ?a ex:repo ?r . ?b ex:repo ?r }"
+    got = rows(ds, pairs)
+    assert got == rows(generic, pairs)
+    assert len(got) == 3 * 10 * 10 + 2 * 10 + 1
+    assert sum(1 for a, b, _ in got if ext[1:-1] in (a, b)) == 21
+
+    # a lake file's repo, described only by a loaded triple
+    about = "SELECT ?f ?p ?o WHERE { ?f ex:repo ?r . ?r ?p ?o }"
+    got = rows(ds, about)
+    assert got == rows(generic, about)
+    assert sum(1 for _, _, o in got if o == "one") == 11

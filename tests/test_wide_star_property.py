@@ -4,12 +4,14 @@ exactly the solutions of the generic plan over the exploded triples.
 Random stars (0–4 constant-predicate patterns, optionally a quoted-triple
 annotation — on one of them or on the subject alone — and a
 variable-predicate pattern, FILTERs that read term metadata, and UNIONs
-of two stars) run on a dataset as built by ``dataset_from_engine`` and on
-the same dataset with its wide relation removed. Both the WHERE frame — with its ``_meta#<var>`` columns — and the
-final SELECT * solutions must be identical, column order included. The
-warehouses cover a COW table, a COW table whose paths ``a/b.py`` and
-``a_b.py`` mint one subject (the guard must fall back), and an
-uncompacted MoR table.
+of two stars, and a second star joined to the first on a shared variable)
+run on a dataset as built by ``dataset_from_engine`` and on the same
+dataset with its wide relation removed. Both the WHERE frame — with its
+``_meta#<var>`` columns — and the final SELECT * solutions must be
+identical, column order included. The warehouses cover a COW table, a
+COW table whose paths ``a/b.py`` and ``a_b.py`` mint one subject (the
+guard must fall back), an uncompacted MoR table, and a COW table plus
+loaded quads that share its predicates and objects.
 """
 
 from __future__ import annotations
@@ -24,9 +26,12 @@ from etl_pipeline_rdf_star_spark.queries.sparql import (
     _meta_vars_of,
     _Planner,
     dataset_from_engine,
+    dataset_from_quads,
     parse_sparql,
     sparql_df,
+    with_loaded,
 )
+from etl_pipeline_rdf_star_spark.sinks.turtle import TURTLE_SCHEMA, parse_turtle_text
 
 EX = "http://example.org/"
 DCT = "http://purl.org/dc/terms/"
@@ -55,6 +60,21 @@ FILTERS = [
     "!isLiteral({v})",
     "STRLEN(STR({v})) > 5",
 ]
+# a second star on ?t, or on the first star's object, joined to the first
+LINKS = [
+    f"{{s}} <{EX}repo> ?k . ?t <{EX}repo> ?k .",
+    f"{{s}} <{EX}lang> ?k . ?t <{EX}lang> ?k ; <{EX}commit> ?tc .",
+    f"{{s}} <{EX}repo> ?k . ?k ?tp ?to .",
+]
+# loaded quads: a file outside the lake in a lake repo, facts about a
+# lake repo, and an annotation on the loaded file's triple
+EXT = f"<{EX}file/ext/x.py>"
+LOADED = f"""
+{EXT} <{RDF_TYPE}> <{EX}SourceFile> ; <{EX}repo> <{EX}repo/repo_1> ;
+    <{EX}lang> "en" ; <{EX}commit> "c2" .
+<{EX}repo/repo_1> <{EX}name> "one" ; <{EX}lang> "fr" .
+<< {EXT} <{EX}lang> "en" >> <{EX}confidence> "0.9"^^<{XSD}decimal> .
+"""
 
 
 def _files(n: int) -> list[tuple]:
@@ -98,13 +118,17 @@ def _warehouse(spark, tmp_path_factory, kind: str):
     return eng
 
 
-@pytest.fixture(scope="module", params=["cow", "collide", "mor"])
+@pytest.fixture(scope="module", params=["cow", "collide", "mor", "quads"])
 def datasets(request, spark, tmp_path_factory):
     eng = _warehouse(spark, tmp_path_factory, request.param)
     ds = dataset_from_engine(eng)
+    if request.param == "quads":
+        rows = parse_turtle_text(LOADED)
+        loaded = spark.createDataFrame(rows, TURTLE_SCHEMA)
+        ds = with_loaded(ds, dataset_from_quads(loaded))
     assert ds.wide is not None
     assert ds.subjects_unique() == (request.param != "collide")
-    return ds, dataclasses.replace(ds, wide=None)
+    return ds, dataclasses.replace(ds, wide=None, quads=None)
 
 
 @st.composite
@@ -150,12 +174,18 @@ def stars(draw, subject: str, tag: str) -> str:
 @st.composite
 def queries(draw) -> str:
     subject = draw(st.sampled_from(["?s", f"<{EX}file/repo_1/src_f_1.py>"]))
-    if draw(st.integers(0, 2)) == 0:
+    shape = draw(st.sampled_from(["linked", "union", "linked", "star"]))
+    if shape == "union":
         left = draw(stars(subject, "a"))
         right = draw(stars(subject, "b"))
         body = f"{{ {left} }} UNION {{ {right} }}"
-    else:
+    elif shape == "star":
         body = draw(stars(subject, "a"))
+    else:
+        # plain members, so the join across the stars has rows to pair
+        preds = draw(st.lists(st.sampled_from(sorted(PREDICATES)), max_size=2))
+        body = " ".join(f"{subject} <{p}> ?a{i} ." for i, p in enumerate(preds))
+        body += " " + draw(st.sampled_from(LINKS)).format(s=subject)
     return f"SELECT * WHERE {{ {body} }}"
 
 
