@@ -31,6 +31,7 @@ from ..mapping.compiler import (
     template_refs,
 )
 from ..mapping.ir import MappingDocumentIR
+from ..sinks.rdf_syntax import quoted_column
 
 TRIPLE_COLS = [
     "tm",
@@ -327,14 +328,8 @@ def annotations_to_quads(annotations: DataFrame) -> DataFrame:
         .select(
             F.col("reifier").alias("subject"),
             F.lit(RDF_REIFIES).alias("predicate"),
-            F.concat(
-                F.lit("<< "),
-                F.col("quoted.s"),
-                F.lit(" "),
-                F.col("quoted.p"),
-                F.lit(" "),
-                F.col("quoted.o"),
-                F.lit(" >>"),
+            quoted_column(
+                F.col("quoted.s"), F.col("quoted.p"), F.col("quoted.o")
             ).alias("object"),
             F.lit(None).cast("string").alias("object_datatype"),
             F.lit(None).cast("string").alias("object_lang"),

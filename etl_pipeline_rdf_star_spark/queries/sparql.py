@@ -63,6 +63,18 @@ from typing import Any, NamedTuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sinks.rdf_syntax import (
+    NUMBER_RE,
+    TRIPLE_PART_RES,
+    TRIPLE_TERM_RE,
+    XSD,
+    TermLexer,
+    numeric_datatype,
+    quoted_column,
+    serialize_quoted,
+    unkept_literal,
+)
+
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 _RDF_REIFIES = "http://www.w3.org/1999/02/22-rdf-syntax-ns#reifies"
 _RDF_LANGSTRING = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
@@ -82,10 +94,8 @@ _XSD_NUMERIC_TYPES = tuple(
 # what TZ() accepts; shared with the property-suite naive model
 _DATETIME_LEX_RE = r"^-?\d{4,}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}(\.\d+)?(Z|[+-]\d{2}:\d{2})?$"
 
-_NUM_RE = re.compile(r"^[+-]?(\d+(\.\d+)?([eE][+-]?\d+)?|\.\d+([eE][+-]?\d+)?)$")
-# the engine's serialized quoted-triple term "<< s p o >>" (see
-# dataset_from_quads) — what isTRIPLE/SUBJECT/PREDICATE/OBJECT recognize
-_TRIPLE_TERM_RE = r"^<< \S+ \S+ .* >>$"
+# a whole value that spells a number (an rlike pattern)
+_NUMBER_LEX_RE = f"^(?:{NUMBER_RE.pattern})$"
 # general ABSOLUTE-IRI shape (RFC 3987 scheme + no forbidden chars):
 # what IRI()-minting validity and subject-position kind inference use —
 # deliberately broader than the serving sniff's known-scheme _IRI_RE,
@@ -96,12 +106,10 @@ _ABS_IRI_RE = r'^[A-Za-z][A-Za-z0-9+.\-]*:[^\s<>"{}|\\^`]*$'
 
 def _serialize_quoted(t) -> str:
     """Render a parsed GROUND quoted-triple Term in the engine's
-    serialized form (same spacing as dataset_from_quads / the TRIPLE()
-    builtin). The form keeps lexical forms only, so whatever it would
+    serialized form (rdf_syntax.serialize_quoted). What that form would
     lose is rejected loudly: a variable inside (serializing its NAME
     would make every comparison false; use TRIPLE(?s, p, o) for per-row
-    construction) and a literal with a datatype, a
-    language tag, whitespace or '<<'/'>>'."""
+    construction) and a literal ``unkept_literal`` refuses."""
     parts = []
     for c in t.value:
         if c.kind == "var":
@@ -109,19 +117,15 @@ def _serialize_quoted(t) -> str:
                 "variable inside a quoted-triple expression term — "
                 "use TRIPLE() to build a per-row triple term"
             )
-        if c.kind == "num" or (
-            c.kind == "literal"
-            and (c.datatype or c.lang or re.search(r"\s|<<|>>", c.value))
-        ):
-            raise SparqlUnsupported(
-                f"literal {c.value!r} inside a quoted-triple term has a "
-                "datatype, language tag, whitespace or '<<'/'>>' that the "
-                "serialized '<< s p o >>' form cannot keep"
-            )
+        if c.kind in ("literal", "num"):
+            dt = numeric_datatype(c.value) if c.kind == "num" else c.datatype
+            why = unkept_literal(c.value, dt, c.lang)
+            if why:
+                raise SparqlUnsupported(why)
         parts.append(
             _serialize_quoted(c) if c.kind == "quoted" else str(c.value)
         )
-    return f"<< {parts[0]} {parts[1]} {parts[2]} >>"
+    return serialize_quoted(*parts)
 
 
 class SparqlParseError(ValueError):
@@ -322,33 +326,26 @@ _FN_KEYWORDS = {
 _PUNCT2 = ("<<", ">>", "<=", ">=", "!=", "&&", "||")
 
 
-class _Lex:
-    def __init__(self, text: str):
-        self.t = text
-        self.i = 0
-        self.n = len(text)
-        self._peeked = None
+_IRIREF_RE = re.compile(r"<([^<>\s{}|\\^`\"]*)>")
+_VAR_RE = re.compile(r"[?$]([A-Za-z_][A-Za-z0-9_]*)")
+# local part additionally admits '$' for $PARAM template placeholders
+# (batch_queries.rq: ex:BatchStatus/$STATUS). A '.' is consumed only when
+# another local-part char follows — else 'ex:Person.' (no space before the
+# statement dot) would swallow the terminator into the IRI and match
+# nothing (review finding)
+_PNAME_RE = re.compile(
+    r"[A-Za-z_][A-Za-z0-9_\-]*(\.[A-Za-z0-9_\-]+)*:"
+    r"(?:[A-Za-z0-9_\-%/#$]|\.(?=[A-Za-z0-9_\-.%/#$]))*"
+)
+_WORD_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
-    def _skip(self):
-        while self.i < self.n:
-            c = self.t[self.i]
-            if c in " \t\r\n":
-                self.i += 1
-            elif c == "#":
-                j = self.t.find("\n", self.i)
-                self.i = self.n if j < 0 else j + 1
-            else:
-                return
 
-    def peek(self):
-        if self._peeked is None:
-            self._peeked = self._next()
-        return self._peeked
+class _Lex(TermLexer):
+    """SPARQL's tokens over the shared term syntax: IRIs, variables,
+    operators, prefixed names (with the reference templates' '/', '$'
+    and '#') and keywords."""
 
-    def next(self):
-        tok = self.peek()
-        self._peeked = None
-        return tok
+    error = SparqlParseError
 
     def peek2(self):
         """One-token lookahead past peek() — needed only to tell
@@ -370,10 +367,6 @@ class _Lex:
             raise SparqlParseError(f"expected {kind} {val or ''}, got {tok!r}")
         return tok
 
-    def _err(self, msg):
-        ctx = self.t[max(0, self.i - 25) : self.i + 25].replace("\n", "\\n")
-        raise SparqlParseError(f"{msg} near ...{ctx}...")
-
     def _next(self):
         self._skip()
         if self.i >= self.n:
@@ -385,78 +378,33 @@ class _Lex:
             self.i += 2
             return (two, None)
         if c == "<":
-            m = re.match(r"<([^<>\s{}|\\^`\"]*)>", t[i:])
+            m = _IRIREF_RE.match(t, i)
             if m:  # IRIREF (no whitespace inside)
-                self.i += m.end()
+                self.i = m.end()
                 return ("iri", m.group(1))
             self.i += 1
             return ("<", None)
         if c in "?$":
-            m = re.match(r"[?$]([A-Za-z_][A-Za-z0-9_]*)", t[i:])
+            m = _VAR_RE.match(t, i)
             if not m:
                 if c == "?":  # bare '?': zero-or-one property-path modifier
                     self.i += 1
                     return ("?", None)
                 self._err("bad variable")
-            self.i += m.end()
+            self.i = m.end()
             return ("var", m.group(1))
-        if c in "{}().;,*=>!/+-^|" and not (
-            c in "+-." and re.match(r"[+-]?(\d|\.\d)", t[i:])
-        ):
+        if c in "\"'":
+            return self._literal()
+        num = self._number()
+        if num:
+            return num
+        if c in "{}().;,*=>!/+-^|":
             self.i += 1
             return (c, None)
-        if c in "\"'":
-            q = c
-            longq = t.startswith(q * 3, i)
-            j = i + (3 if longq else 1)
-            out = []
-            while j < self.n:
-                if t[j] == "\\":
-                    esc = t[j + 1]
-                    out.append({"n": "\n", "t": "\t", "r": "\r"}.get(esc, esc))
-                    j += 2
-                elif longq and t.startswith(q * 3, j):
-                    j += 3
-                    break
-                elif not longq and t[j] == q:
-                    j += 1
-                    break
-                else:
-                    out.append(t[j])
-                    j += 1
-            else:
-                self._err("unterminated string")
-            self.i = j
-            lex = "".join(out)
-            if t.startswith("@", self.i):
-                m = re.match(r"@([A-Za-z][A-Za-z0-9-]*)", t[self.i :])
-                self.i += m.end()
-                return ("literal", (lex, None, m.group(1)))
-            if t.startswith("^^", self.i):
-                self.i += 2
-                dt = self._next()
-                if dt is None or dt[0] not in ("iri", "pname"):
-                    self._err("bad datatype")
-                return ("literal", (lex, dt, None))
-            return ("literal", (lex, None, None))
-        m = re.match(r"[+-]?(\d+(\.\d+)?([eE][+-]?\d+)?|\.\d+([eE][+-]?\d+)?)", t[i:])
-        if m:
-            self.i += m.end()
-            return ("num", m.group(0))
-        # local part additionally admits '$' for $PARAM template
-        # placeholders (batch_queries.rq: ex:BatchStatus/$STATUS). A '.'
-        # is consumed only when another local-part char follows — else
-        # 'ex:Person.' (no space before the statement dot) would swallow
-        # the terminator into the IRI and match nothing (review finding;
-        # same guard as the Turtle lexer)
-        m = re.match(
-            r"[A-Za-z_][A-Za-z0-9_\-]*(\.[A-Za-z0-9_\-]+)*:"
-            r"(?:[A-Za-z0-9_\-%/#$]|\.(?=[A-Za-z0-9_\-.%/#$]))*",
-            t[i:],
-        )
+        m = _PNAME_RE.match(t, i)
         if m:
             lex = m.group(0)
-            end = i + m.end()
+            end = m.end()
             # '/' in local parts is reference-template compat
             # (ex:BatchStatus/pending) — but an UNSPACED property-path
             # sequence like rdf:type/rdfs:subClassOf greedily matches up
@@ -476,10 +424,10 @@ class _Lex:
             # trailing-slash pnames in subject/object position)
             self.i = end
             return ("pname", lex)
-        m = re.match(r"[A-Za-z_][A-Za-z0-9_]*", t[i:])
+        m = _WORD_RE.match(t, i)
         if m:
             word = m.group(0)
-            self.i += m.end()
+            self.i = m.end()
             if word.lower() in _KEYWORDS:
                 return ("kw", word.lower())
             return ("word", word)
@@ -628,7 +576,7 @@ class _Parser:
                 datatype="http://www.w3.org/2001/XMLSchema#boolean",
             )
         if kind == "literal":
-            lex, dt, lang = val
+            lex, lang, dt = val
             dtv = None
             if dt is not None:
                 dtv = dt[1] if dt[0] == "iri" else self._expand(dt[1])
@@ -1302,14 +1250,7 @@ def dataset_from_quads(df: DataFrame) -> SparqlDataset:
                 "object",
                 F.when(
                     okind == "quoted",
-                    F.concat_ws(
-                        " ",
-                        F.lit("<<"),
-                        F.col("q_s"),
-                        F.col("q_p"),
-                        F.col("q_o"),
-                        F.lit(">>"),
-                    ),
+                    quoted_column(F.col("q_s"), F.col("q_p"), F.col("q_o")),
                 ).otherwise(F.col("object")),
             )
         if "q_s" in cols:
@@ -1535,16 +1476,6 @@ _CALL_RESULT_KIND = {
 }
 
 
-def _num_dt(lex: str) -> str:
-    """The XSD datatype a bare numeric literal denotes (SPARQL 19.2 /
-    Turtle shorthand — same rule as the Turtle reader's)."""
-    if "e" in lex.lower():
-        return "http://www.w3.org/2001/XMLSchema#double"
-    if "." in lex:
-        return "http://www.w3.org/2001/XMLSchema#decimal"
-    return "http://www.w3.org/2001/XMLSchema#integer"
-
-
 def _strdt_call(e: "Expr") -> "tuple[str, Term] | None":
     """(fn, constant second arg) when e is STRDT/STRLANG with a
     metadata-valid constant datatype/tag."""
@@ -1586,7 +1517,7 @@ def _term_meta(df: DataFrame | None, e: "Expr", c: Column | None) -> _TermMeta:
     t = _expr_const_term(e)
     if t is not None:
         if t.kind == "num":
-            meta = ("literal", _num_dt(str(t.value)), "")
+            meta = ("literal", numeric_datatype(t.value), "")
         elif t.kind == "literal":
             dt = t.datatype or (_RDF_LANGSTRING if t.lang else _XSD_STRING)
             meta = ("literal", dt, t.lang or "")
@@ -1617,7 +1548,7 @@ def _term_meta(df: DataFrame | None, e: "Expr", c: Column | None) -> _TermMeta:
             F.coalesce(
                 skind,
                 F.when(sdt.isNotNull() | slang.isNotNull(), F.lit("literal")),
-                F.when(c.rlike(_TRIPLE_TERM_RE), F.lit("triple")),
+                F.when(c.rlike(TRIPLE_TERM_RE), F.lit("triple")),
                 F.when(c.startswith("_:"), F.lit("blank")),
                 F.when(c.rlike(_IRI_RE.pattern), F.lit("iri")),
                 F.lit("literal"),
@@ -2282,7 +2213,7 @@ class _Planner:
                 kind = F.when(c.isNotNull(), F.lit("iri"))
             else:
                 inferred = (
-                    F.when(c.rlike(_TRIPLE_TERM_RE), F.lit("triple"))
+                    F.when(c.rlike(TRIPLE_TERM_RE), F.lit("triple"))
                     .when(c.rlike(_ABS_IRI_RE), F.lit("iri"))
                     .otherwise(F.lit("blank"))
                 )
@@ -2851,7 +2782,8 @@ class _Planner:
             if t.kind == "var":
                 return F.col(t.value)
             if t.kind == "num":
-                return F.lit(float(t.value) if "." in t.value or "e" in t.value.lower() else int(t.value))
+                integer = numeric_datatype(t.value) == XSD + "integer"
+                return F.lit(int(t.value) if integer else float(t.value))
             if t.kind in ("literal", "iri"):
                 return F.lit(str(t.value))
             if t.kind == "quoted":
@@ -2986,7 +2918,7 @@ class _Planner:
                 dtv = _term_meta(df, args[0], s).declared
                 return F.when(
                     dtv.isNotNull(), dtv.isin(*_XSD_NUMERIC_TYPES)
-                ).otherwise(s.rlike(_NUM_RE.pattern))
+                ).otherwise(s.rlike(_NUMBER_LEX_RE))
             if fn == "encode_for_uri":
                 # url_encode is Java form-encoding; XPath fn:encode-for-uri
                 # differs on three characters: space → %20 (not '+'),
@@ -3091,13 +3023,13 @@ class _Planner:
             if fn == "rand":
                 return F.rand()
             if fn == "istriple":
-                return cols[0].cast("string").rlike(_TRIPLE_TERM_RE)
+                return cols[0].cast("string").rlike(TRIPLE_TERM_RE)
             if fn == "triple":
                 # the engine's serialized quoted-term form — matches
                 # dataset_from_quads' rendering of quoted objects exactly,
                 # so TRIPLE(?s,?p,?o) = ?t round-trips with isTRIPLE(?t).
-                # F.concat propagates an unbound arg to unbound (SPARQL
-                # error semantics). SPARQL 1.2 §17.4.2.12 requires an
+                # quoted_column propagates an unbound arg to unbound
+                # (SPARQL error semantics). SPARQL 1.2 §17.4.2.12 requires an
                 # IRI/bnode subject and an IRI predicate — enforced via
                 # the _term_meta kind, so a whitespace-free literal
                 # subject like "42" is error→unbound too. The kind check
@@ -3108,26 +3040,15 @@ class _Planner:
                 valid_sp = _term_meta(df, args[0], s).kind.isin(
                     "iri", "blank"
                 ) & (_term_meta(df, args[1], p).kind == "iri")
-                minted = F.concat(
-                    F.lit("<< "), s, F.lit(" "), p, F.lit(" "), o,
-                    F.lit(" >>"),
-                )
-                return F.when(valid_sp, minted).otherwise(
+                return F.when(valid_sp, quoted_column(s, p, o)).otherwise(
                     F.lit(None).cast("string")
                 )
             if fn in ("subject", "predicate", "object"):
-                # accessors error → unbound (null) on a non-triple term.
-                # subject/predicate are IRIs or bnodes (no spaces); the
-                # object capture is greedy so literals with spaces and
-                # nested serialized triples stay whole.
+                # accessors error → unbound (null) on a non-triple term
                 s = cols[0].cast("string")
-                pat = {
-                    "subject": r"^<< (\S+) \S+ .* >>$",
-                    "predicate": r"^<< \S+ (\S+) .* >>$",
-                    "object": r"^<< \S+ \S+ (.*) >>$",
-                }[fn]
                 return F.when(
-                    s.rlike(_TRIPLE_TERM_RE), F.regexp_extract(s, pat, 1)
+                    s.rlike(TRIPLE_TERM_RE),
+                    F.regexp_extract(s, TRIPLE_PART_RES[fn], 1),
                 ).otherwise(F.lit(None).cast("string"))
             if fn == "str":
                 # relations carry plain lexical values: str() is identity
@@ -3249,10 +3170,7 @@ def _order_key(var: str) -> list[Column]:
     sort by (numeric-cast, raw) — numeric strings order numerically,
     everything else falls back to lexical."""
     c = F.col(var)
-    num = F.when(
-        c.rlike(r"^[+-]?(\d+(\.\d+)?([eE][+-]?\d+)?)$"), c.cast("double")
-    )
-    return [num, c]
+    return [F.when(c.rlike(_NUMBER_LEX_RE), c.cast("double")), c]
 
 
 # ---------------------------------------------------------------------------

@@ -43,96 +43,38 @@ from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .rdf_syntax import (
+    XSD,
+    TermLexer,
+    numeric_datatype,
+    serialize_quoted,
+    unkept_literal,
+)
+
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDF_TYPE = RDF_NS + "type"
 RDF_FIRST = RDF_NS + "first"
 RDF_REST = RDF_NS + "rest"
 RDF_NIL = RDF_NS + "nil"
-XSD = "http://www.w3.org/2001/XMLSchema#"
 
-# what the serialized "<< s p o >>" form of a nested quoted triple cannot
-# carry inside a literal's lexical form
-_UNSERIALIZABLE_RE = re.compile(r"\s|<<|>>")
-_NUM_RE = re.compile(r"^[+-]?(\d+\.\d*([eE][+-]?\d+)?|\.?\d+([eE][+-]?\d+)?)$")
-# chars that terminate a bareword token (pname / keyword / number)
-_BARE_END = set(" \t\r\n;,.()[]{}<>\"'#^")
-_PN_CONT = re.compile(r"[A-Za-z0-9_\-%:]")
+# a bareword (pname, keyword, boolean, blank node) runs to a terminator
+# char; a '.' continues it only when a name char follows
+_BARE_RE = re.compile(
+    r"""[^ \t\r\n;,.()\[\]{}<>"'#^]*"""
+    r"""(?:\.(?=[A-Za-z0-9_\-%:])[^ \t\r\n;,.()\[\]{}<>"'#^]*)*"""
+)
+_DIRECTIVE_RE = re.compile(r"@(prefix|base)\b")
 
 
 class TurtleParseError(ValueError):
     pass
 
 
-class _Lexer:
-    def __init__(self, text: str):
-        self.t = text
-        self.i = 0
-        self.n = len(text)
-        self._peeked: tuple[str, Any] | None = None
+class _Lexer(TermLexer):
+    """Turtle's tokens over the shared term syntax: IRIs, ``<<``/``>>``,
+    punctuation, ``@prefix``/``@base`` and barewords."""
 
-    def _skip(self) -> None:
-        t, n = self.t, self.n
-        while self.i < n:
-            c = t[self.i]
-            if c in " \t\r\n":
-                self.i += 1
-            elif c == "#":
-                j = t.find("\n", self.i)
-                self.i = n if j < 0 else j + 1
-            else:
-                return
-
-    def peek(self):
-        if self._peeked is None:
-            self._peeked = self._next()
-        return self._peeked
-
-    def next(self):
-        tok = self.peek()
-        self._peeked = None
-        return tok
-
-    def _err(self, msg: str):
-        ctx = self.t[max(0, self.i - 30) : self.i + 30].replace("\n", "\\n")
-        raise TurtleParseError(f"{msg} near ...{ctx}...")
-
-    def _string(self, q: str) -> str:
-        t = self.t
-        longq = t.startswith(q * 3, self.i)
-        self.i += 3 if longq else 1
-        out = []
-        while self.i < self.n:
-            c = t[self.i]
-            if c == "\\":
-                e = t[self.i + 1 : self.i + 2]
-                if e == "u":
-                    out.append(chr(int(t[self.i + 2 : self.i + 6], 16)))
-                    self.i += 6
-                elif e == "U":
-                    out.append(chr(int(t[self.i + 2 : self.i + 10], 16)))
-                    self.i += 10
-                else:
-                    out.append(
-                        {"n": "\n", "t": "\t", "r": "\r", "b": "\b", "f": "\f"}.get(
-                            e, e
-                        )
-                    )
-                    self.i += 2
-            elif longq:
-                if t.startswith(q * 3, self.i):
-                    self.i += 3
-                    return "".join(out)
-                out.append(c)
-                self.i += 1
-            elif c == q:
-                self.i += 1
-                return "".join(out)
-            elif c == "\n":
-                self._err("newline in short string")
-            else:
-                out.append(c)
-                self.i += 1
-        self._err("unterminated string")
+    error = TurtleParseError
 
     def _next(self):
         self._skip()
@@ -155,17 +97,10 @@ class _Lexer:
                 return (">>", None)
             self._err("stray '>'")
         if c in "+-." or c.isdigit():
-            # numeric shorthand literal, including leading-dot decimals
-            # ('.5', '-.5' — review finding: '.' was eaten as a statement
-            # terminator); a trailing '.' is NOT consumed (it terminates)
-            m = re.match(
-                r"[+-]?(\d+(\.\d+)?([eE][+-]?\d+)?|\.\d+([eE][+-]?\d+)?)",
-                t[i:],
-            )
-            if m and (c != "." or (i + 1 < self.n and t[i + 1].isdigit())):
-                if c not in "+-" or m.end() > 1:
-                    self.i += m.end()
-                    return ("bare", m.group(0))
+            # a '.' not followed by a digit is the statement terminator
+            num = self._number()
+            if num:
+                return num
         if c in ".;,[](){}":
             self.i += 1
             return (c, None)
@@ -175,47 +110,18 @@ class _Lexer:
                 return ("^^", None)
             self._err("stray '^'")
         if c in "\"'":
-            lex = self._string(c)
-            # optional @lang or ^^datatype
-            if self.t.startswith("@", self.i):
-                m = re.match(r"@([A-Za-z][A-Za-z0-9-]*)", self.t[self.i :])
-                if not m:
-                    self._err("bad language tag")
-                self.i += m.end()
-                return ("literal", (lex, m.group(1), None))
-            if self.t.startswith("^^", self.i):
-                self.i += 2
-                dt_tok = self._next()
-                if dt_tok is None or dt_tok[0] not in ("iri", "bare"):
-                    self._err("bad datatype after ^^")
-                return ("literal", (lex, None, dt_tok))
-            return ("literal", (lex, None, None))
+            return self._literal()
         if c == "@":  # @prefix / @base
-            m = re.match(r"@(prefix|base)\b", t[i:])
+            m = _DIRECTIVE_RE.match(t, i)
             if not m:
                 self._err("unknown @directive")
-            self.i += m.end()
+            self.i = m.end()
             return ("dir", m.group(1))
-        # bareword: pname, keyword, number, boolean, blank node
-        j = i
-        while j < self.n and t[j] not in _BARE_END:
-            j += 1
-        # '.' may continue a pname or decimal: include it when the char
-        # after it is itself a name/number char
-        while (
-            j < self.n
-            and t[j] == "."
-            and j + 1 < self.n
-            and (_PN_CONT.match(t[j + 1]) or t[j + 1].isdigit())
-        ):
-            j += 1
-            while j < self.n and t[j] not in _BARE_END:
-                j += 1
-        word = t[i:j]
-        if not word:
+        m = _BARE_RE.match(t, i)
+        if m.end() == i:
             self._err(f"unexpected character {c!r}")
-        self.i = j
-        return ("bare", word)
+        self.i = m.end()
+        return ("bare", m.group(0))
 
 
 def _emit_base(row: dict[str, Any]) -> dict[str, Any]:
@@ -312,15 +218,9 @@ class _Parser:
                 return (val[2:], "blank", None, None)
             if val == "true" or val == "false":
                 return (val, "literal", XSD + "boolean", None)
-            if _NUM_RE.match(val):
-                if "e" in val.lower():
-                    dt = XSD + "double"
-                elif "." in val:
-                    dt = XSD + "decimal"
-                else:
-                    dt = XSD + "integer"
-                return (val, "literal", dt, None)
             return (self._expand_bare(val), "iri", None, None)
+        if kind == "num":
+            return (val, "literal", numeric_datatype(val), None)
         if kind == "[":
             label = self._new_bnode()
             if self.lx.peek() != ("]", None):
@@ -378,26 +278,18 @@ class _Parser:
             finally:
                 self._qdepth -= 1
             # depth-2: the INNER quoted triple desugars into the engine's
-            # serialized term form "<< s p o >>" (the same string
-            # dataset_from_quads renders and the SPARQL-star accessors
-            # destructure), so q_s/q_p/q_o stay scalar string columns.
-            # That form keeps only lexical forms, so an inner literal it
-            # would change (a datatype or tag dropped, or a lexical the
-            # accessors would split or misread) is refused, not stored.
+            # serialized term form (rdf_syntax.serialize_quoted), so
+            # q_s/q_p/q_o stay scalar string columns. An inner literal
+            # that form would change is refused, not stored.
             inner = ((qs, qsk, qsdt, qslang), (qo, qok, qodt, qolang))
             for v, k, dt, lang in inner if nested else ():
-                if k == "literal" and (
-                    dt or lang or _UNSERIALIZABLE_RE.search(v)
-                ):
-                    raise TurtleParseError(
-                        f"literal {v!r} inside a nested quoted triple has a "
-                        "datatype, language tag, whitespace or '<<'/'>>' "
-                        "that the serialized '<< s p o >>' form cannot keep"
-                    )
+                why = k == "literal" and unkept_literal(v, dt, lang)
+                if why:
+                    raise TurtleParseError(why)
             if qsk == "quoted":
-                qs = f"<< {qs[0]} {qs[1]} {qs[2]} >>"
+                qs = serialize_quoted(*qs)
             if qok == "quoted":
-                qo = f"<< {qo[0]} {qo[1]} {qo[2]} >>"
+                qo = serialize_quoted(*qo)
             return ((qs, qp, qo), "quoted", None, None)
         raise TurtleParseError(f"unexpected token {kind!r} {val!r}")
 

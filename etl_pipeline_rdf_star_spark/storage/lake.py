@@ -6,7 +6,7 @@ row-level-update v2 source built in. So we implement the exact subset of
 Iceberg semantics the engine needs — snapshot log, key-bucketed copy-on-write
 MERGE, time travel, in-place schema evolution (add columns), commit-level
 idempotence — over parquet + a JSON transaction log. The engine talks to this
-class only through ``create / merge / append / read / read_version``; on a real
+class only through ``create / merge / merge_mor / append / read``; on a real
 cluster the same calls map 1:1 to Iceberg:
 
 =====================  =====================================================
@@ -137,6 +137,16 @@ class Snapshot:
         Only such a snapshot needs resolution at read time."""
         return any(f.get("delta") for f in self.files)
 
+    def written_files(self) -> list[dict[str, Any]]:
+        """The files this commit wrote, not carried over from an earlier
+        one: those under its own data dir, ``c{version:08d}`` followed by
+        the attempt id (:meth:`LakeTable._commit_dir`)."""
+        tag = f"c{self.version:08d}"
+        return [
+            f for f in self.files
+            if f["path"].split(os.sep)[-3].split("-")[0] == tag
+        ]
+
     def to_json(self) -> str:
         return json.dumps(self.__dict__, sort_keys=True)
 
@@ -150,10 +160,7 @@ class MergeStats:
     batch_id: str
     skipped: bool
     version: int
-    inserted_or_updated: int = 0
-    deleted_keys: int = 0
     rewritten_buckets: int = 0
-    survivor_rows: int = 0
 
 
 class LakeTable:
@@ -360,6 +367,14 @@ class LakeTable:
 
     # -- write -------------------------------------------------------------
 
+    def _commit_dir(self, version: int) -> str:
+        """A new data dir for one commit attempt. Two writers that stage
+        the same version write to different dirs, so the one that loses
+        the :meth:`_commit` race leaves orphan files instead of deleting
+        the winner's."""
+        name = f"c{version:08d}-{uuid.uuid4().hex}"
+        return os.path.join(self.path, _DATA_DIR, name)
+
     def _write_data(
         self, df: DataFrame, version: int, pre_bucketed: bool = False
     ) -> list[dict[str, Any]]:
@@ -372,13 +387,13 @@ class LakeTable:
         is skipped. Safe even if the guarantee is violated: ``partitionBy``
         splits by VALUE, so files land in the right bucket dirs regardless —
         a lie costs extra small files, never correctness."""
-        out = os.path.join(self.path, _DATA_DIR, f"c{version:08d}")
+        out = self._commit_dir(version)
         # _bucket stays a data column (read-time pruning is metadata-driven);
         # duplicate it as the physical partition dir for layout only.
         staged = df.withColumn("_bp", F.col("_bucket"))
         if not pre_bucketed:
             staged = staged.repartition(F.col("_bucket"))
-        staged.write.partitionBy("_bp").mode("overwrite").parquet(out)
+        staged.write.partitionBy("_bp").mode("errorifexists").parquet(out)
         import pyarrow.parquet as pq
         from concurrent.futures import ThreadPoolExecutor
 
@@ -659,10 +674,8 @@ class LakeTable:
                 ]
                 for f in fields
             }
-            out_dir = os.path.join(
-                self.path, _DATA_DIR, f"c{version:08d}", "_bp=0"
-            )
-            os.makedirs(out_dir, exist_ok=True)
+            out_dir = os.path.join(self._commit_dir(version), "_bp=0")
+            os.makedirs(out_dir)
             fp = os.path.join(out_dir, f"part-{uuid.uuid4().hex}.parquet")
             pq.write_table(pa.table(cols, schema=arrow_schema), fp)
             rel = os.path.relpath(fp, self.path)
@@ -992,10 +1005,7 @@ class LakeTable:
             # byte-identical duplicates that max-seq resolution collapses.
             # Their own batch's events are kept iff ≤ the cut, like any
             # delta.
-            tag = f"c{v:08d}"
-            for f in s.files:
-                if tag not in f["path"]:
-                    continue  # carried over from an earlier commit
+            for f in s.written_files():
                 lo = f.get("seq_min")
                 if lo is not None and lo > hi_incl:
                     continue  # manifest-pruned: entirely after the cut

@@ -280,6 +280,14 @@ def _expand(ir: MappingDocumentIR, term: str) -> str:
     return expand_prefix(term, ir.prefixes, ir.base_iri)
 
 
+def _rows_per_bucket(files: list[dict]) -> list[dict]:
+    """``[{bucket, rows}]`` summed from manifest entries, by bucket."""
+    rows: dict[int, int] = {}
+    for f in files:
+        rows[f["bucket"]] = rows.get(f["bucket"], 0) + f["rows"]
+    return [{"bucket": b, "rows": r} for b, r in sorted(rows.items())]
+
+
 @dataclass
 class BatchResult:
     batch_id: str
@@ -586,23 +594,16 @@ class CdcEngine:
                 # from the committed snapshot's files for that version.
                 n_latest, n_del, per_bucket = self._recover_batch_stats(batch_id)
             else:
-                snap_files = self.table.snapshot().files
-                rows_by_bucket: dict[int, int] = {}
-                for f in snap_files:
-                    if f"c{stats.version:08d}" in f["path"]:
-                        rows_by_bucket[f["bucket"]] = (
-                            rows_by_bucket.get(f["bucket"], 0) + f["rows"]
-                        )
-                per_bucket = [
-                    {"bucket": b, "rows": r} for b, r in sorted(rows_by_bucket.items())
-                ]
+                per_bucket = _rows_per_bucket(
+                    self.table.snapshot(stats.version).written_files()
+                )
                 try:
                     got = obs.get
                     n_latest, n_del = got["n"] or 0, got["d"] or 0
                 except Exception:
                     # an EMPTY batch writes zero tasks, so the Observation
                     # never fires — footer metadata is authoritative anyway
-                    n_latest, n_del = sum(rows_by_bucket.values()), 0
+                    n_latest, n_del = sum(b["rows"] for b in per_bucket), 0
             result = self._commit_metadata(
                 batch_id, stats, n_latest, n_del, per_bucket
             )
@@ -674,17 +675,11 @@ class CdcEngine:
         if batch_id not in snap.committed_batches:
             return 0, 0, []
         version = snap.committed_batches.index(batch_id)
-        vtag = f"c{version:08d}"
-        vfiles = [f for f in self.table.snapshot(version).files if vtag in f["path"]]
+        vfiles = self.table.snapshot(version).written_files()
         if not vfiles:
             return 0, 0, []
         n_latest = sum(f["rows"] for f in vfiles)
-        rows_by_bucket: dict[int, int] = {}
-        for f in vfiles:
-            rows_by_bucket[f["bucket"]] = rows_by_bucket.get(f["bucket"], 0) + f["rows"]
-        per_bucket = [
-            {"bucket": b, "rows": r} for b, r in sorted(rows_by_bucket.items())
-        ]
+        per_bucket = _rows_per_bucket(vfiles)
         df = self.spark.read.parquet(*[self.table._abs(f["path"]) for f in vfiles])
         n_del = 0
         if "_deleted" in df.columns:
