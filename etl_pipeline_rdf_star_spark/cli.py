@@ -7,9 +7,13 @@ Subcommands (reference batch_cli.py:328-433):
   status      table + ledger summary (cmd_status)
   diff        added/removed/changed keys between two table versions
               (cmd_diff; batch_manager.py:460-496)
-  export      dump live rows or the triples view to parquet/ndjson-ish text
-              (cmd_export; TriG fidelity is explicitly out of scope — we
-              export relational row text, verified by sha256 not bytes)
+  export      dump live rows or the triples view to parquet, or the
+              triples as N-Quads / N-Triples / TriG / Turtle(-star) text
+              (cmd_export; batch_manager.py:607-639)
+  archive     mark one batch ARCHIVED
+  retention   expire old snapshots, mark unreachable batches PURGED
+  load        Turtle/TriG(-star), N-Triples or N-Quads file(s) → a
+              parquet quad table, through the one RDF text reader
   provenance  annotation quads for one subject (batch_manager.py:641-696)
   query       run a named corpus query
 
@@ -238,117 +242,21 @@ def cmd_retention(args) -> None:
 
 
 def cmd_load(args) -> None:
-    """S11: load an RDF file into a parquet quad table (reference
-    rdf-workbench.py:99-133 load_rdf_file). ``--fmt nquads`` uses the
-    strict columnar line parser; ``--fmt turtle`` the general
-    Turtle/TriG(-star) reader (prefixes, bnode lists, collections,
-    annotations); ``auto`` picks by extension."""
-    import os as _os
+    """S11: load an RDF file or directory into a parquet quad table
+    (reference rdf-workbench.py:99-133 load_rdf_file). Turtle/TriG(-star),
+    N-Triples and N-Quads all load through the one RDF text reader, so no
+    format is chosen or guessed. ``--graph`` is the target graph of
+    statements without a graph of their own (no TriG block or N-Quads
+    label); explicit graphs win."""
+    from .sinks.turtle import read_turtle
 
-    fmt = args.fmt
-    if fmt == "auto":
-        probe = args.infile
-        probes = [probe]
-        if _os.path.isdir(probe):  # directory input: sniff contained files
-            # skip Spark sidecars (_SUCCESS, ._*.crc): sorting put them
-            # first and misclassified the engine's own N-Quads export
-            # dirs as Turtle (review finding)
-            names = sorted(
-                n
-                for n in _os.listdir(probe)
-                if not n.startswith(("_", "."))
-            )
-            # sniff SEVERAL part files, not just the first: a turtle(-star)
-            # export shards plain statements and `<< ... >>` annotation
-            # statements into different part files, and only the latter
-            # carry a turtle-only marker. Sample with a STRIDE across the
-            # whole sorted listing plus the last 8 files rather than
-            # names[:64] — annotation shards sort AFTER the
-            # plain-statement shards, so a >=64-shard export's markers
-            # were never probed and the dir was misclassified as N-Quads
-            # (review finding); a stride of 1 still stops at file 63, and
-            # the last file alone may be an empty shard. Misclassification
-            # stays loud (the strict N-Quads reader raises on the first
-            # `<<` line), but the documented export→load round-trip must
-            # not need --fmt.
-            if len(names) > 64:
-                step = max(1, len(names) // 63)
-                picked = names[::step][:63] + names[-8:]
-                names = list(dict.fromkeys(picked))
-            probes = [_os.path.join(probe, n) for n in names]
-            probe = probes[0] if probes else probe
-        low = probe.lower()
-        if low.endswith((".nq", ".nt")):
-            fmt = "nquads"
-        elif low.endswith((".ttl", ".trig", ".turtle")):
-            fmt = "turtle"
-        else:
-            # extensionless (Spark part-* exports): sniff the first data
-            # line — prefix directives / graph blocks / bnode syntax need
-            # the Turtle reader, bare full-IRI statements are N-Quads
-            fmt = "nquads"
-            import itertools as _it
-
-            for pf in probes:
-                try:
-                    with open(pf, encoding="utf-8", errors="replace") as fh:
-                        # scan a bounded prefix per file: a turtle(-star)
-                        # export's bare full-IRI statements are valid
-                        # N-Quads, but its `<< s p o >> ...` annotation
-                        # lines are not — and they may appear only after
-                        # hundreds of plain statements
-                        for ln in _it.islice(fh, 500):
-                            ln = ln.strip()
-                            if not ln or ln.startswith("#"):
-                                continue
-                            # graph blocks put '{' as a standalone token
-                            # after the graph term; substring-matching
-                            # ' {' would false-positive on N-Quads
-                            # literals containing braces (review finding)
-                            toks = ln.split(None, 2)
-                            if (
-                                ln.startswith(
-                                    ("@prefix", "@base", "PREFIX", "BASE")
-                                )
-                                or ln.startswith(("[", "(", "{", "<<"))
-                                or (len(toks) >= 2 and toks[1] == "{")
-                            ):
-                                fmt = "turtle"
-                                break
-                except OSError:
-                    pass
-                if fmt == "turtle":
-                    break
     spark = _spark(args.cores)
-    if fmt == "nquads":
-        from pyspark.sql import functions as F
-
-        from .sinks.rdf_text import read_nquads
-
-        df = read_nquads(spark, args.infile)
-        if args.graph:
-            # default-graph statements land in the chosen target graph;
-            # explicit quad graphs win (review finding: --graph was
-            # silently dropped on the nquads path)
-            df = df.withColumn("graph", F.coalesce("graph", F.lit(args.graph)))
-    else:
-        from .sinks.turtle import read_turtle
-
-        df = read_turtle(spark, args.infile, graph=args.graph)
+    df = read_turtle(spark, args.infile, graph=args.graph)
     df.write.mode("overwrite").parquet(args.out)
     # count from the written parquet footers — NOT df.count(), which would
     # re-run the whole parse a second time (review finding)
     n = spark.read.parquet(args.out).count()
-    print(
-        json.dumps(
-            {
-                "loaded": args.infile,
-                "to": args.out,
-                "fmt": fmt,
-                "quads": n,
-            }
-        )
-    )
+    print(json.dumps({"loaded": args.infile, "to": args.out, "quads": n}))
 
 
 def cmd_provenance(args) -> None:
@@ -440,9 +348,6 @@ def main(argv: list[str] | None = None) -> None:
     p = sub.add_parser("load")
     p.add_argument("--infile", required=True)
     p.add_argument("--out", required=True)
-    p.add_argument(
-        "--fmt", choices=["auto", "nquads", "turtle"], default="auto"
-    )
     p.add_argument("--graph", default=None)
     p.set_defaults(fn=cmd_load)
 

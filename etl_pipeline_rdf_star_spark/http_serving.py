@@ -103,19 +103,19 @@ class HttpError(ValueError):
         self.code = code
 
 
-# extension → (reader, graph policy) per the reference's dispatch
-# (rdf-workbench.py:99-133 load_rdf_file): Turtle/N-Triples load INTO the
-# target graph; TriG/N-Quads carry their own graph labels. RDF/XML
-# (.owl/.rdf/.xml) is the one reference format without a parser here —
-# rejected loudly, never silently skipped.
+# extension → whether its statements load INTO the target graph, per the
+# reference's dispatch (rdf-workbench.py:99-133 load_rdf_file): Turtle and
+# N-Triples do; TriG and N-Quads carry their own graph labels. One reader
+# parses them all. RDF/XML (.owl/.rdf/.xml) is the one reference format
+# without a parser here — rejected loudly, never silently skipped.
 _RDF_EXTS = {
-    ".ttl": ("turtle", True),
-    ".turtle": ("turtle", True),
-    ".trig": ("turtle", False),
-    ".nt": ("nquads", True),
-    ".ntriples": ("nquads", True),
-    ".nq": ("nquads", False),
-    ".nquads": ("nquads", False),
+    ".ttl": True,
+    ".turtle": True,
+    ".nt": True,
+    ".ntriples": True,
+    ".trig": False,
+    ".nq": False,
+    ".nquads": False,
 }
 
 
@@ -856,47 +856,23 @@ class QueryServer:
         return f"http://example.org/graph/{os.path.splitext(rel)[0]}"
 
     def _read_rdf(self, fp: str, graph_uri: str):
-        """Parse one RDF file → the engine's quad relation, dispatching
-        on extension like the reference loader. Turtle/N-Triples load
-        INTO the named graph; TriG/N-Quads keep their own graph labels
-        (statements outside blocks stay in the default graph, matching
-        pyoxigraph's load-without-to_graph)."""
-        import pyspark.sql.functions as F
-
-        from .sinks.turtle import _COLS
+        """Parse one RDF file → the engine's quad relation. Like the
+        reference loader, Turtle/N-Triples load INTO the named graph;
+        TriG/N-Quads keep their own graph labels (statements outside
+        blocks stay in the default graph, matching pyoxigraph's
+        load-without-to_graph)."""
+        from .sinks.turtle import read_turtle
 
         ext = os.path.splitext(fp)[1].lower()
-        spec = _RDF_EXTS.get(ext)
-        if spec is None:
+        if ext not in _RDF_EXTS:
             raise HttpError(
                 400,
                 f"Unsupported file format: {os.path.basename(fp)} "
                 f"(supported: {', '.join(sorted(_RDF_EXTS))}; RDF/XML "
                 "needs a parser this build does not ship)",
             )
-        fmt, to_graph = spec
-        if fmt == "turtle":
-            from .sinks.turtle import read_turtle
-
-            df = read_turtle(spark=self.spark, path=fp,
-                             graph=graph_uri if to_graph else None)
-        else:
-            from .sinks.rdf_text import read_nquads
-
-            df = read_nquads(self.spark, fp)
-            if to_graph:  # N-Triples: no graph column values of its own
-                df = df.withColumn(
-                    "graph", F.coalesce("graph", F.lit(graph_uri))
-                )
-        # conform to the full quad schema so every load merges into one
-        # table (read_nquads has no quoted-term columns)
-        return df.select(
-            *[
-                F.col(c).cast("string").alias(c)
-                if c in df.columns
-                else F.lit(None).cast("string").alias(c)
-                for c in _COLS
-            ]
+        return read_turtle(
+            self.spark, fp, graph=graph_uri if _RDF_EXTS[ext] else None
         )
 
     def _open_graph_table(self, path: str) -> LakeTable:

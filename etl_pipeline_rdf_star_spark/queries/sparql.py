@@ -326,7 +326,6 @@ _FN_KEYWORDS = {
 _PUNCT2 = ("<<", ">>", "<=", ">=", "!=", "&&", "||")
 
 
-_IRIREF_RE = re.compile(r"<([^<>\s{}|\\^`\"]*)>")
 _VAR_RE = re.compile(r"[?$]([A-Za-z_][A-Za-z0-9_]*)")
 # local part additionally admits '$' for $PARAM template placeholders
 # (batch_queries.rq: ex:BatchStatus/$STATUS). A '.' is consumed only when
@@ -378,10 +377,9 @@ class _Lex(TermLexer):
             self.i += 2
             return (two, None)
         if c == "<":
-            m = _IRIREF_RE.match(t, i)
-            if m:  # IRIREF (no whitespace inside)
-                self.i = m.end()
-                return ("iri", m.group(1))
+            iri = self._iri()
+            if iri:
+                return iri
             self.i += 1
             return ("<", None)
         if c in "?$":
@@ -3739,7 +3737,7 @@ def _parse_modifiers(p: _Parser, q: SelectQuery, *, subquery: bool = False) -> N
             t2 = lx.next()
             if t2 is not None and t2[0] == "var":
                 q.limit = None  # $LIMIT template placeholder (batch_queries.rq)
-            elif t2 is not None and t2[0] == "num":
+            elif t2 is not None and t2[0] == "num" and t2[1].isdigit():
                 q.limit = int(t2[1])
             else:
                 raise SparqlParseError(f"expected LIMIT count, got {t2!r}")
@@ -3748,7 +3746,7 @@ def _parse_modifiers(p: _Parser, q: SelectQuery, *, subquery: bool = False) -> N
             t2 = lx.next()
             if t2 is not None and t2[0] == "var":
                 q.offset = None  # $OFFSET template placeholder
-            elif t2 is not None and t2[0] == "num":
+            elif t2 is not None and t2[0] == "num" and t2[1].isdigit():
                 q.offset = int(t2[1])
             else:
                 raise SparqlParseError(f"expected OFFSET count, got {t2!r}")

@@ -1,10 +1,10 @@
 """RDF term syntax shared by the Turtle reader and the SPARQL parser.
 
-Turtle and SPARQL spell literals, numbers and quoted triples the same way
-and differ in names, keywords and punctuation. The common part lives here
-once: the :class:`TermLexer` base both lexers extend, the numeric
-shorthand and its datatype, and the engine's serialized quoted-triple
-term ``"<< s p o >>"``. Every pattern matches at a position
+Turtle and SPARQL spell IRIs, literals, numbers and quoted triples the
+same way and differ in names, keywords and punctuation. The common part
+lives here once: the :class:`TermLexer` base both lexers extend, the
+numeric shorthand and its datatype, and the engine's serialized
+quoted-triple term ``"<< s p o >>"``. Every pattern matches at a position
 (``pattern.match(text, pos)``), so a token costs time in its own length,
 not in the rest of the document.
 """
@@ -12,7 +12,7 @@ not in the rest of the document.
 from __future__ import annotations
 
 import re
-from typing import Any
+from typing import Any, NoReturn
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -50,6 +50,12 @@ _ECHAR = {
     "t": "\t", "b": "\b", "n": "\n", "r": "\r", "f": "\f",
     '"': '"', "'": "'", "\\": "\\",
 }
+# IRIREF: no control character, space or <>"{}|^`\ inside, except as a
+# \u / \U escape, decoded like a string's
+IRIREF_RE = re.compile(
+    r'<([^\x00-\x20<>"{}|^`\\]*'
+    r'(?:\\(?:u[0-9A-Fa-f]{4}|U[0-9A-Fa-f]{8})[^\x00-\x20<>"{}|^`\\]*)*)>'
+)
 _LANG_RE = re.compile(r"@([A-Za-z][A-Za-z0-9-]*)")
 # the token after '^^': an IRI or a prefixed name, under the token kind
 # each dialect's lexer gives prefixed names
@@ -58,13 +64,14 @@ _DATATYPE_TOKENS = ("iri", "pname", "bare")
 
 class TermLexer:
     """Token-stream base: whitespace and ``#``-comment skipping, one-token
-    lookahead, errors with context, string literals (short and long
+    lookahead, errors with context, IRIs, string literals (short and long
     quotes, every ECHAR, both UCHAR forms, ``@lang`` / ``^^dt``) and
     numbers. A dialect sets ``error`` and implements ``_next()``, which
     returns the next ``(kind, value)`` token or None at the end, calling
-    :meth:`_literal` at a quote and :meth:`_number` where its grammar
-    allows a number. A literal token's value is ``(lexical form, language
-    tag or None, datatype token or None)``."""
+    :meth:`_iri` at a ``<``, :meth:`_literal` at a quote and
+    :meth:`_number` where its grammar allows a number. A literal token's
+    value is ``(lexical form, language tag or None, datatype token or
+    None)``."""
 
     error: type[ValueError] = ValueError
 
@@ -87,9 +94,10 @@ class TermLexer:
         self._peeked = None
         return tok
 
-    def _err(self, msg: str):
+    def _err(self, msg: str) -> NoReturn:
         ctx = self.t[max(0, self.i - 30) : self.i + 30].replace("\n", "\\n")
-        raise self.error(f"{msg} near ...{ctx}...")
+        line = self.t.count("\n", 0, self.i) + 1
+        raise self.error(f"{msg} at line {line} near ...{ctx}...")
 
     def _number(self) -> tuple[str, str] | None:
         m = NUMBER_RE.match(self.t, self.i)
@@ -97,6 +105,18 @@ class TermLexer:
             return None
         self.i = m.end()
         return ("num", m.group(0))
+
+    def _iri(self) -> tuple[str, str] | None:
+        """The IRIREF at the position as an ``("iri", value)`` token, its
+        UCHARs decoded; None when no IRIREF starts there."""
+        m = IRIREF_RE.match(self.t, self.i)
+        if m is None:
+            return None
+        self.i = m.end()
+        iri = m.group(1)
+        if "\\" in iri:
+            iri = _ESCAPE_RE.sub(self._unescape, iri)
+        return ("iri", iri)
 
     def _literal(self) -> tuple[str, tuple]:
         t, i = self.t, self.i
@@ -128,7 +148,7 @@ class TermLexer:
             return chr(int(hexa, 16))
         if m.group(3) in _ECHAR:
             return _ECHAR[m.group(3)]
-        self._err(f"bad escape {m.group(0)!r} in a string")
+        self._err(f"bad escape {m.group(0)!r}")
 
 
 # the engine's serialized quoted-triple term. Values stay lexical strings,

@@ -1,22 +1,18 @@
-"""RDF text interop: N-Quads / TriG serialization and an N-Quads loader.
+"""RDF text interop: N-Quads / TriG serialization.
 
-Reference parity (round-1 VERDICT "What's missing" #2):
+Reference parity (round-1 VERDICT "What's missing" #2): the reference
+dumps every batch to TriG/Turtle/NT/NQ (batch_cli.py:216-242,
+batch_manager.py:607-639, TriG serializer rdf_star_etl_yarrrml.py:611-648).
 
-* export — the reference dumps every batch to TriG/Turtle/NT/NQ
-  (batch_cli.py:216-242, batch_manager.py:607-639, TriG serializer
-  rdf_star_etl_yarrrml.py:611-648);
-* load — the workbench ingests RDF files into named graphs
-  (rdf-workbench.py:99-133).
+Everything here is columnar Catalyst (concat / replace): serialization
+runs distributed, no per-row Python.
 
-Everything here is columnar Catalyst (concat / replace / regexp_extract):
-serialization and parsing both run distributed, no per-row Python.
-
-Grammar scope: the W3C N-Quads 1.1 subset our engine emits — IRI and
-blank-node subjects/graphs, IRI predicates, IRI / blank / literal objects
-with ``@lang`` or ``^^<datatype>``, string escapes ``\\ \" \n \r \t``.
-Full TriG prefix/compact syntax is NOT parsed (write-side only emits full
-IRIs, so exported TriG needs no prefix directives and every exported file
-round-trips through :func:`read_nquads`-style parsing of its statements).
+Grammar scope: the W3C N-Quads 1.1 and TriG subset the engine emits —
+IRI and blank-node subjects/graphs, IRI predicates, IRI / blank / literal
+objects with ``@lang`` or ``^^<datatype>``, string escapes
+``\\ \" \n \r \t``. Full IRIs everywhere, so exported TriG needs no
+prefix directives. Every export loads back through the one RDF text
+reader, :func:`.turtle.read_turtle`.
 
 RDF-star: quoted triples are emitted in TriG-star syntax
 (``<< s p o >> pred obj .``) by :func:`trig_star_annotation_lines`; plain
@@ -26,7 +22,7 @@ linked with rdf:reifies) so the output stays RDF 1.1 valid.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Column
 
@@ -42,17 +38,6 @@ def escape_literal(col: Column) -> Column:
     for search, repl in _ESCAPES:
         out = F.replace(out, F.lit(search), F.lit(repl))
     return out
-
-
-def unescape_literal(col: Column) -> Column:
-    """Inverse of :func:`escape_literal`. Escape sequences are decoded via a
-    placeholder so ``\\\\n`` (escaped backslash + n) is not confused with
-    ``\\n`` (newline): first ``\\\\`` → \\x00, then the char escapes, then
-    \\x00 → ``\\``."""
-    out = F.replace(col, F.lit("\\\\"), F.lit("\x00"))
-    for search, repl in [("\\n", "\n"), ("\\r", "\r"), ("\\t", "\t"), ('\\"', '"')]:
-        out = F.replace(out, F.lit(search), F.lit(repl))
-    return F.replace(out, F.lit("\x00"), F.lit("\\"))
 
 
 def iri_term(col: Column) -> Column:
@@ -167,93 +152,3 @@ def trig_star_annotation_lines(annotations: DataFrame) -> DataFrame:
         " ", quoted, iri_term(F.col("predicate")), object_term(annotations)
     )
     return annotations.select(F.concat(line, F.lit(" .")).alias("value"))
-
-
-# ---------------------------------------------------------------------------
-# loader (S11) — distributed N-Quads parsing with regexp_extract
-# ---------------------------------------------------------------------------
-
-# one statement: subject, predicate, object-term, optional graph
-_NQ_RE = (
-    r"^\s*(<[^>]*>|_:[^\s]+)\s+"  # 1 subject
-    r"(<[^>]*>)\s+"  # 2 predicate
-    r"(<[^>]*>|_:[^\s]+|\"(?:[^\"\\]|\\.)*\"(?:@[A-Za-z][A-Za-z0-9-]*|\^\^<[^>]*>)?)"
-    r"(?:\s+(<[^>]*>|_:[^\s]+))?\s*\.\s*$"  # 4 optional graph
-)
-_LIT_RE = r'^"((?:[^"\\]|\\.)*)"(?:@([A-Za-z][A-Za-z0-9-]*)|\^\^<([^>]*)>)?$'
-
-
-def read_nquads(spark: SparkSession, path: str) -> DataFrame:
-    """Load an N-Quads (or our exported TriG single-statement-block) file
-    into the engine's triple relation — columnar regexp parsing, no Python
-    per line. Malformed lines raise (strict mode): count parse failures and
-    assert zero."""
-    raw = spark.read.text(path).where(F.length(F.trim("value")) > 0)
-    raw = raw.where(~F.trim("value").startswith("#"))
-    # unwrap our single-statement TriG blocks: `<g> { stmt . }` → `stmt <g> .`
-    block = r"^\s*<([^>]*)>\s*\{\s*(.*\S)\s*\.\s*\}\s*$"
-    g_from_block = F.regexp_extract("value", block, 1)
-    stmt_from_block = F.regexp_extract("value", block, 2)
-    df = raw.select(
-        F.when(
-            g_from_block != "",
-            F.concat(
-                stmt_from_block, F.lit(" <"), g_from_block, F.lit("> .")
-            ),
-        )
-        .otherwise(F.col("value"))
-        .alias("value")
-    )
-
-    def term_value(c: Column) -> Column:
-        return F.when(
-            c.startswith("<"), F.regexp_extract(c, r"^<(.*)>$", 1)
-        ).otherwise(F.regexp_replace(c, r"^_:", ""))
-
-    # strict mode validates IN-LINE (round-2 VERDICT efficiency item 3):
-    # a failed match raises from inside the single parse pass instead of a
-    # separate validation job that re-scans the file before the caller's
-    # own action. assert_true lives in a FILTER (a guarded projection
-    # column would be pruned away by count()-style plans).
-    df = df.where(
-        F.assert_true(
-            F.regexp_extract("value", _NQ_RE, 1) != "",
-            F.concat(F.lit("unparseable N-Quads statement: "), F.col("value")),
-        ).isNull()
-    )
-    parsed = df.select(
-        "value",
-        F.regexp_extract("value", _NQ_RE, 1).alias("_s"),
-        F.regexp_extract("value", _NQ_RE, 2).alias("_p"),
-        F.regexp_extract("value", _NQ_RE, 3).alias("_o"),
-        F.regexp_extract("value", _NQ_RE, 4).alias("_g"),
-    )
-    o = F.col("_o")
-    lex = unescape_literal(F.regexp_extract(o, _LIT_RE, 1))
-    lang = F.nullif(F.regexp_extract(o, _LIT_RE, 2), F.lit(""))
-    dt = F.nullif(F.regexp_extract(o, _LIT_RE, 3), F.lit(""))
-    return parsed.select(
-        term_value(F.col("_s")).alias("subject"),
-        F.when(F.col("_s").startswith("_:"), "blank").otherwise("iri").alias(
-            "subject_kind"
-        ),
-        term_value(F.col("_p")).alias("predicate"),
-        F.when(o.startswith("<"), term_value(o))
-        .when(o.startswith("_:"), term_value(o))
-        .otherwise(lex)
-        .alias("object"),
-        F.when(o.startswith("<"), F.lit(None).cast("string"))
-        .when(o.startswith("_:"), F.lit(None).cast("string"))
-        .otherwise(dt)
-        .alias("object_datatype"),
-        F.when(o.rlike("^[<_]"), F.lit(None).cast("string"))
-        .otherwise(lang)
-        .alias("object_lang"),
-        F.when(o.startswith("<"), "iri")
-        .when(o.startswith("_:"), "blank")
-        .otherwise("literal")
-        .alias("object_kind"),
-        F.when(F.col("_g") == "", F.lit(None).cast("string"))
-        .otherwise(term_value(F.col("_g")))
-        .alias("graph"),
-    )

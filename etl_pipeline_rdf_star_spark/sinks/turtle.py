@@ -1,13 +1,13 @@
-"""General Turtle / TriG(-star) reader — the loader subset the reference
-workbench exposes (rdf-workbench.py:99-133 ``load_rdf_file``: arbitrary
-TTL/TriG/NT/NQ files into named graphs).
+"""The RDF text reader: Turtle / TriG(-star), N-Triples and N-Quads —
+the loader subset the reference workbench exposes (rdf-workbench.py:99-133
+``load_rdf_file``: arbitrary TTL/TriG/NT/NQ files into named graphs).
 
-Round-2 VERDICT "What's missing" #2: :func:`rdf_text.read_nquads` parses
-only the engine's own full-IRI statement-per-line exports; a reference
-user's existing ontology TTL (prefix directives, prefixed names,
-multi-line ``;``/``,`` lists, ``[...]`` restriction bnodes, ``(...)``
-collections, ``<< s p o >>`` annotations) would not load. This module
-parses that grammar subset.
+N-Triples is a subset of Turtle. N-Quads adds one construct Turtle lacks:
+an IRI or blank node after the object of a statement names that triple's
+graph. The parser accepts it at top level after a single triple only; it
+is an error inside a TriG block and after a ``;``/``,`` list. Every file,
+whatever its extension, loads through this one parser, so one text gives
+the same quads under any name.
 
 Scale design: Turtle statements span lines and strings may contain ``.``,
 so statement splitting cannot be a per-line Catalyst expression. The
@@ -21,6 +21,7 @@ multiLine JSON).
 
 Grammar subset (everything the reference fixtures use, verified against
 ``/root/reference/rdf-data-input/``):
+IRIs (``\\u``/``\\U`` escapes decoded, no space or ``{}|^`` inside),
 ``@prefix``/``PREFIX``, ``@base``/``BASE``, prefixed names, ``a``,
 ``;``/``,`` lists, anonymous bnodes ``[...]`` (nested), collections
 ``(...)``, numeric/boolean shorthand literals, ``@lang``, ``^^dt``
@@ -39,9 +40,10 @@ known producer emits that shape).
 from __future__ import annotations
 
 import re
-from typing import Any, Iterator
+from typing import Any, Iterator, NoReturn
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .rdf_syntax import (
     XSD,
@@ -86,11 +88,7 @@ class _Lexer(TermLexer):
             if t.startswith("<<", i):
                 self.i += 2
                 return ("<<", None)
-            j = t.find(">", i)
-            if j < 0:
-                self._err("unterminated IRI")
-            self.i = j + 1
-            return ("iri", t[i + 1 : j])
+            return self._iri() or self._err("bad IRI")
         if c == ">":
             if t.startswith(">>", i):
                 self.i += 2
@@ -154,6 +152,9 @@ class _Parser:
         self._bn = 0
         self._qdepth = 0  # quoted-triple nesting depth (max 2)
 
+    def _err(self, msg: str) -> NoReturn:
+        self.lx._err(msg)
+
     # -- terms -------------------------------------------------------------
 
     def _new_bnode(self) -> str:
@@ -188,12 +189,12 @@ class _Parser:
 
     def _expand_bare(self, word: str) -> str:
         if ":" not in word:
-            raise TurtleParseError(f"expected prefixed name, got {word!r}")
+            self._err(f"expected prefixed name, got {word!r}")
         p, local = word.split(":", 1)
         if p.startswith("_"):  # _:label handled by caller
-            raise TurtleParseError(f"blank node {word!r} used as IRI")
+            self._err(f"blank node {word!r} used as IRI")
         if p not in self.prefixes:
-            raise TurtleParseError(f"undefined prefix {p!r} in {word!r}")
+            self._err(f"undefined prefix {p!r} in {word!r}")
         return self.prefixes[p] + local
 
     def _dt_iri(self, dt_tok) -> str:
@@ -205,7 +206,7 @@ class _Parser:
         for quoted, value is the (s, p, o) tuple."""
         tok = self.lx.next()
         if tok is None:
-            raise TurtleParseError("unexpected end of input")
+            self._err("unexpected end of input")
         kind, val = tok
         if kind == "iri":
             return (self._resolve(val), "iri", None, None)
@@ -226,14 +227,14 @@ class _Parser:
             if self.lx.peek() != ("]", None):
                 self._po_list(label, "blank", graph)
             if self.lx.next() != ("]", None):
-                raise TurtleParseError("expected ']'")
+                self._err("expected ']'")
             return (label, "blank", None, None)
         if kind == "(":
             items = []
             while self.lx.peek() != (")", None):
                 item = self._term(graph)
                 if item[1] == "quoted":
-                    raise TurtleParseError(
+                    self._err(
                         "quoted triples are not supported inside collections"
                     )
                 items.append(item)
@@ -260,7 +261,7 @@ class _Parser:
             if self._qdepth > 2:
                 # deeper nesting would require serializing a serialized
                 # form — ambiguous to re-parse; keep the loud guard
-                raise TurtleParseError(
+                self._err(
                     "quoted triples nested deeper than 2 levels are not "
                     "supported"
                 )
@@ -272,9 +273,9 @@ class _Parser:
                 qp = self._predicate()
                 qo, qok, qodt, qolang = self._term(graph)
                 if paren and self.lx.next() != (")", None):
-                    raise TurtleParseError("expected ')' in '<<( ... )>>'")
+                    self._err("expected ')' in '<<( ... )>>'")
                 if self.lx.next() != (">>", None):
-                    raise TurtleParseError("expected '>>'")
+                    self._err("expected '>>'")
             finally:
                 self._qdepth -= 1
             # depth-2: the INNER quoted triple desugars into the engine's
@@ -285,18 +286,18 @@ class _Parser:
             for v, k, dt, lang in inner if nested else ():
                 why = k == "literal" and unkept_literal(v, dt, lang)
                 if why:
-                    raise TurtleParseError(why)
+                    self._err(why)
             if qsk == "quoted":
                 qs = serialize_quoted(*qs)
             if qok == "quoted":
                 qo = serialize_quoted(*qo)
             return ((qs, qp, qo), "quoted", None, None)
-        raise TurtleParseError(f"unexpected token {kind!r} {val!r}")
+        self._err(f"unexpected token {kind!r} {val!r}")
 
     def _predicate(self) -> str:
         tok = self.lx.next()
         if tok is None:
-            raise TurtleParseError("unexpected end of input in predicate")
+            self._err("unexpected end of input in predicate")
         kind, val = tok
         if kind == "iri":
             return self._resolve(val)
@@ -304,7 +305,7 @@ class _Parser:
             if val == "a":
                 return RDF_TYPE
             return self._expand_bare(val)
-        raise TurtleParseError(f"bad predicate token {kind!r} {val!r}")
+        self._err(f"bad predicate token {kind!r} {val!r}")
 
     # -- emission ----------------------------------------------------------
 
@@ -317,7 +318,7 @@ class _Parser:
             "graph": graph if graph is not None else self.default_graph,
         }
         if skind == "quoted" and okind == "quoted":
-            raise TurtleParseError(
+            self._err(
                 "quoted triples on both subject and object of one "
                 "statement are not supported (single q_s/q_p/q_o column set)"
             )
@@ -367,11 +368,22 @@ class _Parser:
         if in_block and self.lx.peek() == ("}", None):
             return
         if self.lx.next() != (".", None):
-            raise TurtleParseError("expected '.' at end of statement")
+            self._err("expected '.' at end of statement")
+
+    def _graph_label(self, first: int) -> None:
+        """N-Quads: an IRI or blank node after the object of a top-level
+        statement names the graph of its triple. The statement emitted
+        the quads from index ``first`` on; it must have emitted one."""
+        kind, val = self.lx.peek() or (None, None)
+        if kind != "iri" and not (kind == "bare" and val.startswith("_:")):
+            return
+        if len(self.quads) != first + 1:
+            self._err("a graph label may follow only a single triple")
+        self.quads[-1]["graph"] = self._term(None)[0]
 
     def _block(self, graph: str | None) -> None:
         if self.lx.next() != ("{", None):
-            raise TurtleParseError("expected '{'")
+            self._err("expected '{'")
         while self.lx.peek() != ("}", None):
             self._statement(graph, in_block=True)
         self.lx.next()  # '}'
@@ -393,19 +405,19 @@ class _Parser:
                 if name == "prefix":
                     ptok = self.lx.next()
                     if ptok is None or ptok[0] != "bare" or not ptok[1].endswith(":"):
-                        raise TurtleParseError(f"bad prefix name {ptok!r}")
+                        self._err(f"bad prefix name {ptok!r}")
                     itok = self.lx.next()
                     if itok is None or itok[0] != "iri":
-                        raise TurtleParseError("bad prefix IRI")
+                        self._err("bad prefix IRI")
                     self.prefixes[ptok[1][:-1]] = self._resolve(itok[1])
                 else:
                     itok = self.lx.next()
                     if itok is None or itok[0] != "iri":
-                        raise TurtleParseError("bad base IRI")
+                        self._err("bad base IRI")
                     self.base = itok[1]
                 if not sparql_form:
                     if self.lx.next() != (".", None):
-                        raise TurtleParseError("expected '.' after @directive")
+                        self._err("expected '.' after @directive")
                 elif self.lx.peek() == (".", None):
                     self.lx.next()
                 continue
@@ -413,7 +425,7 @@ class _Parser:
                 self.lx.next()
                 g, gkind, _, _ = self._term(None)
                 if gkind not in ("iri", "blank"):
-                    raise TurtleParseError("bad graph label")
+                    self._err("bad graph label")
                 self._block(g)
                 continue
             if kind == "{":
@@ -430,12 +442,11 @@ class _Parser:
                 if self.lx.peek() == ("{", None):
                     self._block(s)
                     continue
-                if skind == "quoted":
-                    self._po_list(None, "quoted", None, quoted=s)
-                else:
-                    self._po_list(s, skind, None)
+                first = len(self.quads)
+                self._po_list(s, skind, None)
+                self._graph_label(first)
                 if self.lx.next() != (".", None):
-                    raise TurtleParseError("expected '.' at end of statement")
+                    self._err("expected '.' at end of statement")
                 continue
             self._statement(None)
 
@@ -472,20 +483,29 @@ _COLS = [
 def read_turtle(
     spark: SparkSession, path: str, graph: str | None = None
 ) -> DataFrame:
-    """Load Turtle/TriG(-star) file(s) into the engine's quad relation.
-    ``graph`` assigns a target named graph to statements outside explicit
-    TriG blocks (the reference loads each uploaded file into a chosen
-    graph, rdf-workbench.py:99-133). One file = one parse task
-    (wholetext + Arrow-batched mapInPandas); see module docstring for why
-    that is the right distribution unit."""
+    """Load Turtle/TriG(-star), N-Triples or N-Quads file(s) into the
+    engine's quad relation. ``graph`` assigns a target named graph to
+    statements outside explicit TriG blocks and without an N-Quads graph
+    label (the reference loads each uploaded file into a chosen graph,
+    rdf-workbench.py:99-133). One file = one parse task (wholetext +
+    Arrow-batched mapInPandas); see module docstring for why that is the
+    right distribution unit. A malformed file fails the action with a
+    :class:`TurtleParseError` naming the file, line and context."""
     import pandas as pd
 
-    files = spark.read.text(path, wholetext=True)
+    files = spark.read.text(path, wholetext=True).select(
+        "value", F.col("_metadata.file_path").alias("file")
+    )
 
     def _parse(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
-            for text in pdf["value"]:
-                rows = parse_turtle_text(text, default_graph=graph)
+            for text, file in zip(pdf["value"], pdf["file"]):
+                try:
+                    rows = parse_turtle_text(text, default_graph=graph)
+                except TurtleParseError as e:
+                    raise TurtleParseError(
+                        f"unparseable RDF in {file}: {e}"
+                    ) from None
                 yield pd.DataFrame(
                     {c: [r[c] for r in rows] for c in _COLS}, columns=_COLS
                 )

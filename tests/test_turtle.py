@@ -241,7 +241,7 @@ def test_reference_batch_export_reifier_objects_load(spark, tmp_path):
     from etl_pipeline_rdf_star_spark import cli
 
     out = str(tmp_path / "loaded")
-    cli.main(["load", "--infile", BATCH_TRIG, "--fmt", "turtle", "--out", out])
+    cli.main(["load", "--infile", BATCH_TRIG, "--out", out])
     loaded = spark.read.parquet(out)
     assert loaded.count() == 80
     ann = loaded.where(F.col("object_kind") == "quoted")
@@ -261,12 +261,11 @@ def test_read_turtle_spark_and_nquads_roundtrip(spark, tmp_path):
 
     from etl_pipeline_rdf_star_spark.sinks.rdf_text import (
         nquads_lines,
-        read_nquads,
     )
 
     out = str(tmp_path / "rt")
     nquads_lines(asserted.drop("graph")).write.text(out)
-    back = read_nquads(spark, out)
+    back = read_turtle(spark, out)
     cols = ["subject", "predicate", "object", "object_datatype", "object_lang"]
 
     def canon(d):
@@ -332,7 +331,7 @@ def test_cli_load_nquads_respects_target_graph(spark, tmp_path):
     )
     assert res.returncode == 0, res.stderr[-800:]
     doc = _json.loads(res.stdout.strip().splitlines()[-1])
-    assert doc["quads"] == 2 and doc["fmt"] == "nquads"
+    assert doc["quads"] == 2
     got = {(r.subject, r.graph) for r in spark.read.parquet(out).collect()}
     assert got == {("http://a", "http://target"), ("http://b", "http://explicit")}
 
