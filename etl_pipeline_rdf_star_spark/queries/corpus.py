@@ -41,7 +41,8 @@ SEP = "\x1f"  # chr(31) — unit separator used in reifier fingerprints
 # Bump when ingest/materialization logic changes: invalidates cached
 # serving warehouses built by older code.
 # r7: manifests mark delta files, and read_resolved windows only over them
-_WH_TAG = "r7"
+# r8: snapshot logs carry seq_hi; as-of bases need it
+_WH_TAG = "r8"
 
 
 def serving_warehouse(spark: SparkSession, sf_dir: str) -> str:

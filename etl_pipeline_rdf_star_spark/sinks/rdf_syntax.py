@@ -21,8 +21,11 @@ XSD = "http://www.w3.org/2001/XMLSchema#"
 
 # numeric shorthand: integer, decimal (a leading '.' allowed) or double.
 # A decimal needs a digit after its '.', so a statement's terminating '.'
-# is never read as part of a number.
-NUMBER_RE = re.compile(r"[+-]?(\d+(\.\d+)?([eE][+-]?\d+)?|\.\d+([eE][+-]?\d+)?)")
+# is never read as part of a number. Digits are ASCII: Python's \d also
+# matches other scripts' digits, which no RDF or SPARQL number allows.
+NUMBER_RE = re.compile(
+    r"[+-]?([0-9]+(\.[0-9]+)?([eE][+-]?[0-9]+)?|\.[0-9]+([eE][+-]?[0-9]+)?)"
+)
 
 
 def numeric_datatype(lex: str) -> str:

@@ -94,7 +94,7 @@ class _Lexer(TermLexer):
                 self.i += 2
                 return (">>", None)
             self._err("stray '>'")
-        if c in "+-." or c.isdigit():
+        if c in "+-.0123456789":
             # a '.' not followed by a digit is the statement terminator
             num = self._number()
             if num:
@@ -150,6 +150,12 @@ class _Parser:
         self.default_graph = default_graph
         self.quads: list[dict[str, Any]] = []
         self._bn = 0
+        # generated labels are '<prefix><n>'; an explicit label equal to
+        # one would appear in the text as '_:<prefix>...', so a prefix the
+        # text never spells after '_:' cannot meet a label of the document
+        self._bn_prefix = "genid"
+        while "_:" + self._bn_prefix in text:
+            self._bn_prefix += "_"
         self._qdepth = 0  # quoted-triple nesting depth (max 2)
 
     def _err(self, msg: str) -> NoReturn:
@@ -159,7 +165,7 @@ class _Parser:
 
     def _new_bnode(self) -> str:
         self._bn += 1
-        return f"genid{self._bn}"
+        return f"{self._bn_prefix}{self._bn}"
 
     def _resolve(self, iri: str) -> str:
         # absolute = has a scheme (RFC 3986): never touched, so mailto:,

@@ -475,7 +475,8 @@ class CdcEngine:
             self.table.compact()
 
     def max_seq(self) -> int | None:
-        """Global max event seq, from manifest column stats (no Spark job)."""
+        """Global max event seq: the head snapshot's ``seq_hi`` (no Spark
+        job), which purges and snapshot expiry leave in place."""
         return self.table.max_order()
 
     def state_at(self, seq_cut: int) -> DataFrame:
@@ -522,11 +523,8 @@ class CdcEngine:
         tombs = df.where(F.coalesce(F.col("_deleted"), F.lit(False))).persist()
         try:
             if not tombs.limit(1).count():
-                # nothing to purge: committing anyway would create a
-                # 'purge-N' commit without drop stats, which the legacy
-                # prefix rule in read_asof must treat as an unbounded
-                # row-dropper (review finding: a no-op purge then bricks
-                # all as-of reads after expiry)
+                # nothing to purge: a commit would rewrite no row and only
+                # add a version to the log
                 return
             snap = self.table.snapshot()
             self.table.merge(

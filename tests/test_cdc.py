@@ -429,6 +429,27 @@ def test_max_seq_survives_tombstone_purge(spark, tmp_path):
     assert eng.max_seq() == 2  # head survives via snapshot history
 
 
+def test_max_seq_survives_tombstone_purge_and_expiry(spark, tmp_path):
+    """The head event stays known after its tombstone is purged AND every
+    snapshot that listed it is expired: the high-water mark rides in each
+    snapshot log, not in the files a version lists."""
+    eng = CdcEngine(spark, str(tmp_path / "headx"), mode="mor", n_buckets=2)
+    ev = spark.createDataFrame(
+        [
+            (0, "I", "r1", "a.py", "c1", "en", "x", None),
+            (1, "I", "r1", "b.py", "c1", "en", "y", None),
+            (2, "D", "r1", "b.py", "c2", "en", "", None),
+        ],
+        "seq long, op string, repo string, path string, commit string,"
+        " lang string, content string, event_ts timestamp",
+    )
+    eng.apply_batch(ev, "headx-b0")
+    eng.purge_tombstones()
+    eng.table.expire_snapshots(keep_last=1)
+    assert len(eng.table.versions()) == 1
+    assert eng.max_seq() == 2
+
+
 def test_read_asof_survives_later_purge(spark, tmp_path):
     """Review finding: a purge_tombstones committed AFTER the as-of cut
     used to raise on previously-valid as-of reads. The purge's victims
@@ -538,8 +559,8 @@ def test_asof_after_purge_and_expiry_is_loud_not_wrong(spark, tmp_path):
     """Review finding: expire_snapshots used to delete the purge commit's
     log entry and with it the drops_rows marker — a post-purge compacted
     snapshot then won base selection and keys live at the cut silently
-    vanished. The durable sidecar watermark must turn that into an
-    explicit error."""
+    vanished. The post-purge compaction's seq_hi, carried by every later
+    snapshot log, must turn that into an explicit error."""
     eng = CdcEngine(spark, str(tmp_path / "asofe"), mode="mor", n_buckets=2)
     schema = (
         "seq long, op string, repo string, path string, commit string,"
@@ -596,7 +617,7 @@ def test_opcol_merge_without_deletes_keeps_asof_bases(spark, tmp_path):
     )
     snap = t.snapshot()
     assert "drops_rows" not in snap.summary
-    assert t.purge_watermark() is None
+    assert t.snapshot().seq_hi == 3
     t.compact()
     # the post-merge compacted snapshot qualifies as an as-of base
     got = {(r["k"], r["seq"]) for r in t.read_asof(3).collect()}
@@ -622,7 +643,6 @@ def test_noop_purge_commits_nothing(spark, tmp_path):
     v_before = eng.table.snapshot().version
     eng.purge_tombstones()  # nothing to purge
     assert eng.table.snapshot().version == v_before
-    assert eng.table.purge_watermark() is None
     eng.table.compact()
     eng.apply_batch(
         spark.createDataFrame(
@@ -635,10 +655,10 @@ def test_noop_purge_commits_nothing(spark, tmp_path):
 
 
 def test_legacy_purge_counted_at_expiry(spark, tmp_path):
-    """Review finding: legacy 'purge-' commits (pre-sidecar tables) were
-    never counted, so expiring them silently re-opened the
-    as-of-past-purge hole. expire_snapshots must fold them into the
-    sidecar so sub-watermark reads refuse loudly."""
+    """A purge committed without drop markers (as legacy 'purge-' commits
+    were) still raises every later snapshot's seq_hi, so once its log is
+    expired a read below that mark refuses loudly instead of serving a
+    post-purge base."""
     from etl_pipeline_rdf_star_spark.storage.lake import LakeTable
 
     t = LakeTable(spark, str(tmp_path / "leg"), key_cols=["k"], n_buckets=2)
@@ -655,10 +675,8 @@ def test_legacy_purge_counted_at_expiry(spark, tmp_path):
         spark.createDataFrame([("c", 4)], "k string, seq long"), "b1"
     )
     t.expire_snapshots(keep_last=2)  # drops create + legacy purge logs
-    wm = t.purge_watermark()
-    assert wm is not None and wm["n_purges"] >= 1
     with pytest.raises(ValueError):
-        t.read_asof(2).collect()  # sub-watermark: loud, not wrong
+        t.read_asof(2).collect()  # below seq_hi: loud, not wrong
 
 
 def test_purge_spares_reinserted_keys(spark, tmp_path):
@@ -704,10 +722,8 @@ def test_purge_spares_reinserted_keys(spark, tmp_path):
     }
     assert ("r1", "k.py", "c3") in live  # re-inserted row survived
     assert all(p != "d.py" for _, p, _ in live)
-    wm = eng.table.purge_watermark()
-    # the bound reflects the actually-purged tombstone (d.py@8), and the
-    # ledger keys by batch id
-    assert wm is not None and list(wm["counted"]) and wm["below_seq"] == 8
+    # the drop marker reflects the actually-purged tombstone (d.py@8)
+    assert eng.table.snapshot().summary["drops_rows_min"] == 8
 
 
 CHAOS_CHILD = '''

@@ -67,6 +67,16 @@ def test_bad_escape_fails_in_both_readers(bad):
         _turtle_object(bad)
 
 
+def test_non_ascii_digits_are_not_numbers_in_either_reader():
+    """Numbers are ASCII digits: Arabic-Indic digits are neither a Turtle
+    integer literal nor a SPARQL LIMIT count."""
+    digits = "\u0661\u0662"  # ARABIC-INDIC DIGIT ONE, TWO
+    with pytest.raises(TurtleParseError):
+        parse_turtle_text(f"<{EX}s> <{EX}p> {digits} .")
+    with pytest.raises(SparqlParseError):
+        parse_sparql(f"SELECT * WHERE {{ ?s ?p ?o }} LIMIT {digits}")
+
+
 def test_sparql_escape_finds_turtle_loaded_triple(spark, tmp_path):
     src = tmp_path / "ttl"
     src.mkdir()

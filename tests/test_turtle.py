@@ -301,6 +301,24 @@ def test_trig_block_final_statement_may_omit_dot():
     assert all(r["graph"] == "http://e/g" for r in rows)
 
 
+def test_generated_bnodes_never_take_a_document_label():
+    """'[ ]' and collection nodes get generated labels; an explicit
+    '_:genid1' later in the same document stays a different node."""
+    rows = parse_turtle_text(
+        '<http://e/s> <http://e/p> [ <http://e/q> "inner" ] .\n'
+        '_:genid1 <http://e/q> "other" .\n'
+        "<http://e/s> <http://e/r> (<http://e/a>) ."
+    )
+    by_subject: dict[str, set] = {}
+    for r in rows:
+        by_subject.setdefault(r["subject"], set()).add(r["object"])
+    assert by_subject["genid1"] == {"other"}  # explicit labels stay verbatim
+    inner = [r["object"] for r in rows if r["predicate"] == "http://e/p"]
+    assert inner != ["genid1"] and by_subject[inner[0]] == {"inner"}
+    blanks = {r["subject"] for r in rows if r["subject_kind"] == "blank"}
+    assert len(blanks) == 3  # '[ ]', '_:genid1' and the collection node
+
+
 def test_leading_dot_decimals():
     rows = parse_turtle_text(
         "@prefix ex: <http://e/> .\nex:s ex:p .5, -.25, 4.5e2 ."
