@@ -50,12 +50,12 @@ Endpoints:
   instead — the same divergence the oracle-green ``class_properties``
   corpus entry documents.
 
-The SPARQL dataset and the compiled-plan LRU are built once per
-``(table snapshot version, graph-store version)`` and replaced whole when
-either changes (see ``_SnapshotState``). The SQL temp views are registered
-by ``/query`` only, once per (table, batch ledger, metrics) version — the
-``batches`` views move with the ledger, not the table. ``GET /stats``
-reports both keys and the hit counts.
+The SPARQL dataset, the compiled-plan LRU and the result-document LRU are
+built once per ``(table snapshot version, graph-store version)`` and
+replaced whole when either changes (see ``_SnapshotState``). The SQL temp
+views are registered by ``/query`` only, once per (table, batch ledger,
+metrics) version — the ``batches`` views move with the ledger, not the
+table. ``GET /stats`` reports both keys and the hit counts.
 
 Temp views are session-global: run ONE QueryServer per SparkSession (or
 distinct ``register_views`` prefixes). A server re-registers its views
@@ -121,17 +121,39 @@ _RDF_EXTS = {
 
 class _SnapshotState:
     """What the server derives from one ``(table version, graph-store
-    version)`` key: the SPARQL dataset (built once, on first use) and the
-    compiled-plan LRU keyed on query text. A new key replaces the whole
-    state, so no plan or dataset of an older snapshot outlives it."""
+    version)`` key: the SPARQL dataset (built once, on first use), the
+    compiled-plan LRU keyed on query text, and the result-document LRU
+    keyed on ``(text, clamped limit)``. A repeat on the same key is
+    answered from its rendered document with no Spark job; the LRU holds
+    at most ``RESULT_CACHE_BINDINGS`` bindings (triples for CONSTRUCT,
+    one per document at least), and a larger document is not kept. Cached
+    documents are shared between requests and never mutated. A new key
+    replaces the whole state, so no plan, document or dataset of an older
+    snapshot outlives it."""
 
     PLAN_CACHE_SIZE = 128
+    RESULT_CACHE_BINDINGS = 50_000
 
     def __init__(self, key: tuple[int | None, int]):
         self.key = key
         self.dataset = None
         self.build_lock = threading.Lock()  # one dataset build per key
         self.plans: OrderedDict = OrderedDict()
+        self.results: OrderedDict = OrderedDict()  # key -> (doc, bindings)
+        self.result_bindings = 0
+
+    def keep_result(self, key: tuple[str, int], doc: dict) -> None:
+        """Cache ``doc`` under ``key``, evicting the least recently used
+        documents past the bindings bound. Call under the server's state
+        lock."""
+        body = doc.get("results", {}).get("bindings", doc.get("triples", ()))
+        n = max(1, len(body))
+        if n > self.RESULT_CACHE_BINDINGS or key in self.results:
+            return
+        self.results[key] = (doc, n)
+        self.result_bindings += n
+        while self.result_bindings > self.RESULT_CACHE_BINDINGS:
+            self.result_bindings -= self.results.popitem(last=False)[1][1]
 
 
 class QueryServer:
@@ -168,13 +190,21 @@ class QueryServer:
         self._snap_state: _SnapshotState | None = None
         self._views_key: tuple | None = None
         self._cache_stats = dict.fromkeys(
-            ("plan_hits", "plan_misses", "dataset_builds", "view_registrations"),
+            (
+                "plan_hits",
+                "plan_misses",
+                "result_hits",
+                "result_misses",
+                "dataset_builds",
+                "view_registrations",
+            ),
             0,
         )
-        # Guards the state swap, the plan LRU and the counters; held for
-        # a directory listing or a dict operation, never for a compile
-        # or a dataset build, so explorer panels only ever wait on the
-        # build of the dataset they need (see _state_dataset).
+        # Guards the state swap, the plan and result LRUs and the
+        # counters; held for a directory listing or a dict operation,
+        # never for a compile, a render or a dataset build, so explorer
+        # panels only ever wait on the build of the dataset they need
+        # (see _state_dataset).
         self._state_lock = threading.Lock()
         # Serializes SQL view registration WITH analysis. Views are
         # registered one by one; without the lock a concurrent /query
@@ -477,41 +507,60 @@ class QueryServer:
     def sparql(self, text: str, limit: int | None = None) -> dict[str, Any]:
         """SPARQL(-star) endpoint path: compile with queries.sparql and
         render the result document for the query's own form — the
-        reference's /query contract."""
+        reference's /query contract. A repeat of ``(text, limit)`` on
+        the same snapshot state returns the document rendered first (see
+        ``_SnapshotState``); the caller must not mutate it."""
         if not text.strip():
             raise ValueError("empty sparql query")
         from .queries.sparql import render_sparql_result
 
         lim = self._clamp_limit(limit)
-        form, df = self._compiled(self._state(), text)
-        return render_sparql_result(form, df, limit=lim)
+        st = self._state()
+        with self._state_lock:
+            hit = st.results.get((text, lim))
+            if hit is not None:
+                st.results.move_to_end((text, lim))  # LRU recency
+                self._cache_stats["result_hits"] += 1
+                return hit[0]
+            self._cache_stats["result_misses"] += 1
+        form, df, cacheable = self._compiled(st, text)
+        doc = render_sparql_result(form, df, limit=lim)
+        if cacheable:
+            with self._state_lock:
+                st.keep_result((text, lim), doc)
+        return doc
 
     def _compiled(self, st: _SnapshotState, text: str):
-        """(form, DataFrame) for a SPARQL text — LRU-cached per query
-        text in the snapshot state, so a serving endpoint replaying the
-        same query skips parse+compile (~0.1–0.2 s of driver-side work
-        per request at this corpus size), and a miss compiles against
-        the state's dataset instead of rebuilding it. The cached
-        DataFrame pins the snapshot it was built from; it dies with its
-        state, so a stale plan can never serve a newer table. The compile
-        holds no lock: two concurrent misses on one text both compile,
-        and the later plan wins the slot."""
+        """(form, DataFrame, cacheable) for a SPARQL text — LRU-cached
+        per query text in the snapshot state, so a serving endpoint
+        replaying the same query skips parse+compile (~0.1–0.2 s of
+        driver-side work per request at this corpus size), and a miss
+        compiles against the state's dataset instead of rebuilding it.
+        The cached DataFrame pins the snapshot it was built from; it dies
+        with its state, so a stale plan can never serve a newer table. A
+        text that calls RAND, UUID, STRUUID, NOW or BNODE is not
+        cacheable: its plan would freeze the values, so it compiles per
+        request and its result document is never cached either. The
+        compile holds no lock: two concurrent misses on one text both
+        compile, and the later plan wins the slot."""
         with self._state_lock:
             hit = st.plans.get(text)
             if hit is not None:
                 st.plans.move_to_end(text)  # LRU recency
                 self._cache_stats["plan_hits"] += 1
-                return hit
-        from .queries.sparql import parse_sparql, sparql_df
+                return (*hit, True)
+        from .queries.sparql import calls_volatile, parse_sparql, sparql_df
 
         q = parse_sparql(text)
         plan = (q.form, sparql_df(self._state_dataset(st), q))
+        cacheable = not calls_volatile(q)
         with self._state_lock:
-            st.plans[text] = plan
             self._cache_stats["plan_misses"] += 1
-            while len(st.plans) > st.PLAN_CACHE_SIZE:
-                st.plans.popitem(last=False)
-        return plan
+            if cacheable:
+                st.plans[text] = plan
+                while len(st.plans) > st.PLAN_CACHE_SIZE:
+                    st.plans.popitem(last=False)
+        return (*plan, cacheable)
 
     def _state_dataset(self, st: _SnapshotState):
         """The state's SPARQL dataset, built on first use. Concurrent
@@ -599,7 +648,8 @@ class QueryServer:
         is the graph store's latest version + 1, 0 before any load) and
         ``views_key`` the ``[table, batch ledger, metrics]`` versions the
         SQL views were last registered for (each null until first
-        used)."""
+        used). The ``plan_*`` and ``result_*`` counters are the SPARQL
+        plan and result caches' lifetime hits and misses."""
         with self._state_lock:
             st = self._snap_state
             vk = self._views_key
@@ -910,8 +960,8 @@ class QueryServer:
 
         import pyspark.sql.functions as F
 
-        # MERGE evaluates its source about three times; without the
-        # persist each evaluation would re-run the parse
+        # MERGE evaluates its source twice (three times with op_col);
+        # without the persist each evaluation would re-run the parse
         quads = quads.persist()
         try:
             graphs = sorted(

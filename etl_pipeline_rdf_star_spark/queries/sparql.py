@@ -56,6 +56,7 @@ reference query exercises.
 
 from __future__ import annotations
 
+import dataclasses
 import re
 from dataclasses import dataclass, field
 from typing import Any, NamedTuple
@@ -3178,6 +3179,28 @@ def _order_key(var: str) -> list[Column]:
 
 def parse_sparql(query: str) -> SelectQuery:
     return _Parser(query).parse()
+
+
+# SPARQL 1.1 §17.4: a new value per call, so a query that calls one must
+# run afresh per request, never from a cached plan or result
+_VOLATILE_FNS = frozenset({"rand", "uuid", "struuid", "now", "bnode"})
+
+
+def calls_volatile(node: Any) -> bool:
+    """True when a parsed query (or any node of one) calls RAND, UUID,
+    STRUUID, NOW or BNODE anywhere: WHERE, SELECT expressions,
+    aggregates, HAVING or a subquery."""
+    if isinstance(node, Expr) and node.op == "call":
+        if node.args[0] in _VOLATILE_FNS:
+            return True
+    if dataclasses.is_dataclass(node):
+        return any(
+            calls_volatile(getattr(node, f.name))
+            for f in dataclasses.fields(node)
+        )
+    if isinstance(node, (list, tuple)):
+        return any(calls_volatile(x) for x in node)
+    return False
 
 
 def sparql_df(ds: SparqlDataset, query: str | SelectQuery) -> DataFrame:

@@ -31,10 +31,11 @@ Scale design (the part that must survive 100 TB / 10^10 events):
   micro-batch touching k repos rewrites ≤ min(n_buckets, |keys|) buckets,
   not the table. File pruning is metadata-only (the log records each file's
   bucket, like an Iceberg manifest) — no directory listing, no full scan.
-* **The anti-join is bucket-local.** Survivor computation joins existing rows
-  of affected buckets against the batch's key set; AQE picks broadcast when
-  the micro-batch key set is small (the steady-state case — no shuffle of
-  table data) and falls back to shuffle join for table-sized replay batches.
+* **One key-aligned bucket rewrite.** MERGE and compaction write through
+  :meth:`LakeTable._rewrite`: ONE ``repartition(n_buckets, *key_cols)``
+  exchange (its partition id is the bucket id, so the write needs no
+  layout shuffle) and one per-key window. MERGE feeds it the affected
+  buckets' files unioned with the batch; the window picks survivors.
 * **No driver materialization** beyond the distinct bucket ids (≤ n_buckets
   integers) and file metadata.
 * **The table says how it reads.** A file that may hold several versions
@@ -128,7 +129,10 @@ class Snapshot:
     timestamp: float = 0.0
     # highest seq any commit up to this one wrote or dropped; None when
     # unknown (a file without seq stats, or a log older than the field)
+    # or when ``seq_empty``: no commit up to this one wrote or dropped a
+    # seq yet (a log without the key is not empty, so it stays unknown)
     seq_hi: int | None = None
+    seq_empty: bool = False
 
     @property
     def has_deltas(self) -> bool:
@@ -179,12 +183,9 @@ class LakeTable:
         self.key_cols = key_cols or []
         self.n_buckets = n_buckets
         # Committed snapshots are immutable (the CAS publish in _commit
-        # guarantees a version file is never replaced), so they cache
-        # safely for the instance's lifetime. Without this, every
-        # read_asof call re-reads O(retained versions) manifest JSONs
-        # driver-side (round-3 VERDICT "What's wrong" #2) — at streaming
-        # cadence with thousands of retained versions that's thousands
-        # of file reads per as-of query before any Spark work.
+        # never replaces a version file), so they cache for the
+        # instance's lifetime; without it every as-of read re-reads every
+        # retained manifest JSON before any Spark work.
         self._snap_cache: dict[int, Snapshot] = {}
         os.makedirs(os.path.join(path, _LOG_DIR), exist_ok=True)
 
@@ -384,10 +385,11 @@ class LakeTable:
 
         ``pre_bucketed``: the caller guarantees the frame is already
         partitioned so each task holds one bucket (``repartition(n_buckets,
-        *key_cols)`` upstream — see :meth:`_bucket_col`); the layout shuffle
-        is skipped. Safe even if the guarantee is violated: ``partitionBy``
-        splits by VALUE, so files land in the right bucket dirs regardless —
-        a lie costs extra small files, never correctness."""
+        *key_cols)`` upstream, as :meth:`_rewrite` does — see
+        :meth:`_bucket_col`); the layout shuffle is skipped. Safe even if
+        the guarantee is violated: ``partitionBy`` splits by VALUE, so
+        files land in the right bucket dirs regardless — a lie costs extra
+        small files, never correctness."""
         out = self._commit_dir(version)
         # _bucket stays a data column (read-time pruning is metadata-driven);
         # duplicate it as the physical partition dir for layout only.
@@ -442,6 +444,19 @@ class LakeTable:
             return df.withColumn("_bucket", F.lit(0))
         return df.withColumn("_bucket", self._bucket_col())
 
+    def _rewrite(
+        self, rows: DataFrame, version: int, resolve: Callable[[DataFrame], DataFrame]
+    ) -> list[dict[str, Any]]:
+        """The key-aligned bucket rewrite :meth:`merge` and :meth:`compact`
+        share: ONE ``repartition(n_buckets, *key_cols)`` exchange, then
+        ``resolve`` (a per-key window, planned without a second exchange
+        because the rows are already clustered by key), then a write that
+        skips the layout shuffle — the partition id is the bucket id."""
+        aligned = rows.repartition(self.n_buckets, *self.key_cols)
+        return self._write_data(
+            self._with_bucket(resolve(aligned)), version, pre_bucketed=True
+        )
+
     def _publish(
         self,
         batch_id: str,
@@ -479,12 +494,14 @@ class LakeTable:
         )
         # the high-water mark folds the head's, the files this commit
         # wrote and the seqs a row-dropping merge erased; unknown stays
-        # unknown
-        marks = [head.seq_hi] if head else []
+        # unknown, and with no mark at all the table is still empty
+        marks = [head.seq_hi] if head and not head.seq_empty else []
         marks += [f.get("seq_max") for f in snap.written_files() if f["rows"]]
         if summary.get("drops_rows"):
             marks.append(summary["drops_rows_max"])
-        if marks and None not in marks:
+        if not marks:
+            snap.seq_empty = True
+        elif None not in marks:
             snap.seq_hi = max(marks)
         self._commit(snap)
         return MergeStats(
@@ -523,11 +540,15 @@ class LakeTable:
         * single-row-per-key upsert is the special case;
         * multi-row-per-key payloads (triple-grain sinks) work identically —
           the J1 fan-out cardinality is preserved exactly;
-        * ``op_col``: rows with value 'D' only remove (CDC delete);
+        * a key with a null column never matches (an equi-join's rule):
+          its target rows stay and its ``src`` rows are inserted;
+        * ``op_col``: rows with value 'D' only remove (CDC delete); rows
+          with a null op only remove too;
         * ``order_col``: late-event guard — a source key whose existing
-          target rows carry a strictly higher ``order_col`` is ignored
-          (MERGE condition ``src.seq >= tgt.seq``), so out-of-order
-          micro-batches converge to the same final state;
+          target rows carry a strictly higher ``order_col`` than its own
+          highest is ignored (MERGE condition ``src.seq >= tgt.seq``), so
+          out-of-order micro-batches converge to the same final state;
+          null orders never make a key stale;
         * idempotent per ``batch_id`` (exactly-once under retries).
         """
         if not self.exists():
@@ -556,13 +577,10 @@ class LakeTable:
         """:meth:`merge`'s data step: rewrite the affected buckets."""
         drop_stats: dict[str, Any] = {}
         if op_col:
-            # stats over the D rows on the RAW batch, before the stale-key
-            # anti-join below — one src-only pass instead of re-evaluating
-            # the bucket-read join plan per call.
-            # Conservative: a D row later discarded as stale still marks
-            # the commit; over-marking costs as-of base availability,
-            # never correctness. An op_col batch with NO D rows drops
-            # nothing and is not marked at all.
+            # stats over the D rows of the RAW batch, in one src-only
+            # pass. Conservative: a D row the stale check discards still
+            # marks the commit, which costs as-of base availability,
+            # never correctness; a batch with NO D rows is not marked.
             dd = src.where(F.col(op_col) == "D")
             if _ORDER in src.columns:
                 r = dd.agg(
@@ -597,37 +615,39 @@ class LakeTable:
         existing = self.read_buckets(affected, head)
         if order_col and order_col not in existing.columns:
             order_col = None
+        # One window over the affected buckets' rows and the batch decides
+        # per key: matched (no null key column, a batch row present) and
+        # stale (the stored max order beats the batch's). An existing row
+        # survives unless its key matched and is not stale; a batch row is
+        # written unless its key is stale or its op is 'D' or null.
+        # unionByName(allowMissingColumns=True) evolves the schema both
+        # ways and keeps the existing column order.
+        w = Window.partitionBy(*self.key_cols)
+        new, key_ok = F.col("_new"), F.lit(True)
+        for c in self.key_cols:
+            key_ok &= F.col(c).isNotNull()
+        matched = key_ok & F.max(new).over(w)
+        stale = F.lit(False)
         if order_col:
-            # keys where the table already holds a newer version than the
-            # best this batch offers — those src rows are stale; drop them.
-            # NOTE: broadcast-probe only — existing is scanned once, never
-            # shuffled (an existing-side groupBy here would shuffle O(bucket
-            # data) per micro-batch, which kills sustained throughput).
-            src_max = src.groupBy(*self.key_cols).agg(
-                F.max(order_col).alias("_src_ord")
+            old_top, new_top = (
+                F.max(F.when(side, F.col(order_col))).over(w) for side in (~new, new)
             )
-            # no explicit broadcast hint: AQE broadcasts when the batch key
-            # set is small and falls back to shuffle join when a replay
-            # batch is table-sized (a driver-built broadcast of a huge batch
-            # serializes on the driver and flatlines scaling)
-            stale_keys = (
-                existing.join(src_max, on=self.key_cols, how="inner")
-                .where(F.col(order_col) > F.col("_src_ord"))
-                .select(*self.key_cols)
-                .distinct()
-            )
-            src = src.join(stale_keys, on=self.key_cols, how="left_anti")
-        keys = src.select(*self.key_cols).distinct()
-        survivors = existing.join(keys, on=self.key_cols, how="left_anti")
-
-        inserts = src
+            stale = key_ok & F.coalesce(old_top > new_top, F.lit(False))
+        written = ~F.col("_stale")
         if op_col:
-            inserts = inserts.where(F.col(op_col) != "D").drop(op_col)
-        merged = survivors.unionByName(
-            inserts, allowMissingColumns=True
-        ) if survivors.columns != inserts.columns else survivors.unionByName(inserts)
-        # schema evolution the other direction (src missing old cols) is
-        # handled by unionByName(allowMissingColumns=True) null-filling.
+            written &= F.coalesce(F.col(op_col) != "D", F.lit(False))
+        survives = ~F.col("_matched") | F.col("_stale")
+        helpers = ["_new", "_matched", "_stale"] + ([op_col] if op_col else [])
+        rows = existing.withColumn("_new", F.lit(False)).unionByName(
+            src.withColumn("_new", F.lit(True)), allowMissingColumns=True
+        )
+
+        def resolve(df: DataFrame) -> DataFrame:
+            return (
+                df.withColumns({"_matched": matched, "_stale": stale})
+                .where(F.when(new, written).otherwise(survives))
+                .drop(*helpers)
+            )
 
         # a rewritten bucket may hold several versions of a key only if a
         # file it replaces did (purge_tombstones on an uncompacted MoR
@@ -635,11 +655,11 @@ class LakeTable:
         deltas = {f["bucket"] for f in head.files if f.get("delta")}
         files = [
             {**f, "delta": True} if f["bucket"] in deltas else f
-            for f in self._write_data(merged, version)
+            for f in self._rewrite(rows, version, resolve)
         ]
         keep = [f for f in head.files if f["bucket"] not in set(affected)]
         summary = {"affected_buckets": sorted(affected), **drop_stats}
-        return keep + files, merged.drop("_bp").schema, summary
+        return keep + files, rows.drop(*helpers).schema, summary
 
     def append_rows(
         self, rows: list[dict[str, Any]], schema: StructType, batch_id: str
@@ -725,8 +745,8 @@ class LakeTable:
         from its log alone (no Spark job, no scan of older versions). A
         purge that drops the newest event's tombstone, or the expiry of
         every version that listed it, leaves the mark as it was. None for
-        a table with no snapshot or an unknown mark (see
-        :class:`Snapshot`)."""
+        a table with no snapshot, no seq written yet or an unknown mark
+        (see :class:`Snapshot`)."""
         return self.snapshot().seq_hi if self.exists() else None
 
     def read_asof(self, seq_cut: int) -> DataFrame:
@@ -780,31 +800,24 @@ class LakeTable:
         if not vs:
             raise FileNotFoundError(f"lake table {self.path} has no snapshots")
         snaps = {v: self.snapshot(v) for v in vs}
-        base_v = None
-        for v in vs:
-            s = snaps[v]
-            if (
-                s.operation == "compact"
-                and s.seq_hi is not None
-                and s.seq_hi <= seq_cut
-            ):
-                base_v = v
+        bases = [
+            v for v in vs
+            if snaps[v].operation == "compact"
+            and snaps[v].seq_hi is not None
+            and snaps[v].seq_hi <= seq_cut
+        ]
+        base_v = bases[-1] if bases else None
         if base_v is None and vs[0] != 0:
             raise ValueError(
                 f"as-of {seq_cut} predates retained history of {self.path} "
                 "(no qualifying compacted snapshot and early versions expired)"
             )
-        # Plain COW merges with op='D' rows erase their victims WITHOUT
-        # leaving a tombstone anywhere in the log, so a read at/above the
-        # first delete seq served from a base BEFORE that commit would
-        # resurrect the victims from older commits' immutable files.
-        # Reads strictly below the commit's min delete seq predate every
-        # erasure and stay servable; commits at/below the base are
-        # invisible (the base snapshot's file list already reflects their
-        # erasures, and its seq_hi, which folds their delete seqs, is ≤
-        # the cut). Expired drop commits need no check here: expiry
-        # implies a base (base_v is None forces vs[0] == 0, i.e. full
-        # history) later than them, which the same fold covers.
+        # Plain COW merges with op='D' rows erase their victims WITHOUT a
+        # tombstone, so a read at/above the first delete seq served from
+        # an earlier base would resurrect them from older immutable files;
+        # reads strictly below it stay servable. Commits at/below the base
+        # (and expired ones, which imply a later base) are covered: the
+        # base's files reflect their erasures and its seq_hi ≤ the cut.
         for v, m in self._cow_delete_mins(vs, snaps, base_v):
             if m is None or seq_cut >= int(m):
                 raise ValueError(
@@ -867,16 +880,11 @@ class LakeTable:
                     f"as-of/changefeed read unsupported over "
                     f"'{s.operation}' commit v{v}"
                 )
-            # Rewriting COW merges (incl. purge_tombstones) are safe to
-            # include rather than refuse (review finding: a purge
-            # committed entirely AFTER the cut used to break previously
-            # valid as-of reads): the rows they REMOVED still exist in the
-            # earlier commits' files read by this very loop (files are
-            # immutable until expire_snapshots — and expired history
-            # already raises above), and the rows they carry over are
-            # byte-identical duplicates that max-seq resolution collapses.
-            # Their own batch's events are kept iff ≤ the cut, like any
-            # delta.
+            # Rewriting COW merges (purge_tombstones included) are walked,
+            # not refused: the rows they removed still sit in earlier
+            # commits' immutable files this loop reads, the rows they carry
+            # over are duplicates max-seq resolution collapses, and their
+            # own batch's events are kept iff ≤ the cut, like any delta.
             for f in s.written_files():
                 lo = f.get("seq_min")
                 if lo is not None and lo > hi_incl:
@@ -945,28 +953,19 @@ class LakeTable:
         Keys that churn entirely inside the window (insert→delete) net to
         nothing and are not emitted, matching net-change CDF semantics.
 
-        Bounded work, the property the existing state-diff queries
-        (anti/semi-join of two as-of states) cannot give: the window scan
-        reads ONLY manifest-pruned delta files overlapping (lo, hi] —
-        O(window events), not O(live state) — and prior-state
-        classification touches the big side once via two broadcasts of the
-        (small) window key set: a broadcast semi-join filters the as-of(lo)
-        state to window keys, and that bounded result is broadcast back
-        into the left join. Assumes the incremental-consumer regime
-        |window| ≪ |state|; a full-history window degenerates to the diff
-        queries' cost, not worse.
+        Bounded work: the window scan reads ONLY manifest-pruned delta
+        files overlapping (lo, hi] — O(window events), not O(live state) —
+        and prior-state classification touches the big side once, through
+        a broadcast semi-join with the (small) window key set whose result
+        is broadcast back into the left join. Assumes |window| ≪ |state|;
+        a full-history window costs what a diff of two as-of states does.
 
-        Requires a MoR table (per-event delta rows + tombstones retained);
-        COW merges rewrite state in place, so deletes would be silently
-        invisible — refused instead (both the schema-level check for
-        tombstone-free tables and a per-commit check for row-dropping COW
-        merges whose victims could reach into the window; purge/compact
-        rewrites are exempt because the rows they drop still pre-exist in
-        earlier walked commits' immutable files). Soundness at ``lo_cut``
-        (purge/expiry interplay) is enforced by the shared as-of base
-        plan; window events above lo live in retained commits after the
-        base, where purge rewrites only ever add byte-identical
-        duplicates that max-seq resolution collapses."""
+        Requires a MoR table (per-event delta rows + tombstones retained):
+        COW merges erase deletes in place, so tombstone-free tables and
+        row-dropping COW merges that reach into the window are refused
+        (purge/compact rewrites are exempt: the rows they drop still sit
+        in earlier walked commits' files). Soundness at ``lo_cut`` is the
+        shared as-of base plan's."""
         if lo_cut >= hi_cut:
             raise ValueError(
                 f"read_changes needs lo_cut < hi_cut, got ({lo_cut}, {hi_cut})"
@@ -980,16 +979,10 @@ class LakeTable:
                 "physically, so a changefeed over them would silently "
                 "miss them"
             )
-        # A plain COW merge with op='D' rows physically erases keys — the
-        # delete event never lands in any file, so a window reaching the
-        # commit's first delete seq either contains an unreconstructable
-        # 'delete' change (delete seq in the window) or needs prior state
-        # at/after an erasure (delete seq ≤ lo, which _asof_base_plan
-        # already refused above unless a post-delete base absorbed it).
-        # Windows entirely BELOW the first delete seq predate every
-        # erasure and serve from immutable pre-delete files (review
-        # finding: the old lo-only bound both accepted unsound windows
-        # after the delete and refused sound ones before it).
+        # A plain COW merge with op='D' rows erases keys without a
+        # tombstone, so a window reaching the commit's first delete seq
+        # holds a 'delete' change no file records; windows entirely BELOW
+        # it predate every erasure and serve from pre-delete files.
         for v, m in self._cow_delete_mins(vs, snaps, base_v):
             if m is None or hi_cut >= int(m):
                 raise ValueError(
@@ -1036,12 +1029,19 @@ class LakeTable:
         """Fold MoR deltas: rewrite the table as one resolved version per
         key, tombstones included (``CdcEngine.purge_tombstones`` drops
         them once the watermark allows). Equivalent to Iceberg's
-        rewrite_data_files maintenance action. The files it writes are not
-        delta files, so reads of the result need no resolution."""
+        rewrite_data_files maintenance action, through the one-exchange
+        :meth:`_rewrite` (its window keeps the newest row per key when the
+        snapshot lists a delta file). The files it writes are not delta
+        files, so reads of the result need no resolution."""
 
         def stage(head: Snapshot, version: int):
-            resolved = self.read_resolved(head.version, keep_deleted=True)
-            files = self._write_data(self._with_bucket(resolved), version)
+            rows = self.read(head.version)
+            fold = head.has_deltas and _ORDER in rows.columns
+
+            def resolve(df: DataFrame) -> DataFrame:
+                return latest_per_key(df, self.key_cols) if fold else df
+
+            files = self._rewrite(rows, version, resolve)
             return files, self._schema(head), {}  # replaces ALL files
 
         bid = batch_id or f"compact-{self.snapshot().version}"
