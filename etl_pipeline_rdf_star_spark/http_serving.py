@@ -951,17 +951,18 @@ class QueryServer:
         graph: MERGE matches keys with an equi-join, which never matches
         a null graph. MERGE replaces every stored row whose key the
         source carries, so a load replaces exactly its own graphs and
-        keeps the rest. ``replace_all`` (reload) adds one delete row per
-        stored graph, so graphs the quads do not carry are dropped.
-        Readers resolve the latest version at plan time, and a commit
-        never deletes a file an older version lists, so in-flight scans
-        and retained DataFrames stay valid."""
+        keeps the rest. ``replace_all`` (reload) commits an overwrite
+        instead, whose file list is only the quads. Readers resolve the
+        latest version at plan time, and a commit never deletes a file
+        an older version lists, so in-flight scans and retained
+        DataFrames stay valid."""
         import tempfile
 
         import pyspark.sql.functions as F
 
-        # MERGE evaluates its source twice (three times with op_col);
-        # without the persist each evaluation would re-run the parse
+        # the graph listing and the write (MERGE: its bucket listing and
+        # rewrite) each evaluate the source; without the persist each
+        # evaluation would re-run the parse
         quads = quads.persist()
         try:
             graphs = sorted(
@@ -976,20 +977,12 @@ class QueryServer:
                     )
                     self._graphs = self._open_graph_table(self.graph_store)
                 t = self._graphs
-                op_col = None
+                # batch ids must be unique: a commit skips one it has seen
+                bid = f"load-{self._graph_version()}"
                 if replace_all:
-                    # every new quad says 'I': MERGE inserts the rows
-                    # whose op is not 'D', which a null op never is
-                    op_col = "_op"
-                    src = src.withColumn(op_col, F.lit("I"))
-                    if t.exists():
-                        gone = t.read().select("_g").distinct()
-                        src = src.unionByName(
-                            gone.withColumn(op_col, F.lit("D")),
-                            allowMissingColumns=True,
-                        )
-                # batch ids must be unique: MERGE skips one it has seen
-                t.merge(src, f"load-{self._graph_version()}", op_col=op_col)
+                    t.overwrite(src, bid)
+                else:
+                    t.merge(src, bid)
         finally:
             quads.unpersist()
         return graphs
@@ -1036,7 +1029,8 @@ class QueryServer:
     def reload_graphs_doc(self) -> dict:
         """POST /api/graphs/reload (rdf-workbench.py:691-714): replace the
         whole graph store with every supported file under input_dir, each
-        loaded into its path-derived named graph, in one new version."""
+        loaded into its path-derived named graph, in one new version: an
+        overwrite commit whose files hold only the reloaded quads."""
         if not self.input_dir:
             raise HttpError(400, "no input_dir configured on this server")
         frames = []

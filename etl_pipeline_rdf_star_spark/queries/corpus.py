@@ -18,6 +18,9 @@ values after sorting columns by name).
 
 from __future__ import annotations
 
+import functools
+import glob
+import hashlib
 import os
 import shutil
 import tempfile
@@ -38,11 +41,29 @@ SEP = "\x1f"  # chr(31) — unit separator used in reifier fingerprints
 # shared building blocks
 # ---------------------------------------------------------------------------
 
-# Bump when ingest/materialization logic changes: invalidates cached
-# serving warehouses built by older code.
-# r7: manifests mark delta files, and read_resolved windows only over them
-# r8: snapshot logs carry seq_hi; as-of bases need it
-_WH_TAG = "r8"
+_PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+@functools.lru_cache(maxsize=None)
+def _source_digest(root: str) -> str:
+    """sha256 prefix over every ``.py`` file under ``root`` (paths and
+    bytes): the cached serving warehouses are named by it, so a build is
+    reused only by the code that wrote it."""
+    h = hashlib.sha256()
+    for fp in sorted(glob.glob(os.path.join(root, "**", "*.py"), recursive=True)):
+        h.update(os.path.relpath(fp, root).encode() + b"\0")
+        with open(fp, "rb") as fh:
+            h.update(fh.read() + b"\0")
+    return h.hexdigest()[:16]
+
+
+def _cache_dir(name: str, sf_dir: str) -> str:
+    """``$TMPDIR/{name}_{source digest}/{sf_dir's basename}``."""
+    return os.path.join(
+        tempfile.gettempdir(),
+        f"{name}_{_source_digest(_PKG_ROOT)}",
+        os.path.basename(os.path.normpath(sf_dir)),
+    )
 
 
 def serving_warehouse(spark: SparkSession, sf_dir: str) -> str:
@@ -52,7 +73,8 @@ def serving_warehouse(spark: SparkSession, sf_dir: str) -> str:
     final state from the raw event log (full row_number shuffle) per call —
     at scale that replays the whole log per serving query. Now the log is
     ingested ONCE (MoR replay + compaction) into a bucketed lake table under
-    a content-tagged temp dir, and queries do pruned parquet scans. The
+    a temp dir named by the package's source digest (:func:`_cache_dir`),
+    and queries do pruned parquet scans. The
     DuckDB oracles still recompute from the log SQL-side, so CORRECTNESS
     now also proves the stored table equals the replayed log.
 
@@ -60,9 +82,8 @@ def serving_warehouse(spark: SparkSession, sf_dir: str) -> str:
     ready, atomically rename into place; a lost race falls back to the
     winner's table (content is deterministic).
     """
-    base = os.path.join(tempfile.gettempdir(), f"rdfstar_serving_{_WH_TAG}")
-    os.makedirs(base, exist_ok=True)
-    final = os.path.join(base, os.path.basename(os.path.normpath(sf_dir)))
+    final = _cache_dir("rdfstar_serving", sf_dir)
+    os.makedirs(os.path.dirname(final), exist_ok=True)
     marker = os.path.join(final, "_READY")
     if os.path.exists(marker):
         return final
@@ -837,11 +858,7 @@ def q_sparql_update_archive(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.cdc import CdcEngine
 
     src = serving_warehouse(spark, sf_dir)
-    dst = os.path.join(
-        tempfile.gettempdir(),
-        f"rdfstar_upd_{_WH_TAG}",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    dst = _cache_dir("rdfstar_upd", sf_dir)
     if not os.path.exists(os.path.join(dst, "_READY")):
         build = f"{dst}.build-{uuid.uuid4().hex}"
         shutil.copytree(src, build)

@@ -484,7 +484,7 @@ class _Parser:
             # ASK takes solution modifiers + a ValuesClause in the 1.1
             # grammar; skipping this silently ignored a trailing VALUES
             # (review finding)
-            self._modifiers(q)
+            _parse_modifiers(self, q)
             return q
         if tok == ("kw", "describe"):
             # SPARQL 1.1 §16.4: DESCRIBE (VarOrIri+ | '*') DatasetClause*
@@ -526,7 +526,7 @@ class _Parser:
                 if nxt == ("kw", "where"):
                     self.lx.next()
                 q.where = self._group()
-            self._modifiers(q)
+            _parse_modifiers(self, q)
             if not q.where.patterns:
                 if star:
                     raise SparqlParseError("DESCRIBE * requires WHERE")
@@ -544,7 +544,7 @@ class _Parser:
             _parse_dataset_clauses(self, q)
             self.lx.expect("kw", "where")
             q.where = self._group()
-            self._modifiers(q)
+            _parse_modifiers(self, q)
             return q
         raise SparqlUnsupported(f"unsupported query form {tok!r}")
 
@@ -3289,8 +3289,9 @@ def sparql_df(ds: SparqlDataset, query: str | SelectQuery) -> DataFrame:
 def _slice_solutions(
     planner: "_Planner", q: SelectQuery, df: DataFrame
 ) -> DataFrame:
-    """Apply ORDER BY / OFFSET / LIMIT to a solution sequence (shared by
-    CONSTRUCT and DESCRIBE, which slice solutions before instantiation)."""
+    """Apply ORDER BY / OFFSET / LIMIT to a solution sequence: SELECT's
+    last step, and CONSTRUCT's and DESCRIBE's before instantiation. An
+    ORDER BY expression compiles as FILTER/BIND expressions do."""
     if q.order_by:
         keys = []
         for item, desc in q.order_by:
@@ -3576,24 +3577,9 @@ def _select_frame(
         ).drop(*ids)
     elif q.distinct:
         df = df.distinct()
-    if q.order_by:
-        keys = []
-        for item, desc in q.order_by:
-            if isinstance(item, Expr):
-                # ORDER BY expression: compiled the same way FILTER/BIND
-                # expressions are; it may only reference projected vars
-                # (the frame is already projected — same limitation as
-                # variable order keys)
-                order_cols = [planner._expr_col(item, df)]
-            else:
-                order_cols = _order_key(item)
-            for k in order_cols:
-                keys.append(k.desc() if desc else k.asc())
-        df = df.orderBy(*keys)
-    if q.offset:
-        df = df.offset(q.offset)
-    if q.limit is not None:
-        df = df.limit(q.limit)
+    # ORDER BY keys may only reference projected vars: the frame is
+    # already projected
+    df = _slice_solutions(planner, q, df)
     return df, maybe & set(df.columns)
 
 
@@ -3888,9 +3874,4 @@ def _pattern_vars(g: Group) -> set[str]:
     return out
 
 
-def _modifiers(self: _Parser, q: SelectQuery) -> None:
-    _parse_modifiers(self, q)
-
-
 _Parser._select = _select
-_Parser._modifiers = _modifiers

@@ -6,22 +6,29 @@ row-level-update v2 source built in. So we implement the exact subset of
 Iceberg semantics the engine needs — snapshot log, key-bucketed copy-on-write
 MERGE, time travel, in-place schema evolution (add columns), commit-level
 idempotence — over parquet + a JSON transaction log. The engine talks to this
-class only through ``create / merge / merge_mor / append_rows / read``; on a
-real cluster the same calls map 1:1 to Iceberg:
+class only through ``create / merge / merge_mor / append_rows / read /
+purge_tombstones / overwrite``; on a real cluster the same calls map 1:1 to
+Iceberg:
 
 =====================  =====================================================
 LakeTable call          Iceberg equivalent
 =====================  =====================================================
 create(df)              CREATE TABLE ... PARTITIONED BY (bucket(N, key))
 merge(src, batch_id)    MERGE INTO t USING src ON t.k=s.k
-                        WHEN MATCHED AND op='D' THEN DELETE
                         WHEN MATCHED THEN UPDATE SET * / DELETE+INSERT
                         WHEN NOT MATCHED THEN INSERT *
+purge_tombstones()      DELETE FROM t WHERE <key's newest row is a
+                        tombstone> (copy-on-write: delete by rewrite)
+overwrite(df, ...)      INSERT OVERWRITE t SELECT * FROM df
 append_rows(rows, ...)  INSERT INTO ... VALUES (commit property batch_id)
 read(version=v)         SELECT ... VERSION AS OF v
 schema evolution        ALTER TABLE ADD COLUMN (merge-on-write here)
 committed batch ids     snapshot summary props (exactly-once foreachBatch)
 =====================  =====================================================
+
+A delete is a tombstone row like any other version of its key: rows
+leave the table only when whole buckets (merge, compaction, purge) or the
+whole table (overwrite) are rewritten.
 
 Scale design (the part that must survive 100 TB / 10^10 events):
 
@@ -31,11 +38,13 @@ Scale design (the part that must survive 100 TB / 10^10 events):
   micro-batch touching k repos rewrites ≤ min(n_buckets, |keys|) buckets,
   not the table. File pruning is metadata-only (the log records each file's
   bucket, like an Iceberg manifest) — no directory listing, no full scan.
-* **One key-aligned bucket rewrite.** MERGE and compaction write through
-  :meth:`LakeTable._rewrite`: ONE ``repartition(n_buckets, *key_cols)``
-  exchange (its partition id is the bucket id, so the write needs no
-  layout shuffle) and one per-key window. MERGE feeds it the affected
-  buckets' files unioned with the batch; the window picks survivors.
+* **One key-aligned bucket rewrite.** MERGE, compaction and tombstone
+  purge write through :meth:`LakeTable._rewrite`: ONE
+  ``repartition(n_buckets, *key_cols)`` exchange (its partition id is the
+  bucket id, so the write needs no layout shuffle) and one per-key
+  window. MERGE feeds it the affected buckets' files unioned with the
+  batch, purge the files of the buckets holding a dead key; the window
+  picks survivors.
 * **No driver materialization** beyond the distinct bucket ids (≤ n_buckets
   integers) and file metadata.
 * **The table says how it reads.** A file that may hold several versions
@@ -46,11 +55,11 @@ Scale design (the part that must survive 100 TB / 10^10 events):
   already-committed batch is a metadata-only no-op. Combined with Structured
   Streaming's checkpointed batch ids this gives end-to-end exactly-once.
 * **One high-water mark per snapshot.** Each snapshot log carries
-  ``seq_hi``, the highest ``seq`` any commit up to it wrote or dropped,
-  computed inside the atomic commit. It is the table's head event
+  ``seq_hi``, the highest ``seq`` any commit up to it wrote, computed
+  inside the atomic commit. It is the table's head event
   (:meth:`LakeTable.max_order`) and the as-of soundness state: a
   compaction serves as an as-of base only for cuts at or above it, so
-  rows a purge or a COW delete erased above the cut are never lost.
+  rows a purge erased above the cut are never lost.
   Expiring old logs loses nothing, since every later log carries the mark.
 * **Skew.** Hot keys (``repo_0`` holds ~21% of files in the synthetic input)
   are spread across buckets because bucketing hashes the *full* key
@@ -127,10 +136,10 @@ class Snapshot:
     committed_batches: list[str]
     summary: dict[str, Any] = field(default_factory=dict)
     timestamp: float = 0.0
-    # highest seq any commit up to this one wrote or dropped; None when
-    # unknown (a file without seq stats, or a log older than the field)
-    # or when ``seq_empty``: no commit up to this one wrote or dropped a
-    # seq yet (a log without the key is not empty, so it stays unknown)
+    # highest seq any commit up to this one wrote; None when unknown (a
+    # file without seq stats, or a log older than the field) or when
+    # ``seq_empty``: no commit up to this one wrote a seq yet (a log
+    # without the key is not empty, so it stays unknown)
     seq_hi: int | None = None
     seq_empty: bool = False
 
@@ -492,13 +501,11 @@ class LakeTable:
             summary={"batch_id": batch_id, **summary},
             timestamp=time.time(),
         )
-        # the high-water mark folds the head's, the files this commit
-        # wrote and the seqs a row-dropping merge erased; unknown stays
-        # unknown, and with no mark at all the table is still empty
+        # the high-water mark folds the head's and the files this commit
+        # wrote (a row a rewrite drops was written, and marked, earlier);
+        # unknown stays unknown, and with no mark the table is still empty
         marks = [head.seq_hi] if head and not head.seq_empty else []
         marks += [f.get("seq_max") for f in snap.written_files() if f["rows"]]
-        if summary.get("drops_rows"):
-            marks.append(summary["drops_rows_max"])
         if not marks:
             snap.seq_empty = True
         elif None not in marks:
@@ -515,35 +522,48 @@ class LakeTable:
         """First commit of a table. If another writer created the table
         first, raises ConcurrentCommitError (a retry of this same create is
         a no-op)."""
+        return self._publish(batch_id, "create", self._replace_stage(df))
+
+    def overwrite(self, df: DataFrame, batch_id: str) -> MergeStats:
+        """INSERT OVERWRITE: one commit whose file list is only ``df``'s
+        rows (the table is created when missing). Files of earlier
+        versions stay on disk for the versions that list them; an as-of
+        read across the commit is refused (:meth:`_delta_file_walk`)."""
+        return self._publish(
+            batch_id, "overwrite", self._replace_stage(df, replaces=True)
+        )
+
+    def _replace_stage(self, df: DataFrame, replaces: bool = False):
+        """The stage of :meth:`create` and :meth:`overwrite`: write ``df``
+        as the table's only files, under ``df``'s schema."""
         df = self._with_bucket(df)
 
         def stage(head: Snapshot | None, version: int):
-            if head is not None:
+            if head is not None and not replaces:
                 raise ConcurrentCommitError(
                     f"lake table {self.path} already exists"
                 )
             return self._write_data(df, version), df.schema, {}
 
-        return self._publish(batch_id, "create", stage)
+        return stage
 
     def merge(
         self,
         src: DataFrame,
         batch_id: str,
-        op_col: str | None = None,
         order_col: str | None = None,
         affected_buckets: list[int] | None = None,
     ) -> MergeStats:
         """Key-replacement MERGE: all target rows whose key appears in
-        ``src`` are removed, then ``src`` rows (minus deletes) are inserted.
+        ``src`` are removed, then ``src`` rows are inserted. A delete is
+        not a separate path: the CDC sink upserts it as a tombstone row,
+        and :meth:`purge_tombstones` drops dead keys later.
 
         * single-row-per-key upsert is the special case;
         * multi-row-per-key payloads (triple-grain sinks) work identically —
           the J1 fan-out cardinality is preserved exactly;
         * a key with a null column never matches (an equi-join's rule):
           its target rows stay and its ``src`` rows are inserted;
-        * ``op_col``: rows with value 'D' only remove (CDC delete); rows
-          with a null op only remove too;
         * ``order_col``: late-event guard — a source key whose existing
           target rows carry a strictly higher ``order_col`` than its own
           highest is ignored (MERGE condition ``src.seq >= tgt.seq``), so
@@ -552,8 +572,6 @@ class LakeTable:
         * idempotent per ``batch_id`` (exactly-once under retries).
         """
         if not self.exists():
-            if op_col:
-                src = src.where(F.col(op_col) != "D").drop(op_col)
             return self.create(src, batch_id)
 
         src = self._with_bucket(src)
@@ -561,7 +579,7 @@ class LakeTable:
             batch_id,
             "merge",
             lambda head, version: self._merge_stage(
-                head, version, src, op_col, order_col, affected_buckets
+                head, version, src, order_col, affected_buckets
             ),
         )
 
@@ -570,41 +588,10 @@ class LakeTable:
         head: Snapshot,
         version: int,
         src: DataFrame,
-        op_col: str | None,
         order_col: str | None,
         affected_buckets: list[int] | None,
     ) -> tuple[list, StructType, dict]:
         """:meth:`merge`'s data step: rewrite the affected buckets."""
-        drop_stats: dict[str, Any] = {}
-        if op_col:
-            # stats over the D rows of the RAW batch, in one src-only
-            # pass. Conservative: a D row the stale check discards still
-            # marks the commit, which costs as-of base availability,
-            # never correctness; a batch with NO D rows is not marked.
-            dd = src.where(F.col(op_col) == "D")
-            if _ORDER in src.columns:
-                r = dd.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.max(_ORDER).alias("m"),
-                    F.min(_ORDER).alias("lo"),
-                ).first()
-                n_d, max_d, min_d = int(r["n"]), r["m"], r["lo"]
-            else:
-                n_d, max_d, min_d = dd.limit(1).count(), None, None
-            if n_d:
-                drop_stats = {
-                    "drops_rows": True,
-                    # min delete seq: as-of/changefeed reads strictly BELOW
-                    # it are untouched by this commit's erasures (the
-                    # victims were all still live), so they stay servable
-                    "drops_rows_min": (
-                        int(min_d) if min_d is not None else None
-                    ),
-                    # max delete seq: folded into the snapshot's seq_hi
-                    "drops_rows_max": (
-                        int(max_d) if max_d is not None else None
-                    ),
-                }
         # ≤ n_buckets ints — the only driver-side collect; callers that
         # already aggregated per-bucket stats pass the list in and save a job
         affected = (
@@ -619,7 +606,7 @@ class LakeTable:
         # per key: matched (no null key column, a batch row present) and
         # stale (the stored max order beats the batch's). An existing row
         # survives unless its key matched and is not stale; a batch row is
-        # written unless its key is stale or its op is 'D' or null.
+        # written unless its key is stale.
         # unionByName(allowMissingColumns=True) evolves the schema both
         # ways and keeps the existing column order.
         w = Window.partitionBy(*self.key_cols)
@@ -633,11 +620,8 @@ class LakeTable:
                 F.max(F.when(side, F.col(order_col))).over(w) for side in (~new, new)
             )
             stale = key_ok & F.coalesce(old_top > new_top, F.lit(False))
-        written = ~F.col("_stale")
-        if op_col:
-            written &= F.coalesce(F.col(op_col) != "D", F.lit(False))
         survives = ~F.col("_matched") | F.col("_stale")
-        helpers = ["_new", "_matched", "_stale"] + ([op_col] if op_col else [])
+        helpers = ["_new", "_matched", "_stale"]
         rows = existing.withColumn("_new", F.lit(False)).unionByName(
             src.withColumn("_new", F.lit(True)), allowMissingColumns=True
         )
@@ -645,21 +629,72 @@ class LakeTable:
         def resolve(df: DataFrame) -> DataFrame:
             return (
                 df.withColumns({"_matched": matched, "_stale": stale})
-                .where(F.when(new, written).otherwise(survives))
+                .where(F.when(new, ~F.col("_stale")).otherwise(survives))
                 .drop(*helpers)
             )
 
-        # a rewritten bucket may hold several versions of a key only if a
-        # file it replaces did (purge_tombstones on an uncompacted MoR
-        # table carries other keys' versions forward)
+        files = self._rewrite_buckets(head, version, affected, rows, resolve)
+        return files, rows.drop(*helpers).schema, {"affected_buckets": sorted(affected)}
+
+    def _rewrite_buckets(
+        self,
+        head: Snapshot,
+        version: int,
+        buckets: list[int],
+        rows: DataFrame,
+        resolve: Callable[[DataFrame], DataFrame],
+    ) -> list[dict[str, Any]]:
+        """The new file list of a commit that rewrites ``buckets`` from
+        ``rows`` through :meth:`_rewrite`: the head's other buckets keep
+        their files. A rewritten bucket may hold several versions of a
+        key only if a file it replaces did, so its new files carry the
+        replaced files' delta mark forward."""
         deltas = {f["bucket"] for f in head.files if f.get("delta")}
         files = [
             {**f, "delta": True} if f["bucket"] in deltas else f
             for f in self._rewrite(rows, version, resolve)
         ]
-        keep = [f for f in head.files if f["bucket"] not in set(affected)]
-        summary = {"affected_buckets": sorted(affected), **drop_stats}
-        return keep + files, rows.drop(*helpers).schema, summary
+        keep = [f for f in head.files if f["bucket"] not in set(buckets)]
+        return keep + files
+
+    def purge_tombstones(self) -> MergeStats:
+        """Physically drop dead keys — those whose newest row (max
+        ``seq``) is a tombstone — as Iceberg's copy-on-write DELETE does:
+        one ``purge`` commit rewrites only the buckets holding one,
+        dropping every row of each dead key and keeping every other row
+        as it is. No row a live read returns changes, and ``seq_hi``
+        stays (the dropped rows were marked when first written).
+
+        One ``distinct`` query finds the buckets; with none (or a table
+        without tombstones) nothing is committed and the stats say
+        ``skipped``."""
+        head = self.snapshot()
+        bid = f"purge-{head.version}"
+        cols = self._schema(head).fieldNames()
+        buckets = []
+        if _DELETED in cols and _ORDER in cols:
+            tombs = self.read_resolved(head.version, keep_deleted=True)
+            tombs = tombs.where(F.col(_DELETED)).select("_bucket").distinct()
+            buckets = [r[0] for r in tombs.collect()]
+        if not buckets:
+            return MergeStats(batch_id=bid, skipped=True, version=head.version)
+        # the key's newest row, ordered as latest_per_key orders it
+        newest = (
+            Window.partitionBy(*self.key_cols)
+            .orderBy(F.col(_ORDER).desc())
+            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        )
+        dead = F.first(F.coalesce(F.col(_DELETED), F.lit(False))).over(newest)
+
+        def resolve(df: DataFrame) -> DataFrame:
+            return df.withColumn("_dead", dead).where(~F.col("_dead")).drop("_dead")
+
+        def stage(head: Snapshot, version: int):
+            rows = self.read_buckets(buckets, head)
+            files = self._rewrite_buckets(head, version, buckets, rows, resolve)
+            return files, self._schema(head), {"affected_buckets": sorted(buckets)}
+
+        return self._publish(bid, "purge", stage)
 
     def append_rows(
         self, rows: list[dict[str, Any]], schema: StructType, batch_id: str
@@ -760,11 +795,12 @@ class LakeTable:
         1. **base** = the newest *compacted* snapshot whose ``seq_hi`` is
            ≤ the cut — one resolved row per key, so reading it is a pure
            bucketed scan, no window. ``seq_hi`` also counts the events a
-           purge or a COW delete erased, so no base has lost a row that
-           was live at the cut;
+           purge erased, so no base has lost a row that was live at the
+           cut;
         2. **delta** = data files appended by create/merge_mor commits
-           after the base, *pruned by manifest seq_min > cut* (footer stats
-           recorded at write time), filtered to ``seq ≤ cut``;
+           after the base (merge and purge rewrites included), *pruned by
+           manifest seq_min > cut* (footer stats recorded at write time),
+           filtered to ``seq ≤ cut``;
         3. merge: resolve the (bounded) delta with one small window; when
            every delta file starts above the base's ``seq_hi``, the base is
            combined via a **broadcast anti-join** — the big side is scanned
@@ -774,10 +810,10 @@ class LakeTable:
 
         Work is O(live state + events since last compaction ≤ cut), not
         O(event history); compaction cadence = as-of checkpoint
-        granularity. Rewriting COW merges (purge_tombstones) don't break
-        as-of while their victims' original files are retained — only
+        granularity. Merge and purge rewrites don't break as-of while
+        their victims' original files are retained — only
         expire_snapshots makes history non-time-travelable, and that
-        raises explicitly."""
+        raises explicitly, as does a read across an ``overwrite``."""
         vs, snaps, base_v = self._asof_base_plan(seq_cut)
         delta_files = self._delta_file_walk(vs, snaps, base_v, hi_incl=seq_cut)
         return self._asof_assemble(vs, snaps, base_v, delta_files, seq_cut)
@@ -788,7 +824,7 @@ class LakeTable:
         """Soundness checks + base-snapshot selection for a read at
         ``seq_cut`` (shared by :meth:`read_asof` and
         :meth:`read_changes`). Returns (versions, snapshots, base_v) or
-        raises when deletes or expiry make the cut unservable.
+        raises when expiry makes the cut unservable.
 
         The base is the newest ``compact`` snapshot with ``seq_hi`` ≤ the
         cut. A compaction after a purge that dropped a post-cut delete's
@@ -812,48 +848,7 @@ class LakeTable:
                 f"as-of {seq_cut} predates retained history of {self.path} "
                 "(no qualifying compacted snapshot and early versions expired)"
             )
-        # Plain COW merges with op='D' rows erase their victims WITHOUT a
-        # tombstone, so a read at/above the first delete seq served from
-        # an earlier base would resurrect them from older immutable files;
-        # reads strictly below it stay servable. Commits at/below the base
-        # (and expired ones, which imply a later base) are covered: the
-        # base's files reflect their erasures and its seq_hi ≤ the cut.
-        for v, m in self._cow_delete_mins(vs, snaps, base_v):
-            if m is None or seq_cut >= int(m):
-                raise ValueError(
-                    f"as-of/changefeed read at seq {seq_cut} would span "
-                    f"COW-deleted events (commit v{v} erased keys starting "
-                    f"at seq {m}); COW deletes leave no tombstone, so "
-                    "point-in-time state at/after them cannot be "
-                    "reconstructed from a pre-delete base — compact the "
-                    "table to create a post-delete base, or use MoR deletes"
-                )
         return vs, snaps, base_v
-
-    def _cow_delete_mins(
-        self,
-        vs: list[int],
-        snaps: dict[int, Snapshot],
-        base_v: int | None,
-    ) -> list[tuple[int, int | None]]:
-        """(version, min erased-delete seq) for retained plain-COW
-        row-dropping merges after the base. Purge rewrites and
-        tombstone-dropping compactions are exempt: the rows THEY drop
-        still pre-exist in earlier retained commits' immutable files, so
-        resolution sees the original tombstones."""
-        out: list[tuple[int, int | None]] = []
-        for v in vs:
-            if base_v is not None and v <= base_v:
-                continue
-            s = snaps[v]
-            if not s.summary.get("drops_rows"):
-                continue
-            bid = str(s.summary.get("batch_id", ""))
-            if bid.startswith("purge-") or s.operation == "compact":
-                continue
-            m = s.summary.get("drops_rows_min")
-            out.append((v, int(m) if m is not None else None))
-        return out
 
     def _delta_file_walk(
         self,
@@ -867,7 +862,14 @@ class LakeTable:
         (``lo_excl``, ``hi_incl``] from commits after ``base_v`` (every
         version > base_v is retained — the version list is a contiguous
         suffix, so nothing in the range can have been expired without
-        the base-plan soundness checks raising first)."""
+        the base-plan soundness checks raising first).
+
+        Merge and purge rewrites are walked like appends: the rows they
+        removed still sit in earlier commits' immutable files this walk
+        reads, the rows they carry over are duplicates max-seq resolution
+        collapses, and a merge's own batch is kept iff ≤ the cut. Any
+        other operation (``overwrite``) raises: its files are not a
+        history of events."""
         delta_files: list[dict[str, Any]] = []
         for v in vs:
             if base_v is not None and v <= base_v:
@@ -875,16 +877,11 @@ class LakeTable:
             s = snaps[v]
             if s.operation == "compact":
                 continue  # rewrite of already-counted events
-            if s.operation not in ("create", "merge_mor", "append", "merge"):
+            if s.operation not in ("create", "merge_mor", "append", "merge", "purge"):
                 raise ValueError(
                     f"as-of/changefeed read unsupported over "
                     f"'{s.operation}' commit v{v}"
                 )
-            # Rewriting COW merges (purge_tombstones included) are walked,
-            # not refused: the rows they removed still sit in earlier
-            # commits' immutable files this loop reads, the rows they carry
-            # over are duplicates max-seq resolution collapses, and their
-            # own batch's events are kept iff ≤ the cut, like any delta.
             for f in s.written_files():
                 lo = f.get("seq_min")
                 if lo is not None and lo > hi_incl:
@@ -960,12 +957,11 @@ class LakeTable:
         is broadcast back into the left join. Assumes |window| ≪ |state|;
         a full-history window costs what a diff of two as-of states does.
 
-        Requires a MoR table (per-event delta rows + tombstones retained):
-        COW merges erase deletes in place, so tombstone-free tables and
-        row-dropping COW merges that reach into the window are refused
-        (purge/compact rewrites are exempt: the rows they drop still sit
-        in earlier walked commits' files). Soundness at ``lo_cut`` is the
-        shared as-of base plan's."""
+        Requires a table with tombstone rows (a ``_deleted`` column):
+        without one a delete leaves no row, so such tables are refused.
+        Purge and compaction rewrites need no guard: the rows they drop
+        still sit in earlier walked commits' files. Soundness at
+        ``lo_cut`` is the shared as-of base plan's."""
         if lo_cut >= hi_cut:
             raise ValueError(
                 f"read_changes needs lo_cut < hi_cut, got ({lo_cut}, {hi_cut})"
@@ -979,19 +975,6 @@ class LakeTable:
                 "physically, so a changefeed over them would silently "
                 "miss them"
             )
-        # A plain COW merge with op='D' rows erases keys without a
-        # tombstone, so a window reaching the commit's first delete seq
-        # holds a 'delete' change no file records; windows entirely BELOW
-        # it predate every erasure and serve from pre-delete files.
-        for v, m in self._cow_delete_mins(vs, snaps, base_v):
-            if m is None or hi_cut >= int(m):
-                raise ValueError(
-                    f"read_changes window ({lo_cut}, {hi_cut}] reaches "
-                    f"COW-deleted events (commit v{v} erased keys starting "
-                    f"at seq {m}); COW deletes leave no tombstone, so the "
-                    "changefeed cannot reconstruct them — compact the "
-                    "table to create a post-delete base, or use MoR deletes"
-                )
         win_files = self._delta_file_walk(
             vs, snaps, base_v, hi_incl=hi_cut, lo_excl=lo_cut
         )
@@ -1027,8 +1010,8 @@ class LakeTable:
 
     def compact(self, batch_id: str | None = None) -> MergeStats:
         """Fold MoR deltas: rewrite the table as one resolved version per
-        key, tombstones included (``CdcEngine.purge_tombstones`` drops
-        them once the watermark allows). Equivalent to Iceberg's
+        key, tombstones included (:meth:`purge_tombstones` drops them
+        once the watermark allows). Equivalent to Iceberg's
         rewrite_data_files maintenance action, through the one-exchange
         :meth:`_rewrite` (its window keeps the newest row per key when the
         snapshot lists a delta file). The files it writes are not delta

@@ -506,35 +506,13 @@ class CdcEngine:
         )
 
     def purge_tombstones(self) -> None:
-        """Compaction: physically drop tombstone rows (key-replacement merge
-        of the tombstones as op='D' — removes the keys, inserts nothing).
-        Safe once the event-time watermark guarantees no event older than the
-        table's max seq can still arrive. Rewrites only buckets containing
-        tombstones."""
-        # RESOLVED tombstones only: on an uncompacted MoR table, raw
-        # read() still holds a delete version for keys that were later
-        # RE-INSERTED — key-replacement-merging those would destroy the
-        # live row (review finding). Resolution keeps only keys whose
-        # LATEST version is the tombstone; order_col="seq" additionally
-        # stale-guards against any racing newer version.
-        df = self.table.read_resolved(keep_deleted=True)
-        if "_deleted" not in df.columns:
-            return
-        tombs = df.where(F.coalesce(F.col("_deleted"), F.lit(False))).persist()
-        try:
-            if not tombs.limit(1).count():
-                # nothing to purge: a commit would rewrite no row and only
-                # add a version to the log
-                return
-            snap = self.table.snapshot()
-            self.table.merge(
-                tombs.withColumn("_op", F.lit("D")),
-                f"purge-{snap.version}",
-                op_col="_op",
-                order_col="seq",
-            )
-        finally:
-            tombs.unpersist()
+        """Physically drop deleted keys: :meth:`LakeTable.purge_tombstones`
+        rewrites only the buckets holding a key whose newest version is a
+        tombstone (a key re-inserted after its delete is live and kept),
+        and commits nothing when there is none. Safe once the event-time
+        watermark guarantees no event older than the table's max seq can
+        still arrive."""
+        self.table.purge_tombstones()
 
     # -- CDC ---------------------------------------------------------------
 

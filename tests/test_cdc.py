@@ -600,30 +600,6 @@ def test_asof_after_purge_and_expiry_is_loud_not_wrong(spark, tmp_path):
     assert live_at_200 == {("r1", "o.py"), ("r1", "p.py")}
 
 
-def test_opcol_merge_without_deletes_keeps_asof_bases(spark, tmp_path):
-    """Review finding: op_col merges were marked drops_rows even with no
-    D rows, permanently disqualifying later as-of bases for no reason."""
-    from etl_pipeline_rdf_star_spark.storage.lake import LakeTable
-
-    t = LakeTable(spark, str(tmp_path / "ocl"), key_cols=["k"], n_buckets=2)
-    df1 = spark.createDataFrame(
-        [("a", 1, "U"), ("b", 2, "U")], "k string, seq long, _op string"
-    )
-    t.create(df1.drop("_op"), "b0")
-    t.merge(
-        spark.createDataFrame([("a", 3, "U")], "k string, seq long, _op string"),
-        "b1",
-        op_col="_op",
-    )
-    snap = t.snapshot()
-    assert "drops_rows" not in snap.summary
-    assert t.snapshot().seq_hi == 3
-    t.compact()
-    # the post-merge compacted snapshot qualifies as an as-of base
-    got = {(r["k"], r["seq"]) for r in t.read_asof(3).collect()}
-    assert got == {("a", 3), ("b", 2)}
-
-
 def test_noop_purge_commits_nothing(spark, tmp_path):
     """Review finding: a purge with zero tombstones used to commit a
     'purge-N' batch that the legacy prefix rule then treated as an
@@ -722,8 +698,6 @@ def test_purge_spares_reinserted_keys(spark, tmp_path):
     }
     assert ("r1", "k.py", "c3") in live  # re-inserted row survived
     assert all(p != "d.py" for _, p, _ in live)
-    # the drop marker reflects the actually-purged tombstone (d.py@8)
-    assert eng.table.snapshot().summary["drops_rows_min"] == 8
 
 
 CHAOS_CHILD = '''

@@ -26,15 +26,11 @@ def test_create_and_read(spark, tbl):
 
 def test_merge_upsert_and_delete(spark, tbl):
     tbl.create(_df(spark, [("a", 1), ("b", 2), ("c", 3)]))
-    src = _df(
-        spark,
-        [("b", 20, "U"), ("c", None, "D"), ("d", 4, "I")],
-        "k string, v long, op string",
-    )
-    st = tbl.merge(src, "b1", op_col="op")
+    src = _df(spark, [("b", 20), ("d", 4)])
+    st = tbl.merge(src, "b1")
     assert not st.skipped
     got = {(r.k, r.v) for r in tbl.read().collect()}
-    assert got == {("a", 1), ("b", 20), ("d", 4)}
+    assert got == {("a", 1), ("b", 20), ("c", 3), ("d", 4)}
 
 
 def test_merge_idempotent_batch_id(spark, tbl):
@@ -412,67 +408,19 @@ def test_read_changes_prunes_outside_window(spark, tmp_path):
     assert got == {(f"k{s}", s, "insert") for s in range(10, 16)}
 
 
-def test_read_changes_refuses_cow_deletes_in_window(spark, tmp_path):
-    """A plain COW merge with op='D' physically erases the key — no
-    tombstone lands anywhere, so a window overlapping it must refuse
-    rather than silently omit the delete (review finding)."""
-    tbl = LakeTable(spark, str(tmp_path / "cfd"), key_cols=["k"], n_buckets=2)
+def test_overwrite_replaces_files_and_refuses_asof_across_it(spark, tmp_path):
+    """An overwrite commit lists only its own rows, and its files are no
+    history of events: an as-of read that would walk it raises instead of
+    mixing the replaced rows with the new ones."""
+    tbl = LakeTable(spark, str(tmp_path / "ow"), key_cols=["k"], n_buckets=2)
     tbl.merge_mor(
         _df(spark, [("a", 0, 1, False), ("b", 1, 2, False)], _ASOF_SCHEMA),
         "b0",
     )
-    cow = _df(
-        spark,
-        [("b", 5, 99, False, "D")],
-        "k string, seq long, v long, _deleted boolean, op string",
-    )
-    tbl.merge(cow, "cowdel", op_col="op")
-    with pytest.raises(ValueError, match="COW-deleted events"):
-        tbl.read_changes(2, 9)  # the delete seq (5) sits inside the window
-
-
-def test_read_changes_cow_delete_window_soundness(spark, tmp_path):
-    """Both failure directions of the COW-delete guard (review findings):
-    a window entirely BEFORE the first delete seq must stay servable
-    (false reject), and a window at/after it must refuse — the prior
-    state at lo would resurrect the erased key and misclassify a
-    re-insert as 'update' (false accept) — until a post-delete compact
-    base makes the erasure visible to the as-of plan."""
-    tbl = LakeTable(spark, str(tmp_path / "cfs"), key_cols=["k"], n_buckets=2)
-    tbl.merge_mor(
-        _df(spark, [("a", 0, 1, False), ("b", 1, 2, False)], _ASOF_SCHEMA),
-        "b0",
-    )
-    cow = _df(
-        spark,
-        [("b", 5, 99, False, "D")],
-        "k string, seq long, v long, _deleted boolean, op string",
-    )
-    tbl.merge(cow, "cowdel", op_col="op")
-    # entirely below the first delete seq: served from immutable
-    # pre-delete files — b really was inserted in (0, 4]
-    assert _changes_got(tbl, 0, 4) == {("b", 1, "insert")}
-    # at/after the delete with only a pre-delete base: prior state at
-    # lo=6 cannot know b died at 5 (no tombstone) → loud refusal, and
-    # read_asof refuses the same cuts for the same reason
-    with pytest.raises(ValueError, match="COW-deleted events"):
-        tbl.read_changes(6, 12)
-    with pytest.raises(ValueError, match="COW-deleted events"):
+    tbl.overwrite(_df(spark, [("c", 5, 3, False)], _ASOF_SCHEMA), "ow1")
+    assert tbl.snapshot().operation == "overwrite"
+    assert tbl.snapshot().written_files() == tbl.snapshot().files
+    assert {(r.k, r.seq) for r in tbl.read().collect()} == {("c", 5)}
+    assert tbl.snapshot().seq_hi == 5
+    with pytest.raises(ValueError, match="'overwrite'"):
         tbl.read_asof(6)
-    assert {(r.k, r.seq) for r in tbl.read_asof(4).collect()} == {
-        ("a", 0),
-        ("b", 1),
-    }
-    # a compacted base AFTER the delete reflects the erasure, so the
-    # window becomes servable — and the re-insert of the erased key is
-    # classified 'insert' (b was dead at lo), not 'update'
-    tbl.compact()
-    tbl.merge_mor(
-        _df(spark, [("c", 10, 3, False), ("b", 11, 7, False)], _ASOF_SCHEMA),
-        "b1",
-    )
-    assert _changes_got(tbl, 6, 12) == {
-        ("c", 10, "insert"),
-        ("b", 11, "insert"),
-    }
-    assert {(r.k, r.seq) for r in tbl.read_asof(6).collect()} == {("a", 0)}

@@ -1,9 +1,9 @@
 """Property test for ``LakeTable.merge``: for random stored and batch
-frames — multi-row keys, null key columns, 'D'/'I'/null ops, stale and
-fresh orders, a column added on either side — the merged table equals a
-pure-Python model of key-replacement MERGE. Also pins the plan of the
-one key-aligned bucket rewrite that ``merge`` and ``compact`` write
-through."""
+frames — multi-row keys, null key columns, stale and fresh orders, a
+column added on either side — the merged table equals a pure-Python
+model of key-replacement MERGE. Also pins the plan of the one
+key-aligned bucket rewrite that ``merge``, ``compact`` and
+``purge_tombstones`` write through."""
 
 from __future__ import annotations
 
@@ -26,7 +26,6 @@ ROW = st.fixed_dictionaries(
         "seq": st.one_of(st.none(), st.integers(min_value=1, max_value=5)),
         "v": st.sampled_from(["p", "q", "r"]),
         "extra": st.sampled_from(["e1", None]),
-        "_op": st.sampled_from(["D", "I", None]),
     }
 )
 
@@ -34,7 +33,6 @@ CASE = st.fixed_dictionaries(
     {
         "existing": st.lists(ROW, min_size=0, max_size=8),
         "batch": st.lists(ROW, min_size=1, max_size=6),
-        "op_col": st.booleans(),
         "order_col": st.booleans(),
         # the column only one side carries: the batch adds it, or the
         # table has it and the batch lacks it
@@ -52,9 +50,7 @@ def _model(c: dict) -> tuple[list[str], Counter]:
     stale: an order column is given and stored, and the key's max stored
     order beats its max batch order (nulls never count).
     An existing row survives iff its key is unmatched or stale; a batch
-    row is written iff its key is not stale and its op (when given) is
-    neither null nor 'D'."""
-    op_col = "_op" if c["op_col"] else None
+    row is written iff its key is not stale."""
     order = "seq" if c["order_col"] else None
     e_cols, b_cols = _columns(c)
     existing = [{k: r[k] for k in e_cols} for r in c["existing"]]
@@ -78,22 +74,17 @@ def _model(c: dict) -> tuple[list[str], Counter]:
             old, new = top(existing, k), top(batch, k)
             if old is not None and new is not None and old > new:
                 stale.add(k)
-    out_cols = e_cols + [c for c in b_cols if c not in e_cols and c != op_col]
+    out_cols = e_cols + [c for c in b_cols if c not in e_cols]
     out = [
         r for r in existing if not (full(r) and key(r) in matched) or key(r) in stale
     ]
-    out += [
-        r
-        for r in batch
-        if not (full(r) and key(r) in stale)
-        and (op_col is None or r[op_col] not in (None, "D"))
-    ]
+    out += [r for r in batch if not (full(r) and key(r) in stale)]
     return out_cols, Counter(tuple(r.get(k) for k in out_cols) for r in out)
 
 
 def _columns(c: dict) -> tuple[list[str], list[str]]:
     e_cols = KEY + (["seq"] if c["stored_order"] else []) + ["v"]
-    b_cols = KEY + ["seq", "v"] + (["_op"] if c["op_col"] else [])
+    b_cols = KEY + ["seq", "v"]
     if c["extra_on"] == "existing":
         e_cols.append("extra")
     else:
@@ -101,7 +92,7 @@ def _columns(c: dict) -> tuple[list[str], list[str]]:
     return e_cols, b_cols
 
 
-_TYPES = {"seq": "long"}
+_TYPES = {"seq": "long", "_deleted": "boolean"}
 
 
 def _frame(spark, rows: list[dict], cols: list[str]):
@@ -122,7 +113,6 @@ def test_merge_matches_model(spark, c):
     tbl.merge(
         _frame(spark, c["batch"], b_cols),
         "b1",
-        op_col="_op" if c["op_col"] else None,
         order_col="seq" if c["order_col"] else None,
     )
     cols, want = _model(c)
@@ -159,25 +149,21 @@ def _one_key_exchange(p: str) -> None:
 
 def test_merge_and_compact_write_through_one_key_exchange(spark, monkeypatch):
     tbl = LakeTable(spark, tempfile.mkdtemp(), key_cols=KEY, n_buckets=N_BUCKETS)
-    cols = KEY + ["seq", "v"]
-    tbl.merge_mor(
-        _frame(spark, [{"k1": "a", "k2": "x", "seq": 1, "v": "p"}], cols), "m1"
-    )
-    tbl.merge_mor(
-        _frame(spark, [{"k1": "a", "k2": "x", "seq": 2, "v": "q"}], cols), "m2"
-    )
+    cols = KEY + ["seq", "v", "_deleted"]
+    for seq, v in ((1, "p"), (2, "q")):
+        row = {"k1": "a", "k2": "x", "seq": seq, "v": v, "_deleted": False}
+        tbl.merge_mor(_frame(spark, [row], cols), f"m{seq}")
     seen = _write_plans(monkeypatch)
     tbl.compact()
     batch = [
-        {"k1": "a", "k2": "x", "seq": 3, "v": "r", "_op": "I"},
-        {"k1": "b", "k2": "y", "seq": 3, "v": "r", "_op": "D"},
+        {"k1": "a", "k2": "x", "seq": 3, "v": "r", "_deleted": False},
+        {"k1": "b", "k2": "y", "seq": 3, "v": "r", "_deleted": True},
     ]
-    tbl.merge(
-        _frame(spark, batch, cols + ["_op"]), "b1", op_col="_op", order_col="seq"
-    )
-    assert len(seen) == 2
+    tbl.merge(_frame(spark, batch, cols), "b1", order_col="seq")
+    assert not tbl.purge_tombstones().skipped
+    assert len(seen) == 3
     for p, pre_bucketed in seen:
         assert pre_bucketed
         _one_key_exchange(p)
     rows = {tuple(r) for r in tbl.read().select(*cols).collect()}
-    assert rows == {("a", "x", 3, "r")}
+    assert rows == {("a", "x", 3, "r", False)}
