@@ -23,7 +23,9 @@ overwrite(df, ...)      INSERT OVERWRITE t SELECT * FROM df
 append_rows(rows, ...)  INSERT INTO ... VALUES (commit property batch_id)
 read(version=v)         SELECT ... VERSION AS OF v
 schema evolution        ALTER TABLE ADD COLUMN (merge-on-write here)
-committed batch ids     snapshot summary props (exactly-once foreachBatch)
+committed batch ids     snapshot summary props (exactly-once foreachBatch),
+                        with the rows a commit added per bucket and how
+                        many are tombstones (``added-records``)
 =====================  =====================================================
 
 A delete is a tombstone row like any other version of its key: rows
@@ -45,8 +47,20 @@ Scale design (the part that must survive 100 TB / 10^10 events):
   window. MERGE feeds it the affected buckets' files unioned with the
   batch, purge the files of the buckets holding a dead key; the window
   picks survivors.
-* **No driver materialization** beyond the distinct bucket ids (≤ n_buckets
-  integers) and file metadata.
+* **No driver materialization** beyond per-bucket counts (≤ n_buckets
+  rows) and file metadata.
+* **A commit records what it added.** ``create``, ``overwrite``,
+  ``merge`` and ``merge_mor`` put the rows they took in per bucket
+  (``added_rows``) and how many are tombstones (``added_tombstones``) in
+  the snapshot summary, so a caller that must account for a committed
+  batch later (the CDC ledger after a crash) reads them from the log.
+* **The layout travels with the snapshot.** Every keyed snapshot log
+  records ``bucket_hash`` and ``n_buckets``, set inside the atomic commit;
+  a writer whose layout differs from the head's is refused, because
+  bucket-pruned MERGE under another hash or count leaves duplicate live
+  rows. A head log without them (written before the fields existed)
+  falls back to the ``_log/_layout.json`` sidecar such tables carry; a
+  table with neither is refused.
 * **The table says how it reads.** A file that may hold several versions
   of a key (a merge-on-read delta) is marked ``"delta"`` in the manifest;
   :meth:`LakeTable.read_resolved` pays the latest-per-key window only for
@@ -82,7 +96,7 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -142,6 +156,10 @@ class Snapshot:
     # without the key is not empty, so it stays unknown)
     seq_hi: int | None = None
     seq_empty: bool = False
+    # a keyed table's bucket layout (see LakeTable._check_layout); None in
+    # unkeyed logs and in logs older than the fields
+    bucket_hash: str | None = None
+    n_buckets: int | None = None
 
     @property
     def has_deltas(self) -> bool:
@@ -205,51 +223,31 @@ class LakeTable:
 
     _BUCKET_HASH = "murmur3-pmod"  # r4: == Spark HashPartitioning id formula
 
-    def _layout_path(self) -> str:
-        return os.path.join(self.path, _LOG_DIR, "_layout.json")
-
-    def _write_layout(self, overwrite: bool = False) -> None:
-        """Record the physical layout contract at table creation (survives
-        snapshot expiry, unlike v0's summary). Bucket pruning is only sound
-        when reader and writer agree on the hash; r4 changed it from
-        xxhash64 to murmur3, so a guard — not silence — is the contract.
-
-        ``overwrite``: used by a table's first commit — before v0 the table
-        holds no data, so a sidecar left behind by a CRASHED earlier create
-        (with a possibly different bucket count) must not outlive it; the
-        current creating writer is authoritative. Single-writer contract as
-        per the class docstring."""
-        if not self.key_cols:
-            return
-        if not overwrite and os.path.exists(self._layout_path()):
-            return
-        tmp = self._layout_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(
-                {"bucket_hash": self._BUCKET_HASH, "n_buckets": self.n_buckets}, f
-            )
-        os.replace(tmp, self._layout_path())
-
-    def _check_layout(self) -> None:
-        """Refuse to mix bucket layouts: an existing keyed table must carry
-        a layout sidecar matching this writer's hash + bucket count —
-        otherwise bucket-pruned MERGE would miss keys' old rows and leave
-        duplicate live rows (silent corruption). Raising forces an explicit
+    def _check_layout(self, head: Snapshot) -> None:
+        """Refuse to mix bucket layouts: a keyed table's head log must
+        record this writer's hash and bucket count — otherwise
+        bucket-pruned MERGE would miss keys' old rows and leave duplicate
+        live rows (silent corruption). r4 changed the hash from xxhash64
+        to murmur3, so a guard, not silence, is the contract. A head log
+        older than the layout fields falls back to the ``_layout.json``
+        sidecar such tables were created with. Raising forces an explicit
         rebuild/compact-rewrite instead."""
         if not self.key_cols:
             return
-        try:
-            with open(self._layout_path()) as f:
-                lay = json.load(f)
-        except FileNotFoundError:
-            raise RuntimeError(
-                f"lake table {self.path} has no layout sidecar, so its "
-                f"bucket hash is UNKNOWN (pre-r4 tables used xxhash64; "
-                f"this writer uses {self._BUCKET_HASH}); merging with a "
-                "mismatched hash silently leaves duplicate live rows — "
-                "rebuild the table (re-ingest or export/import) with the "
-                "current code"
-            ) from None
+        lay = {"bucket_hash": head.bucket_hash, "n_buckets": head.n_buckets}
+        if head.n_buckets is None:
+            try:
+                with open(os.path.join(self.path, _LOG_DIR, "_layout.json")) as f:
+                    lay = json.load(f)
+            except FileNotFoundError:
+                raise RuntimeError(
+                    f"lake table {self.path} records no layout in its head "
+                    "log and has no layout sidecar, so its bucket hash is "
+                    f"UNKNOWN (pre-r4 tables used xxhash64; this writer "
+                    f"uses {self._BUCKET_HASH}); merging with a mismatched "
+                    "hash silently leaves duplicate live rows — rebuild the "
+                    "table (re-ingest or export/import) with the current code"
+                ) from None
         if lay.get("bucket_hash") != self._BUCKET_HASH or int(
             lay.get("n_buckets", -1)
         ) != int(self.n_buckets):
@@ -473,18 +471,18 @@ class LakeTable:
         stage: Callable[[Snapshot | None, int], tuple[list, StructType, dict]],
     ) -> MergeStats:
         """The one commit path every write takes: layout guard, batch-id
-        idempotence (a re-delivered batch is a metadata-only no-op), next
-        version, snapshot build and the CAS publish of :meth:`_commit`.
+        idempotence (a re-delivered batch is a metadata-only no-op: its
+        stage never runs, so it costs no Spark job), next version,
+        snapshot build and the CAS publish of :meth:`_commit`.
         ``stage(head, version)`` — ``head`` the latest snapshot, None for a
         new table — writes the commit's data files and returns the new
         snapshot's full file list, its schema and extra summary keys. The
-        snapshot's ``seq_hi`` is set here, so it changes only with the
-        commit that publishes it."""
+        snapshot's ``seq_hi`` and bucket layout are set here, so they
+        change only with the commit that publishes them: a writer that
+        loses the race to create a table leaves no trace of its layout."""
         head = self.snapshot() if self.exists() else None
-        if head is None:
-            self._write_layout(overwrite=True)
-        else:
-            self._check_layout()
+        if head is not None:
+            self._check_layout(head)
             if batch_id in head.committed_batches:
                 return MergeStats(
                     batch_id=batch_id, skipped=True, version=head.version
@@ -501,6 +499,8 @@ class LakeTable:
             summary={"batch_id": batch_id, **summary},
             timestamp=time.time(),
         )
+        if self.key_cols:
+            snap.bucket_hash, snap.n_buckets = self._BUCKET_HASH, self.n_buckets
         # the high-water mark folds the head's and the files this commit
         # wrote (a row a rewrite drops was written, and marked, earlier);
         # unknown stays unknown, and with no mark the table is still empty
@@ -519,9 +519,10 @@ class LakeTable:
         )
 
     def create(self, df: DataFrame, batch_id: str = "genesis") -> MergeStats:
-        """First commit of a table. If another writer created the table
-        first, raises ConcurrentCommitError (a retry of this same create is
-        a no-op)."""
+        """First commit of a table; its summary records the rows added
+        (:meth:`_write_added`). If another writer created the table first,
+        raises ConcurrentCommitError (a retry of this same create is a
+        no-op)."""
         return self._publish(batch_id, "create", self._replace_stage(df))
 
     def overwrite(self, df: DataFrame, batch_id: str) -> MergeStats:
@@ -543,16 +544,32 @@ class LakeTable:
                 raise ConcurrentCommitError(
                     f"lake table {self.path} already exists"
                 )
-            return self._write_data(df, version), df.schema, {}
+            files, added = self._write_added(df, version)
+            return files, df.schema, added
 
         return stage
 
+    def _write_added(
+        self, df: DataFrame, version: int, pre_bucketed: bool = False
+    ) -> tuple[list[dict[str, Any]], dict[str, Any]]:
+        """Write a caller's rows through :meth:`_write_data`; return the
+        file metadata and the summary keys recording what the commit
+        added: rows per bucket, summed from the footers the write already
+        reads, and tombstones, counted by one ``Observation`` riding the
+        write action. The observation is read only when rows were
+        written: an empty write runs no task, so it never fires."""
+        obs = Observation() if _DELETED in df.columns else None
+        if obs is not None:
+            df = df.observe(obs, F.count(F.when(F.col(_DELETED), 1)).alias("n"))
+        files = self._write_data(df, version, pre_bucketed=pre_bucketed)
+        added: dict[str, int] = {}
+        for f in files:
+            added[str(f["bucket"])] = added.get(str(f["bucket"]), 0) + f["rows"]
+        tombs = obs.get["n"] if obs is not None and sum(added.values()) else 0
+        return files, {"added_rows": added, "added_tombstones": tombs}
+
     def merge(
-        self,
-        src: DataFrame,
-        batch_id: str,
-        order_col: str | None = None,
-        affected_buckets: list[int] | None = None,
+        self, src: DataFrame, batch_id: str, order_col: str | None = None
     ) -> MergeStats:
         """Key-replacement MERGE: all target rows whose key appears in
         ``src`` are removed, then ``src`` rows are inserted. A delete is
@@ -569,19 +586,24 @@ class LakeTable:
           highest is ignored (MERGE condition ``src.seq >= tgt.seq``), so
           out-of-order micro-batches converge to the same final state;
           null orders never make a key stale;
-        * idempotent per ``batch_id`` (exactly-once under retries).
+        * idempotent per ``batch_id`` (exactly-once under retries);
+        * the summary records the buckets rewritten (``affected_buckets``)
+          and ``src``'s rows per bucket and tombstones (``added_rows``,
+          ``added_tombstones``) — every ``src`` row, stale ones included.
         """
         if not self.exists():
             return self.create(src, batch_id)
 
         src = self._with_bucket(src)
-        return self._publish(
-            batch_id,
-            "merge",
-            lambda head, version: self._merge_stage(
-                head, version, src, order_col, affected_buckets
-            ),
-        )
+
+        def stage(head: Snapshot, version: int):
+            cached = src.persist()  # read twice: counted, then rewritten
+            try:
+                return self._merge_stage(head, version, cached, order_col)
+            finally:
+                cached.unpersist()
+
+        return self._publish(batch_id, "merge", stage)
 
     def _merge_stage(
         self,
@@ -589,16 +611,17 @@ class LakeTable:
         version: int,
         src: DataFrame,
         order_col: str | None,
-        affected_buckets: list[int] | None,
     ) -> tuple[list, StructType, dict]:
-        """:meth:`merge`'s data step: rewrite the affected buckets."""
-        # ≤ n_buckets ints — the only driver-side collect; callers that
-        # already aggregated per-bucket stats pass the list in and save a job
-        affected = (
-            affected_buckets
-            if affected_buckets is not None
-            else [r[0] for r in src.select("_bucket").distinct().collect()]
+        """:meth:`merge`'s data step: count the (persisted) batch per
+        bucket (≤ n_buckets rows — the only driver-side collect), then
+        rewrite the buckets it touches."""
+        tombs = F.col(_DELETED) if _DELETED in src.columns else F.lit(False)
+        counts = (
+            src.groupBy("_bucket")
+            .agg(F.count("*").alias("n"), F.count(F.when(tombs, 1)).alias("d"))
+            .collect()
         )
+        affected = sorted(r["_bucket"] for r in counts)
         existing = self.read_buckets(affected, head)
         if order_col and order_col not in existing.columns:
             order_col = None
@@ -634,7 +657,11 @@ class LakeTable:
             )
 
         files = self._rewrite_buckets(head, version, affected, rows, resolve)
-        return files, rows.drop(*helpers).schema, {"affected_buckets": sorted(affected)}
+        return files, rows.drop(*helpers).schema, {
+            "affected_buckets": affected,
+            "added_rows": {str(r["_bucket"]): r["n"] for r in counts},
+            "added_tombstones": sum(r["d"] for r in counts),
+        }
 
     def _rewrite_buckets(
         self,
@@ -762,16 +789,17 @@ class LakeTable:
         Late/duplicate delivery needs no tombstone special-casing here:
         every version is present, so the max-``seq`` row wins
         regardless of arrival order, and re-delivered batch_ids are
-        skipped wholesale."""
+        skipped wholesale. The summary records the rows added
+        (:meth:`_write_added`)."""
         src = self._with_bucket(src)
 
         def stage(head: Snapshot | None, version: int):
-            files = self._write_data(src, version, pre_bucketed=pre_bucketed)
+            files, added = self._write_added(src, version, pre_bucketed)
             delta = [{**f, "delta": True} for f in files]
             if head is None:
-                return delta, src.schema, {}
+                return delta, src.schema, added
             schema = _merge_schemas(self._schema(head), src.schema)
-            return head.files + delta, schema, {}
+            return head.files + delta, schema, added
 
         return self._publish(batch_id, "merge_mor", stage)
 
@@ -970,10 +998,10 @@ class LakeTable:
         schema = self._schema(snaps[vs[-1]])
         if _DELETED not in [f.name for f in schema.fields]:
             raise ValueError(
-                "read_changes requires a MoR table with tombstone rows "
-                f"({_DELETED!r} column); COW tables erase deletes "
-                "physically, so a changefeed over them would silently "
-                "miss them"
+                f"read_changes requires tombstone rows: this table has no "
+                f"{_DELETED!r} column, so it records no deletes and a "
+                "changefeed over it would silently miss them (CdcEngine "
+                "writes the column in both COW and MoR mode)"
             )
         win_files = self._delta_file_walk(
             vs, snaps, base_v, hi_incl=hi_cut, lo_excl=lo_cut

@@ -38,13 +38,18 @@ Design decisions (scale rationale):
   sink buckets on hash(repo, path) for the same reason (see lake.py).
 * **Exactly-once.** Lake commits are idempotent per batch_id; the ledger
   append reuses the same batch_id; a replayed/retried foreachBatch is a
-  no-op end to end.
+  no-op end to end. The counts the ledger records come from the data
+  commit itself — its snapshot summary carries the rows it added per
+  bucket and its tombstones — so a retry after a crash between the two
+  commits ledgers the true counts without re-reading any data.
 """
 
 from __future__ import annotations
 
+import math
 import re
 from dataclasses import dataclass
+from functools import partial
 from typing import TYPE_CHECKING
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -280,14 +285,6 @@ def _expand(ir: MappingDocumentIR, term: str) -> str:
     return expand_prefix(term, ir.prefixes, ir.base_iri)
 
 
-def _rows_per_bucket(files: list[dict]) -> list[dict]:
-    """``[{bucket, rows}]`` summed from manifest entries, by bucket."""
-    rows: dict[int, int] = {}
-    for f in files:
-        rows[f["bucket"]] = rows.get(f["bucket"], 0) + f["rows"]
-    return [{"bucket": b, "rows": r} for b, r in sorted(rows.items())]
-
-
 @dataclass
 class BatchResult:
     batch_id: str
@@ -300,8 +297,10 @@ class BatchResult:
 class CdcEngine:
     """Compile-once CDC engine over a lake-table sink.
 
-    ``mode`` picks only how :meth:`apply_batch` writes: ``"cow"`` rewrites
-    the touched buckets, ``"mor"`` appends delta files. Reads never depend
+    ``mode`` picks only how :meth:`apply_batch` writes: ``"cow"`` dedups
+    the batch and rewrites the touched buckets, ``"mor"`` appends delta
+    files. Everything after the lake call — the ledger and lineage rows,
+    read from that commit's summary — is one path. Reads never depend
     on it — the table's snapshot says whether rows need resolution
     (:meth:`LakeTable.read_resolved`), so any engine on a warehouse reads
     the same live rows whichever mode wrote them.
@@ -520,15 +519,22 @@ class CdcEngine:
         return latest_per_key(events, KEY)
 
     def apply_batch(self, events: DataFrame, batch_id: str) -> BatchResult:
-        """One micro-batch: dedup → materialize → MERGE → ledger+metrics.
-        Safe to call twice with the same batch_id (no-op the second time)."""
+        """One micro-batch: prepare → materialize → lake commit →
+        ledger+metrics. ``mode`` picks only how the batch is prepared and
+        which lake call writes it; the counts the ledger records are the
+        ones that commit put in its snapshot summary. Safe to call twice
+        with the same batch_id: the second call runs no Spark job and
+        changes nothing."""
         missing = [c for c in EVENT_COLS if c not in events.columns]
         if missing:
             raise ValueError(f"event batch missing columns: {missing}")
+        nb = self.table.n_buckets
+        par = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        k = max(1, math.ceil(par / nb))
         if self.mode == "mor":
             # SINGLE-SHUFFLE fast path. The explicit repartition hashes the
             # full key over k·n_buckets partitions, and because the bucket
-            # formula IS Spark's partition id formula (lake._bucket_col) and
+            # formula pmod(hash(key), B) IS Spark's partition id formula and
             # (h mod kB) mod B == h mod B,
             # every task still holds exactly ONE bucket (k tasks per bucket)
             # — so the write skips its layout shuffle (pre_bucketed). One
@@ -538,134 +544,34 @@ class CdcEngine:
             # scaling. k scales the stage to the session's parallelism so a
             # low bucket count never caps the CPU-heavy materialization
             # (sha256 over content) below the available cores.
-            import math
-
-            nb = self.table.n_buckets
-            par = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-            k = max(1, math.ceil(par / nb))
-            # no intra-batch dedup: every version is appended and read-time
+            # No intra-batch dedup: every version is appended and read-time
             # resolution picks max(seq); ledger counts (events per batch)
             # are defined over the raw appended rows, which the oracle
-            # corpus pins
-            latest = events.repartition(k * nb, *KEY)
-            # SINGLE-JOB: no persist, no stats job — ledger counts ride the
-            # write action via Observation, per-bucket lineage comes from
-            # parquet footers the write produced
-            from pyspark.sql import Observation
-
-            obs = Observation(f"batch-{batch_id}")
-            wide = self.materialize_wide(latest).observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.when(F.col("_deleted"), 1).otherwise(0)).alias("d"),
-            )
-            stats = self.table.merge_mor(
-                wide.drop("op"), batch_id, pre_bucketed=True
-            )
-            if stats.skipped:
-                # Re-delivered batch. If the ledger row is already committed
-                # the append below is a no-op and zeros are fine; if the
-                # crash happened BETWEEN data commit and ledger append, the
-                # retry must not record events=0 — recover the true counts
-                # from the committed snapshot's files for that version.
-                n_latest, n_del, per_bucket = self._recover_batch_stats(batch_id)
-            else:
-                per_bucket = _rows_per_bucket(
-                    self.table.snapshot(stats.version).written_files()
-                )
-                try:
-                    got = obs.get
-                    n_latest, n_del = got["n"] or 0, got["d"] or 0
-                except Exception:
-                    # an EMPTY batch writes zero tasks, so the Observation
-                    # never fires — footer metadata is authoritative anyway
-                    n_latest, n_del = sum(b["rows"] for b in per_bucket), 0
-            result = self._commit_metadata(
-                batch_id, stats, n_latest, n_del, per_bucket
-            )
-            # threshold semantics: retained delta COMMITS per bucket. The
-            # k-scaled write emits up to k files per bucket per commit, so
-            # the file-count trigger must scale by k or compaction (an
-            # O(table) rewrite) fires ~k× too often (review finding)
-            if (
-                self.auto_compact_deltas is not None
-                and not stats.skipped
-                and len(self.table.snapshot().files)
-                > self.auto_compact_deltas * self.table.n_buckets * k
-            ):
+            # corpus pins.
+            prepared = events.repartition(k * nb, *KEY)
+            write = partial(self.table.merge_mor, pre_bucketed=True)
+        else:
+            # COW's MERGE expects at most one row per key; extra source
+            # cols pass through the dedup untouched. Deletes are upserted
+            # as TOMBSTONES (_deleted=true), not physically removed: a
+            # physically-removed key couldn't order-guard against a late
+            # out-of-order update re-inserting stale data (the standard
+            # CDC tombstone rule). Reads filter tombstones;
+            # purge_tombstones() reclaims them once the event-time
+            # watermark guarantees no older event can still arrive.
+            prepared = self.dedup_latest(events)
+            write = partial(self.table.merge, order_col="seq")
+        stats = write(self.materialize_wide(prepared).drop("op"), batch_id)
+        result = self._commit_metadata(batch_id, stats)
+        # threshold semantics: retained delta COMMITS per bucket. The
+        # k-scaled write emits up to k files per bucket per commit, so
+        # the file-count trigger must scale by k or compaction (an
+        # O(table) rewrite) fires ~k× too often (review finding)
+        if self.auto_compact_deltas is not None and not stats.skipped:
+            snap = self.table.snapshot()
+            if snap.has_deltas and len(snap.files) > self.auto_compact_deltas * nb * k:
                 self.table.compact()
-            return result
-
-        # COW's MERGE expects at most one row per key; extra source cols
-        # pass through the dedup untouched
-        latest = self.dedup_latest(events)
-        # cache the materialized batch: it feeds the count, the MERGE (bucket
-        # discovery + survivors + write) and the metrics rollup — without the
-        # cache each of those jobs re-scans + re-windows the source events
-        wide = self.materialize_wide(latest).persist()
-        # one stats job serves both the ledger counts and the per-bucket
-        # lineage metrics (O(n_buckets) rows)
-        per_bucket = (
-            wide.withColumn("bucket", self.table._bucket_col())
-            .groupBy("bucket")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum(F.when(F.col("_deleted"), 1).otherwise(0)).alias("dels"),
-            )
-            .collect()
-        )
-        n_latest = sum(r["rows"] for r in per_bucket)
-        n_del = sum(r["dels"] or 0 for r in per_bucket)
-
-        # Deletes are upserted as TOMBSTONES (_deleted=true), not physically
-        # removed: a physically-removed key couldn't order-guard against a
-        # late out-of-order update re-inserting stale data (the standard
-        # CDC tombstone rule; Iceberg MoR delete-marker analogue). Reads
-        # filter tombstones; purge_tombstones() reclaims them once the
-        # event-time watermark guarantees no older event can still arrive.
-        stats = self.table.merge(
-            wide.drop("op"),
-            batch_id,
-            order_col="seq",
-            affected_buckets=[int(r["bucket"]) for r in per_bucket],
-        )
-        wide.unpersist()
-        return self._commit_metadata(
-            batch_id,
-            stats,
-            n_latest,
-            n_del,
-            [{"bucket": int(r["bucket"]), "rows": r["rows"]} for r in per_bucket],
-        )
-
-    def _recover_batch_stats(
-        self, batch_id: str
-    ) -> tuple[int, int, list[dict]]:
-        """Counts for an already-data-committed batch whose ledger row is
-        missing (retry after a crash between the two commits). Row counts
-        come from the snapshot's parquet-footer metadata; the delete count
-        needs one small Spark job over just that commit's files."""
-        if batch_id in self.batches.committed_batches():
-            return 0, 0, []  # ledger append will be skipped anyway
-        snap = self.table.snapshot()
-        if batch_id not in snap.committed_batches:
-            return 0, 0, []
-        version = snap.committed_batches.index(batch_id)
-        vfiles = self.table.snapshot(version).written_files()
-        if not vfiles:
-            return 0, 0, []
-        n_latest = sum(f["rows"] for f in vfiles)
-        per_bucket = _rows_per_bucket(vfiles)
-        df = self.spark.read.parquet(*[self.table._abs(f["path"]) for f in vfiles])
-        n_del = 0
-        if "_deleted" in df.columns:
-            n_del = (
-                df.agg(
-                    F.sum(F.when(F.col("_deleted"), 1).otherwise(0)).alias("d")
-                ).first()["d"]
-                or 0
-            )
-        return int(n_latest), int(n_del), per_bucket
+        return result
 
     def _ledger_schema(self):
         from pyspark.sql.types import (
@@ -710,48 +616,39 @@ class CdcEngine:
             return ids[idx - 1] if idx > 0 else None
         return ids[-1] if ids else None
 
-    def _commit_metadata(
-        self,
-        batch_id: str,
-        stats: MergeStats,
-        n_latest: int,
-        n_del: int,
-        per_bucket: list[dict],
-    ) -> BatchResult:
+    def _commit_metadata(self, batch_id: str, stats: MergeStats) -> BatchResult:
         """Ledger + per-bucket lineage commit (pyarrow fast path — no Spark
-        jobs), idempotent per batch_id like the data commit. A fresh commit
-        also appends the SUPERSEDED transition for the previously-ACTIVE
-        batch in the SAME ledger commit (atomic, like the reference's
+        jobs), idempotent per batch_id like the data commit. The counts
+        are the ones the data commit that recorded the batch put in its
+        snapshot summary (``added_rows``, ``added_tombstones``): version
+        ``stats.version`` for a fresh commit, the batch's index in
+        ``committed_batches`` for a retry after a crash between the data
+        commit and this one. A batch already in the ledger reports zero
+        counts and commits nothing. A fresh ledger commit also appends
+        the SUPERSEDED transition for the previously-ACTIVE batch in the
+        SAME ledger commit (atomic, like the reference's
         supersede-previous step at load time)."""
         from pyspark.sql.types import IntegerType, LongType, StringType
         from pyspark.sql.types import StructField, StructType
 
-        sseq = self._next_status_seq()
-        rows = [
-            {
-                "batch_id": batch_id,
-                "table_version": stats.version,
-                "events": int(n_latest),
-                "upserts": int(n_latest - n_del),
-                "deletes": int(n_del),
-                "skipped": bool(stats.skipped),
-                "status": "ACTIVE",
-                "status_seq": sseq,
-            }
-        ]
-        # Supersede the previous batch whenever THIS ledger commit is new —
-        # including the crash-recovery retry (stats.skipped but no ledger
-        # row yet); a pure re-delivery is skipped wholesale by append_rows'
-        # batch-id idempotence, so no double transition can occur (review
-        # finding: the recovery path left two ACTIVE batches).
-        prev = self._previous_data_batch(batch_id)
-        if prev is not None:
-            rows.append(
-                {"batch_id": prev, "status": "SUPERSEDED", "status_seq": sseq}
+        if stats.skipped and batch_id in self.batches.committed_batches():
+            return BatchResult(batch_id, 0, 0, 0, stats)
+        version = stats.version
+        if stats.skipped:
+            version = self.table.snapshot().committed_batches.index(batch_id)
+        summary = self.table.snapshot(version).summary
+        if "added_rows" not in summary:
+            raise ValueError(
+                f"batch {batch_id!r} is committed at v{version} of "
+                f"{self.table.path} but has no ledger row, and that commit "
+                "records no added rows (written before commits recorded "
+                "them); its counts are unknown, so none are guessed"
             )
-        self.batches.append_rows(rows, self._ledger_schema(), batch_id)
-        # per_bucket is non-empty for fresh commits AND for recovered
-        # retries (ledger-crash case); the append is idempotent per batch_id
+        per_bucket = sorted((int(b), n) for b, n in summary["added_rows"].items())
+        n_latest = sum(n for _, n in per_bucket)
+        n_del = summary["added_tombstones"]
+        # lineage first: once the ledger row lands a retry commits nothing,
+        # so the metrics append must already have landed
         if per_bucket:
             metrics_schema = StructType(
                 [
@@ -761,22 +658,39 @@ class CdcEngine:
                 ]
             )
             self.metrics.append_rows(
-                [
-                    {
-                        "batch_id": batch_id,
-                        "bucket": int(r["bucket"]),
-                        "rows": int(r["rows"]),
-                    }
-                    for r in per_bucket
-                ],
+                [{"batch_id": batch_id, "bucket": b, "rows": n} for b, n in per_bucket],
                 metrics_schema,
                 batch_id,
             )
+        sseq = self._next_status_seq()
+        rows = [
+            {
+                "batch_id": batch_id,
+                "table_version": stats.version,
+                "events": n_latest,
+                "upserts": n_latest - n_del,
+                "deletes": n_del,
+                "skipped": stats.skipped,
+                "status": "ACTIVE",
+                "status_seq": sseq,
+            }
+        ]
+        # Supersede the previous batch whenever THIS ledger commit is new —
+        # including the crash-recovery retry (stats.skipped but no ledger
+        # row yet); a pure re-delivery returned above, so no double
+        # transition can occur (review finding: the recovery path left two
+        # ACTIVE batches).
+        prev = self._previous_data_batch(batch_id)
+        if prev is not None:
+            rows.append(
+                {"batch_id": prev, "status": "SUPERSEDED", "status_seq": sseq}
+            )
+        self.batches.append_rows(rows, self._ledger_schema(), batch_id)
         return BatchResult(
             batch_id=batch_id,
-            events=int(n_latest),
-            upserts=int(n_latest - n_del),
-            deletes=int(n_del),
+            events=n_latest,
+            upserts=n_latest - n_del,
+            deletes=n_del,
             merge=stats,
         )
 

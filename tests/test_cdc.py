@@ -528,10 +528,10 @@ def test_read_asof_not_based_past_tombstone_purge(spark, tmp_path):
 
 
 def test_cow_asof_respects_tombstones(spark, tmp_path):
-    """COW deletes are upserted as tombstone rows (only purge passes
-    op_col), so point-in-time reads over a COW table must not resurrect
-    deleted keys (second-pass review claimed the opposite — pin the
-    actual behavior)."""
+    """COW deletes are upserted as tombstone rows (rows leave the table
+    only through purge and compaction rewrites), so point-in-time reads
+    over a COW table must not resurrect deleted keys (second-pass review
+    claimed the opposite — pin the actual behavior)."""
     eng = CdcEngine(spark, str(tmp_path / "cowasof"), mode="cow", n_buckets=2)
     schema = (
         "seq long, op string, repo string, path string, commit string,"
@@ -556,11 +556,11 @@ def test_cow_asof_respects_tombstones(spark, tmp_path):
 
 
 def test_asof_after_purge_and_expiry_is_loud_not_wrong(spark, tmp_path):
-    """Review finding: expire_snapshots used to delete the purge commit's
-    log entry and with it the drops_rows marker — a post-purge compacted
-    snapshot then won base selection and keys live at the cut silently
-    vanished. The post-purge compaction's seq_hi, carried by every later
-    snapshot log, must turn that into an explicit error."""
+    """Review finding: once expire_snapshots deletes the purge commit's
+    log entry, a post-purge compacted snapshot must not win base
+    selection for a cut below the purged events, or keys live at the cut
+    silently vanish. The post-purge compaction's seq_hi, carried by every
+    later snapshot log, must turn that into an explicit error."""
     eng = CdcEngine(spark, str(tmp_path / "asofe"), mode="mor", n_buckets=2)
     schema = (
         "seq long, op string, repo string, path string, commit string,"
@@ -642,7 +642,8 @@ def test_legacy_purge_counted_at_expiry(spark, tmp_path):
         spark.createDataFrame([("a", 1), ("b", 2)], "k string, seq long"),
         "b0",
     )
-    # simulate a legacy purge: prefix batch id, NO drops_rows marker
+    # simulate a legacy purge: a prefix batch id on a plain merge rewrite;
+    # its rows' seq still raises seq_hi in every later log
     t.merge(
         spark.createDataFrame([("a", 3)], "k string, seq long"), "purge-sim"
     )

@@ -271,16 +271,26 @@ def test_layout_guard_rejects_pre_r4_tables(spark, tmp_path):
     merge/compact — silently mixing layouts leaves duplicate live rows."""
     import os
 
+    import json
+
     path = str(tmp_path / "lay")
     tbl = LakeTable(spark, path, key_cols=["k"], n_buckets=2)
     tbl.merge_mor(_df(spark, [("a", 1, 1, False)], _ASOF_SCHEMA), "b0")
-    # simulate a pre-r4 table: drop the sidecar
-    os.unlink(tbl._layout_path())
+    # simulate a pre-r4 table: strip the layout from the head log (the
+    # table has no sidecar either)
+    head = os.path.join(path, "_log", "v00000000.json")
+    with open(head) as f:
+        text = f.read()
+    stripped = json.loads(text)
+    del stripped["bucket_hash"], stripped["n_buckets"]
+    with open(head, "w") as f:
+        json.dump(stripped, f)
     fresh = LakeTable(spark, path, key_cols=["k"], n_buckets=2)
     with pytest.raises(RuntimeError, match="no layout sidecar"):
         fresh.merge_mor(_df(spark, [("a", 2, 2, False)], _ASOF_SCHEMA), "b1")
-    # and a mismatched bucket count is refused even with the sidecar back
-    tbl._write_layout()
+    # and a mismatched bucket count is refused with the layout back
+    with open(head, "w") as f:
+        f.write(text)
     wrong = LakeTable(spark, path, key_cols=["k"], n_buckets=8)
     with pytest.raises(RuntimeError, match="does not match this writer"):
         wrong.compact()

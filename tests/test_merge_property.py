@@ -115,6 +115,9 @@ def test_merge_matches_model(spark, c):
         "b1",
         order_col="seq" if c["order_col"] else None,
     )
+    summary = tbl.snapshot().summary
+    assert sum(summary["added_rows"].values()) == len(c["batch"])
+    assert sorted(map(int, summary["added_rows"])) == summary["affected_buckets"]
     cols, want = _model(c)
     got = tbl.read().drop("_bucket")
     assert got.columns == cols
