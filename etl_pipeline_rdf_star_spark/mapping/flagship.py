@@ -14,12 +14,13 @@ input table ``(repo, path, commit, lang, content)``:
   ``prov:wasGeneratedBy``, ``ex:confidence`` (xsd:decimal), ``ex:lang``.
 
 The annotation join key ``file_key`` (= repo‖path) and computed columns
-``content_sha256`` / ``confidence`` are added by :func:`prepare_input`.
+``content_sha256`` / ``confidence`` are :func:`prepared_columns`, added by
+:func:`prepare_input`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .ir import MappingDocumentIR
@@ -87,16 +88,19 @@ def flagship_ir() -> MappingDocumentIR:
     return parse_document(FLAGSHIP_YAML)
 
 
+def prepared_columns() -> dict[str, Column]:
+    """The computed columns every mapping reference can use, by name. Pure
+    Catalyst expressions — codegen'd, no Python per row. A caller that
+    prepares many frames (the CDC engine, per micro-batch) builds them once."""
+    return {
+        "file_key": F.concat_ws("\x1f", "repo", "path"),
+        "content_sha256": F.sha2(F.col("content"), 256),
+        "confidence": F.round((F.length("content") % 100) / F.lit(100.0), 2).cast(
+            "decimal(5,2)"
+        ),
+    }
+
+
 def prepare_input(files_df: DataFrame) -> DataFrame:
-    """Computed columns every mapping reference can use. Pure Catalyst
-    expressions — codegen'd, no Python per row."""
-    return (
-        files_df.withColumn("file_key", F.concat_ws("\x1f", "repo", "path"))
-        .withColumn("content_sha256", F.sha2(F.col("content"), 256))
-        .withColumn(
-            "confidence",
-            F.round((F.length("content") % 100) / F.lit(100.0), 2).cast(
-                "decimal(5,2)"
-            ),
-        )
-    )
+    """``files_df`` plus :func:`prepared_columns`, in one projection."""
+    return files_df.withColumns(prepared_columns())

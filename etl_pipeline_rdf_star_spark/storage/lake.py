@@ -91,12 +91,14 @@ from __future__ import annotations
 import glob
 import json
 import os
+import threading
 import time
 import uuid
 from dataclasses import dataclass, field
+from functools import cached_property
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -106,6 +108,9 @@ _DATA_DIR = "data"
 # and the tombstone flag
 _ORDER = "seq"
 _DELETED = "_deleted"
+# above this many paths Spark lists a scan's files with a Spark job
+_LISTING = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_LISTING_LOCK = threading.Lock()
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -319,14 +324,17 @@ class LakeTable:
 
     # -- expressions -------------------------------------------------------
 
-    def _bucket_col(self) -> F.Column:
-        """Bucket = ``pmod(murmur3_hash(key), n_buckets)`` — deliberately the
-        SAME formula Spark's HashPartitioning assigns partition ids with, so
-        a frame that arrives via ``repartition(n_buckets, *key_cols)`` has
-        partition id == bucket id. Writers that kept that alignment through
-        a keyed shuffle (the MoR ingest path) can skip the layout shuffle in
-        :meth:`_write_data` entirely — one shuffle per micro-batch instead
-        of two, which at 10^10-event scale halves ingest shuffle I/O."""
+    @cached_property
+    def bucket_col(self) -> Column:
+        """Bucket = ``pmod(murmur3_hash(key), n_buckets)``, built once per
+        table — deliberately the SAME formula Spark's HashPartitioning
+        assigns partition ids with, so a frame that arrives via
+        ``repartition(k * n_buckets, *key_cols)`` holds each bucket's rows
+        in at most k tasks (``(h mod kB) mod B == h mod B``); a frame read
+        by a single task is the trivial case. Writers that keep such a
+        layout (the MoR ingest path) skip the layout shuffle in
+        :meth:`_write_data`. A caller that adds ``_bucket`` to its own
+        projection uses this column, so the bucket costs no extra step."""
         assert self.key_cols, "bucketed ops need key_cols"
         return F.pmod(F.hash(*[F.col(c) for c in self.key_cols]), F.lit(self.n_buckets))
 
@@ -369,10 +377,23 @@ class LakeTable:
     def _read_file_metas(
         self, metas: list[dict[str, Any]], schema: StructType
     ) -> DataFrame:
+        """A scan of exactly the manifest's files. Building it runs no
+        Spark job: the files are known, so the driver stats each one
+        instead of Spark listing more paths than the session's
+        parallel-discovery threshold with a job. The threshold is read
+        while the scan is built, so it is raised for that call only, under
+        a lock so concurrent readers restore it in order."""
         paths = [self._abs(f["path"]) for f in metas]
         if not paths:
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*paths)
+        conf = self.spark.conf
+        with _LISTING_LOCK:
+            threshold = conf.get(_LISTING)
+            conf.set(_LISTING, str(max(len(paths), int(threshold))))
+            try:
+                return self.spark.read.schema(schema).parquet(*paths)
+            finally:
+                conf.set(_LISTING, threshold)
 
     # -- write -------------------------------------------------------------
 
@@ -390,13 +411,14 @@ class LakeTable:
         """Write rows (must carry ``_bucket``) under a per-commit dir,
         one parquet dir per bucket, and return file metadata.
 
-        ``pre_bucketed``: the caller guarantees the frame is already
-        partitioned so each task holds one bucket (``repartition(n_buckets,
-        *key_cols)`` upstream, as :meth:`_rewrite` does — see
-        :meth:`_bucket_col`); the layout shuffle is skipped. Safe even if
-        the guarantee is violated: ``partitionBy`` splits by VALUE, so
-        files land in the right bucket dirs regardless — a lie costs extra
-        small files, never correctness."""
+        ``pre_bucketed``: the caller guarantees each bucket's rows sit in
+        at most k tasks, so the commit writes at most k files per bucket:
+        ``repartition(k * n_buckets, *key_cols)`` upstream (k = 1 in
+        :meth:`_rewrite`; see :attr:`bucket_col`), or a frame a single
+        task reads, the trivial case. The layout shuffle is skipped. Safe
+        even if the guarantee is violated: ``partitionBy`` splits by
+        VALUE, so files land in the right bucket dirs regardless — a lie
+        costs extra small files, never correctness."""
         out = self._commit_dir(version)
         # _bucket stays a data column (read-time pruning is metadata-driven);
         # duplicate it as the physical partition dir for layout only.
@@ -449,7 +471,7 @@ class LakeTable:
             return df
         if not self.key_cols:  # unkeyed (ledger/metrics) tables: one bucket
             return df.withColumn("_bucket", F.lit(0))
-        return df.withColumn("_bucket", self._bucket_col())
+        return df.withColumn("_bucket", self.bucket_col)
 
     def _rewrite(
         self, rows: DataFrame, version: int, resolve: Callable[[DataFrame], DataFrame]
@@ -790,7 +812,9 @@ class LakeTable:
         every version is present, so the max-``seq`` row wins
         regardless of arrival order, and re-delivered batch_ids are
         skipped wholesale. The summary records the rows added
-        (:meth:`_write_added`)."""
+        (:meth:`_write_added`). With ``pre_bucketed`` (see
+        :meth:`_write_data`) the write is the one job that reads ``src``:
+        each reading task writes one file per bucket it holds."""
         src = self._with_bucket(src)
 
         def stage(head: Snapshot | None, version: int):
@@ -1088,12 +1112,18 @@ class LakeTable:
 # -- verification helpers ----------------------------------------------------
 
 
+def row_sha256_col(cols: list[str]) -> Column:
+    """The :func:`row_sha256` value over ``cols``, for a caller that builds
+    it once and projects it itself."""
+    parts = [F.coalesce(F.col(c).cast("string"), F.lit("\x1e")) for c in cols]
+    return F.sha2(F.concat_ws("\x1f", *parts), 256)
+
+
 def row_sha256(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """Per-row content sha256 (the BASELINE.json per-row invariant; reference
     checksum analogue batch_manager.py:261). Null-safe, order-of-cols fixed."""
     cs = cols or [c for c in df.columns if not c.startswith("_")]
-    parts = [F.coalesce(F.col(c).cast("string"), F.lit("\x1e")) for c in cs]
-    return df.withColumn("row_sha256", F.sha2(F.concat_ws("\x1f", *parts), 256))
+    return df.withColumn("row_sha256", row_sha256_col(cs))
 
 
 def table_fingerprint(df: DataFrame, cols: list[str] | None = None) -> dict[str, Any]:

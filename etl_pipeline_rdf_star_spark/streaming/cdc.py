@@ -56,10 +56,10 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..mapping.compiler import compile_asserted_patterns
-from ..mapping.flagship import flagship_ir, prepare_input
+from ..mapping.flagship import flagship_ir, prepare_input, prepared_columns
 from ..mapping.ir import MappingDocumentIR
 from ..operators.materialize import materialize_document
-from ..storage.lake import LakeTable, MergeStats, latest_per_key, row_sha256
+from ..storage.lake import LakeTable, MergeStats, latest_per_key, row_sha256_col
 
 if TYPE_CHECKING:
     from ..queries.sparql import WideRelation
@@ -67,6 +67,19 @@ if TYPE_CHECKING:
 EVENT_COLS = ["seq", "op", "repo", "path", "commit", "lang", "content", "event_ts"]
 KEY = ["repo", "path"]
 _SEP = "\x1f"
+# the source columns a stored row keeps and hashes into ``row_sha256``
+_HASHED = ["repo", "path", "commit", "lang", "content"]
+
+
+def _one_partition(df: DataFrame) -> bool:
+    """True when a single task reads ``df``. The count is asked of the
+    planned RDD, which runs no job for a plan without an exchange; a plan
+    with one is adaptive, its partitions are known only once its map
+    stages have run, so it counts as several."""
+    qe = df._jdf.queryExecution()
+    if qe.executedPlan().nodeName() == "AdaptiveSparkPlan":
+        return False
+    return qe.toRdd().getNumPartitions() == 1
 
 
 def _local_name(iri: str) -> str:
@@ -336,6 +349,11 @@ class CdcEngine:
         self.table = LakeTable(
             spark, f"{warehouse}/rdf_star_files", key_cols=KEY, n_buckets=n_buckets
         )
+        # every other column the per-batch plan projects, built once
+        self._prepared = prepared_columns()
+        self._deleted = (F.col("op") == "D").alias("_deleted")
+        self._row_sha = row_sha256_col(_HASHED).alias("row_sha256")
+        self._bucket = self.table.bucket_col.alias("_bucket")
         self.batches = LakeTable(spark, f"{warehouse}/_batches")
         self.metrics = LakeTable(spark, f"{warehouse}/_metrics")
 
@@ -345,19 +363,27 @@ class CdcEngine:
         """(repo,path,commit,lang,content[,seq,op]) → one wide RDF-star row
         per file. Keeps base + payload columns for the sha256 invariant and
         downstream text analytics."""
-        prepared = prepare_input(files_df)
-        # event_ts is stored so freshness/staleness queries serve from the
-        # resolved table (bounded pruned scan) instead of windowing the
-        # raw log per call (round-2 VERDICT perf-weak item)
-        passthrough = [
-            c for c in ("seq", "op", "event_ts") if c in files_df.columns
-        ]
-        base = ["repo", "path", "commit", "lang", "content", "content_sha256"]
-        deleted = (
-            (F.col("op") == "D") if "op" in files_df.columns else F.lit(False)
-        ).alias("_deleted")
-        out = prepared.select(*base, *passthrough, deleted, *self._wide_cols)
-        return row_sha256(out, cols=["repo", "path", "commit", "lang", "content"])
+        return self._wide(files_df, ("seq", "op", "event_ts"))
+
+    def _wide(
+        self, files_df: DataFrame, passthrough: tuple[str, ...], *extra: Column
+    ) -> DataFrame:
+        """:meth:`materialize_wide` keeping the ``passthrough`` columns
+        ``files_df`` has, then ``extra``: two projections of columns built
+        once per engine, so Spark analyzes the batch plan twice, not once
+        per column step. (event_ts is stored so freshness queries serve
+        from the resolved table instead of windowing the raw log.)"""
+        have = files_df.columns
+        deleted = self._deleted if "op" in have else F.lit(False).alias("_deleted")
+        return files_df.withColumns(self._prepared).select(
+            *_HASHED,
+            "content_sha256",
+            *[c for c in passthrough if c in have],
+            deleted,
+            *self._wide_cols,
+            self._row_sha,
+            *extra,
+        )
 
     def triples_view(self, state: DataFrame | None = None) -> DataFrame:
         """Triple-grain asserted triples (see :meth:`serving_views`)."""
@@ -531,24 +557,28 @@ class CdcEngine:
         nb = self.table.n_buckets
         par = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         k = max(1, math.ceil(par / nb))
+        prepared = events
         if self.mode == "mor":
-            # SINGLE-SHUFFLE fast path. The explicit repartition hashes the
-            # full key over k·n_buckets partitions, and because the bucket
-            # formula pmod(hash(key), B) IS Spark's partition id formula and
-            # (h mod kB) mod B == h mod B,
-            # every task still holds exactly ONE bucket (k tasks per bucket)
-            # — so the write skips its layout shuffle (pre_bucketed). One
-            # shuffle of the batch per commit, total; the two-shuffle shape
-            # (key window + repartition-by-bucket) doubled ingest shuffle
-            # I/O, the memory-bandwidth term that caps multi-executor
-            # scaling. k scales the stage to the session's parallelism so a
-            # low bucket count never caps the CPU-heavy materialization
-            # (sha256 over content) below the available cores.
+            # At most ONE shuffle per commit, and none for a batch a single
+            # task reads (a one-file micro-batch): that task materializes
+            # its rows and writes them straight into per-bucket files
+            # (partitionBy splits by value), one Spark job with one task.
+            # A batch over several partitions is hashed on the full key
+            # over k·n_buckets partitions; because the bucket formula
+            # pmod(hash(key), B) IS Spark's partition id formula and
+            # (h mod kB) mod B == h mod B, each task still holds ONE bucket
+            # (k tasks per bucket), so such a commit writes at most k files
+            # per bucket instead of one per bucket per input partition.
+            # Either way the write skips its layout shuffle (pre_bucketed).
+            # k scales the stage to the session's parallelism so a low
+            # bucket count never caps the CPU-heavy materialization (sha256
+            # over content) below the available cores.
             # No intra-batch dedup: every version is appended and read-time
             # resolution picks max(seq); ledger counts (events per batch)
             # are defined over the raw appended rows, which the oracle
             # corpus pins.
-            prepared = events.repartition(k * nb, *KEY)
+            if not _one_partition(events):
+                prepared = events.repartition(k * nb, *KEY)
             write = partial(self.table.merge_mor, pre_bucketed=True)
         else:
             # COW's MERGE expects at most one row per key; extra source
@@ -561,12 +591,14 @@ class CdcEngine:
             # watermark guarantees no older event can still arrive.
             prepared = self.dedup_latest(events)
             write = partial(self.table.merge, order_col="seq")
-        stats = write(self.materialize_wide(prepared).drop("op"), batch_id)
+        wide = self._wide(prepared, ("seq", "event_ts"), self._bucket)
+        stats = write(wide, batch_id)
         result = self._commit_metadata(batch_id, stats)
-        # threshold semantics: retained delta COMMITS per bucket. The
-        # k-scaled write emits up to k files per bucket per commit, so
-        # the file-count trigger must scale by k or compaction (an
-        # O(table) rewrite) fires ~k× too often (review finding)
+        # threshold: delta files per bucket, scaled by k. A multi-partition
+        # commit emits up to k files per bucket, so without k compaction
+        # (an O(table) rewrite) would fire ~k× too often; a one-partition
+        # commit emits one per bucket, so when k > 1 the trigger fires only
+        # after up to k·auto_compact_deltas such commits
         if self.auto_compact_deltas is not None and not stats.skipped:
             snap = self.table.snapshot()
             if snap.has_deltas and len(snap.files) > self.auto_compact_deltas * nb * k:

@@ -434,3 +434,26 @@ def test_overwrite_replaces_files_and_refuses_asof_across_it(spark, tmp_path):
     assert tbl.snapshot().seq_hi == 5
     with pytest.raises(ValueError, match="'overwrite'"):
         tbl.read_asof(6)
+
+
+def test_read_of_many_files_runs_no_listing_job(spark, tmp_path):
+    """A table's scan is built from its manifest: reading more files than
+    Spark's parallel-discovery threshold (32) launches no Spark job, and
+    the session's threshold is left as it was."""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    schema = StructType([StructField("k", StringType()), StructField("v", LongType())])
+    t = LakeTable(spark, str(tmp_path / "many"))
+    n = int(spark.conf.get(key)) + 8
+    for i in range(n):
+        t.append_rows([{"k": f"k{i}", "v": i}], schema, f"a{i}")
+    assert len(t.snapshot().files) == n
+    before = spark.conf.get(key)
+    sc = spark.sparkContext
+    sc.setJobGroup("many-file-read", "many-file-read")
+    try:
+        df = t.read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("many-file-read")) == []
+    assert spark.conf.get(key) == before
+    assert sorted(r.v for r in df.collect()) == list(range(n))
