@@ -30,6 +30,13 @@ def get_spark(
             str(shuffle_partitions or _default_shuffle_partitions(cores)),
         )
         .config("spark.sql.session.timeZone", "UTC")
+        # a LakeTable scan names each of its files; above this many paths
+        # Spark stats them with a Spark job instead of on the driver.
+        # Building a scan of 3,000 local files: 24 s with the job at the
+        # default 32 (2 local cores), 0.7 s without it
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)
+        )
         # task-side output commit (v2): job commit does not serially rename
         # every task file on the driver — standard practice for many-file
         # micro-batch sinks

@@ -91,11 +91,9 @@ from __future__ import annotations
 import glob
 import json
 import os
-import threading
 import time
 import uuid
 from dataclasses import dataclass, field
-from functools import cached_property
 from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
@@ -108,9 +106,6 @@ _DATA_DIR = "data"
 # and the tombstone flag
 _ORDER = "seq"
 _DELETED = "_deleted"
-# above this many paths Spark lists a scan's files with a Spark job
-_LISTING = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-_LISTING_LOCK = threading.Lock()
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -324,17 +319,14 @@ class LakeTable:
 
     # -- expressions -------------------------------------------------------
 
-    @cached_property
-    def bucket_col(self) -> Column:
-        """Bucket = ``pmod(murmur3_hash(key), n_buckets)``, built once per
-        table — deliberately the SAME formula Spark's HashPartitioning
-        assigns partition ids with, so a frame that arrives via
-        ``repartition(k * n_buckets, *key_cols)`` holds each bucket's rows
-        in at most k tasks (``(h mod kB) mod B == h mod B``); a frame read
-        by a single task is the trivial case. Writers that keep such a
-        layout (the MoR ingest path) skip the layout shuffle in
-        :meth:`_write_data`. A caller that adds ``_bucket`` to its own
-        projection uses this column, so the bucket costs no extra step."""
+    def _bucket_col(self) -> Column:
+        """Bucket = ``pmod(murmur3_hash(key), n_buckets)`` — deliberately the
+        SAME formula Spark's HashPartitioning assigns partition ids with, so
+        a frame that arrives via ``repartition(k * n_buckets, *key_cols)``
+        holds each bucket's rows in at most k tasks (``(h mod kB) mod B ==
+        h mod B``); a frame read by a single task is the trivial case.
+        Writers that keep such a layout (the MoR ingest path) skip the
+        layout shuffle in :meth:`_write_data`."""
         assert self.key_cols, "bucketed ops need key_cols"
         return F.pmod(F.hash(*[F.col(c) for c in self.key_cols]), F.lit(self.n_buckets))
 
@@ -377,23 +369,15 @@ class LakeTable:
     def _read_file_metas(
         self, metas: list[dict[str, Any]], schema: StructType
     ) -> DataFrame:
-        """A scan of exactly the manifest's files. Building it runs no
-        Spark job: the files are known, so the driver stats each one
-        instead of Spark listing more paths than the session's
-        parallel-discovery threshold with a job. The threshold is read
-        while the scan is built, so it is raised for that call only, under
-        a lock so concurrent readers restore it in order."""
+        """A scan of exactly the manifest's files. Given more paths than
+        the session's ``parallelPartitionDiscovery.threshold`` (Spark's
+        default 32), Spark stats them with a Spark job when the scan is
+        built; ``session.get_spark`` raises the threshold so the driver
+        stats them itself and building the scan runs no job."""
         paths = [self._abs(f["path"]) for f in metas]
         if not paths:
             return self.spark.createDataFrame([], schema)
-        conf = self.spark.conf
-        with _LISTING_LOCK:
-            threshold = conf.get(_LISTING)
-            conf.set(_LISTING, str(max(len(paths), int(threshold))))
-            try:
-                return self.spark.read.schema(schema).parquet(*paths)
-            finally:
-                conf.set(_LISTING, threshold)
+        return self.spark.read.schema(schema).parquet(*paths)
 
     # -- write -------------------------------------------------------------
 
@@ -414,7 +398,7 @@ class LakeTable:
         ``pre_bucketed``: the caller guarantees each bucket's rows sit in
         at most k tasks, so the commit writes at most k files per bucket:
         ``repartition(k * n_buckets, *key_cols)`` upstream (k = 1 in
-        :meth:`_rewrite`; see :attr:`bucket_col`), or a frame a single
+        :meth:`_rewrite`; see :meth:`_bucket_col`), or a frame a single
         task reads, the trivial case. The layout shuffle is skipped. Safe
         even if the guarantee is violated: ``partitionBy`` splits by
         VALUE, so files land in the right bucket dirs regardless — a lie
@@ -471,7 +455,7 @@ class LakeTable:
             return df
         if not self.key_cols:  # unkeyed (ledger/metrics) tables: one bucket
             return df.withColumn("_bucket", F.lit(0))
-        return df.withColumn("_bucket", self.bucket_col)
+        return df.withColumn("_bucket", self._bucket_col())
 
     def _rewrite(
         self, rows: DataFrame, version: int, resolve: Callable[[DataFrame], DataFrame]

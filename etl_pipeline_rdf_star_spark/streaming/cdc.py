@@ -71,12 +71,24 @@ _SEP = "\x1f"
 _HASHED = ["repo", "path", "commit", "lang", "content"]
 
 
-def _one_partition(df: DataFrame) -> bool:
-    """True when a single task reads ``df``. The count is asked of the
-    planned RDD, which runs no job for a plan without an exchange; a plan
-    with one is adaptive, its partitions are known only once its map
-    stages have run, so it counts as several."""
+# Input bytes above which one task materializing a whole batch is slower
+# than the keyed exchange spreading it over k·n_buckets tasks. MoR commits
+# of one-partition batches on 2 local cores (4 buckets, 4 shuffle
+# partitions), exchange → one task: 0.1 MB 0.76 → 0.61 s, 0.4 MB 0.80 →
+# 0.70 s, 1.2 MB 0.94 → 1.07 s, 2.3 MB 1.18 → 1.57 s.
+_ONE_TASK_BYTES = 1 << 20
+
+
+def _one_small_task(df: DataFrame) -> bool:
+    """True when a single task reads ``df`` and its plan knows the input is
+    at most :data:`_ONE_TASK_BYTES` (a plan over an RDD of unknown size
+    counts as large). The partition count is asked of the planned RDD,
+    which runs no job for a plan without an exchange; a plan with one is
+    adaptive, its partitions are known only once its map stages have run,
+    so it counts as several."""
     qe = df._jdf.queryExecution()
+    if qe.optimizedPlan().stats().sizeInBytes() > _ONE_TASK_BYTES:
+        return False
     if qe.executedPlan().nodeName() == "AdaptiveSparkPlan":
         return False
     return qe.toRdd().getNumPartitions() == 1
@@ -353,26 +365,23 @@ class CdcEngine:
         self._prepared = prepared_columns()
         self._deleted = (F.col("op") == "D").alias("_deleted")
         self._row_sha = row_sha256_col(_HASHED).alias("row_sha256")
-        self._bucket = self.table.bucket_col.alias("_bucket")
         self.batches = LakeTable(spark, f"{warehouse}/_batches")
         self.metrics = LakeTable(spark, f"{warehouse}/_metrics")
 
     # -- materialization ---------------------------------------------------
 
-    def materialize_wide(self, files_df: DataFrame) -> DataFrame:
+    def materialize_wide(
+        self,
+        files_df: DataFrame,
+        passthrough: tuple[str, ...] = ("seq", "op", "event_ts"),
+    ) -> DataFrame:
         """(repo,path,commit,lang,content[,seq,op]) → one wide RDF-star row
         per file. Keeps base + payload columns for the sha256 invariant and
-        downstream text analytics."""
-        return self._wide(files_df, ("seq", "op", "event_ts"))
-
-    def _wide(
-        self, files_df: DataFrame, passthrough: tuple[str, ...], *extra: Column
-    ) -> DataFrame:
-        """:meth:`materialize_wide` keeping the ``passthrough`` columns
-        ``files_df`` has, then ``extra``: two projections of columns built
-        once per engine, so Spark analyzes the batch plan twice, not once
-        per column step. (event_ts is stored so freshness queries serve
-        from the resolved table instead of windowing the raw log.)"""
+        downstream text analytics, and the ``passthrough`` columns
+        ``files_df`` has (event_ts is stored so freshness queries serve
+        from the resolved table instead of windowing the raw log). Two
+        projections of columns built once per engine, so Spark analyzes
+        the batch plan twice, not once per column step."""
         have = files_df.columns
         deleted = self._deleted if "op" in have else F.lit(False).alias("_deleted")
         return files_df.withColumns(self._prepared).select(
@@ -382,7 +391,6 @@ class CdcEngine:
             deleted,
             *self._wide_cols,
             self._row_sha,
-            *extra,
         )
 
     def triples_view(self, state: DataFrame | None = None) -> DataFrame:
@@ -559,25 +567,26 @@ class CdcEngine:
         k = max(1, math.ceil(par / nb))
         prepared = events
         if self.mode == "mor":
-            # At most ONE shuffle per commit, and none for a batch a single
-            # task reads (a one-file micro-batch): that task materializes
-            # its rows and writes them straight into per-bucket files
-            # (partitionBy splits by value), one Spark job with one task.
-            # A batch over several partitions is hashed on the full key
-            # over k·n_buckets partitions; because the bucket formula
-            # pmod(hash(key), B) IS Spark's partition id formula and
-            # (h mod kB) mod B == h mod B, each task still holds ONE bucket
-            # (k tasks per bucket), so such a commit writes at most k files
-            # per bucket instead of one per bucket per input partition.
+            # At most ONE shuffle per commit, and none for a small batch a
+            # single task reads (a one-file micro-batch, see
+            # _one_small_task): that task materializes its rows and writes
+            # them straight into per-bucket files (partitionBy splits by
+            # value), one Spark job with one task.
+            # Any other batch is hashed on the full key over k·n_buckets
+            # partitions; because the bucket formula pmod(hash(key), B) IS
+            # Spark's partition id formula and (h mod kB) mod B == h mod B,
+            # each task still holds ONE bucket (k tasks per bucket), so
+            # such a commit writes at most k files per bucket instead of
+            # one per bucket per input partition. k scales the stage to the
+            # session's parallelism so a low bucket count never caps the
+            # CPU-heavy materialization (sha256 over content) of a large
+            # batch below the available cores.
             # Either way the write skips its layout shuffle (pre_bucketed).
-            # k scales the stage to the session's parallelism so a low
-            # bucket count never caps the CPU-heavy materialization (sha256
-            # over content) below the available cores.
             # No intra-batch dedup: every version is appended and read-time
             # resolution picks max(seq); ledger counts (events per batch)
             # are defined over the raw appended rows, which the oracle
             # corpus pins.
-            if not _one_partition(events):
+            if not _one_small_task(events):
                 prepared = events.repartition(k * nb, *KEY)
             write = partial(self.table.merge_mor, pre_bucketed=True)
         else:
@@ -591,14 +600,14 @@ class CdcEngine:
             # watermark guarantees no older event can still arrive.
             prepared = self.dedup_latest(events)
             write = partial(self.table.merge, order_col="seq")
-        wide = self._wide(prepared, ("seq", "event_ts"), self._bucket)
+        wide = self.materialize_wide(prepared, passthrough=("seq", "event_ts"))
         stats = write(wide, batch_id)
         result = self._commit_metadata(batch_id, stats)
-        # threshold: delta files per bucket, scaled by k. A multi-partition
-        # commit emits up to k files per bucket, so without k compaction
-        # (an O(table) rewrite) would fire ~k× too often; a one-partition
-        # commit emits one per bucket, so when k > 1 the trigger fires only
-        # after up to k·auto_compact_deltas such commits
+        # threshold: delta files per bucket, scaled by k. A commit through
+        # the exchange emits up to k files per bucket, so without k
+        # compaction (an O(table) rewrite) would fire ~k× too often; a
+        # commit without it emits one per bucket, so when k > 1 the
+        # trigger fires only after up to k·auto_compact_deltas such commits
         if self.auto_compact_deltas is not None and not stats.skipped:
             snap = self.table.snapshot()
             if snap.has_deltas and len(snap.files) > self.auto_compact_deltas * nb * k:

@@ -1,11 +1,12 @@
 """The plan of one CDC micro-batch commit.
 
-The engine builds every column the batch plan projects once, so the plan
-is two projections over the events. A merge-on-read commit of a batch one
-task reads has no exchange: that task writes the rows, and the commit is
-one Spark job. A batch over several partitions keeps the keyed exchange,
-which bounds the files a commit writes per bucket, and stores the same
-rows."""
+The engine builds every column the batch plan projects once, so the wide
+rows are two projections over the events. A merge-on-read commit of a
+small batch one task reads has no exchange: that task writes the rows,
+and the commit is one Spark job. A batch over several partitions keeps
+the keyed exchange, which bounds the files a commit writes per bucket,
+and stores the same rows; so does a large one-partition batch, whose
+materialization the exchange spreads over several tasks."""
 
 from __future__ import annotations
 
@@ -18,7 +19,7 @@ from pyspark.sql import functions as F
 from etl_pipeline_rdf_star_spark.data import synth
 from etl_pipeline_rdf_star_spark.mapping.flagship import prepare_input
 from etl_pipeline_rdf_star_spark.storage.lake import row_sha256, table_fingerprint
-from etl_pipeline_rdf_star_spark.streaming.cdc import CdcEngine
+from etl_pipeline_rdf_star_spark.streaming.cdc import _ONE_TASK_BYTES, CdcEngine
 
 
 @pytest.fixture(scope="module")
@@ -77,6 +78,28 @@ def test_one_partition_mor_commit_is_one_job(spark, tmp_path, halves):
     # the one task wrote one file per bucket it holds rows of
     per_bucket = Counter(f["bucket"] for f in eng.table.snapshot().written_files())
     assert set(per_bucket.values()) == {1}
+
+
+def test_large_one_partition_batch_keeps_the_exchange(spark, tmp_path, halves):
+    """A one-partition batch whose input exceeds what one task should
+    materialize is spread over the keyed exchange's tasks."""
+    parts = [F.sha2(F.concat_ws("-", "seq", F.lit(i)), 512) for i in range(4)]
+    path = str(tmp_path / "large")
+    halves[1].withColumn("content", F.concat(*parts)).write.parquet(path)
+    large = spark.read.parquet(path)
+    assert large.rdd.getNumPartitions() == 1
+    size = large._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert size > _ONE_TASK_BYTES
+    nb = 2
+    eng = CdcEngine(spark, str(tmp_path / "wh"), mode="mor", n_buckets=nb)
+    res, jobs = _jobs(
+        spark, "large-one-partition", lambda: eng.apply_batch(large, "b0")
+    )
+    assert res.events == large.count()
+    assert sum(_tasks(spark, j) for j in jobs) > 1
+    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    per_bucket = Counter(f["bucket"] for f in eng.table.snapshot().files)
+    assert max(per_bucket.values()) <= max(1, math.ceil(par / nb))
 
 
 def test_partition_count_changes_no_stored_row(spark, tmp_path, halves):
