@@ -11,6 +11,25 @@ executors)::
         cdc_submit.py --events <events_dir> --warehouse <lake_dir> \
                       --checkpoint <ckpt_dir> [--follow]
 
+With the checkpoint on a local file system or HDFS, also pass the
+checkpoint manager ``session.get_spark`` sets (``spark-submit`` sessions
+skip ``get_spark``)::
+
+        --conf spark.sql.streaming.checkpointFileManagerClass=<class>
+
+``<class>`` is
+``org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager``
+from Spark 4.1 on and
+``org.apache.spark.sql.execution.streaming.FileSystemBasedCheckpointFileManager``
+before. It writes the offset, source and commit logs of every trigger
+through Hadoop's ``FileSystem`` rather than ``FileContext``, and commits
+each log file by a no-overwrite rename. That is as safe as the default
+only where ``FileSystem.rename`` is atomic: the local file system (both
+managers check the target and rename there) and HDFS. On an object store
+keep Spark's default: Spark warns that with this manager the stream's
+correctness and fault tolerance are not guaranteed where rename is not
+atomic.
+
 Local smoke::
 
     python cdc_submit.py --synthesize /root/testdata/sf0.001 \

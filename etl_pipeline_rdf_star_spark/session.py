@@ -9,7 +9,15 @@ from __future__ import annotations
 
 import os
 
+import pyspark
 from pyspark.sql import SparkSession
+
+# Spark 4.1 moved the checkpoint managers into a ``checkpointing`` package
+_FS_CHECKPOINT_MANAGER = "org.apache.spark.sql.execution.streaming." + (
+    "checkpointing."
+    if tuple(int(x) for x in pyspark.__version__.split(".")[:2]) >= (4, 1)
+    else ""
+) + "FileSystemBasedCheckpointFileManager"
 
 
 def get_spark(
@@ -36,6 +44,23 @@ def get_spark(
         # default 32 (2 local cores), 0.7 s without it
         .config(
             "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)
+        )
+        # Structured Streaming writes its offset WAL, source log and commit
+        # log (and state-store files) through this manager. Spark's
+        # default goes through Hadoop's FileContext: on the local file
+        # system one atomic 200-byte log write took 27 ms with it and 8 ms
+        # through FileSystem (median of 40, local[2], 4-core host). A
+        # one-file CDC trigger pays three such phases: over 14 triggers
+        # walCommit, commitOffsets and latestOffset each summed 0.40-0.60 s
+        # with the default and 0.09-0.15 s with this one. On the local file
+        # system both write a temp file, check that the target does not
+        # exist and rename, so the metadata log's no-overwrite guarantee is
+        # the same there. It is not on a store whose rename is not atomic
+        # (Spark warns so); cdc_submit.py limits the cluster --conf to
+        # local and HDFS checkpoints
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            _FS_CHECKPOINT_MANAGER,
         )
         # task-side output commit (v2): job commit does not serially rename
         # every task file on the driver — standard practice for many-file

@@ -214,6 +214,20 @@ class LakeTable:
         # instance's lifetime; without it every as-of read re-reads every
         # retained manifest JSON before any Spark work.
         self._snap_cache: dict[int, Snapshot] = {}
+        # Bucket = ``pmod(murmur3_hash(key), n_buckets)``, built once and
+        # added by every write (:meth:`_with_bucket`) — deliberately the
+        # SAME formula Spark's HashPartitioning assigns partition ids with,
+        # so a frame that arrives via ``repartition(k * n_buckets,
+        # *key_cols)`` holds each bucket's rows in at most k tasks (``(h mod
+        # kB) mod B == h mod B``); a frame read by a single task is the
+        # trivial case. Writers that keep such a layout (the MoR ingest
+        # path) skip the layout shuffle in :meth:`_write_data`. An unkeyed
+        # table (ledger, metrics) has one bucket.
+        self._bucket = (
+            F.pmod(F.hash(*map(F.col, self.key_cols)), F.lit(n_buckets))
+            if self.key_cols
+            else F.lit(0)
+        )
         os.makedirs(os.path.join(path, _LOG_DIR), exist_ok=True)
 
     # -- log ---------------------------------------------------------------
@@ -319,17 +333,6 @@ class LakeTable:
 
     # -- expressions -------------------------------------------------------
 
-    def _bucket_col(self) -> Column:
-        """Bucket = ``pmod(murmur3_hash(key), n_buckets)`` — deliberately the
-        SAME formula Spark's HashPartitioning assigns partition ids with, so
-        a frame that arrives via ``repartition(k * n_buckets, *key_cols)``
-        holds each bucket's rows in at most k tasks (``(h mod kB) mod B ==
-        h mod B``); a frame read by a single task is the trivial case.
-        Writers that keep such a layout (the MoR ingest path) skip the
-        layout shuffle in :meth:`_write_data`."""
-        assert self.key_cols, "bucketed ops need key_cols"
-        return F.pmod(F.hash(*[F.col(c) for c in self.key_cols]), F.lit(self.n_buckets))
-
     def _schema(self, snap: Snapshot) -> StructType:
         return StructType.fromJson(json.loads(snap.schema_json))
 
@@ -398,11 +401,11 @@ class LakeTable:
         ``pre_bucketed``: the caller guarantees each bucket's rows sit in
         at most k tasks, so the commit writes at most k files per bucket:
         ``repartition(k * n_buckets, *key_cols)`` upstream (k = 1 in
-        :meth:`_rewrite`; see :meth:`_bucket_col`), or a frame a single
-        task reads, the trivial case. The layout shuffle is skipped. Safe
-        even if the guarantee is violated: ``partitionBy`` splits by
-        VALUE, so files land in the right bucket dirs regardless — a lie
-        costs extra small files, never correctness."""
+        :meth:`_rewrite`; see ``_bucket`` in ``__init__``), or a frame a
+        single task reads, the trivial case. The layout shuffle is
+        skipped. Safe even if the guarantee is violated: ``partitionBy``
+        splits by VALUE, so files land in the right bucket dirs
+        regardless — a lie costs extra small files, never correctness."""
         out = self._commit_dir(version)
         # _bucket stays a data column (read-time pruning is metadata-driven);
         # duplicate it as the physical partition dir for layout only.
@@ -453,9 +456,7 @@ class LakeTable:
     def _with_bucket(self, df: DataFrame) -> DataFrame:
         if "_bucket" in df.columns:
             return df
-        if not self.key_cols:  # unkeyed (ledger/metrics) tables: one bucket
-            return df.withColumn("_bucket", F.lit(0))
-        return df.withColumn("_bucket", self._bucket_col())
+        return df.withColumn("_bucket", self._bucket)
 
     def _rewrite(
         self, rows: DataFrame, version: int, resolve: Callable[[DataFrame], DataFrame]

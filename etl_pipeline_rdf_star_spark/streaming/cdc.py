@@ -922,7 +922,13 @@ class CdcEngine:
         topic) → ``foreachBatch`` → :meth:`apply_batch`. The checkpoint dir
         plus idempotent MERGE batch ids give exactly-once; killing and
         rerunning resumes from the last committed epoch. Returns once the
-        available files are drained (``availableNow``)."""
+        available files are drained (``availableNow``).
+
+        The returned query's ``recentProgress[i]["durationMs"]`` is Spark's
+        own per-trigger phase breakdown: ``addBatch`` is this sink (one
+        :meth:`apply_batch`); ``latestOffset``, ``walCommit`` (offset WAL)
+        and ``commitOffsets`` (commit log) are the checkpoint's fixed cost
+        per trigger."""
         schema = (
             "seq long, op string, repo string, path string, commit string, "
             "lang string, content string, event_ts timestamp"
